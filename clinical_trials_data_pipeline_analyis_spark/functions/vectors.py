@@ -44,6 +44,13 @@ def _ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def _nested_as_col(a: Column | str) -> Column | str:
+    """A dotted name is a nested-field path (``meta.embedding``), which
+    ``F.col`` resolves and a backtick-quoted splice would not: route it
+    through the Column form."""
+    return F.col(a) if isinstance(a, str) and "." in a else a
+
+
 def _dot_fold_sql(a_sql: str, b_sql: str) -> str:
     return (
         f"aggregate(zip_with({a_sql}, {b_sql}, "
@@ -118,7 +125,9 @@ def dot(
     parsed tree is identical node-for-node (same casts, same fold order,
     same size guard — lambda variable NAMES differ, which Catalyst
     normalizes away), so results are bit-identical; proven in
-    tests/test_vectors_dim.py."""
+    tests/test_vectors_dim.py. A dotted name is a nested field and takes
+    the Column path."""
+    a, b = _nested_as_col(a), _nested_as_col(b)
     if isinstance(a, str) and isinstance(b, str):
         a_sql, b_sql = _ident(a), _ident(b)
         if use_flat and dim is not None:
@@ -193,6 +202,7 @@ def l2_norm(
     """Ordered L2 norm; same ``dim``/``use_flat``/str-operand contract
     as ``dot`` (a str is a column name, built as one parsed SQL
     string)."""
+    a = _nested_as_col(a)
     if isinstance(a, str):
         a_sql = _ident(a)
         if use_flat and dim is not None:
@@ -212,6 +222,7 @@ def cosine_similarity(
     # try_divide: a zero-norm vector yields NULL cosine (instead of an
     # ANSI-mode DIVIDE_BY_ZERO error) — downstream rankings order NULL
     # last with a deterministic id tiebreak.
+    a, b = _nested_as_col(a), _nested_as_col(b)
     if isinstance(a, str) and isinstance(b, str):
         # one parsed string for the whole similarity — same tree as the
         # Column form below (try_divide(dot, norm * norm))

@@ -58,6 +58,41 @@ def _spread(df: DataFrame) -> DataFrame:
     return df.repartition(target)
 
 
+def _bucket_pairs(n: str) -> Column:
+    """C(n, 2) for a bucket-size column: exact BIGINT (n(n−1) is even)."""
+    return F.expr(f"{n} * ({n} - 1) div 2")
+
+
+def pair_mass(
+    df: DataFrame, keys: list[str], against: DataFrame | None = None
+) -> tuple[int, int]:
+    """``(pairs, rows)`` of the bucket equi-join on ``keys``, from ONE
+    one-row aggregate over the bucket sizes.
+
+    ``pairs`` is Σ n(n−1)/2 over the buckets of ``df`` — the exact row
+    count of the ``id_a < id_b`` self-join — or, with ``against``,
+    Σ n_a·n_b over the buckets the two frames share (the asymmetric
+    join, self-pairs included). ``rows`` is Σ n = ``df``'s row count,
+    so a caller that also needs the count pays no second job. Every
+    candidate-budget guard prices its join with this; empty input
+    gives ``(0, 0)``.
+    """
+    sizes = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("_n"))
+    if against is None:
+        pairs = _bucket_pairs("_n")
+    else:
+        sizes = sizes.join(
+            against.groupBy(*keys).agg(F.count(F.lit(1)).alias("_nb")),
+            keys,
+            "left",
+        )
+        pairs = F.col("_n") * F.coalesce(F.col("_nb"), F.lit(0))
+    row = sizes.agg(
+        F.sum(pairs).alias("pairs"), F.sum("_n").alias("rows")
+    ).collect()[0]
+    return int(row["pairs"] or 0), int(row["rows"] or 0)
+
+
 def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, fp, is_duplicate): keep lowest id per normalized-content hash."""
     from pyspark.sql import Window
@@ -140,19 +175,44 @@ def minhash_signatures(
     return sh.groupBy(id_col).agg(*aggs)
 
 
-#: Candidate-row budget for ``lsh_candidate_pairs``: Σ n(n−1)/2 over
-#: (band, bsig) buckets — the exact row count the banded self-join
-#: materializes (Σ n_a×n_b for the asymmetric ``against`` form, an
-#: upper bound tight up to the excluded self-pairs). Same accounting
-#: family as ``MAX_RHP_CANDIDATE_ROWS`` / ``MAX_JACCARD_JOIN_ROWS``
-#: and the same calibration: ~1e9 rows is large-but-finishable on one
-#: node since the round-10 verify-in-join rewrites; past it the fix is
-#: geometry (coarser banding) or exact-dedup first, not a bigger
-#: shuffle. Round 12: MinHash was the one candidate generator WITHOUT
-#: an exact-count budget — a template-heavy corpus (the recall
-#: fixture's 3,645-doc half-bucket shape) detonates a banded join
-#: exactly like the x07 disk-fill did.
+#: Candidate-row budget for ``lsh_candidate_pairs``, priced by
+#: :func:`pair_mass` over the (band, bsig) buckets (the ``against`` form
+#: counts the excluded self-pairs too, so it is an upper bound).
+#: Calibrated like ``MAX_RHP_CANDIDATE_ROWS`` / ``MAX_JACCARD_JOIN_ROWS``:
+#: ~1e9 rows is large-but-finishable on one node with verify-in-join;
+#: past it the fix is geometry (coarser banding) or exact-dedup first,
+#: not a bigger shuffle — a template-heavy corpus (the recall fixture's
+#: 3,645-doc half-bucket shape) detonates a banded join exactly like
+#: the x07 disk-fill did.
 MAX_LSH_CANDIDATE_ROWS = 1_000_000_000
+
+
+def lsh_band_table(
+    signatures: DataFrame,
+    num_hashes: int,
+    bands: int,
+    *cols: Column,
+    band: str = "band",
+    bsig: str = "bsig",
+) -> DataFrame:
+    """One row per (document, band): ``cols`` plus the band number and
+    the band signature (the concatenated ``h*`` components of that
+    band's rows). The bucket table both the banded join and its
+    :func:`pair_mass` budget read."""
+    rows = num_hashes // bands
+    return reduce(
+        DataFrame.unionByName,
+        [
+            signatures.select(
+                *cols,
+                F.lit(b).alias(band),
+                F.concat(
+                    *[F.col(f"h{b * rows + r}") for r in range(rows)]
+                ).alias(bsig),
+            )
+            for b in range(bands)
+        ],
+    )
 
 
 def lsh_candidate_pairs(
@@ -199,12 +259,10 @@ def lsh_candidate_pairs(
     would add 8 codegen conversions to save ~64 B/row of shuffle —
     measured noise at the band-table sizes the budget guard permits.
 
-    ``max_candidates`` (round 12) is that budget guard, closing the
-    family symmetry — RHP, SimHash, and the n-gram join each had an
-    exact-count budget; MinHash now does too: one narrow aggregate
-    over the band-table bucket sizes computes the exact join fan-out
-    (Σ n(n−1)/2 symmetric; Σ n_a×n_b for ``against``) and the call
-    refuses loudly past the budget instead of detonating the shuffle.
+    ``max_candidates`` is the candidate budget: :func:`pair_mass` over
+    the band table prices the join's exact fan-out (symmetric or
+    ``against``) in one narrow aggregate, and the call refuses loudly
+    past the budget instead of detonating the shuffle.
     Values-neutral; ``None`` disables it. Callers that pre-materialize
     signatures (``dedup_pipeline``) pay one cheap scan of the
     checkpointed table; with ``materialize=False`` and lazy input the
@@ -283,40 +341,16 @@ def lsh_candidate_pairs(
             signatures = signatures.transform(cut_lineage())
             materialize = False
 
-        def _band_mass(nb: int) -> int | None:
-            r = num_hashes // nb
-            bt = reduce(
-                DataFrame.unionByName,
-                [
-                    signatures.select(
-                        F.lit(b).alias("band"),
-                        F.concat(
-                            *[F.col(f"h{b * r + j}") for j in range(r)]
-                        ).alias("bsig"),
-                    )
-                    for b in range(nb)
-                ],
-            )
-            row = (
-                bt.groupBy("band", "bsig")
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .agg(
-                    F.sum(
-                        (F.col("_n") * (F.col("_n") - F.lit(1))) / F.lit(2)
-                    ).alias("c")
-                )
-                .collect()[0]["c"]
-            )
-            return None if row is None else int(row)
-
-        probes: list[tuple[int, int | None]] = []
+        probes: list[tuple[int, int]] = []
         chosen: int | None = None
         for nb in range(num_hashes, 0, -1):
             if num_hashes % nb:
                 continue
-            est = _band_mass(nb)
+            est, _ = pair_mass(
+                lsh_band_table(signatures, num_hashes, nb), ["band", "bsig"]
+            )
             probes.append((nb, est))
-            if est is None or est <= max_candidates:
+            if est <= max_candidates:
                 chosen, measured_est = nb, est
                 break
         if chosen is None:
@@ -338,9 +372,6 @@ def lsh_candidate_pairs(
             # Auto already chose the recall-maximal banding within the
             # budget — no finer banding of THIS signature both fits
             # and recovers; the fix is a bigger signature.
-            measured_s = (
-                f"{measured_est:,}" if measured_est is not None else "0"
-            )
             # Prescribe only what the signature scheme can deliver:
             # doubling past the 16-component digest ceiling is not an
             # action this library can take (round 14 — the refusal must
@@ -364,7 +395,7 @@ def lsh_candidate_pairs(
             raise ValueError(
                 f"lsh_candidate_pairs: the recall-maximal banding that "
                 f"fits max_candidates={max_candidates:,} ({bands} bands "
-                f"x {r} rows, measured {measured_s} candidates) has "
+                f"x {r} rows, measured {measured_est:,} candidates) has "
                 f"banding-theory recall {chosen_recall:.4f} at Jaccard "
                 f"{recall_jaccard:g} — below min_recall={min_recall}. "
                 f"No banding of {num_hashes} hashes can fit the budget "
@@ -376,7 +407,7 @@ def lsh_candidate_pairs(
             "recall at Jaccard %g: %.4f",
             bands,
             r,
-            f"{measured_est:,}" if measured_est is not None else "0",
+            f"{measured_est:,}",
             f"{max_candidates:,}",
             probes,
             recall_jaccard,
@@ -390,69 +421,39 @@ def lsh_candidate_pairs(
     if materialize:
         signatures = signatures.transform(cut_lineage())
 
-    def band_table(src: DataFrame, id_alias: str, sig_alias: str) -> DataFrame:
-        side = "a" if id_alias == "doc_a" else "b"
-        sig_cols = (
-            [
-                F.col(f"h{i}").alias(f"_{side}_h{i}")
-                for i in range(num_hashes)
-            ]
-            if estimate
-            else []
-        )
-        parts = [
-            src.select(
-                F.col(id_col).alias(id_alias),
-                F.lit(b).alias("band" if id_alias == "doc_a" else "band_b"),
-                F.concat(
-                    *[F.col(f"h{b * rows + r}") for r in range(rows)]
-                ).alias(sig_alias),
-                *sig_cols,
-            )
-            for b in range(bands)
+    def sig_cols(side: str) -> list[Column]:
+        if not estimate:
+            return []
+        return [
+            F.col(f"h{i}").alias(f"_{side}_h{i}") for i in range(num_hashes)
         ]
-        return reduce(DataFrame.unionByName, parts)
 
-    left = band_table(signatures, "doc_a", "bsig")
-    right = band_table(
-        signatures if against is None else against, "doc_b", "bsig_b"
+    left = lsh_band_table(
+        signatures, num_hashes, bands,
+        F.col(id_col).alias("doc_a"), *sig_cols("a"),
+    )
+    right = lsh_band_table(
+        signatures if against is None else against, num_hashes, bands,
+        F.col(id_col).alias("doc_b"), *sig_cols("b"),
+        band="band_b", bsig="bsig_b",
     )
     if max_candidates is not None and measured_est is None:
-        if against is None:
-            est = (
-                left.groupBy("band", "bsig")
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .agg(
-                    F.sum(
-                        (F.col("_n") * (F.col("_n") - F.lit(1))) / F.lit(2)
-                    ).alias("c")
-                )
-                .collect()[0]["c"]
-            )
-        else:
-            ha = left.groupBy("band", "bsig").agg(
-                F.count(F.lit(1)).alias("_na")
-            )
-            hb = right.groupBy("band_b", "bsig_b").agg(
-                F.count(F.lit(1)).alias("_nb")
-            )
-            est = (
-                ha.join(
-                    hb,
-                    (F.col("band") == F.col("band_b"))
-                    & (F.col("bsig") == F.col("bsig_b")),
-                )
-                .agg(F.sum(F.col("_na") * F.col("_nb")).alias("c"))
-                .collect()[0]["c"]
-            )
-        if est is not None and est > max_candidates:
-            rows_per_band = num_hashes // bands
+        est, _ = pair_mass(
+            left,
+            ["band", "bsig"],
+            against=(
+                None
+                if against is None
+                else lsh_band_table(against, num_hashes, bands)
+            ),
+        )
+        if est > max_candidates:
             raise ValueError(
                 f"lsh_candidate_pairs: the (band, bsig) equi-join would "
-                f"materialize ~{int(est):,} candidate rows (budget "
+                f"materialize ~{est:,} candidate rows (budget "
                 f"max_candidates={max_candidates:,}). Banded MinHash "
                 f"candidates grow with bucket mass; the current "
-                f"{bands} bands x {rows_per_band} rows are too "
+                f"{bands} bands x {rows} rows are too "
                 f"permissive for this corpus. Coarsen the banding — "
                 f"fewer bands of more rows (a pair at Jaccard s "
                 f"collides per band at s^rows; recall = "
@@ -1042,7 +1043,7 @@ def simhash_candidates(
                     "doc_a",
                     "doc_b",
                     "CAST(bit_count(_sim_a ^ _sim_b) AS INT) AS hamming",
-                ).filter(F.expr(f"hamming <= {int(_max_hamming)}"))
+                ).filter(F.expr(f"hamming <= {_max_hamming}"))
 
             rescued = None
             for j, sub in enumerate(sub_keys):
@@ -1202,6 +1203,18 @@ def simhash_near_duplicates(
     fixtures), and ``min_visible`` refuses below a doc-visibility
     floor — see ``simhash_candidates``.
     """
+    # Spliced into SQL text by the rescue joins: a float, bool or
+    # out-of-range value would compare differently there than in the
+    # main band join.
+    if (
+        not isinstance(max_hamming, int)
+        or isinstance(max_hamming, bool)
+        or not 0 <= max_hamming <= 64
+    ):
+        raise ValueError(
+            f"simhash_near_duplicates: max_hamming must be an int in "
+            f"0..64 (bits of a fingerprint), got {max_hamming!r}"
+        )
     # One materialization serves both band sides — four consumers, one
     # SimHash computation.
     simhash_df = simhash_df.transform(cut_lineage())
@@ -1220,13 +1233,10 @@ def simhash_near_duplicates(
 
 
 #: Ceiling on the inverted-index pair-join fan-out ``ngram_jaccard_pairs``
-#: will accept: sum over shingles of df*(df-1)/2 — the EXACT number of
-#: rows the per-shingle ``doc_a < doc_b`` self-join materializes before
-#: the (doc_a, doc_b) combine (same accounting as the RHP guard's
-#: n(n-1)/2; the first cut summed df² and so fired at half the stated
-#: budget). The round-7 sf10 sweep ran the unbounded form on 500k docs
-#: and the 8.1e9-row join FILLED THE DISK (8.1e9 is this formula over
-#: that corpus's ~39k shingles at df 534-752) — quadratic growth past
+#: will accept, priced by the :func:`pair_mass` accounting per shingle
+#: (the ``doc_a < doc_b`` self-join's exact row count before the
+#: (doc_a, doc_b) combine). The sf10 sweep ran the unbounded form on 500k
+#: docs and the 8.1e9-row join FILLED THE DISK — quadratic growth past
 #: the ceiling is a bug, not a workload. 1e9 rows is ~tens of GB of
 #: shuffle: large but finishable; anything beyond that wants ``max_df``
 #: (or MinHash-LSH, which samples the shingle space instead of joining
@@ -1321,9 +1331,9 @@ def ngram_jaccard_pairs(
 
     The join is additionally GUARDED (same contract as
     ``embedding_duplicate_pairs``'s block guard): before building the
-    pair join, one bounded aggregate computes its exact fan-out (sum of
-    df*(df-1)/2 over the — possibly df-filtered — shingle table, the
-    row count the ``doc_a < doc_b`` self-join materializes); past
+    pair join, one bounded aggregate computes its exact fan-out (the
+    :func:`pair_mass` accounting over the — possibly df-filtered —
+    shingle table's df histogram); past
     ``max_join_rows`` the call fails FAST naming the subquadratic
     routes instead of detonating shuffle/disk at scale. ``None``
     disables the guard for callers that have already bounded their
@@ -1362,45 +1372,63 @@ def ngram_jaccard_pairs(
     # (Multi-reference first consumers would race-duplicate the explode
     # — the a43 lesson — which is why `sizes` below stays eager.)
     sh = sh.transform(cut_lineage(eager=False))
-    if auto_df:
+    if max_join_rows is not None:
+        # The guard reads the df HISTOGRAM, not just its Σ: the second
+        # groupBy runs over ≤ |distinct df values| rows (a few hundred at
+        # any corpus size), and filter_hot_shingles keeps whole df
+        # levels, so the surviving mass at max_df=m is the cumulative Σ
+        # over df ≤ m — the max_df that fits is exactly computable here.
         hist = sorted(
-            (r["_df"], r["_n"])
+            (r["_df"], r["_shingles"], r["_mass"])
             for r in (
                 sh.groupBy("shingle")
                 .agg(F.count(F.lit(1)).alias("_df"))
                 .groupBy("_df")
-                .agg(F.count(F.lit(1)).alias("_n"))
+                .agg(
+                    F.count(F.lit(1)).alias("_shingles"),
+                    F.sum(_bucket_pairs("_df")).alias("_mass"),
+                )
                 .collect()
             )
         )
-        est = sum(n * d * (d - 1) // 2 for d, n in hist)
+        est = sum(m for _, _, m in hist)
         if est > max_join_rows:
-            cum, fit_df = 0, 1
-            for d, n in hist:
-                c = n * d * (d - 1) // 2
-                if cum + c > max_join_rows:
+            cum, fit_df = 0, 1  # df=1 shingles never join: always fit
+            for df_v, _, m in hist:
+                if cum + m > max_join_rows:
                     break
-                cum += c
-                fit_df = d
+                cum += m
+                fit_df = df_v
+            if not auto_df:
+                raise ValueError(
+                    f"ngram_jaccard_pairs: the inverted-index pair join "
+                    f"would materialize {est:,} rows (> max_join_rows="
+                    f"{max_join_rows:,}); the per-shingle self-join is "
+                    "quadratic in document frequency by contract. At "
+                    f"this corpus's measured df distribution, max_df="
+                    f"{fit_df} fits the budget (surviving mass {cum:,} "
+                    "rows); pass it to bound hot shingles — or use the "
+                    "subquadratic near-dup routes (minhash_signatures + "
+                    "lsh_candidate_pairs, simhash_near_duplicates), "
+                    "which sample the shingle space instead of joining "
+                    "all of it."
+                )
             if cum == 0:
-                # Even the df=2 level alone exceeds the budget: the
-                # prescribed fit (max_df=1) would leave ZERO join mass
-                # — every result row silently gone. That is a total-
-                # result change the pinned/None contract would refuse
-                # loudly, so auto must too (ADVICE r12): no max_df
-                # makes this operator fit this corpus.
+                # Even the df=2 level alone exceeds the budget: the only
+                # fitting cap (max_df=1) would leave ZERO join mass —
+                # every result row silently gone, a total-result change
+                # the pinned contract refuses loudly, so auto must too.
                 raise ValueError(
                     f"ngram_jaccard_pairs: max_df='auto' cannot fit "
                     f"this corpus — the df=2 level alone materializes "
                     f"more than max_join_rows={max_join_rows:,} rows "
-                    f"(unfiltered mass {int(est):,}), so the only "
+                    f"(unfiltered mass {est:,}), so the only "
                     f"fitting cap (max_df=1) would leave zero "
                     f"candidate pairs. Use the subquadratic routes "
                     f"(minhash_signatures + lsh_candidate_pairs, "
                     f"simhash_near_duplicates), which sample the "
                     f"shingle space instead of joining all of it."
                 )
-            dropped = sum(n for d, n in hist if d > fit_df)
             _LOG.warning(
                 "ngram auto max_df: unfiltered join mass %s exceeds "
                 "max_join_rows %s; applying max_df=%d (surviving mass "
@@ -1409,57 +1437,12 @@ def ngram_jaccard_pairs(
                 f"{max_join_rows:,}",
                 fit_df,
                 f"{cum:,}",
-                dropped,
+                sum(n for d, n, _ in hist if d > fit_df),
             )
             # Second checkpoint: the filtered table feeds three
             # consumers (set sizes + both join sides); without it each
             # re-runs the df window over the raw checkpoint.
             sh = filter_hot_shingles(sh, fit_df).transform(cut_lineage())
-        # The chosen mass fits by construction (or nothing bound) —
-        # the histogram WAS the guard; no second aggregate.
-        max_join_rows = None
-    if max_join_rows is not None:
-        # Guard aggregate, round-12 form: the df HISTOGRAM instead of
-        # the single Σ df(df−1)/2 row. Same two-shuffle cost (the
-        # second groupBy runs over ≤ |distinct df values| rows — a few
-        # hundred at any corpus size), the Σ is derived from it, and
-        # when the guard fires it can PRESCRIBE the max_df that fits:
-        # filter_hot_shingles keeps whole df-levels, so the surviving
-        # mass at max_df=m is the histogram's cumulative Σ over df ≤ m
-        # — exactly computable here, the way the RHP refusal prescribes
-        # bits/bands (VERDICT r11 ask #8; the x07 cap-transition sweep
-        # measured the df distribution this reads).
-        hist = sorted(
-            (r["_df"], r["_n"])
-            for r in (
-                sh.groupBy("shingle")
-                .agg(F.count(F.lit(1)).alias("_df"))
-                .groupBy("_df")
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .collect()
-            )
-        )
-        est = sum(n * df_v * (df_v - 1) // 2 for df_v, n in hist)
-        if est > max_join_rows:
-            cum, fit_df = 0, 1  # df=1 shingles never join: always fit
-            for df_v, n in hist:
-                c = n * df_v * (df_v - 1) // 2
-                if cum + c > max_join_rows:
-                    break
-                cum += c
-                fit_df = df_v
-            raise ValueError(
-                f"ngram_jaccard_pairs: the inverted-index pair join would "
-                f"materialize {int(est):,} rows (> max_join_rows="
-                f"{max_join_rows:,}); the per-shingle self-join is "
-                "quadratic in document frequency by contract. At this "
-                f"corpus's measured df distribution, max_df={fit_df} "
-                f"fits the budget (surviving mass {cum:,} rows); pass "
-                "it to bound hot shingles — or use the subquadratic "
-                "near-dup routes (minhash_signatures + "
-                "lsh_candidate_pairs, simhash_near_duplicates), which "
-                "sample the shingle space instead of joining all of it."
-            )
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("set_size")).transform(cut_lineage())
 
     a = sh.select(F.col(id_col).alias("doc_a"), F.col("shingle").alias("sh_a"))

@@ -35,7 +35,7 @@ from ..functions.vectors import (
     dot_literal_sql,
     l2_norm,
 )
-from .dedup import _spread
+from .dedup import _spread, pair_mass
 
 #: Scale-diagnostic logger (INFO): candidate-budget numbers the guards
 #: compute anyway — Σ n(n−1)/2 and the largest cell — so a rung harness
@@ -870,19 +870,18 @@ def rhp_signatures(
     )
 
 
-#: Candidate-row budget for ``rhp_near_duplicates``: Σ n(n-1)/2 over
-#: (band, band_sig) buckets — the exact row count the bucket equi-join
-#: streams through the cosine verify. LSH candidates grow as
+#: Candidate-row budget for ``rhp_near_duplicates``, priced by
+#: ``pair_mass`` over the (band, band_sig) buckets — the rows the bucket
+#: equi-join streams through the cosine verify. LSH candidates grow as
 #: ~n²/2^bits per band, so a band width sized for one rung is a
 #: corpus-sized model exactly like SemDeDup's k. Measured on the
 #: 12-bit-band registered geometry: 500k vectors → 228,241,904
-#: candidates; 1M vectors → 911,630,744. Since the round-10
-#: verify-in-join rewrite the candidate stream is codegen-only (the
-#: old shape re-joined vectors per candidate row and ENOSPC'd this
-#: container at 2.7e8 candidates), so the budget now bounds verify CPU
-#: and the surviving-pair distinct rather than a per-candidate disk
-#: spill. 500M sits between the two measured rungs; cluster callers
-#: can raise it.
+#: candidates; 1M vectors → 911,630,744. With verify-in-join the
+#: candidate stream is codegen-only (re-joining vectors per candidate
+#: row ENOSPC'd a 78 GB disk at 2.7e8 candidates), so the budget bounds
+#: verify CPU and the surviving-pair distinct rather than a
+#: per-candidate disk spill. 500M sits between the two measured rungs;
+#: cluster callers can raise it.
 MAX_RHP_CANDIDATE_ROWS = 500_000_000
 
 
@@ -934,26 +933,16 @@ def rhp_candidate_estimate(
     seed: int = 13,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-) -> int | None:
+) -> int:
     """Exact candidate-row count of the (band, band_sig) equi-join at
-    the given geometry: Σ n(n−1)/2 over bucket sizes, from a NARROW
+    the given geometry (``pair_mass`` over the buckets), from a NARROW
     signature pass — no vector payload, no checkpoint, one shuffle of
     (band, band_sig) longs. This is the same number the in-operator
     fan-out guard computes; exposed separately so auto-sizing can probe
     a geometry for the cost of a signing pass instead of building the
-    wide checkpointed join input first."""
+    wide checkpointed join input first. Empty input gives 0."""
     s = rhp_signatures(embeddings, n_bits, bands, dim, seed, id_col, vec_col)
-    row = (
-        s.groupBy("band", "band_sig")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(
-            F.sum((F.col("n") * (F.col("n") - F.lit(1))) / F.lit(2)).alias(
-                "cand"
-            )
-        )
-        .collect()[0]["cand"]
-    )
-    return None if row is None else int(row)
+    return pair_mass(s, ["band", "band_sig"])[0]
 
 
 def rhp_recall_estimate(cosine: float, band_bits: int, bands: int) -> float:
@@ -1090,10 +1079,9 @@ def rhp_escalate_geometry(
         raise ValueError(f"min_recall must be in (0, 1], got {min_recall}")
 
     def _probe(bb: int, nb: int) -> int:
-        est = rhp_candidate_estimate(
+        return rhp_candidate_estimate(
             embeddings, bb * nb, nb, dim, seed, id_col, vec_col
         )
-        return 0 if est is None else est
 
     probes: list[tuple[int, int, int]] = []
     law_bb = max(1, n_bits // bands)
@@ -1415,24 +1403,15 @@ def rhp_near_duplicates(
         .transform(cut_lineage(storage_level=StorageLevel.MEMORY_AND_DISK))
     )
     if max_candidates is not None:
-        if measured_est is not None:
-            # Auto mode's escalation already measured Σ n(n−1)/2 at
-            # exactly this geometry (a deterministic aggregate of the
-            # same signatures) — recomputing it on the checkpointed
-            # sigs would be a redundant full pass (ADVICE r11).
-            est = measured_est
-        else:
-            est = (
-                sigs.groupBy("band", "band_sig")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .agg(
-                    F.sum(
-                        (F.col("n") * (F.col("n") - F.lit(1))) / F.lit(2)
-                    ).alias("cand")
-                )
-                .collect()[0]["cand"]
-            )
-        if est is not None and est > max_candidates:
+        # Auto mode's escalation already measured the mass at exactly
+        # this geometry (a deterministic aggregate of the same
+        # signatures) — no second pass over the checkpointed sigs.
+        est = (
+            measured_est
+            if measured_est is not None
+            else pair_mass(sigs, ["band", "band_sig"])[0]
+        )
+        if est > max_candidates:
             band_bits = n_bits // bands
             if band_bits >= RHP_MAX_BAND_BITS:
                 # At the packing/JIT ceiling wider bands are not on the
@@ -1440,7 +1419,7 @@ def rhp_near_duplicates(
                 # message below) would send an auto caller in a circle.
                 raise ValueError(
                     f"rhp_near_duplicates: the (band, band_sig) "
-                    f"equi-join would materialize ~{int(est):,} "
+                    f"equi-join would materialize ~{est:,} "
                     f"candidate rows (budget max_candidates="
                     f"{max_candidates:,}) and the {band_bits}-bit "
                     f"bands are already at the RHP_MAX_BAND_BITS="
@@ -1454,7 +1433,7 @@ def rhp_near_duplicates(
                 )
             raise ValueError(
                 f"rhp_near_duplicates: the (band, band_sig) equi-join "
-                f"would materialize ~{int(est):,} candidate rows "
+                f"would materialize ~{est:,} candidate rows "
                 f"(budget max_candidates={max_candidates:,}). LSH "
                 f"candidates grow ~n²/2^bits per band; the current "
                 f"{band_bits}-bit bands are under-sized for this corpus. "
@@ -1523,19 +1502,19 @@ SEMANTIC_DEDUP_BROADCAST_LIMIT = 2_000_000
 #: puts the dot firmly in the measured flat-wins regime.
 IVF_ASSIGN_FLAT_MIN_K = 512
 
-#: Candidate-row budget for the SemDeDup pair scan: Σ n(n−1)/2 over IVF
-#: cells — the exact row count the within-cell ``vec_a < vec_b`` join
-#: materializes, and with a FIXED centroid count k it grows as n²/k (the
-#: corpus-sized-model law; k must grow ≈ n / target_cell_size to stay
-#: subquadratic). Calibrated like ``MAX_RHP_CANDIDATE_ROWS``, from
-#: measured rungs on the sweep geometry (Zipf cells, 64-float vectors,
-#: 32 cores / 32 GB): 500k vectors at k=128 → Σ = 1,225,876,669
-#: (completes, 413.7 s); 1M at k=512 → Σ = 1,221,765,599 (completes,
-#: near-linear); 1M at k=128 → Σ = 4,642,830,936 (~25 min in the pair
-#: scan, then AGGREGATE_OUT_OF_MEMORY in the CC stage — the round-8
-#: measured DNF). 2.5e9 is ~2× the passing rungs' load and refuses the
-#: one that died. A single-node budget; cluster callers with real
-#: aggregate memory can raise it.
+#: Candidate-row budget for the SemDeDup pair scan, priced by
+#: ``pair_mass`` over the IVF cells — the rows the within-cell
+#: ``vec_a < vec_b`` join materializes; with a FIXED centroid count k it
+#: grows as n²/k (the corpus-sized-model law; k must grow ≈ n /
+#: target_cell_size to stay subquadratic). Calibrated like
+#: ``MAX_RHP_CANDIDATE_ROWS``, from measured rungs on the sweep geometry
+#: (Zipf cells, 64-float vectors, 32 cores / 32 GB): 500k vectors at
+#: k=128 → 1,225,876,669 (completes, 413.7 s); 1M at k=512 →
+#: 1,221,765,599 (completes, near-linear); 1M at k=128 → 4,642,830,936
+#: (~25 min in the pair scan, then AGGREGATE_OUT_OF_MEMORY in the CC
+#: stage). 2.5e9 is ~2× the passing rungs' load and refuses the one that
+#: died. A single-node budget; cluster callers with real aggregate
+#: memory can raise it.
 MAX_SEMDEDUP_CANDIDATE_ROWS = 2_500_000_000
 
 
@@ -1566,9 +1545,9 @@ def semantic_pair_candidates(
     into an OOM):
 
     - ``max_candidates`` (ON by default, ``MAX_SEMDEDUP_CANDIDATE_ROWS``)
-      — one bounded Σ n(n−1)/2 aggregate over cell sizes, the exact
-      pair-scan row count; past the budget the call refuses, naming the
-      largest cells and the k-growth law, instead of grinding into
+      — ``pair_mass`` over the cells, the exact pair-scan row count
+      (one bounded aggregate); past the budget the call refuses, naming
+      the largest cells and the k-growth law, instead of grinding into
       ``AGGREGATE_OUT_OF_MEMORY``. Values-neutral; ``None`` disables.
     - ``max_cell`` (off by default) — a per-cell ceiling for callers
       that want the paper's bounded-cell contract enforced directly.
@@ -1602,33 +1581,26 @@ def semantic_pair_candidates(
 
     n_rows = row_count_hint
     if max_cell is not None or max_candidates is not None:
-        # One cell-size aggregate serves both guards; ``blocked`` is
-        # checkpointed by semantic_dedup, so this costs one cheap job
-        # over materialized blocks, not a lineage re-execution.
+        # ``blocked`` is checkpointed by semantic_dedup, so each guard
+        # costs one cheap job over materialized blocks, not a lineage
+        # re-execution; the refusals name the largest cells.
         cells = blocked.groupBy(F.col("centroid_id").alias("_cell")).agg(
             F.count(F.lit(1)).alias("n")
         )
         if max_candidates is not None:
-            guard_row = cells.agg(
-                F.sum(
-                    (F.col("n") * (F.col("n") - F.lit(1))) / F.lit(2)
-                ).alias("cand"),
-                F.sum("n").alias("rows"),
-            ).collect()[0]
-            est = guard_row["cand"]
+            # The join-strategy gate's row count rides the SAME
+            # aggregate (Σ cell sizes = |blocked|) — one action instead
+            # of a separate blocked.count().
+            est, rows = pair_mass(blocked, ["centroid_id"])
             if n_rows is None:
-                # The join-strategy gate's row count rides the SAME
-                # aggregate (Σ cell sizes = |blocked|) — one action
-                # instead of a separate blocked.count() (round 14).
-                n_rows = int(guard_row["rows"] or 0)
-            if est is not None:
-                _LOG.info(
-                    "semantic_pair_candidates: sigma n(n-1)/2 = %d "
-                    "candidate rows (budget %d)",
-                    int(est),
-                    max_candidates,
-                )
-            if est is not None and est > max_candidates:
+                n_rows = rows
+            _LOG.info(
+                "semantic_pair_candidates: sigma n(n-1)/2 = %d "
+                "candidate rows (budget %d)",
+                est,
+                max_candidates,
+            )
+            if est > max_candidates:
                 top = (
                     cells.orderBy(F.desc("n"), F.asc("_cell"))
                     .limit(3)
@@ -1636,7 +1608,7 @@ def semantic_pair_candidates(
                 )
                 raise ValueError(
                     f"semantic_pair_candidates: the within-cell pair scan "
-                    f"would materialize {int(est):,} candidate rows "
+                    f"would materialize {est:,} candidate rows "
                     f"(budget max_candidates={max_candidates:,}; largest "
                     f"cells: {[(r['_cell'], r['n']) for r in top]}). With "
                     "a FIXED centroid count k the scan is O(n²/k) — a "

@@ -46,30 +46,14 @@ ANCHOR_JACCARD = 0.84  # the recall harness's measured fixture mean
 
 
 def band_mass(sigs, num_hashes: int, bands: int) -> int:
-    """The operator's own Σ n(n−1)/2 accounting at one banding."""
-    from pyspark.sql import DataFrame
-    from pyspark.sql import functions as F
+    """The operator's own candidate budget at one banding."""
+    from clinical_trials_data_pipeline_analyis_spark.operators.dedup import (
+        lsh_band_table,
+        pair_mass,
+    )
 
-    r = num_hashes // bands
-    bt = reduce(
-        DataFrame.unionByName,
-        [
-            sigs.select(
-                F.lit(b).alias("band"),
-                F.concat(*[F.col(f"h{b * r + j}") for j in range(r)]).alias(
-                    "bsig"
-                ),
-            )
-            for b in range(bands)
-        ],
-    )
-    row = (
-        bt.groupBy("band", "bsig")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.sum(F.col("n") * (F.col("n") - 1) / 2).alias("c"))
-        .collect()[0]["c"]
-    )
-    return 0 if row is None else int(row)
+    bt = lsh_band_table(sigs, num_hashes, bands)
+    return pair_mass(bt, ["band", "bsig"])[0]
 
 
 def banding_recall(s: float, num_hashes: int, bands: int) -> float:

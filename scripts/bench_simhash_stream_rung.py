@@ -39,6 +39,23 @@ sys.path.insert(0, _ROOT)
 MAX_HAMMING = 6
 
 
+def halves_mass(fps) -> int:
+    """Candidate mass of the two 16-bit half-bucket joins together."""
+    from pyspark.sql import functions as F
+
+    from clinical_trials_data_pipeline_analyis_spark.operators.dedup import (
+        pair_mass,
+    )
+
+    halves = (
+        F.col("simhash") % 65536,
+        F.expr("CAST(shiftright(simhash, 16) & 65535 AS BIGINT)"),
+    )
+    return sum(
+        pair_mass(fps.select(h.alias("half")), ["half"])[0] for h in halves
+    )
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--dir", default=os.path.join(_ROOT, "testdata_sf10"))
@@ -136,47 +153,21 @@ def main() -> None:
 
         # per-epoch candidate mass from the epoch-partitioned store:
         # per half-bucket, n_e x n_<e + C(n_e, 2), summed over BOTH
-        # halves
+        # halves — the mass of epochs <= e minus the mass of the epochs
+        # before it (epochs without input rows add none)
         store = spark.read.parquet(store_path)
-        halves = [
-            (F.col("simhash") % 65536).alias("half"),
-            F.expr("CAST(shiftright(simhash, 16) & 65535 AS BIGINT)").alias(
-                "half"
-            ),
-        ]
         epoch_cands: dict[int, int] = {}
+        before = 0
         for e in sorted(epoch_walls):
-            total_e = 0
-            for half in halves:
-                cnew = (
-                    store.filter(F.col("epoch_id") == e)
-                    .select(half)
-                    .groupBy("half")
-                    .agg(F.count(F.lit(1)).alias("n_new"))
-                )
-                chist = (
-                    store.filter(F.col("epoch_id") < e)
-                    .select(half)
-                    .groupBy("half")
-                    .agg(F.count(F.lit(1)).alias("n_hist"))
-                )
-                row = (
-                    cnew.join(chist, "half", "left")
-                    .agg(
-                        F.sum(
-                            F.col("n_new")
-                            * F.coalesce(F.col("n_hist"), F.lit(0))
-                            + (F.col("n_new") * (F.col("n_new") - F.lit(1)))
-                            / F.lit(2)
-                        ).alias("cand")
-                    )
-                    .collect()[0]
-                )
-                total_e += int(row["cand"] or 0)
-            epoch_cands[e] = total_e
+            upto = halves_mass(store.filter(F.col("epoch_id") <= e))
+            epoch_cands[e], before = upto - before, upto
             print(
                 json.dumps(
-                    {"epoch": e, "sec": epoch_walls[e], "candidates": total_e}
+                    {
+                        "epoch": e,
+                        "sec": epoch_walls[e],
+                        "candidates": epoch_cands[e],
+                    }
                 ),
                 flush=True,
             )
@@ -205,27 +196,8 @@ def main() -> None:
         batch_wall = round(time.perf_counter() - t0, 1)
         out["batch"] = {"wall_sec": batch_wall, "flagged": n_flag_batch}
 
-        # one-shot Σ n(n−1)/2 over both halves on the SAME fingerprints
-        fps_m = fps.localCheckpoint()
-        total = 0
-        for half in (
-            (F.col("simhash") % 65536).alias("half"),
-            F.expr("CAST(shiftright(simhash, 16) & 65535 AS BIGINT)").alias(
-                "half"
-            ),
-        ):
-            row = (
-                fps_m.select(half)
-                .groupBy("half")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .agg(
-                    F.sum(
-                        (F.col("n") * (F.col("n") - F.lit(1))) / F.lit(2)
-                    ).alias("cand")
-                )
-                .collect()[0]
-            )
-            total += int(row["cand"] or 0)
+        # one-shot mass over both halves on the SAME fingerprints
+        total = halves_mass(fps.localCheckpoint())
         out["batch"]["total_candidates"] = total
         print(json.dumps({"leg": "batch", **out["batch"]}), flush=True)
 

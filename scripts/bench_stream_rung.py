@@ -54,6 +54,7 @@ def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "32g")
     from pyspark.sql import functions as F
 
+    from clinical_trials_data_pipeline_analyis_spark.operators.dedup import pair_mass
     from clinical_trials_data_pipeline_analyis_spark.operators.similarity import rhp_near_duplicates
     from clinical_trials_data_pipeline_analyis_spark.session import get_spark
     from clinical_trials_data_pipeline_analyis_spark.streaming import rhp_near_dedup_stream
@@ -132,30 +133,17 @@ def main() -> None:
         }
 
         # per-epoch candidate mass, recomputed from the epoch-partitioned
-        # store: epoch e pays n_e x n_<e + C(n_e, 2) per bucket.
+        # store: epoch e pays n_e x n_<e + C(n_e, 2) per bucket — the
+        # mass of epochs <= e minus the mass of the epochs before it
+        # (epochs without input rows add none).
         store = spark.read.parquet(store_path)
         epoch_cands: dict[int, int] = {}
+        before = 0
         for e in sorted(epoch_walls):
-            new = store.filter(F.col("epoch_id") == e)
-            hist = store.filter(F.col("epoch_id") < e)
-            cnew = new.groupBy("band", "band_sig").agg(
-                F.count(F.lit(1)).alias("n_new")
-            )
-            chist = hist.groupBy("band", "band_sig").agg(
-                F.count(F.lit(1)).alias("n_hist")
-            )
-            row = (
-                cnew.join(chist, ["band", "band_sig"], "left")
-                .agg(
-                    F.sum(
-                        F.col("n_new") * F.coalesce(F.col("n_hist"), F.lit(0))
-                        + (F.col("n_new") * (F.col("n_new") - F.lit(1)))
-                        / F.lit(2)
-                    ).alias("cand")
-                )
-                .collect()[0]
-            )
-            epoch_cands[e] = int(row["cand"])
+            upto = pair_mass(
+                store.filter(F.col("epoch_id") <= e), ["band", "band_sig"]
+            )[0]
+            epoch_cands[e], before = upto - before, upto
             print(
                 json.dumps(
                     {
@@ -192,23 +180,14 @@ def main() -> None:
         batch_wall = round(time.perf_counter() - t0, 1)
         out["batch"] = {"wall_sec": batch_wall, "flagged": n_flag_batch}
 
-        # one-shot guard accounting on the SAME signatures: Sigma n(n-1)/2
+        # one-shot guard accounting on the SAME signatures
         from clinical_trials_data_pipeline_analyis_spark.operators.similarity import rhp_signatures
 
         sigs = rhp_signatures(
             emb, RHP_BITS, RHP_BANDS, 64, 13, "vec_id", "embedding"
         )
-        total = (
-            sigs.groupBy("band", "band_sig")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .agg(
-                F.sum((F.col("n") * (F.col("n") - F.lit(1))) / F.lit(2)).alias(
-                    "cand"
-                )
-            )
-            .collect()[0]["cand"]
-        )
-        out["batch"]["total_candidates"] = int(total)
+        total = pair_mass(sigs, ["band", "band_sig"])[0]
+        out["batch"]["total_candidates"] = total
         print(json.dumps({"leg": "batch", **out["batch"]}), flush=True)
 
         prior = os.path.join(args.dir, "stream_result.json")
@@ -218,9 +197,9 @@ def main() -> None:
         if "stream" in out:
             # accounting identity: every unordered bucket pair is paid
             # once, in the epoch its later id arrives
-            assert out["stream"]["sum_candidates"] == int(total), (
+            assert out["stream"]["sum_candidates"] == total, (
                 out["stream"]["sum_candidates"],
-                int(total),
+                total,
             )
             out["candidates_identity"] = "exact"
         if os.path.exists(flags_path):

@@ -5,6 +5,7 @@ that |corpus| x k assign dots dominate once k ∝ n.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_DIR
@@ -58,6 +59,9 @@ def test_semantic_dedup_auto_flat_rule(spark, monkeypatch):
 # candidates vs the 500M budget at 17-bit bands; auto mode now probes
 # the actual candidate mass and widens until it fits).
 # ---------------------------------------------------------------------
+from clinical_trials_data_pipeline_analyis_spark.operators.dedup import (  # noqa: E402
+    pair_mass,
+)
 from clinical_trials_data_pipeline_analyis_spark.operators.similarity import (  # noqa: E402
     rhp_candidate_estimate,
     rhp_escalate_bits,
@@ -66,19 +70,59 @@ from clinical_trials_data_pipeline_analyis_spark.operators.similarity import (  
 )
 
 
+def _equi_join_rows(df, keys, against=None):
+    """Row count of the bucket equi-join itself — the number
+    ``pair_mass`` must predict without running it."""
+    a = df.select(F.col("id").alias("_id_a"), *keys)
+    b = (df if against is None else against).select(
+        F.col("id").alias("_id_b"), *[F.col(k).alias(f"{k}_b") for k in keys]
+    )
+    cond = [F.col(k) == F.col(f"{k}_b") for k in keys]
+    if against is None:
+        cond.append(F.col("_id_a") < F.col("_id_b"))
+    return a.join(b, cond).count()
+
+
 def test_rhp_candidate_estimate_matches_bucket_math(spark):
-    """The narrow estimate must equal Σ n(n−1)/2 over the bucket sizes
-    of the SAME geometry's signature table, computed independently."""
+    """The narrow estimate must equal the row count of the (band,
+    band_sig) equi-join over the SAME geometry's signature table."""
     emb = _emb(spark)
     est = rhp_candidate_estimate(emb, 8, 2, dim=_DIM)
-    sizes = (
-        rhp_signatures(emb, 8, 2, dim=_DIM)
-        .groupBy("band", "band_sig")
-        .count()
-        .collect()
+    sigs = rhp_signatures(emb, 8, 2, dim=_DIM).withColumnRenamed("vec_id", "id")
+    assert est == _equi_join_rows(sigs, ["band", "band_sig"]) and est > 0
+
+
+_MASS_SCHEMA = "id long, band int, bsig string"
+_MASS_ROWS = {
+    # 12 rows over 2 bands: a mix of singleton and shared buckets
+    "spread": [(i, i % 2, f"s{i % 5}") for i in range(12)],
+    # one hot bucket holding 40 of 45 rows
+    "hot": [(i, 0, "hot") for i in range(40)]
+    + [(100 + i, 1, f"c{i}") for i in range(5)],
+    "empty": [],
+}
+
+
+@pytest.mark.parametrize("against", [False, True], ids=["symmetric", "against"])
+@pytest.mark.parametrize("shape", sorted(_MASS_ROWS))
+def test_pair_mass_matches_equi_join(spark, shape, against):
+    """pair_mass (the one accounting every candidate-budget guard uses)
+    must equal the row count of the join it prices — Σ n(n−1)/2 under
+    ``id_a < id_b``, Σ n_a·n_b against a second frame — and its row
+    count must equal the frame's; empty input gives (0, 0)."""
+    df = spark.createDataFrame(_MASS_ROWS[shape], _MASS_SCHEMA)
+    other = (
+        spark.createDataFrame(_MASS_ROWS["spread"], _MASS_SCHEMA)
+        if against
+        else None
     )
-    expected = sum(r["count"] * (r["count"] - 1) // 2 for r in sizes)
-    assert est == expected and est > 0
+    pairs, rows = pair_mass(df, ["band", "bsig"], against=other)
+    assert pairs == _equi_join_rows(df, ["band", "bsig"], other)
+    assert rows == len(_MASS_ROWS[shape])
+    if shape == "empty":
+        assert (pairs, rows) == (0, 0)
+    elif shape == "hot" and not against:
+        assert pairs == 40 * 39 // 2
 
 
 def test_rhp_escalate_bits_fits_the_budget(spark):

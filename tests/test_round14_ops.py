@@ -141,6 +141,28 @@ def test_simhash_min_visible_floor(spark):
         simhash_candidates(df, "doc_id", max_bucket=3, min_visible=1.5)
 
 
+def test_simhash_max_hamming_must_be_an_int_in_range(spark):
+    """The rescue joins splice max_hamming into SQL text while the main
+    band join compares the value itself, so a non-int threshold would
+    select different pairs on the two paths (-0.5 admits hamming-0
+    rescue pairs and no main-join pairs). It is refused up front."""
+    from clinical_trials_data_pipeline_analyis_spark.operators.dedup import (
+        simhash_near_duplicates,
+    )
+
+    df = _hot_fixture(spark)
+    for bad in (-0.5, 2.5, float("nan"), float("inf"), True, -1, 65, "6"):
+        with pytest.raises(ValueError, match="max_hamming must be an int"):
+            simhash_near_duplicates(
+                df, "doc_id", bad, max_bucket=3, rescue_near=True
+            )
+    for ok in (0, 64):
+        rows = simhash_near_duplicates(
+            df, "doc_id", ok, max_bucket=3, rescue_near=True
+        ).collect()
+        assert all(r["hamming"] <= ok for r in rows)
+
+
 def test_simhash_cap_probe_silent_when_cap_does_not_bind(spark, caplog):
     """An unbinding cap (or cap_stats=False) must not log."""
     from clinical_trials_data_pipeline_analyis_spark.operators.dedup import (

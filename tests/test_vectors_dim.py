@@ -220,6 +220,32 @@ def test_str_operands_are_bit_identical_to_column_form(spark):
                 )
 
 
+def test_dotted_str_operands_resolve_nested_fields(spark):
+    """A dotted str operand names a struct field, as ``F.col`` reads
+    it: dot/l2_norm/cosine_similarity on ``meta.a`` must equal the
+    Column form (a backtick-quoted splice would not resolve at all)."""
+    df = _pairs_df(
+        spark, [(1, [1.0, 2.0, 3.0], [4.0, 5.0, 6.0]), (2, [0.5], [2.0])]
+    ).select("id", F.struct("a", "b").alias("meta"))
+    ca, cb = F.col("meta.a"), F.col("meta.b")
+    for flat in (False, True):
+        got = df.select(
+            dot(ca, cb, dim=3, use_flat=flat).alias("c_dot"),
+            dot("meta.a", "meta.b", dim=3, use_flat=flat).alias("s_dot"),
+            dot("meta.a", cb, dim=3, use_flat=flat).alias("m_dot"),
+            l2_norm(ca, dim=3, use_flat=flat).alias("c_norm"),
+            l2_norm("meta.a", dim=3, use_flat=flat).alias("s_norm"),
+            cosine_similarity(ca, cb, dim=3, use_flat=flat).alias("c_cos"),
+            cosine_similarity("meta.a", "meta.b", dim=3, use_flat=flat).alias(
+                "s_cos"
+            ),
+        ).collect()
+        for r in got:
+            assert r["c_dot"] == r["s_dot"] == r["m_dot"]
+            assert r["c_norm"] == r["s_norm"]
+            assert r["c_cos"] == r["s_cos"]
+
+
 def test_str_operands_escape_backticks():
     # the SQL splice must quote identifiers: a name containing a
     # backtick round-trips (ADVICE r14's dot_literal_sql caveat, fixed
