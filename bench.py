@@ -7,71 +7,33 @@ stdout and parses the FINAL line as JSON, so the summary must be small):
 - one verbose JSON line per query as it finishes:
   {"query": full_name, "sec": t, "rows": n}  — these are for
   humans / logs (``rows`` is the materialized count);
-- the full-name timing map is also written to ``bench_full.json``
-  next to this script;
+- the full per-query record is also written to ``bench_full.json``
+  next to this script (or to ``$SPARK_GRAFT_BENCH_OUT``);
 - the LAST stdout line is ONE compact JSON summary
   {"metric":"suite_wall_clock","value":total,"unit":"sec",
-   "queries":{short: sec},"sf":...}
+   "queries":{short: sec},"sf":...,"calib_sec":...}
   where ``short`` is the query-id prefix (e.g. ``a21``, ``q06``,
   ``x05``) — unique across the suite and ~12 bytes per entry, keeping
-  the line well under the tail-capture limit at 78+ queries. If the
+  the line well under the tail-capture limit at 127 queries. If the
   line would still exceed the limit, the "queries" map is dropped and
   "queries_truncated": true marks the omission (full map remains in
   ``bench_full.json``).
 
-Each query is executed with a count()-style full materialization so the
-measured time covers the whole plan, not just plan construction.
+Timing method — one, for every row: cached tables and the JVM heap are
+cleared outside the timed window, then the query runs twice
+back to back. Each sample times construction (building the DataFrame,
+which for the iterative operators launches guard and loop jobs) and
+execution (a count()-style full materialization) separately. The filed
+number is the smaller sample total; ``bench_full.json`` keeps both
+totals plus the construct/execute split and row count of the filed
+sample, so every row carries its own spread.
 
-Adjudication pass (round 10 — VERDICT r9 ask #1; tightened round 11):
-with 120 queries in one long-lived local[] JVM, the per-query GC
-hygiene below no longer fully isolates mid-suite CPU-bound queries —
-round 9 filed 7 rows over the 2x driver gate that solo re-runs cleared
-(a31 5.87s in-suite vs 2.57s solo, identical code; the round-5 x16
-12.3-vs-1.7 artifact at larger suite size). So after the timed pass,
-any query whose in-suite time reaches 1.5x its BASELINE.md row is
-RE-RUN solo-style at suite end (GC-settled, best of 2 warm runs — the
-same methodology the judge used to adjudicate round 9) and BOTH
-numbers are filed. Round-11 refinements (ADVICE r10 + VERDICT ask #5):
-
-- the 1.5x trigger is scaled by max(1, calib_sec / REFERENCE_CALIB)
-  so a degraded host (round 10 saw calib 1.42-1.67 vs the ~0.45
-  reference, ~3.5x slower) doesn't trip the gate on nearly every row
-  and turn the pass into a near-full best-of-2 re-run; on hosts at or
-  faster than reference the raw 1.5x applies unchanged; the scaled
-  gate is CAPPED at 1.9x (round-12, VERDICT r11 ask #5) so it can
-  never cross the driver's 2.0x per-row ceiling — without the cap, a
-  calib >= 0.57 host would let a genuinely >=2x-regressed row file
-  unadjudicated;
-- the comparison is ``>=`` (round 10's a32 landed at exactly 1.50x
-  and escaped adjudication on the strict ``>``);
-- the ADJUDICATED number filed into ``queries`` / the suite total is
-  the RETIMED value itself, not min(in-suite, retimed): min() was an
-  asymmetric correction (slow rows got a second chance, no row ever
-  adjusted upward) that composed a best-case suite no single run
-  produced. The retimed value is a measurement under documented
-  conditions (quiet heap, best-of-2 warm) and can move a row in
-  either direction;
-- a fixed CONTROL sample of in-gate rows (never gate-suspects) is
-  retimed the same way each run and recorded under ``control`` in
-  ``bench_full.json`` — their filed numbers stay in-suite, so the
-  in-suite-vs-solo delta is measured on every run rather than only
-  harvested when favorable. Round 15 extends the control pass to EVERY
-  row (VERDICT r14 ask #3): a slow host trips the gate on more rows
-  and files systematically warmer solo numbers than a clean host, so
-  round-over-round comparisons of the FILED map are polluted by host
-  state; the full per-row control map gives a like-for-like series.
-  Filed values and their methodology are unchanged; the full map is
-  additions-only (``bench_full.json``), the compact line carries only
-  ``control_n``. Opt out with SPARK_GRAFT_FULL_CONTROL=0.
-
-``bench_full.json`` keeps the raw in-suite map under ``insuite``, the
-re-run map under ``retimed``, and the control map under ``control``.
+``SPARK_GRAFT_ONLY=a21,a45 python bench.py`` runs the matching subset
+(substring match per token) with the same method, in a fresh process.
 
 The summary also carries ``calib_sec`` — a fixed deterministic JVM-side
-workload timed each run (xxhash64 sum over range(200M), codegen-only,
-no I/O). Dividing per-query times by the ratio of two runs' calib_sec
-normalizes away host-speed differences between rounds (round 5 ran on
-a ~1.4x slower host than round 4; see BASELINE.md).
+workload (``calibrate``) timed each run. Dividing per-query times by the
+ratio of two runs' calib_sec normalizes away host-speed differences.
 """
 
 from __future__ import annotations
@@ -85,37 +47,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from clinical_trials_data_pipeline_analyis_spark.session import get_spark
 from clinical_trials_data_pipeline_analyis_spark.suite import spark_queries
-
-# Host calibration of the machines that produced BASELINE.md's operative
-# sf0.1 rows (per-row annotations cluster at calib 0.45-0.47; r10's driver
-# run measured 0.419). The retime trigger scales by the CURRENT run's
-# calib relative to this so a slow host doesn't gate every row.
-REFERENCE_CALIB = 0.45
-
-# The driver's own per-row ceiling is 2.0x; the calib-scaled retime gate
-# is capped just below it so that on ANY host every possibly->=2x row is
-# adjudicated before filing (VERDICT r11 "what's wrong" #1 / ask #5).
-GATE_CAP = 1.9
-
-
-def retime_gate(calib_sec: float) -> float:
-    """Adjudication trigger ratio for the current host.
-
-    1.5x scaled by how much slower this host is than the BASELINE
-    reference (never below the raw 1.5x), capped at GATE_CAP so the
-    gate can never cross the driver's 2.0x per-row ceiling — without
-    the cap, a calib >= 0.57 host (scale >= 1.267) would let a
-    genuinely >=2x-regressed row file unadjudicated.
-    """
-    calib_scale = max(1.0, calib_sec / REFERENCE_CALIB)
-    return min(1.5 * calib_scale, GATE_CAP)
-
-# Fixed in-gate control sample for the adjudication pass: retimed every
-# run (same quiet-heap best-of-2 methodology as gate-suspects) but their
-# FILED numbers stay in-suite — the pair measures the in-suite-vs-solo
-# delta on every run. Chosen to span the suite: an early CPU-bound ANN
-# row, a mid-suite join-heavy row, a late lightweight scan.
-CONTROL_SAMPLE = ["a31_ann_ivf_multiprobe", "a59_dup_spans", "x13_events_sessionize"]
 
 HEADLINE = [
     "q01_pricing_summary",
@@ -135,43 +66,68 @@ def short_id(name: str) -> str:
     return name.split("_", 1)[0]
 
 
-def baseline_times() -> dict[str, float]:
-    """Per-query sf0.1 baselines from BASELINE.md's operative table.
+def calibrate(spark) -> float:
+    """Seconds for a fixed, deterministic JVM-side workload.
 
-    Rows look like ``| `name` | 0.1 | 0.35 | local[32], ... |`` — the
-    backticked name and the literal 0.1 sf column distinguish them from
-    the sf1/sf10 supplementary tables. Missing file or unparseable rows
-    degrade to an empty map (no retime pass), never an error.
+    xxhash64 over spark.range, whole-stage codegen, no I/O: identical
+    code runs uniformly slower on a slower or busier host, which
+    per-query rows alone cannot tell from a regression. Divide times by
+    the calib ratio of two runs before comparing them.
     """
-    import re
+    c0 = time.perf_counter()
+    spark.range(0, 200_000_000, 1, 32).selectExpr(
+        "sum(cast(xxhash64(id) as double)) as s"  # double: ANSI-safe sum
+    ).collect()
+    return round(time.perf_counter() - c0, 4)
 
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BASELINE.md")
-    out: dict[str, float] = {}
-    try:
-        with open(path) as f:
-            for line in f:
-                m = re.match(
-                    r"\|\s*`(\w+)`\s*\|\s*0\.1\s*\|\s*\**([0-9.]+)\**\s*\|", line
-                )
-                if m:
-                    out[m.group(1)] = float(m.group(2))
-    except OSError:
-        pass
-    return out
+
+def warm(spark, qs, sf_dir: str, first: str) -> None:
+    """Pay session startup and the Python-worker spinup before timing.
+
+    Running one query warms the JVM and file listing; the mapInPandas
+    warms the Arrow path, whose one-time worker spinup (~1.5s) would
+    otherwise land on the first Arrow query in run order. A full-suite
+    warm pass is deliberately absent: it front-loads every query's
+    generated classes and broadcast state into the JVM and measurably
+    slows the mid-suite CPU-bound rows it was meant to clean.
+    """
+    qs[first](spark, sf_dir).count()
+    spark.range(0, 1024, 1, 32).mapInPandas(lambda it: it, "id long").count()
+
+
+def best_of_2(spark, build, sf_dir: str) -> dict:
+    """Time ``build`` twice on a cleared heap; file the faster sample.
+
+    Clearing cached plans and collecting garbage between rows keeps each
+    row from paying for its predecessors' broadcast blocks, shuffle
+    state and codegen classes in one long-lived local[] JVM.
+    """
+    spark.catalog.clearCache()
+    spark.sparkContext._jvm.System.gc()
+    samples = []
+    for _ in range(2):
+        t0 = time.perf_counter()
+        df = build(spark, sf_dir)
+        t1 = time.perf_counter()
+        rows = df.count()
+        samples.append((t1 - t0, time.perf_counter() - t1, rows))
+    construct, execute, rows = min(samples, key=lambda s: s[0] + s[1])
+    return {
+        "sec": round(construct + execute, 4),
+        "samples": [round(c + e, 4) for c, e, _ in samples],
+        "construct_s": round(construct, 4),
+        "execute_s": round(execute, 4),
+        "rows": rows,
+    }
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    spark = get_spark(app_name="bench")
-    spark.sparkContext.setLogLevel("ERROR")
     qs = spark_queries()
     names = [n for n in HEADLINE if n in qs] + [
         n for n in sorted(qs) if n not in HEADLINE
     ]
-    # SPARK_GRAFT_ONLY=q01,q10_star,... runs only the matching subset
-    # (substring match per token) — the relational/events sf10 rung
-    # times 15 queries against a dir whose corpus tables are not scaled.
     only = os.environ.get("SPARK_GRAFT_ONLY")
     if only:
         toks = [t.strip() for t in only.split(",") if t.strip()]
@@ -179,170 +135,34 @@ def main() -> None:
         if not names:
             raise SystemExit(f"SPARK_GRAFT_ONLY={only!r} matched no queries")
 
-    # Warm the JVM + file listing once so per-query numbers measure the
-    # query, not session startup.
-    qs[names[0]](spark, sf_dir).count()
-    # Warm the Python-worker/Arrow path too: the first mapInPandas in
-    # run order otherwise pays the one-time worker spinup (~1.5s) — in
-    # round 3 that single artifact put a27 4.3x over its baseline while
-    # the operator itself was unchanged.
-    spark.range(0, 1024, 1, 32).mapInPandas(
-        lambda it: it, "id long"
-    ).count()
-    # NO full-suite warm pass. Round 8 briefly ran every query once at
-    # sf0.001 before the timed pass (to absorb the then-flat-codegen
-    # path's per-shape compile cost); measured A/B on a quiet host, that
-    # pass INFLATED the timed rows it was meant to clean — 120 queries'
-    # worth of generated classes, metaspace, and broadcast state front-
-    # loaded into the JVM made mid-suite CPU-bound queries 2-5x slower
-    # (a31 22.5s with the warm pass vs 5.2s without; a32 10.0 vs 1.8;
-    # even the scan-light a42 0.80 vs 0.36), swamping the ~1s compile
-    # constant it saved. The flat path is gone (functions/vectors.py)
-    # and with it the motivation; the two targeted warms above are
-    # sufficient and measurably neutral.
+    spark = get_spark(app_name="bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    warm(spark, qs, sf_dir, names[0])
+    calib_sec = calibrate(spark)
 
-    # Host-speed calibration: a fixed, deterministic, JVM-side workload
-    # (xxhash64 over spark.range, whole-stage codegen, no I/O) timed on
-    # every bench run. Per-query times divide by (calib_sec / its value
-    # on the round-4 reference host) to compare across hosts: round 5
-    # observed IDENTICAL CODE running a uniform ~1.4x slower than the
-    # round-4 driver bench purely from a slower machine, which per-query
-    # rows alone cannot distinguish from a regression.
-    c0 = time.perf_counter()
-    spark.range(0, 200_000_000, 1, 32).selectExpr(
-        "sum(cast(xxhash64(id) as double)) as s"  # double: ANSI-safe sum
-    ).collect()
-    calib_sec = round(time.perf_counter() - c0, 4)
-
-    timings: dict[str, float] = {}
+    record: dict[str, dict] = {}
     for name in names:
-        t0 = time.perf_counter()
-        df = qs[name](spark, sf_dir)
-        n = df.count()
-        timings[name] = round(time.perf_counter() - t0, 4)
-        print(json.dumps({"query": name, "sec": timings[name], "rows": n}))
-        # Measurement hygiene, OUTSIDE the timed window: 90+ queries in
-        # one long-lived local[] JVM accumulate broadcast blocks /
-        # shuffle state / codegen classes, and once the old gen fills,
-        # concurrent-GC storms inflate late CPU-bound queries up to 10x
-        # (measured round 5: x16 12.3s in-suite vs 1.7s with a quiet
-        # heap, identical code). An explicit collection between queries
-        # makes each row measure the query, not its predecessors' heap.
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
+        r = record[name] = best_of_2(spark, qs[name], sf_dir)
+        print(json.dumps({"query": name, "sec": r["sec"], "rows": r["rows"]}))
+    timings = {n: r["sec"] for n, r in record.items()}
 
-    # Adjudication pass (see module docstring): re-run gate-risk rows
-    # solo-style at suite end; file the retimed value per suspect.
-    # SPARK_GRAFT_ADJUDICATE=0 disables it — the trigger compares to
-    # BASELINE.md's sf0.1 rows, so at any other SF (the sf1/sf10 scale
-    # sweeps point SPARK_GRAFT_SF_DIR elsewhere) every row would trip
-    # the gate and the pass would re-run the whole suite; scale sweeps
-    # adjudicate with scripts/adjudicate_sweep.py (fresh-process) instead.
-    adjudicate = os.environ.get("SPARK_GRAFT_ADJUDICATE", "1") != "0"
-    insuite = dict(timings)
-    base = baseline_times() if adjudicate else {}
-    gate = retime_gate(calib_sec)
-    suspects = [
-        n
-        for n in names
-        if n in base and timings[n] >= gate * base[n]
-    ]
-
-    def _solo_time(name: str) -> float:
-        """Quiet-heap best-of-2 warm re-run — the adjudication method."""
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
-        time.sleep(0.5)
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).count()
-            best = min(best, time.perf_counter() - t0)
-        return round(best, 4)
-
-    retimed: dict[str, float] = {}
-    for name in suspects:
-        retimed[name] = _solo_time(name)
-        # File the retimed measurement itself (up OR down), not the min:
-        # min() only ever corrected downward and composed a best-case
-        # suite no single run produced (ADVICE r10).
-        timings[name] = retimed[name]
-        print(
-            json.dumps(
-                {
-                    "query": name,
-                    "retimed_sec": retimed[name],
-                    "insuite_sec": insuite[name],
-                    "baseline_sec": base[name],
-                }
-            )
-        )
-    # Control sample: measure the in-suite-vs-solo delta on rows that
-    # did NOT trip the gate. Recorded, never filed. Round 15 (VERDICT
-    # r14 ask #3 — kill the retime-substitution asymmetry): the control
-    # pass now covers EVERY row, not just the fixed 3-row sample, so a
-    # like-for-like (control vs control) round-over-round comparison is
-    # available for the whole suite no matter how many rows the gate
-    # retimed on either host. FILED numbers are untouched — the filed
-    # methodology (in-suite, gate-tripped rows substituted by their
-    # solo retime) is byte-identical to previous rounds; the full
-    # control map is additions-only, lives in bench_full.json, and the
-    # compact line carries only its count. Gate-retimed rows reuse
-    # their retime as the control value (same quiet-heap best-of-2
-    # method). SPARK_GRAFT_FULL_CONTROL=0 restores the 3-row sample
-    # (the full pass re-runs the suite twice, solo-style).
-    full_control = os.environ.get("SPARK_GRAFT_FULL_CONTROL", "1") != "0"
-    control: dict[str, float] = {}
-    control_names = (
-        names if full_control else [n for n in CONTROL_SAMPLE if n in timings]
-    )
-    for name in control_names if adjudicate else ():
-        if name in retimed:
-            control[name] = retimed[name]
-            continue
-        control[name] = _solo_time(name)
-        if full_control and name not in CONTROL_SAMPLE:
-            continue  # keep stdout small: the full map is in bench_full.json
-        print(
-            json.dumps(
-                {
-                    "query": name,
-                    "control_sec": control[name],
-                    "insuite_sec": insuite[name],
-                }
-            )
-        )
-    total = round(sum(timings.values()), 4)
-
-    full = {
+    summary = {
         "metric": "suite_wall_clock",
-        "value": total,
+        "value": round(sum(timings.values()), 4),
         "unit": "sec",
-        "queries": timings,
-        "insuite": insuite,
-        "retimed": retimed,
-        "control": control,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "calib_sec": calib_sec,
-        "gate_ratio": round(gate, 4),
     }
     here = os.path.dirname(os.path.abspath(__file__))
     out_json = os.environ.get(
         "SPARK_GRAFT_BENCH_OUT", os.path.join(here, "bench_full.json")
     )
     with open(out_json, "w") as f:
-        json.dump(full, f, indent=1, sort_keys=True)
+        json.dump({**summary, "queries": record}, f, indent=1, sort_keys=True)
 
-    compact = dict(full)
-    # full-name maps live in bench_full.json only; the tail-captured
-    # line carries the adjudicated per-query values + a retime count.
-    compact.pop("insuite")
-    compact.pop("retimed")
-    compact.pop("control")
-    compact["retimed_n"] = len(retimed)
-    compact["control_n"] = len(control)
-    compact["queries"] = {
-        short_id(n): round(t, 3) for n, t in timings.items()
+    compact = {
+        **summary,
+        "queries": {short_id(n): round(t, 3) for n, t in timings.items()},
     }
     line = json.dumps(compact, separators=(",", ":"))
     # Hard guard: the driver tail-captures ~2,000 chars; never exceed it.

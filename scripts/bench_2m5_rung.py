@@ -69,6 +69,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
+    from bench import calibrate
     from clinical_trials_data_pipeline_analyis_spark.session import get_spark
     from clinical_trials_data_pipeline_analyis_spark.operators.similarity import (
         SEMANTIC_DEDUP_BROADCAST_LIMIT,
@@ -104,11 +105,7 @@ def main() -> None:
     emb = spark.read.parquet(vec_path)
     emb.count()  # warm footers/page cache outside the timed leg
 
-    c0 = time.perf_counter()
-    spark.range(0, 200_000_000, 1, 32).selectExpr(
-        "sum(cast(xxhash64(id) as double)) as s"
-    ).collect()
-    calib = round(time.perf_counter() - c0, 4)
+    calib = calibrate(spark)
 
     cent = emb.filter((F.col("vec_id") % 97 == 0) & (F.col("vec_id") < 97 * k_auto))
     # Construction sits INSIDE the timed window (semantic_dedup

@@ -61,6 +61,7 @@ def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "32g")
     from pyspark.sql import functions as F
 
+    from bench import calibrate
     from clinical_trials_data_pipeline_analyis_spark.session import get_spark
     from clinical_trials_data_pipeline_analyis_spark.operators.similarity import (
         rhp_auto_bits,
@@ -78,11 +79,7 @@ def main() -> None:
     emb = spark.read.parquet(vec_path)
     assert emb.count() == N_VECS
 
-    c0 = time.perf_counter()
-    spark.range(0, 200_000_000, 1, 32).selectExpr(
-        "sum(cast(xxhash64(id) as double)) as s"
-    ).collect()
-    calib = round(time.perf_counter() - c0, 4)
+    calib = calibrate(spark)
 
     escalation = None
     if args.leg.startswith("a53_rhp"):

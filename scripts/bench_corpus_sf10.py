@@ -9,7 +9,7 @@ The sf1 rung (10x) caught two real scale defects (corpus-proportional
 quantizer models; hot-block pair serialization); this rung is where any
 remaining n² term the 10x run was too small to expose has to show up.
 Output: one JSON line per query {"query", "sec", "rows"} plus a final
-summary with host calibration (same workload as bench.py) so growth
+summary with host calibration (``bench.calibrate``) so growth
 factors can be computed against ``bench_sf1.json``'s calibrated times:
 
     per-input growth = (t10/calib10) / (t1/calib1) / 10
@@ -110,6 +110,7 @@ def main() -> None:
     # knob, and 8g/32 threads was a quarter of that.
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
 
+    from bench import calibrate, warm
     from clinical_trials_data_pipeline_analyis_spark.session import get_spark
     from clinical_trials_data_pipeline_analyis_spark.suite import spark_queries
 
@@ -121,9 +122,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     qs = spark_queries()
 
-    # warm: session, parquet footers, Arrow path (mirrors bench.py)
-    qs["x01_dedup_exact"](spark, args.dir).count()
-    spark.range(0, 1024, 1, 32).mapInPandas(lambda it: it, "id long").count()
+    warm(spark, qs, args.dir, "x01_dedup_exact")
 
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
@@ -146,11 +145,7 @@ def main() -> None:
         )
 
     if calib_sec is None:
-        c0 = time.perf_counter()
-        spark.range(0, 200_000_000, 1, 32).selectExpr(
-            "sum(cast(xxhash64(id) as double)) as s"
-        ).collect()
-        calib_sec = round(time.perf_counter() - c0, 4)
+        calib_sec = calibrate(spark)
 
     def flush() -> dict:
         summary = {

@@ -79,16 +79,13 @@ def main() -> None:
         minhash_signatures,
         shingle_sets,
     )
+    from bench import calibrate
     from clinical_trials_data_pipeline_analyis_spark.session import get_spark
 
     spark = get_spark(app_name="bench-lsh-min-recall-500k")
     spark.sparkContext.setLogLevel("ERROR")
 
-    c0 = time.perf_counter()
-    spark.range(0, 200_000_000, 1, 32).selectExpr(
-        "sum(cast(xxhash64(id) as double)) as s"
-    ).collect()
-    calib = round(time.perf_counter() - c0, 4)
+    calib = calibrate(spark)
 
     t0 = time.time()
     texts, edges = gen_texts(args.docs)

@@ -42,16 +42,13 @@ def main() -> None:
         simhash,
         simhash_near_duplicates,
     )
+    from bench import calibrate
     from clinical_trials_data_pipeline_analyis_spark.session import get_spark
 
     spark = get_spark(app_name="bench-simhash-rescue")
     spark.sparkContext.setLogLevel("ERROR")
 
-    c0 = time.perf_counter()
-    spark.range(0, 200_000_000, 1, 32).selectExpr(
-        "sum(cast(xxhash64(id) as double)) as s"
-    ).collect()
-    calib = round(time.perf_counter() - c0, 4)
+    calib = calibrate(spark)
 
     docs = spark.read.parquet(os.path.join(args.dir, "documents.parquet"))
     n_docs = docs.count()

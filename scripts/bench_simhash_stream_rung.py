@@ -73,6 +73,7 @@ def main() -> None:
         simhash,
         simhash_near_duplicates,
     )
+    from bench import calibrate
     from clinical_trials_data_pipeline_analyis_spark.session import get_spark
     from clinical_trials_data_pipeline_analyis_spark.streaming import (
         simhash_near_dedup_stream,
@@ -83,11 +84,7 @@ def main() -> None:
     docs = spark.read.parquet(os.path.join(args.dir, "documents.parquet"))
     n_docs = docs.count()
 
-    c0 = time.perf_counter()
-    spark.range(0, 200_000_000, 1, 32).selectExpr(
-        "sum(cast(xxhash64(id) as double)) as s"
-    ).collect()
-    calib = round(time.perf_counter() - c0, 4)
+    calib = calibrate(spark)
 
     out: dict = {"docs": n_docs, "epochs": args.epochs, "calib_sec": calib}
     want = lambda name: args.leg is None or args.leg == name  # noqa: E731

@@ -58,6 +58,7 @@ def main() -> None:
     from clinical_trials_data_pipeline_analyis_spark.operators.similarity import rhp_near_duplicates
     from clinical_trials_data_pipeline_analyis_spark.session import get_spark
     from clinical_trials_data_pipeline_analyis_spark.streaming import rhp_near_dedup_stream
+    from bench import calibrate
     from bench_ann_scale import gen_embeddings
 
     vec_path = os.path.join(args.dir, "embeddings.parquet")
@@ -71,12 +72,7 @@ def main() -> None:
     emb = spark.read.parquet(vec_path)
     emb.count()  # warm footers/page cache outside the timed legs
 
-    # calibration (same workload as bench.py)
-    c0 = time.perf_counter()
-    spark.range(0, 200_000_000, 1, 32).selectExpr(
-        "sum(cast(xxhash64(id) as double)) as s"
-    ).collect()
-    calib = round(time.perf_counter() - c0, 4)
+    calib = calibrate(spark)
 
     out: dict = {"vecs": N_VECS, "epochs": args.epochs, "calib_sec": calib}
     geometry = dict(n_bits=RHP_BITS, bands=RHP_BANDS, dim=64, seed=13)

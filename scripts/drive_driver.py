@@ -42,7 +42,7 @@ def main() -> int:
     sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entrymod
 
-    spark = SparkSession.builder.master("local[8]").getOrCreate()
+    spark = SparkSession.builder.master("local[*]").getOrCreate()
 
     con = duckdb.connect()
     for t in TABLES:
