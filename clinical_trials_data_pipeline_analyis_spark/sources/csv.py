@@ -4,8 +4,14 @@ Reproduces the reference's ``COPY ... WITH (FORMAT csv, DELIMITER '|',
 HEADER true)`` ingest (``aact_bronze_layer.sql:93-99`` and siblings) and the
 comma-delimited mapping-spreadsheet loads (``aact_bronze_layer.sql:144-150,
 224-230``) as schema-on-write Spark reads: explicit StructType, never
-``inferSchema``, PERMISSIVE mode with a corrupt-record audit column so bad
-rows are countable instead of silently dropped.
+``inferSchema``, PERMISSIVE mode.
+
+Malformed values are neither rejected nor counted. No corrupt-record
+column is configured, so a field that does not parse under its declared
+type loads as NULL and the row is kept: ``NCT2|notanint|2020-13-45`` reads as
+``nct_id='NCT2'`` with NULL ``enrollment`` and NULL ``start_date``. Silver
+then imputes those NULLs like any other missing value. Quarantining and
+counting such rows is an open item in ROADMAP.md (item 4).
 
 At scale this is a splittable parallel scan: Spark assigns one task per
 ~128MB file split; no shuffle occurs until a downstream wide operator.

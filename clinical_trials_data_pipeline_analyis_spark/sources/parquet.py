@@ -9,8 +9,6 @@ touched partitions instead of the whole table.
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame, SparkSession
 
 #: tables present in every driver testdata scale-factor directory
@@ -39,28 +37,17 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, Data
 
 
 def write_table(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    buckets: tuple[int, str] | None = None,
-    table_name: str | None = None,
+    df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
     """Overwrite-write a layer table.
 
-    ``partition_by`` enables partition pruning for downstream readers;
-    ``buckets=(n, col)`` + ``table_name`` persists a bucketed table so
-    repeated joins/aggregations on ``col`` skip the shuffle entirely
-    (requires the session catalog; plain path writes ignore bucketing).
+    ``partition_by`` enables partition pruning for downstream readers.
+    Bucketed tables go through ``sources.bucketing.write_bucketed``: their
+    layout lives in the catalog, so they need ``saveAsTable``, not a path.
     """
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    if buckets and table_name:
-        n, col = buckets
-        writer.bucketBy(n, col).sortBy(col).option("path", path).saveAsTable(
-            table_name
-        )
-        return
     writer.parquet(path)
 
 
@@ -85,7 +72,3 @@ def overwrite_partitions(
         .parquet(path)
     )
 
-
-def union_all(*dfs: DataFrame) -> DataFrame:
-    """Set-op helper (SURVEY §2.8: available though unused by the reference)."""
-    return reduce(DataFrame.unionByName, dfs)

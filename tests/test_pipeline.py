@@ -138,6 +138,100 @@ def test_quality_suite_green(bronze, spark_tables):
     assert not failures, f"quality violations: {failures}"
 
 
+def _inject(df, ids, **values):
+    """Overwrite ``values`` (column -> literal, None for NULL) on the rows
+    whose nct_id is in ``ids``; every other row keeps its value."""
+    from pyspark.sql import functions as F
+
+    hit = F.col("nct_id").isin(ids)
+    for col, value in values.items():
+        new = F.lit(value).cast(df.schema[col].dataType)
+        df = df.withColumn(col, F.when(hit, new).otherwise(F.col(col)))
+    return df
+
+
+@pytest.fixture(scope="module")
+def violating(bronze):
+    """Bronze/silver studies with a known number of violations per check.
+
+    Each injection uses its own studies and the duplicates copy clean rows,
+    so each expected count is the sum of the injections that hit its check."""
+    dfs, _ = bronze
+    b = dfs["studies"]
+    ids = sorted(r.nct_id for r in b.select("nct_id").collect())
+    s = silver_studies(b, DEFAULT_CONFIG)
+    s = _inject(s, ids[0:1], acronym=None)
+    s = _inject(s, ids[1:2], acronym=None, why_stopped=None)
+    s = _inject(s, ids[2:3], phase="PHASE 9")
+    s = _inject(s, ids[3:4], phase=None)
+    s = _inject(s, ids[4:5], overall_status="Bogus")
+    s = _inject(s, ids[5:6], has_dmc="Maybe")
+    s = _inject(s, ids[6:7], start_date="1990-01-01")
+    s = _inject(s, ids[7:8], start_date="2030-01-01")
+    s = _inject(s, ids[8:9], target_duration_days=DEFAULT_CONFIG.duration_cap_days + 1)
+    s = _inject(s, ids[9:10], study_type="OBSERVATIONAL", enrollment=600_000)
+    s = _inject(s, ids[10:11], study_type="INTERVENTIONAL", enrollment=20_000)
+    s = _inject(s, ids[11:12], enrollment=-1)
+    # a NULL enrollment is an imputation miss, not a cap violation
+    s = _inject(s, ids[12:13], study_type="OBSERVATIONAL", enrollment=None)
+    s = _inject(
+        s, ids[13:14],
+        expanded_access_nctid="NCT99999999", expanded_access_status_for_nctid=None,
+    )
+    dup = s.filter(s.nct_id.isin(ids[20:22]))
+    s = s.unionByName(dup).unionByName(dup.filter(dup.nct_id == ids[20]))
+    b = _inject(b, ids[14:16], number_of_arms=2, number_of_groups=2)
+    return b, s
+
+
+_EXPECTED_VIOLATIONS = [
+    ("studies_pk", 2),
+    ("imputed_no_nulls", 5),
+    ("domain(phase)", 2),
+    ("domain(overall_status)", 1),
+    ("domain(has_dmc)", 1),
+    ("start_date_window", 2),
+    ("bounds(target_duration_days)", 1),
+    ("enrollment_caps", 3),
+    ("mutex(number_of_arms,number_of_groups)", 2),
+    ("implies(expanded_access_nctid->expanded_access_status_for_nctid)", 1),
+    ("studies_row_preservation", 3),
+]
+
+
+def test_quality_suite_counts_injected_violations(violating):
+    b, s = violating
+    results = quality.silver_studies_suite(b, s, DEFAULT_CONFIG)
+    assert [(r.name, r.violations) for r in results] == _EXPECTED_VIOLATIONS
+
+
+def test_quality_gate_raises_naming_every_failing_check(violating):
+    from clinical_trials_data_pipeline_analyis_spark import pipeline
+
+    b, s = violating
+    with pytest.raises(RuntimeError) as err:
+        pipeline.run_quality_gate({"studies": b}, {"studies": s}, DEFAULT_CONFIG)
+    for name, _ in _EXPECTED_VIOLATIONS:
+        assert f"name='{name}'" in str(err.value)
+
+
+def test_quality_suite_job_budget(spark, bronze, spark_tables):
+    """The gate is two aggregates (one over silver, one over bronze), so it
+    launches a handful of jobs, not one per check."""
+    dfs, _ = bronze
+    sc = spark.sparkContext
+    group = "test_quality_suite_job_budget"
+    sc.setJobGroup(group, "quality gate")
+    try:
+        quality.silver_studies_suite(
+            dfs["studies"], spark_tables["silver_studies"], DEFAULT_CONFIG
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
+
+
 def test_dim_key_density(spark_tables):
     """Surrogate keys are dense 1..N (reference row_number contract)."""
     from pyspark.sql import functions as F
