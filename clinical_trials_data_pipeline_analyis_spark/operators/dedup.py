@@ -29,6 +29,7 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
 from ..checkpoint import cut_lineage
@@ -1678,7 +1679,7 @@ def remove_spans(
     )
 
 
-#: Storage level for every O(|edges|) checkpoint inside the CC loops:
+#: Storage level for every O(|edges|) checkpoint inside connected_components:
 #: SERIALIZED blocks (MEMORY_AND_DISK). The localCheckpoint default
 #: keeps deserialized row objects — ~5x inflation on a two-long edge
 #: row — and at the 2.5M SemDeDup rung the deserialized symmetrized
@@ -1689,11 +1690,15 @@ def remove_spans(
 #: unaffected.
 _EDGE_CHECKPOINT_LEVEL = StorageLevel.MEMORY_AND_DISK
 
-#: Propagation-CC convergence-check cadence: rounds between the count
-#: jobs that test the fixpoint (see _cc_propagation). 3 trades at most
-#: two idempotent extra rounds per convergence for ~2/3 fewer serial
-#: job launches in the loop.
-_CC_CHECK_EVERY = 3
+#: Edge-list size at or under which connected_components finishes on
+#: the driver (union-find over the collected edges); above it the
+#: distributed two_phase loop runs. Measured at local[4] on dup-of-dup
+#: forests: the driver path costs ~1.3 s at 50k edges, ~2.6 s at 200k
+#: and ~9 s at 800k; two_phase costs 8.8, 13.8 and 34 s, ~7 s of which
+#: is per-round job launches that no cluster width removes. At 200k the
+#: driver path stays well under that fixed cost, and the collected edges
+#: stay a few tens of MB of driver memory.
+_CC_LOCAL_EDGES = 200_000
 
 
 def connected_components(
@@ -1703,7 +1708,6 @@ def connected_components(
     vertices: DataFrame,
     id_col: str,
     max_iterations: int = 20,
-    algorithm: str = "auto",
 ) -> DataFrame:
     """Connected components over an undirected edge list: every vertex
     converges to the smallest vertex id reachable from it. Returns
@@ -1712,248 +1716,82 @@ def connected_components(
     stops at pair detection, `aact_silver_layer.sql:588-590`; clustering
     is the step a 100 TB dedup pipeline needs on top).
 
-    Three modes behind the same interface (identical output):
+    The edge list's size picks one of two mechanisms (identical output):
 
-    - ``"auto"`` (default): minimum-label propagation first; if it has
-      not converged within ``max_iterations`` rounds, fall back to
-      ``two_phase`` TRANSPARENTLY. Near-dup graphs are usually dense
-      and shallow (2-4 propagation rounds — the cheap per-round plan
-      wins), but dup-of-dup CHAINS grow component diameter with corpus
-      size: the round-7 sf10 sweep (500k docs, preferential-attachment
-      duplication) pushed diameters past 20 and propagation hit its
-      cap — at real scale the high-diameter case is a workload, not an
-      error, so the default must absorb it rather than raise.
-    - ``"propagation"``: min-label propagation only — one shuffle join
-      + min-aggregate per round, O(component diameter) rounds; raises
-      on non-convergence.
-    - ``"two_phase"``: alternating large-star/small-star (Kiveris et
-      al., "Connected Components in MapReduce and Beyond", SoCC '14) —
-      O(log^2 n) rounds regardless of diameter; right for adversarial
-      high-diameter components where propagation would need O(n) rounds
-      (tests/test_properties.py proves the round-count separation on a
-      path graph).
+    - at most ``_CC_LOCAL_EDGES`` edges: one bounded collect, union-find
+      on the driver, and the labels come back as a small broadcast
+      frame. A near-dup graph at bench scale has a few thousand edges,
+      and every distributed round would cost more in job launches than
+      in work.
+    - above it: alternating large-star/small-star (Kiveris et al.,
+      "Connected Components in MapReduce and Beyond", SoCC '14) —
+      O(log^2 n) rounds regardless of component diameter, so dup-of-dup
+      chains at scale converge too. ``max_iterations`` caps the rounds;
+      a capped run raises rather than return wrong clusters.
 
-    Shared scale shape: the loop runs ONLY over vertices incident to an
-    edge — in a near-dup graph the overwhelming majority of vertices are
-    singletons, and iterating their (id, id) labels every round would be
-    pure shuffle waste; they are attached in one final left join instead.
-    ``localCheckpoint`` truncates lineage every round, mandatory for
-    iterative DataFrame algorithms (the logical plan would otherwise
-    double per round and overwhelm the optimizer). Convergence checks
-    are scalar counts per round, never data collects.
+    An edge with a NULL endpoint is ignored, and so is a self-loop.
+    Only vertices incident to an edge get a label from either mechanism
+    — in a near-dup graph most vertices are singletons — and every
+    vertex of ``vertices`` is attached in one final left join, a
+    singleton labelled with its own id.
     """
-    # Materialize the edge list ONCE before iterating — the upstream plan
-    # (e.g. the whole shingle->MinHash->LSH pipeline) must not re-execute
-    # every round, and the edge list is the small output of that
-    # pipeline, not its input. The checkpoint happens BEFORE any
-    # self-union: a union of two selects over the raw plan would embed
-    # (and execute) the upstream pipeline twice.
+    # Materialize the edge list ONCE — the upstream plan (e.g. the whole
+    # shingle->MinHash->LSH pipeline) must not re-execute in the budget
+    # collect and again in every star round. The checkpoint happens
+    # BEFORE any self-union: a union of two selects over the raw plan
+    # would embed (and execute) the upstream pipeline twice.
     #
-    # Every O(|edges|) frame in this loop stores its blocks SERIALIZED
+    # Every O(|edges|) frame stores its blocks SERIALIZED
     # (MEMORY_AND_DISK): the localCheckpoint default keeps DESERIALIZED
-    # row objects, which inflate a two-long edge row ~5x — the round-8
-    # `blocked` lesson, re-learned at the 2.5M SemDeDup rung where the
-    # deserialized symmetrized edge list filled the unified pool and the
-    # next aggregate died with AGGREGATE_OUT_OF_MEMORY ("got 0" — the
-    # storage side had taken everything execution could not evict fast
-    # enough). Label-scale frames (O(vertices)) keep the default.
+    # row objects, which inflate a two-long edge row ~5x — at the 2.5M
+    # SemDeDup rung the deserialized edge list filled the unified pool
+    # and the next aggregate died with AGGREGATE_OUT_OF_MEMORY.
     e0 = edges.select(
         F.col(src).alias("_src"), F.col(dst).alias("_dst")
     ).transform(cut_lineage(storage_level=_EDGE_CHECKPOINT_LEVEL))
-    if algorithm == "auto":
-        # Propagation gets a SHORT leash (8 rounds covers every shallow
-        # near-dup graph) — burning the full cap before falling back
-        # would pay ~max_iterations edge-shuffles just to discover a
-        # deep component that two_phase handles in O(log^2 n) anyway.
-        labels, rounds, converged = _cc_propagation(
-            e0, id_col, min(max_iterations, 8)
+    local = e0.limit(_CC_LOCAL_EDGES + 1).collect()
+    if len(local) <= _CC_LOCAL_EDGES:
+        id_type = e0.schema["_src"].dataType
+        schema = StructType([StructField(c, id_type) for c in (id_col, "component")])
+        labels = F.broadcast(
+            e0.sparkSession.createDataFrame(_union_find_labels(local), schema)
         )
-        if not converged:
-            # Round 14 (guide §2.4 — don't recompute what a prior pass
-            # already decided): the fallback used to RESTART two_phase
-            # from the raw edge list, discarding the 8 propagation
-            # rounds' progress. Instead run two_phase on the
-            # label-CONTRACTED graph: propagation labels are always ids
-            # within the vertex's own component (min over reachable
-            # ids, seeded from self), so quotienting edges by label
-            # preserves components exactly — CC(quotient) composed with
-            # the labels equals CC(e0) (proof sketch: a cross-group
-            # G-edge becomes a Q-edge, so Q-paths lift/descend along
-            # G-paths; the component min m always has label(m)=m, so Q
-            # keeps every component's min as a vertex). On the graphs
-            # that trip the leash the quotient is tiny — the a92 sf0.1
-            # graph contracts from ~1.5k edges to a handful — and
-            # two_phase converges on it in 1-2 rounds instead of
-            # re-deriving everything propagation already knew.
-            lbl_src = labels.select(
-                F.col(id_col).alias("_src"), F.col("component").alias("_ca")
-            )
-            lbl_dst = labels.select(
-                F.col(id_col).alias("_dst"), F.col("component").alias("_cb")
-            )
-            ce = (
-                e0.join(lbl_src, "_src")
-                .join(lbl_dst, "_dst")
-                .filter(F.col("_ca") != F.col("_cb"))
-                .select(
-                    F.col("_ca").alias("_src"), F.col("_cb").alias("_dst")
-                )
-                .transform(cut_lineage(storage_level=_EDGE_CHECKPOINT_LEVEL))
-            )
-            sub, rounds2, converged = _cc_two_phase(ce, id_col, max_iterations)
-            rounds += rounds2
-            labels = (
-                labels.join(
-                    sub.withColumnRenamed("component", "_final")
-                    .withColumnRenamed(id_col, "component")
-                    .select(F.col("component"), F.col("_final")),
-                    "component",
-                    "left",
-                )
-                .select(
-                    F.col(id_col),
-                    F.coalesce(F.col("_final"), F.col("component")).alias(
-                        "component"
-                    ),
-                )
-            )
-    elif algorithm == "propagation":
-        labels, rounds, converged = _cc_propagation(e0, id_col, max_iterations)
-    elif algorithm == "two_phase":
-        labels, rounds, converged = _cc_two_phase(e0, id_col, max_iterations)
     else:
-        raise ValueError(f"unknown algorithm: {algorithm!r}")
-    if not converged:
-        # A silently-wrong cluster assignment is worse than a failure at
-        # any scale: propagation needs O(diameter) rounds, so a
-        # high-diameter component exhausts the cap long before two_phase
-        # would.
-        raise RuntimeError(
-            f"connected_components({algorithm!r}) did not converge in "
-            f"{max_iterations} rounds; raise max_iterations or use "
-            "algorithm='two_phase' (O(log^2 n) rounds)"
-        )
-    # Singletons (no incident edge) are their own component.
+        labels, _, converged = _cc_two_phase(e0, id_col, max_iterations)
+        if not converged:
+            # A silently-wrong cluster assignment is worse than a failure.
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iterations} "
+                "two_phase rounds; raise max_iterations"
+            )
     return vertices.select(id_col).join(labels, id_col, "left").select(
         F.col(id_col),
         F.coalesce(F.col("component"), F.col(id_col)).alias("component"),
     )
 
 
-def _cc_propagation(
-    e0: DataFrame, id_col: str, max_iterations: int
-) -> tuple[DataFrame, int, bool]:
-    """Min-label propagation rounds; ``e0`` must be materialized.
+def _union_find_labels(edges: list) -> list[tuple]:
+    """``(vertex, min id in its component)`` for every vertex of a
+    non-self-loop edge with two non-NULL ends."""
+    parent: dict = {}
 
-    Returns ``(labels, rounds, converged)`` over edge-incident vertices.
-    """
-    # The symmetrized edge list is hash-partitioned by the join key ONCE
-    # and the partitioning survives the checkpoint — so every round's
-    # labels join shuffles only the (small) label side, never the edges.
-    # At 100 TB |edges| >> |labels| and this is the dominant saving.
-    # Lazy truncation: round 1's convergence count is the first action
-    # over sym and materializes its blocks in the same job — an eager
-    # checkpoint here would be one extra job for the identical blocks
-    # (e0 itself stays eagerly materialized by the caller: its plan is
-    # the expensive candidate pipeline and it feeds two union branches).
-    sym = (
-        e0.union(
-            e0.select(F.col("_dst").alias("_src"), F.col("_src").alias("_dst"))
-        )
-        .repartition(F.col("_src"))
-        .transform(cut_lineage(storage_level=_EDGE_CHECKPOINT_LEVEL, eager=False))
-    )
-    if max_iterations < 1:
-        # Degenerate leash: return the identity labels unconverged, as
-        # the pre-round-fusion code did.
-        labels = (
-            sym.select(F.col("_src").alias(id_col))
-            .distinct()
-            .select(F.col(id_col), F.col(id_col).alias("component"))
-        )
-        return labels, 0, False
-    rounds = 0
-    converged = False
-    labels = None
-    # Convergence is CHECKED every _CC_CHECK_EVERY rounds, not every
-    # round (round 15, guide §1/§5 — driver actions serialize the loop):
-    # each check is its own Spark job, and at bench scale the job-launch
-    # latency (~0.25-0.4s) dwarfs the 453-edge aggregate inside it.
-    # Between checks the rounds chain as LAZY truncations — every
-    # round's merged frame is still a localCheckpoint (its logical plan
-    # is a LogicalRDD leaf immediately, so per-round plan size stays
-    # fixed; the blocks materialize once inside the next check's job and
-    # later rounds read them back). Values are identical: a propagation
-    # round past the fixpoint is the identity (min over already-minimal
-    # labels), and the check's changed==0 test reads only the LAST
-    # round's delta, which is zero iff the fixpoint was reached. The
-    # cost is up to _CC_CHECK_EVERY-1 idempotent extra rounds per
-    # convergence; the saving is ~2/3 of the loop's serial job launches
-    # (a92's 11-round graph: 11 count jobs -> 4). The max_iterations
-    # leash is exact either way (a check always runs at the leash).
-    for _ in range(max_iterations):
-        rounds += 1
-        if labels is None:
-            # Round 1 FUSED (round 14, guide §2.4): the initial label map
-            # is the identity over active vertices, so the first round's
-            # sym⋈labels join is a rename and the separate labels-init
-            # distinct+checkpoint is one more job for a frame round 1
-            # immediately re-aggregates. min(self, min(neighbors)) over
-            # the symmetric edges IS round 1's merged frame; prev = own
-            # id. Values identical — this is the identity-join unfolded.
-            merged = (
-                sym.select(
-                    F.col("_dst").alias(id_col),
-                    F.col("_src").alias("component"),
-                )
-                .groupBy(id_col)
-                .agg(F.min("component").alias("_mn"))
-                .select(
-                    F.col(id_col),
-                    F.least(F.col("_mn"), F.col(id_col)).alias("component"),
-                    F.col(id_col).alias("prev"),
-                )
-            )
-        else:
-            comp_type = dict(labels.dtypes)["component"]
-            prop = sym.join(labels, sym["_src"] == labels[id_col]).select(
-                F.col("_dst").alias(id_col),
-                F.col("component"),
-                F.lit(None).cast(comp_type).alias("prev"),
-            )
-            # Previous labels ride through the same min-aggregate (exactly
-            # one labels row per id carries prev), so convergence is a
-            # filter over the checkpointed result — no second join, no
-            # second shuffle.
-            merged = (
-                labels.select(
-                    id_col, "component", F.col("component").alias("prev")
-                )
-                .unionByName(prop)
-                .groupBy(id_col)
-                .agg(
-                    F.min("component").alias("component"),
-                    F.min("prev").alias("prev"),
-                )
-            )
-        # LAZY truncation (round 14, guide §1/§2 — one job per round, not
-        # two): the convergence count below is the action that
-        # materializes this round's checkpoint blocks; an eager
-        # checkpoint would run the identical plan in its own job first
-        # and leave the count a trivial second job. Values unchanged —
-        # the blocks the next round reads are the same either way (the
-        # reliable-mode branch of cut_lineage stays eager, see
-        # checkpoint.py).
-        merged = merged.transform(cut_lineage(eager=False))
-        labels = merged.select(id_col, "component")
-        if rounds % _CC_CHECK_EVERY == 0 or rounds == max_iterations:
-            changed = merged.filter(
-                F.col("component") < F.col("prev")
-            ).count()
-            if changed == 0:
-                converged = True
-                break
-    return labels, rounds, converged
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in edges:
+        if a is None or b is None or a == b:
+            continue
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        # The smaller root wins, so every root is its component's min.
+        ra, rb = sorted((find(a), find(b)))
+        parent[rb] = ra
+    return [(v, find(v)) for v in parent]
 
 
 def _cc_two_phase(
@@ -2053,7 +1891,6 @@ def dedup_pipeline(
     num_hashes: int = 8,
     bands: int = 4,
     shingle_k: int = 3,
-    materialize: bool = True,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Staged near-dup pipeline: signatures -> candidate pairs -> clusters.
 
@@ -2070,16 +1907,12 @@ def dedup_pipeline(
     """
     sigs = minhash_signatures(
         df, id_col, text_col, num_hashes=num_hashes, shingle_k=shingle_k
-    )
-    if materialize:
-        sigs = sigs.transform(cut_lineage())
-    # sigs are already materialized (or the caller asked for fully-lazy),
-    # so the pair step must not add its own checkpoint.
+    ).transform(cut_lineage())
+    # sigs are already materialized, so the pair step must not add its
+    # own checkpoint.
     pairs = lsh_candidate_pairs(
         sigs, id_col, num_hashes=num_hashes, bands=bands, materialize=False
-    )
-    if materialize:
-        pairs = pairs.transform(cut_lineage())
+    ).transform(cut_lineage())
     clusters = connected_components(
         pairs, "doc_a", "doc_b", vertices=df.select(id_col), id_col=id_col
     )

@@ -489,8 +489,7 @@ def ivfpq_topk(
     rows: BROADCAST for interactive query batches (the default); for
     batch-join workloads (every vector is a query) set
     ``broadcast_candidates=False`` and the codes-candidates join
-    shuffles on vec_id, with codes ideally pre-bucketed on vec_id
-    (``sources/bucketing.py``) so only the candidate side moves.
+    shuffles on vec_id.
     Classic IVFADC encodes RESIDUALS (vector minus home centroid) for
     tighter distances; this variant encodes raw vectors so every stage
     stays oracle-checkable — the residual refinement slots into

@@ -1784,7 +1784,8 @@ def semantic_dedup(
 
     CONSTRUCTION-TIME ACTIONS (the same honesty note as
     ``semantic_pair_candidates``'s ``blocked.count()``): building this
-    frame runs the CC loop's bounded iterations eagerly, plus — with
+    frame runs connected_components' edge checkpoint and budget collect
+    eagerly (and its star rounds above the edge budget), plus — with
     ``percolation_check`` (default on) — ONE extra two-row aggregate
     over the component labels for the percolation tripwire (warns when
     the largest component exceeds 20% of the corpus: at threshold 0.40

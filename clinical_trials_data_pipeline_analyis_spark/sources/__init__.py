@@ -1,11 +1,8 @@
-from .bucketing import read_bucketed, write_bucketed
 from .csv import read_pipe_csv, read_mapping_csv
 from .jsonl import read_jsonl, write_jsonl
 from .parquet import read_table, write_table, load_tables
 
 __all__ = [
-    "read_bucketed",
-    "write_bucketed",
     "read_pipe_csv",
     "read_mapping_csv",
     "read_jsonl",

@@ -42,8 +42,6 @@ def write_table(
     """Overwrite-write a layer table.
 
     ``partition_by`` enables partition pruning for downstream readers.
-    Bucketed tables go through ``sources.bucketing.write_bucketed``: their
-    layout lives in the catalog, so they need ``saveAsTable``, not a path.
     """
     writer = df.write.mode("overwrite")
     if partition_by:

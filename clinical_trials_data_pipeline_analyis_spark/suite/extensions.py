@@ -1023,9 +1023,10 @@ def x20_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (exactly x05's) promoted to connected components, so every document
 # gets a cluster_id (= min doc_id reachable) and a cluster_size — the
 # keep-one-per-cluster decision a training-data dedup pipeline actually
-# executes. Spark side is iterative min-label propagation
-# (operators.dedup.connected_components); the oracle reaches the same
-# fixpoint declaratively with a recursive CTE.
+# executes. Spark side is operators.dedup.connected_components (at
+# bench scale the edge list is under its budget, so union-find on the
+# driver); the oracle reaches the same fixpoint declaratively with a
+# recursive CTE.
 # =====================================================================
 @register(
     "a21_dedup_cc_clusters",
@@ -1063,7 +1064,7 @@ FROM comp
 def a21_dedup_cc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Staged signatures -> pairs -> clusters: each stage materialized
     # once (operators.dedup.dedup_pipeline), so the MinHash/LSH pipeline
-    # executes exactly once however many times the CC loop iterates.
+    # executes exactly once however many jobs the CC step launches.
     from ..operators.dedup import dedup_pipeline
 
     docs = read_table(spark, sf_dir, "documents")

@@ -152,64 +152,6 @@ def test_hot_shingle_filter_bounds_bucket_sizes(spark):
     assert pairs == {(2 * i, 2 * i + 1) for i in range(n // 2)}
 
 
-def test_two_phase_cc_beats_propagation_on_high_diameter_graph(spark):
-    """On a path graph 0-1-...-n (diameter n), min-label propagation
-    needs O(n) rounds while large-star/small-star needs O(log^2 n); both
-    must produce identical labels (everything in component 0)."""
-    from clinical_trials_data_pipeline_analyis_spark.operators.dedup import (
-        _cc_propagation,
-        _cc_two_phase,
-        connected_components,
-    )
-
-    n = 64
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], ["doc_a", "doc_b"]
-    )
-    e0 = edges.select(
-        F.col("doc_a").alias("_src"), F.col("doc_b").alias("_dst")
-    ).localCheckpoint()
-
-    star_labels, star_rounds, star_conv = _cc_two_phase(e0, "doc_id", 30)
-    assert star_conv and star_rounds <= 8, f"two-phase took {star_rounds} rounds"
-    got = {r["doc_id"]: r["component"] for r in star_labels.collect()}
-    assert got == {i: 0 for i in range(n)}
-
-    # propagation on a short path needs ~diameter rounds — the separation
-    # two_phase exists to avoid (kept short: each round is a Spark job)
-    short = spark.createDataFrame(
-        [(i, i + 1) for i in range(7)], ["doc_a", "doc_b"]
-    ).select(F.col("doc_a").alias("_src"), F.col("doc_b").alias("_dst"))
-    _, prop_rounds, prop_conv = _cc_propagation(
-        short.localCheckpoint(), "doc_id", 30
-    )
-    assert prop_conv and prop_rounds >= 7
-
-    # propagation capped below the diameter must REFUSE to return wrong
-    # clusters, not silently mislabel
-    verts = spark.range(n + 3).select(F.col("id").alias("doc_id"))
-    with pytest.raises(RuntimeError, match="two_phase"):
-        connected_components(
-            edges, "doc_a", "doc_b", verts, "doc_id",
-            max_iterations=10, algorithm="propagation",
-        ).collect()
-
-    # public interface: both algorithms agree, singletons attached
-    m = 16
-    short_edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(m - 1)], ["doc_a", "doc_b"]
-    )
-    sverts = spark.range(m + 3).select(F.col("id").alias("doc_id"))
-    a = connected_components(
-        short_edges, "doc_a", "doc_b", sverts, "doc_id", algorithm="two_phase"
-    )
-    b = connected_components(
-        short_edges, "doc_a", "doc_b", sverts, "doc_id",
-        max_iterations=50, algorithm="propagation",
-    )
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
 def test_train_ivf_iterates_and_is_deterministic(spark):
     """Two k-means iterations must run end-to-end, keep centroid count
     bounded by k, cover every vector in the assignment, and be exactly

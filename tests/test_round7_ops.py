@@ -268,34 +268,6 @@ def test_wide_perceptron_model_still_broadcasts(spark):
     assert scored.count() == 200
 
 
-# ------------------------------------------------ CC auto fallback
-def test_connected_components_auto_falls_back_on_deep_chain(spark):
-    """Found by the round-7 sf10 sweep: 500k docs with preferential-
-    attachment duplication produce dup-of-dup CHAINS whose component
-    diameter exceeds the propagation round cap — at scale that is a
-    workload, not an error, so the DEFAULT mode must absorb it: auto =
-    propagation first, transparent two_phase fallback, identical
-    min-id labels either way."""
-    from clinical_trials_data_pipeline_analyis_spark.operators.dedup import (
-        connected_components,
-    )
-
-    n = 24  # path graph 0-1-...-24: diameter 24 > the 8-round leash
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n)], ["doc_a", "doc_b"]
-    )
-    verts = spark.range(n + 5).select(F.col("id").alias("doc_id"))
-    got = {
-        r["doc_id"]: r["component"]
-        for r in connected_components(
-            edges, "doc_a", "doc_b", verts, "doc_id"
-        ).collect()
-    }
-    # whole chain labels to min id 0; off-chain vertices are singletons
-    assert all(got[i] == 0 for i in range(n + 1))
-    assert got[n + 1] == n + 1 and got[n + 4] == n + 4
-
-
 # ------------------------------------------------ pixel decode fate
 def test_decode_image_real_guarded_without_pil(spark):
     """Without Pillow, the pixel-decode integration point must fail

@@ -66,54 +66,6 @@ def test_partitioned_write_prunes(spark, tmp_path):
     assert "part_col" in plan
 
 
-def test_bucketed_join_plans_no_shuffle(spark, tmp_path):
-    """Two tables bucketed by the join key into the same bucket count must
-    join with ZERO Exchange nodes (the co-located-join contract that makes
-    recurring fact-fact joins shuffle-free at 100 TB). Broadcast is
-    disabled so the test exercises the SortMergeJoin path the big-data
-    case would take."""
-    from clinical_trials_data_pipeline_analyis_spark.sources import (
-        read_bucketed,
-        write_bucketed,
-    )
-
-    fact = spark.range(0, 1000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
-    )
-    dim = spark.range(0, 500).select(
-        F.col("id").alias("k"), (F.col("id") % 7).alias("w")
-    )
-    write_bucketed(fact, "t_fact_bucketed", ["k"], num_buckets=4,
-                   sort_cols=["k"], path=str(tmp_path / "fact"))
-    write_bucketed(dim, "t_dim_bucketed", ["k"], num_buckets=4,
-                   sort_cols=["k"], path=str(tmp_path / "dim"))
-    saved = {
-        c: spark.conf.get(c, None)
-        for c in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.autoBroadcastJoinThreshold",
-        )
-    }
-    try:
-        for c in saved:
-            spark.conf.set(c, "-1")
-        joined = read_bucketed(spark, "t_fact_bucketed").join(
-            read_bucketed(spark, "t_dim_bucketed"), "k"
-        )
-        assert joined.count() == 500
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, plan
-    finally:
-        for c, v in saved.items():
-            if v is None:
-                spark.conf.unset(c)
-            else:
-                spark.conf.set(c, v)
-        spark.sql("DROP TABLE IF EXISTS t_fact_bucketed")
-        spark.sql("DROP TABLE IF EXISTS t_dim_bucketed")
-
-
 def test_jsonl_roundtrip(spark, tmp_path):
     """JSONL export/import preserves schema and values; partitioned
     writes lay out hive-style lang directories a read can prune on."""
