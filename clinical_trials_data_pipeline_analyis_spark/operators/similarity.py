@@ -1205,35 +1205,6 @@ def rhp_escalate_geometry(
     )
 
 
-def rhp_escalate_bits(
-    embeddings: DataFrame,
-    n_bits: int,
-    bands: int,
-    *,
-    max_candidates: int,
-    dim: int = 64,
-    seed: int = 13,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_band_bits: int = RHP_MAX_BAND_BITS,
-) -> int:
-    """Bit-widening escalation, returning only the chosen ``n_bits`` —
-    the round-11 surface, now a thin wrapper over
-    ``rhp_escalate_geometry`` (which see for the probe-jump math and
-    the recall-aware band-first extension)."""
-    return rhp_escalate_geometry(
-        embeddings,
-        n_bits,
-        bands,
-        max_candidates=max_candidates,
-        dim=dim,
-        seed=seed,
-        id_col=id_col,
-        vec_col=vec_col,
-        max_band_bits=max_band_bits,
-    ).n_bits
-
-
 #: Most recent auto-mode escalation record (diagnostics only — a rung
 #: harness reads the chosen geometry / measured mass / recall estimate
 #: after the call; never consulted by the operators themselves).
@@ -1522,7 +1493,6 @@ def semantic_pair_candidates(
     blocked: DataFrame,
     threshold: float,
     broadcast_limit: int = SEMANTIC_DEDUP_BROADCAST_LIMIT,
-    row_count_hint: int | None = None,
     max_cell: int | None = None,
     dim: int | None = None,
     max_candidates: int | None = MAX_SEMDEDUP_CANDIDATE_ROWS,
@@ -1557,11 +1527,9 @@ def semantic_pair_candidates(
     and the self-join then consumes ``blocked`` once per branch. Callers
     must pass a materialized frame (``localCheckpoint``/cached) or the
     full upstream lineage executes three times; ``semantic_dedup`` does
-    this. Alternatively pass ``row_count_hint`` (e.g. from bookkeeping a
-    prior stage already did) to skip the count entirely. The gate is
-    row-count-based as a proxy for broadcast bytes — rows x (vec dims x
-    8B + key widths); ``broadcast_limit``'s default assumes ~64-float
-    vectors, tune it per schema/cluster.
+    this. The gate is row-count-based as a proxy for broadcast bytes —
+    rows x (vec dims x 8B + key widths); ``broadcast_limit``'s default
+    assumes ~64-float vectors, tune it per schema/cluster.
 
     Size-gated join strategy:
 
@@ -1579,7 +1547,7 @@ def semantic_pair_candidates(
     """
     from ..functions.vectors import l2_norm
 
-    n_rows = row_count_hint
+    n_rows = None
     if max_cell is not None or max_candidates is not None:
         # ``blocked`` is checkpointed by semantic_dedup, so each guard
         # costs one cheap job over materialized blocks, not a lineage
@@ -1591,9 +1559,7 @@ def semantic_pair_candidates(
             # The join-strategy gate's row count rides the SAME
             # aggregate (Σ cell sizes = |blocked|) — one action instead
             # of a separate blocked.count().
-            est, rows = pair_mass(blocked, ["centroid_id"])
-            if n_rows is None:
-                n_rows = rows
+            est, n_rows = pair_mass(blocked, ["centroid_id"])
             _LOG.info(
                 "semantic_pair_candidates: sigma n(n-1)/2 = %d "
                 "candidate rows (budget %d)",

@@ -11,7 +11,8 @@ CLI:
         --data-dir /path/to/aact_extracts --warehouse ./warehouse
 
 Scale notes baked in:
-- bronze ingest is a parallel splittable CSV scan under explicit schemas;
+- bronze ingest reads each extract under an explicit schema as ONE
+  non-splittable task (``multiLine``: AACT free text has quoted newlines);
 - silver writes are partitioned by stable low-cardinality keys so
   downstream reads prune (study_type for studies);
 - every mapping join broadcasts; the only wide operators are the gold

@@ -13,8 +13,10 @@ type loads as NULL and the row is kept: ``NCT2|notanint|2020-13-45`` reads as
 then imputes those NULLs like any other missing value. Quarantining and
 counting such rows is an open item in ROADMAP.md (item 4).
 
-At scale this is a splittable parallel scan: Spark assigns one task per
-~128MB file split; no shuffle occurs until a downstream wide operator.
+The scan is NOT splittable: ``read_pipe_csv`` sets ``multiLine=true``
+because AACT free-text columns carry quoted newlines, and Spark reads a
+multi-line CSV file as one task however large it is, so each extract is a
+single scan task. No shuffle occurs until a downstream wide operator.
 """
 
 from __future__ import annotations

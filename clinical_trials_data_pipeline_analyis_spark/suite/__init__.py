@@ -4,9 +4,12 @@ Every operator capability from SURVEY.md §2 (and the LLM-pipeline
 extensions) is registered here as a named query with:
 
 - a Spark implementation ``(spark, sf_dir) -> DataFrame``
-- an equivalent DuckDB oracle SQL string (or ``None`` for genuinely
-  non-SQL-expressible operators, which the driver checks rows-only)
+- an equivalent DuckDB oracle SQL string (required: every query is
+  value-checked)
 - the list of SURVEY §2 operator IDs it covers
+
+The registry keeps registration order: ``tpch`` first, then
+``extensions``.
 
 Exact-match discipline (the driver hash-compares values after sorting
 columns by name):
@@ -35,328 +38,24 @@ SparkQuery = Callable[[SparkSession, str], DataFrame]
 class Registered:
     name: str
     spark: SparkQuery
-    oracle: str | None
+    oracle: str
     covers: tuple[str, ...] = field(default_factory=tuple)
-    doc: str = ""
 
 
 _REGISTRY: dict[str, Registered] = {}
 
 
-def register(
-    name: str, oracle: str | None, covers: tuple[str, ...] = (), doc: str = ""
-):
+def register(name: str, oracle: str, covers: tuple[str, ...] = ()):
+    if not (oracle and oracle.strip()):
+        raise ValueError(f"register({name!r}): the DuckDB oracle is empty")
+    if name in _REGISTRY:
+        raise ValueError(f"register({name!r}): name is already registered")
+
     def deco(fn: SparkQuery) -> SparkQuery:
-        _REGISTRY[name] = Registered(
-            name, fn, oracle, tuple(covers), doc or (fn.__doc__ or "")
-        )
+        _REGISTRY[name] = Registered(name, fn, oracle, tuple(covers))
         return fn
 
     return deco
-
-
-#: The driver's correctness gate compares the FIRST 50 entries of
-#: ``queries()`` in iteration order (observed across rounds 1-4: each
-#: CORRECTNESS artifact is exactly the first 50 names in registration
-#: order). This list pins that window EXPLICITLY instead of relying on
-#: import/decorator order: the modern LLM-pipeline surface (a21-a52 —
-#: PQ, IVFADC, SemDeDup, packing, curation, recall@k, streaming cell
-#: assignment, PII redaction, RAG chunking) plus the §2 headliners that
-#: between them cover every SURVEY §2 operator row. Round-5 rotation
-#: (VERDICT r04 ask #1): a50-a52 — the only queries never driver-checked
-#: — replace q07/q12/q18, which are multi-round driver-green (r1-r4) and
-#: whose operator coverage (F13-F16 date spine, A7 scalar QA, F6/F8-F10
-#: token truncate) stays exercised by tests/test_oracle_parity.py.
-#: Second round-5 rotation: the six new components (a53 RHP-LSH
-#: near-dup, a54 dup-ngram coverage, a55 SCD2, a56 vocab/OOV, a57
-#: embedding QC, a58 binned quantiles) replace q01/q02/q04/q05/q13/q21
-#: — all driver-green in EVERY round r1-r4, and their §2 operator rows
-#: (A1-A9, O1, F1, P3-P8, §2.8) keep green history plus local parity.
-#: a59 (duplicate-span detection) later replaces q14, and a60
-#: (leakage-safe split) / a61 (source reputation) / a62 (linear-
-#: counting distinct sketch) replace q15/q16/q17 — A3/A5/P3/P5/P6/P8
-#: keep green history via q06/a46 plus local parity. a63 (BM25 top-k
-#: retrieval) / a64 (BPE pair-count training step) replace q19/q20 —
-#: J2 keeps green history via q03 + plans/silver tests, F13/W2 via
-#: q09/q10; both rotated-out queries stay in local parity. a65 (hybrid
-#: RRF retrieval) replaces q03 — J1/S5/F2/P8 keep r1-r4 green history
-#: (q03 also stays exercised through plans/silver pipeline parity).
-#: Third round-5 rotation: a66 (DSIR importance), a67 (count-min
-#: heavy hitters), a68 (retention curve), a69 (bigram-LM scores)
-#: replace q08/q09/q10/q11 — all driver-green in r1-r4; their operator
-#: rows (W1/W2/J3/J4/F7/O2) keep green history via q06 + the gold-layer
-#: pipeline-parity tests, and all four stay in local oracle parity.
-#: Fourth round-5 rotation: a70 (IVFADC+rerank) and a71 (temperature
-#: mixture) replace a22_text_tfidf and a29_embedding_quantize — both
-#: r4-driver-green, both row-local/aggregation shapes that stay fully
-#: exercised by local parity at three SFs; their coverage tags stay
-#: green via a63 (corpus-statistic scoring) and a32-a34 (PQ row-local
-#: transforms).
-#: All rotated-out names (q01, q02, q04, q05, q07, q08, q09, q10, q11,
-#: q12, q13, q14, q15, q16, q17, q18, q21, q22-q30, x01-x20, a22, a29)
-#: remain registered. Fifth rotation: a72 (fixed-point PageRank) and
-#: a73 (Bloom decontamination) replace a36_stratified_sample and
-#: a42_mixture_rates — r4-green; the sampling/mixture family stays
-#: in-window via a48 and a71, and decontamination via a35. Sixth
-#: rotation: a74 (ordered funnel) and a75 (cohort retention) replace
-#: a44_chunk_spans and a47_length_batches — r4-green; the packing
-#: family keeps a37 and a52 in-window. Seventh rotation: a76
-#: (canonical-by-centrality) replaces a46_corpus_bigrams — r4-green;
-#: corpus n-gram statistics stay in-window via a64 and a39. Eighth
-#: rotation: a77 (snapshot diff) replaces a24_ivf_train_step —
-#: r4-green; the k-means/Lloyd training family keeps a34 in-window.
-#: Ninth rotation: a78 (RANGE-frame rolling daily aggregates) replaces
-#: a23_dedup_simhash_pairs — r4-green; the SimHash family keeps its
-#: Hamming-verified end stage a26 in-window. Tenth rotation: a79
-#: (skew-safe distinct) and a80 (duplicate cap) replace
-#: a31_ann_ivf_multiprobe and a33_pq_adc_topk — r4-green; the ANN/ADC
-#: search family keeps a38/a43/a49/a70 in-window. Eleventh rotation:
-#: a81 (language confusion matrix) and a82 (argmax aggregation) replace
-#: a32_pq_encode and a41_pq_residual_encode — r4-green; both encode
-#: paths run inline inside the in-window a38/a43 searches. Twelfth
-#: rotation: a83 (weighted sampling without replacement) replaces
-#: a28_multimodal_frames — r4-green. Thirteenth rotation: a84
-#: (per-source dup report) replaces a27_multimodal_resize — r4-green
-#: twice (r3 artifact cured + r4); the multimodal Arrow family keeps
-#: its driver history plus local parity at three SFs and the plan
-#: sweep's Arrow-crossing assertions.
-#: Round-6 rotation (VERDICT r05 ask #7 — freshness: §2 headliners
-#: last driver-checked r2-r4 rotate back in so no green history goes
-#: more than ~3 rounds stale, alongside the two NEW round-6 components):
-#: IN — q09_window_dedup (W2 headliner, last green r4),
-#: q10_star_role_playing_dates (J3/J4 star joins, last green r4),
-#: x05_dedup_minhash_lsh (the canonical MinHash+LSH surface, last green
-#: r3), x15_multimodal_metadata (Arrow mapInPandas path — now parsing
-#: REAL PNG/JPEG/GIF headers, last green r3), a85_bpe_encode (new:
-#: the inference half of X-BPE-TRAIN, closing VERDICT ask #3),
-#: a86_hll_distinct (new: register-max distinct sketch, closing VERDICT
-#: ask #5). OUT — six r5-driver-green queries whose families stay
-#: represented in-window: a25_dedup_ngram_filtered (n-gram dedup keeps
-#: a54/a59), a34_pq_train_step (PQ keeps a38/a43/a70), a37_sequence_pack
-#: (packing keeps a52), a57_embedding_dim_stats (embedding QC keeps
-#: a49/a53), a61_source_reputation (quality/curation keeps a40/a68),
-#: a71_temperature_mixture (sampling/mixture keeps a48/a83). All six
-#: remain registered and locally oracle-checked at three SFs.
-#: Second round-6 rotation: a87_dedup_span_removal (new: the removal
-#: half of span dedup) replaces a35_decontaminate — r5-green;
-#: decontamination keeps a73 (Bloom form) in-window. Third round-6
-#: rotation: a88_perceptron_langfilter (new: in-engine integer-exact
-#: classifier training) replaces a30_dedup_keep_best — r5-green; the
-#: keep-best/canonical family keeps a76 (its centrality upgrade) and
-#: a80 in-window. Fourth round-6 rotation: a89_perceptron_scores (new:
-#: the inference half of a88 — the a85-for-a64 pattern) replaces
-#: a78_rolling_daily — r5-green; the events family keeps a74/a75/a82
-#: in-window.
-#: Round-7 rotation (VERDICT r6 asks #1 and #5 + the new a90):
-#: IN — the five queries whose CODE changed in round 6 but whose last
-#: driver verdicts predate the change (x08 salt-grid + r7 block guard;
-#: a32/x10/x16/a24 quantizer caps — the repo rule "every changed
-#: component takes a driver verdict the round it lands" extends to
-#: changed, not just new, components), a90_perceptron_wide (new: the
-#: fastText-width trainer, closing VERDICT ask #4), and seven stale §2
-#: headliners last driver-green r2-r4 rotated back in under the
-#: <=3-round freshness policy: q07 (F13-F16 date spine), q12 (A7 scalar
-#: QA), q18 (F6/F8-F10 token truncate), x01 (exact dedup headliner),
-#: x06 (SimHash pair generation), x09 (brute-force ANN baseline), q28
-#: (correlated-subquery shape). x15 and a86 STAY in-window because
-#: their code/oracle changed THIS round (x15 GIF-branch oracle; a86's
-#: read-off m-guard).
-#: OUT — thirteen r6-driver-green queries whose families remain
-#: represented: a70 (ANN/ADC keeps a38/a43 + the four rotating-in IVF/
-#: PQ queries), a77 (versioning keeps a55), a26 (SimHash freshness swap
-#: with x06), a84 (dup reporting keeps a80/a54), a83 (sampling keeps
-#: a48), a81 (quality keeps a39/a40/a51/a68), a82 (events keep a74/
-#: a75), q09/q10 (W2/J3/J4 keep gold-pipeline parity + multi-round
-#: greens), x05 (MinHash keeps a21), a85 (BPE keeps a64), a87 (span
-#: family keeps a59), a88 (perceptron keeps a89 + the wider a90). All
-#: thirteen remain registered and locally oracle-checked at three SFs.
-#: Round-8 rotation (VERDICT r7 asks #1, #2 and #5):
-#: IN — the two queries whose CODE/parameters changed this round and
-#: therefore owe a fresh driver verdict: x07_dedup_ngram_jaccard
-#: (max_df=100 hot-shingle bound + the new join-fan-out guard — the
-#: sf10 disk-fill fix) — a53_rhp_embedding_neardup (12-bit bands — the
-#: sf10 OOM fix) was already in-window and stays. Plus nine of the
-#: r2–r4-stale names under the <=3-round freshness policy, oldest
-#: first: q01 (A4/P7 pricing summary), q02 (O1 topk), q03 (S5 mapping
-#: ingest), q04 (P1/F3-F4 case chains), q05 (A2 best-priority), q08
-#: (A6/O2 surrogate dims), x02 (doc fingerprinting), x03 (token
-#: count), x04 (text quality).
-#: OUT — ten r7-driver-green queries whose families stay represented:
-#: a32/x10/a24 (quantizer/IVF keep x16, a38, a43, a49, a50), a79
-#: (distinct-safety keeps a62/a86), a80 (dup reporting keeps x01, a54,
-#: a59), a72 (graph keeps a76), a74 (events keep a75, a68), a48
-#: (sampling/packing keeps a52), a51 (quality keeps a39, a40, x04
-#: rotating in), a55 (versioning keeps a56, a60). All ten remain
-#: registered and locally oracle-checked at three SFs.
-#: Round-8 addendum: a23/a26 (simhash candidates/verified) rotate IN —
-#: their generator gained the hot-bucket cap (max_bucket=2000, oracle
-#: mirrored) after the round-8 audit measured a 35,692-doc half-bucket
-#: at sf10 (the x07 disk-fill shape); changed queries owe a driver
-#: verdict. OUT: a50 (ANN family keeps x16/a38/a43/a49), a62 (sketch
-#: family keeps a67/a86/a58). Second addendum: a33 rotates IN — the
-#: round-8 sweep OOM'd its full-corpus ADC because the mod-sampled
-#: query set grew with the corpus; all four %200 query sets (a33, a38,
-#: a43, a70) now cap at vec_id < 2000 (exactly the sf0.1 fixture's
-#: set — value-identical at every driver SF, hash-MATCH re-verified
-#: locally). a38/a43 already sit in-window; a70's diff is the same
-#: shared predicate, so a33 represents the change. OUT: a49 (ANN
-#: family keeps x16/a38/a43 + a33). Third addendum: a32 rotates back
-#: IN — pq_encode's plan changed (norms-per-side + MIN(struct) argmin
-#: replacing the row_number window; bit-identical output, 3x less HOF
-#: work and no full sort-shuffle on the |corpus| x k scored rows) after
-#: the sweep measured the old form at 1.12x/input. OUT: a89
-#: (perceptron family keeps the wider a90). Fourth addendum: the
-#: flat-codegen dot/norm hint (functions/vectors.py dim=) changes the
-#: physical plan of every embedding-family query; the change is ONE
-#: shared helper, bit-identical by construction (per-row fold fallback,
-#: tests/test_vectors_dim.py) and value-verified across all 120 queries
-#: in this round's full driver-sim. Every affected family already has
-#: an in-window representative taking a fresh r8 verdict on the changed
-#: plan: x08 (exact pair scan), x09 (brute force), a32/a33/a38/a43
-#: (PQ/ADC), x16 (IVF), a45 (SemDeDup), a53 (RHP) — the out-of-window
-#: siblings (x10, a24, a31, a41, a49, a50, a70) share exactly those
-#: helpers, the same representation argument as the second addendum.
-#: Fifth addendum (final round-8 state): the blanket flat hint was
-#: re-measured per site and resolved to three explicit opt-ins —
-#: pq_encode's sub_dim dots, the exact-pair verify in
-#: embedding_duplicate_pairs, and semantic_pair_candidates' pair dot
-#: (use_flat=True with the measurements in comments); every other dot
-#: returned to the fold. Still ONE shared helper, still bit-identical
-#: by construction (tests/test_vectors_dim.py) and value-verified by
-#: two full driver-sims this round; the in-window representatives
-#: above cover every opted-in site (a32/a33 pq, x08 verify, a45
-#: SemDeDup).
-#: Round-10 rotation (VERDICT r9 ask #3 — the r2–r4-stale backlog is
-#: policy-violating at ~24 names; rotate >=10 oldest-first, and include
-#: a29/a31, both of which also owe fresh verdicts after this round's
-#: bench adjudication — a29's CODE changed too: quantize_embeddings
-#: dropped its input repartition, so it owes a verdict under the
-#: changed-component rule regardless).
-#: IN (12, all last driver-green r2–r4): q11_duration_parse (F7 N4
-#: try_cast), q13_percentile_caps (A8 exact percentiles), q14/q15/q16/
-#: q17 (A5 count-distinct, A3 cohort counts, P5 HAVING, P6 NOT-ILIKE
-#: exclusions), q19_normalized_key_join (J2 headliner), q20_yoy_growth
-#: (F13 window growth), x11_text_langid, x12_events_hourly_window,
-#: a29_embedding_quantize (adjudicated + changed plan), a31_
-#: ann_ivf_multiprobe (adjudicated).
-#: OUT (12, all r9-driver-green, families still represented): q01
-#: (A4/P7 — q06 carries the multi-measure agg + date bounds), q02 (O1
-#: topk — a63/a67 keep ordered-limit shapes), q03 (S5/J1/J2 — q19
-#: rotating IN is the J2 headliner; silver pipeline parity carries
-#: J1/S5), q05 (A2 — gold pipeline parity), x02/x03 (fingerprint/token
-#: count — x01, q18, a64 stay), a23 (simhash candidates — a26 verified
-#: + x06 stay), a32/a33 (PQ encode/ADC — the composed a38/a43 IVFPQ
-#: paths exercise both inline), x16 (IVF search — a31 rotating IN is
-#: the same family's multiprobe form; x09 brute-force stays), a68/a75
-#: (events/retention — x12 rotating IN; a74/a82 registered + locally
-#: green). All twelve remain registered and locally oracle-checked.
-#: Round-10 second wave (same round, before the driver ran): the
-#: verify-in-join rewrites landed after the first rotation and changed
-#: x17_dedup_minhash_estimate's plan (estimate computed in the band
-#: join) — under the changed-component rule it owes a fresh driver
-#: verdict, and it was ALSO r2–r4-stale; taking the edit anyway, seven
-#: more of the oldest stale names ride along, clearing most of the
-#: backlog this round. IN (8): x17 (changed + stale), q21_set_operations
-#: (§2.8's only row), q22_semi_anti_join, x13_events_sessionize,
-#: x14_events_json_props, a27/a28 (the multimodal Arrow decode/frame
-#: paths — x15 covers the metadata plumbing only), a36_stratified_sample
-#: (sampling-family rep). OUT (8, all r9-driver-green, unchanged code,
-#: families still represented): a54 (a59 + x07 keep spans/ngram),
-#: a63 (a65's RRF composes the BM25 leg), a39 (a40 composes the text
-#: metrics; x04 stays), a67 (a58 + a86 keep sketches), x09 (ANN keeps
-#: a31 multiprobe + a38/a43 IVFPQ + x08 exact verify), a66 (a69 keeps
-#: scoring), a60 (a36 rotating IN keeps the sampling/split family),
-#: q28 (q22 rotating IN is the semi/anti-join shape correlated EXISTS
-#: plans to). All eight remain registered and locally oracle-checked.
-#: Round-11 change (VERDICT r10 ask #3 — "encode oldest-first auto-
-#: rotation as code"): DRIVER_WINDOW is no longer a hand-picked tuple.
-#: It is COMPUTED as ``CHANGED_COMPONENTS + oldest-first fill`` from the
-#: tracked per-name last-green map (``window_history.LAST_GREEN``,
-#: regenerated each round start from the driver's CORRECTNESS_r*.json
-#: by ``scripts/update_window_history.py``). The hand-picked rotations
-#: above kept falling behind the repo's own <=3-round freshness policy
-#: (r9 rotated zero names; r10's 20-name catch-up still left a 16-name
-#: r3-r4 cohort at 6-7 rounds stale); the computed rule cannot. For
-#: round 11 the oldest-first fill selects exactly the r3-r7 cohorts
-#: (10+6+9+12+13 = 50 names — among them the entire outstanding r3-r4
-#: cohort q23-q27, q29, q30, x18-x20, a22, a41, a42, a44, a46, a47,
-#: closing VERDICT r10 ask #2), leaving nothing older than r9 once this
-#: window goes green. Steady state: 120 names / 50 slots -> every name
-#: re-verified every ceil(120/50) = 3 rounds, which
-#: tests/test_driver_window.py asserts as an invariant of the build
-#: rule. Names never driver-checked (new components) sort as round 0 —
-#: automatically first in line, preserving the "every new component
-#: takes a verdict the round it lands" rule.
-from .window_history import CURRENT_ROUND, LAST_GREEN  # noqa: E402
-
-#: Queries whose code/plan changed since their last driver verdict —
-#: they owe a verdict THIS round (the changed-component rule) and take
-#: priority slots ahead of the oldest-first fill. Reset each round.
-#: Round 14 touches: simhash_candidates / simhash_near_duplicates (the
-#: cap-consequence probe + min_visible floor, VERDICT r13 ask #4 —
-#: values unchanged, bodies changed) -> x06/a23/a26/a91/a93;
-#: lsh_candidate_pairs (bands validated before the min_recall floor,
-#: ADVICE #1) -> x05/x17/a21/a30; semantic_dedup (percolation
-#: prescription quotes the bucket upper edge, ADVICE #3, warning path
-#: only) -> a45/a92; NEW a95 (16-component MinHash signatures — the
-#: followable min_recall prescription), a96 (depth-2 SimHash rescue),
-#: and a97 (the n-gram family's max_df consequence surface). 14
-#: priority names + the 36-name r11 cohort fill the window exactly.
-CHANGED_COMPONENTS: tuple[str, ...] = (
-    "x06_dedup_simhash",
-    "a23_dedup_simhash_pairs",
-    "a26_dedup_simhash_verified",
-    "a91_simhash_capped_rescue",
-    "a93_simhash_near_rescue",
-    "a95_minhash16_lsh",
-    "a96_simhash_rescue_depth2",
-    "a97_ngram_df_stats",
-    "x05_dedup_minhash_lsh",
-    "x17_dedup_minhash_estimate",
-    "a21_dedup_cc_clusters",
-    "a30_dedup_keep_best",
-    "a45_semantic_dedup",
-    "a92_semantic_dedup_multiprobe",
-)
-
-WINDOW_SIZE = 50
-
-_WINDOW: tuple[str, ...] | None = None
-
-
-def _build_window(size: int = WINDOW_SIZE) -> tuple[str, ...]:
-    """changed components first, then oldest-first by last driver green.
-
-    Only registered names participate (LAST_GREEN may carry relics of
-    renamed queries, e.g. x21->a21); a CHANGED_COMPONENTS name that is
-    not registered is a hard error — a rename must not silently drop a
-    changed component out of the checked window.
-    """
-    _load_all()
-    missing = [n for n in CHANGED_COMPONENTS if n not in _REGISTRY]
-    if missing:
-        raise LookupError(
-            f"CHANGED_COMPONENTS names not registered: {missing}"
-        )
-    window = list(dict.fromkeys(CHANGED_COMPONENTS))
-    taken = set(window)
-    fill = sorted(
-        (n for n in _REGISTRY if n not in taken),
-        key=lambda n: (LAST_GREEN.get(n, 0), n),
-    )
-    window.extend(fill[: size - len(window)])
-    return tuple(window)
-
-
-def __getattr__(name: str):
-    # PEP 562: DRIVER_WINDOW needs the registry loaded, which must not
-    # happen at import time (tpch/extensions import back from here).
-    if name == "DRIVER_WINDOW":
-        global _WINDOW
-        if _WINDOW is None:
-            _WINDOW = _build_window()
-        return _WINDOW
-    raise AttributeError(name)
 
 
 def _load_all() -> None:
@@ -366,14 +65,9 @@ def _load_all() -> None:
 
 
 def registry() -> dict[str, Registered]:
-    """All registered queries, DRIVER_WINDOW names first (in that exact
-    order), then the rest in registration order. The window is built by
-    :func:`_build_window` from registered names only, so every window
-    entry is registered by construction."""
+    """All registered queries, in registration order."""
     _load_all()
-    window = __getattr__("DRIVER_WINDOW")
-    rest = [n for n in _REGISTRY if n not in set(window)]
-    return {n: _REGISTRY[n] for n in [*window, *rest]}
+    return dict(_REGISTRY)
 
 
 def spark_queries() -> dict[str, SparkQuery]:
@@ -381,7 +75,7 @@ def spark_queries() -> dict[str, SparkQuery]:
 
 
 def oracle_queries() -> dict[str, str]:
-    return {n: r.oracle for n, r in registry().items() if r.oracle is not None}
+    return {n: r.oracle for n, r in registry().items()}
 
 
 def coverage() -> dict[str, list[str]]:

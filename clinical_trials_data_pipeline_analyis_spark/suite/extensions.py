@@ -35,6 +35,7 @@ from ..operators.similarity import (
 )
 from ..sources.parquet import read_table
 from . import register
+from . import tpch  # noqa: F401  (tpch registers first, whatever the import order)
 
 #: DuckDB expression for the same normalization as functions.text.normalized_text
 _NORM_SQL = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"

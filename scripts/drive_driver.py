@@ -70,17 +70,6 @@ def main() -> int:
             rec["err"] = f"{type(e).__name__}: {str(e)[:160]}"
             n_fail += 1
             continue
-        if name not in oracles:
-            print(f"{name}: NO-ORACLE rows={len(sdf)} ({time.time()-t0:.1f}s)")
-            # Nothing was COMPARED: rows_match/schema_match stay null so
-            # a consumer filtering on them never counts an uncompared
-            # entry as verified — rows_only carries the meaning
-            # (ADVICE r13).
-            rec.update(
-                rows_match=None, schema_match=None, hash_match=None,
-                rows_only=True, n_rows=len(sdf),
-            )
-            continue
         odf = con.sql(oracles[name]).df()
         scols, ocols = sorted(sdf.columns), sorted(odf.columns)
         if scols != ocols:

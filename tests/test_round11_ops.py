@@ -64,7 +64,7 @@ from clinical_trials_data_pipeline_analyis_spark.operators.dedup import (  # noq
 )
 from clinical_trials_data_pipeline_analyis_spark.operators.similarity import (  # noqa: E402
     rhp_candidate_estimate,
-    rhp_escalate_bits,
+    rhp_escalate_geometry,
     rhp_near_duplicates,
     rhp_signatures,
 )
@@ -133,9 +133,9 @@ def test_rhp_escalate_bits_fits_the_budget(spark):
     emb = _emb(spark)
     n = emb.count()
     budget = max(50, n // 2)  # far below the 1-bit all-pairs mass
-    chosen = rhp_escalate_bits(
+    chosen = rhp_escalate_geometry(
         emb, 2, 2, max_candidates=budget, dim=_DIM
-    )
+    ).n_bits
     assert chosen > 2 and chosen % 2 == 0
     assert rhp_candidate_estimate(emb, chosen, 2, dim=_DIM) <= budget
 
@@ -162,9 +162,9 @@ def test_rhp_auto_escalation_completes_and_matches_pinned(spark):
     assert rhp_auto_bits(n, bands=2, target_bucket=2 * n) == 16  # 8-bit floor
     # Same 16-bit law start as the auto call, so both walk the same
     # probe sequence and land on the same escalated width.
-    chosen = rhp_escalate_bits(
+    chosen = rhp_escalate_geometry(
         emb, 16, 2, max_candidates=budget, dim=_DIM
-    )
+    ).n_bits
     assert chosen > 16  # the fixture's mass escalates past the law
     key = lambda r: (r["vec_a"], r["vec_b"], r["cosine"])  # noqa: E731
     auto = sorted(
@@ -205,7 +205,7 @@ def test_rhp_escalate_bits_stops_at_ceiling(spark):
     exact-dup collisions survive any width, so some corpora can never
     fit an arbitrarily small budget and the ceiling is the exit."""
     emb = _emb(spark)
-    chosen = rhp_escalate_bits(
+    chosen = rhp_escalate_geometry(
         emb, 2, 2, max_candidates=0, dim=_DIM, max_band_bits=3
-    )
+    ).n_bits
     assert chosen == 6  # 2 bands x 3-bit ceiling

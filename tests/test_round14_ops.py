@@ -11,11 +11,10 @@ Theme 2 — the SimHash streaming twin warns BEFORE the budget refusal
 next epoch's candidate mass against the post-append store and logs past
 80% of the budget, naming the MinHash twin.
 
-Plus the four r13 ADVICE items: bands validated before the min_recall
+Plus three r13 ADVICE items: bands validated before the min_recall
 floor; the foreachBatch assignment's ``probes`` pinned on the sink (it
 changes the sink schema); the percolation prescription quoting the
-histogram bucket's UPPER edge; drive_driver's rows-only snapshot flags
-left null.
+histogram bucket's UPPER edge.
 """
 
 from __future__ import annotations
