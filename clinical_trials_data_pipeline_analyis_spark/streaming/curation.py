@@ -14,12 +14,19 @@ Keep-first contract: a document is ``exact_dup`` if its fingerprint was
 seen in ANY earlier micro-batch, or earlier (lower id) within its own
 batch — so for an id-ordered stream the stage verdicts equal the batch
 curation funnel's (tests/test_streaming_metrics.py proves it).
+
+Verdicts and fingerprints are epoch stores (``streaming/store_meta.py``):
+a retried or replayed micro-batch rewrites its own epoch partition and
+checks its fingerprints against earlier epochs only, so a replay gives
+the same single verdict per document as the first run.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
+
 from ..checkpoint import cut_lineage
+from .store_meta import foreach_epoch, read_history, write_epoch
 
 
 def curate_docs_stream(
@@ -35,10 +42,10 @@ def curate_docs_stream(
 
     ``rules`` are (name, fails-Column) over the signal frame
     (n_tokens, distinct_ratio, top_bigram_frac, max_run, is_duplicate);
-    default = the a40 funnel rules. Appends (id, stage, is_kept) to
-    ``out_path`` and the batch fingerprints to ``store_path``.
+    default = the a40 funnel rules. Writes (id, stage, is_kept) as the
+    epoch's partition of ``out_path`` and the batch fingerprints as the
+    epoch's partition of ``store_path``.
     """
-    from pyspark.errors import AnalysisException
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -65,30 +72,23 @@ def curate_docs_stream(
         dup_in_batch = fps.withColumn(
             "_dup", F.row_number().over(w) > 1
         )
-        try:
-            store = spark.read.parquet(store_path).select(
-                F.col("fp").alias("s_fp")
-            ).distinct()
-            flagged = dup_in_batch.join(
-                store, dup_in_batch.fp == store.s_fp, "left"
-            ).select(
-                id_col,
-                (F.col("_dup") | F.col("s_fp").isNotNull()).alias("is_duplicate"),
-            )
-        except AnalysisException:
-            flagged = dup_in_batch.select(
-                id_col, F.col("_dup").alias("is_duplicate")
-            )
+        store = (
+            read_history(spark, store_path, epoch_id, fps)
+            .select(F.col("fp").alias("s_fp"))
+            .distinct()
+        )
+        flagged = dup_in_batch.join(
+            store, dup_in_batch.fp == store.s_fp, "left"
+        ).select(
+            id_col,
+            (F.col("_dup") | F.col("s_fp").isNotNull()).alias("is_duplicate"),
+        )
 
         signals = rep.join(flagged, id_col)
         verdict = first_failed_rule(signals, rules).select(
             id_col, "stage", "is_kept"
         )
-        verdict.write.mode("append").parquet(out_path)
-        fps.write.mode("append").parquet(store_path)
+        write_epoch(verdict, out_path, epoch_id)
+        write_epoch(fps, store_path, epoch_id)
 
-    return (
-        docs_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return foreach_epoch(docs_stream, _process, checkpoint)

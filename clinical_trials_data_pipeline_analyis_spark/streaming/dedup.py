@@ -17,7 +17,17 @@ import logging
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
 from ..checkpoint import cut_lineage
+from .store_meta import (
+    check_or_pin_geometry,
+    foreach_epoch,
+    keep_first_flags,
+    price_epoch_join,
+    read_history,
+    write_epoch,
+)
 
 _LOG = logging.getLogger(__name__)
 
@@ -71,16 +81,11 @@ def near_dedup_docs_stream(
     store is a parquet table of (id, h0..h7) signatures partitioned by
     ``epoch_id``, ~40 bytes/doc, NOT the corpus text.
 
-    Retry-idempotence: ``foreachBatch`` is at-least-once, so a retried
-    micro-batch re-runs the handler. Both the flag table and the
-    signature store are partitioned by ``epoch_id`` and written with
-    DYNAMIC partition overwrite — a retry rewrites exactly its own
-    epoch partition instead of appending duplicates (the same pattern
-    as ``decontaminate_docs_stream`` below and ``streaming/scd.py``).
-    The store read additionally filters ``epoch_id < current`` so a
-    retry bands against exactly the history the first attempt saw, even
-    though the failed attempt may already have written this epoch's
-    partition — the retry is bit-identical, not merely non-duplicating.
+    Retry-idempotence: the flag table and the signature store are
+    epoch stores (``streaming/store_meta.py``): a retried micro-batch
+    rewrites its own epoch partition and bands against exactly the
+    history its first attempt saw, so the retry is bit-identical, not
+    merely non-duplicating.
 
     Geometry is PINNED for the store's lifetime (round 13): MinHash
     signatures from different (num_hashes, bands, shingle_k) never
@@ -101,11 +106,7 @@ def near_dedup_docs_stream(
     with the batch refusal's prescription, instead of a long-running
     stream silently under-recalling for its whole life.
     """
-    from pyspark.errors import AnalysisException
-    from pyspark.sql import functions as F
-
     from ..operators.dedup import lsh_candidate_pairs, minhash_signatures
-    from .store_meta import check_or_pin_geometry
 
     if bands <= 0 or num_hashes % bands:
         # Same validation order as the batch operator (ADVICE r13):
@@ -148,15 +149,8 @@ def near_dedup_docs_stream(
         sigs_new = minhash_signatures(
             batch_df, id_col, text_col, num_hashes=num_hashes, shingle_k=shingle_k
         ).transform(cut_lineage(local_only=True))
-        try:
-            store = (
-                spark.read.parquet(store_path)
-                .filter(F.col("epoch_id") < int(epoch_id))
-                .drop("epoch_id")
-            )
-            all_sigs = store.unionByName(sigs_new)
-        except AnalysisException:
-            all_sigs = sigs_new
+        history = read_history(spark, store_path, epoch_id, sigs_new)
+        all_sigs = history.unionByName(sigs_new)
         partners = lsh_candidate_pairs(
             sigs_new,
             id_col,
@@ -165,36 +159,14 @@ def near_dedup_docs_stream(
             materialize=False,
             against=all_sigs.transform(cut_lineage(local_only=True)),
         )
-        dup_ids = (
-            partners.filter(F.col("doc_b") < F.col("doc_a"))
-            .select(F.col("doc_a").alias(id_col))
-            .distinct()
+        dup_ids = partners.filter(F.col("doc_b") < F.col("doc_a")).select(
+            F.col("doc_a").alias(id_col)
         )
-        flags = sigs_new.select(id_col).join(
-            dup_ids.withColumn("is_near_dup", F.lit(True)), id_col, "left"
-        ).select(
-            id_col, F.coalesce("is_near_dup", F.lit(False)).alias("is_near_dup")
-        )
-        (
-            flags.withColumn("epoch_id", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(out_path)
-        )
-        (
-            sigs_new.withColumn("epoch_id", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(store_path)
-        )
+        flags = keep_first_flags(sigs_new, dup_ids, id_col)
+        write_epoch(flags, out_path, epoch_id)
+        write_epoch(sigs_new, store_path, epoch_id)
 
-    return (
-        docs_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return foreach_epoch(docs_stream, _process, checkpoint)
 
 
 def clean_spans_stream(
@@ -220,10 +192,8 @@ def clean_spans_stream(
     mean unbounded reprocessing).
 
     Retry-idempotence: cleaned output and the window-hash store are
-    both partitioned by ``epoch_id`` with DYNAMIC overwrite, and the
-    store read filters ``epoch_id < current`` — a retried micro-batch
-    is bit-identical to its first attempt (same pattern as
-    ``near_dedup_docs_stream``).
+    epoch stores (``streaming/store_meta.py``) — a retried micro-batch
+    is bit-identical to its first attempt.
 
     Scale shape: per-batch cost is O(batch token instances) for window
     hashing + one equi-join of the batch's windows against the DISTINCT
@@ -237,15 +207,11 @@ def clean_spans_stream(
     later epoch verifies it through the Spark session (filesystem-
     agnostic), failing the stream loudly on mismatch.
     """
-    from pyspark.errors import AnalysisException
-    from pyspark.sql import functions as F
-
     from ..operators.dedup import (
         remove_spans,
         spans_from_marked,
         window_hashes,
     )
-    from .store_meta import check_or_pin_geometry
 
     geometry = {"k": int(k)}
 
@@ -263,41 +229,16 @@ def clean_spans_stream(
             .filter(F.col("c") >= 2)
             .select("gh")
         )
-        try:
-            hist = (
-                spark.read.parquet(store_path)
-                .filter(F.col("epoch_id") < int(epoch_id))
-                .select("gh")
-                .distinct()
-            )
-            dup_gh = in_batch_dup.unionByName(hist).distinct()
-        except AnalysisException:
-            dup_gh = in_batch_dup
+        seen = win.select("gh").distinct()
+        hist = read_history(spark, store_path, epoch_id, seen)
+        dup_gh = in_batch_dup.unionByName(hist).distinct()
         marked = win.join(dup_gh, "gh").select(id_col, "pos")
         spans = spans_from_marked(marked, id_col, k=k)
         cleaned = remove_spans(batch_df, spans, id_col, text_col)
-        (
-            cleaned.withColumn("epoch_id", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(out_path)
-        )
-        (
-            win.select("gh")
-            .distinct()
-            .withColumn("epoch_id", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(store_path)
-        )
+        write_epoch(cleaned, out_path, epoch_id)
+        write_epoch(seen, store_path, epoch_id)
 
-    return (
-        docs_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return foreach_epoch(docs_stream, _process, checkpoint)
 
 
 def decontaminate_docs_stream(
@@ -326,13 +267,10 @@ def decontaminate_docs_stream(
     parquet accumulates one row per contaminated doc:
     (id_col, n_bench_hits, max_common), partitioned by ``epoch_id`` —
     identical to what the batch operator returns over the union of all
-    batches (equality-tested). ``foreachBatch`` is at-least-once, so a
-    retried micro-batch re-runs the handler: the epoch-partitioned
-    DYNAMIC overwrite makes the retry rewrite its own partition instead
-    of appending duplicate flags.
+    batches (equality-tested). The output is an epoch store
+    (``streaming/store_meta.py``): a retried micro-batch rewrites its
+    own partition instead of appending duplicate flags.
     """
-    from pyspark.sql import functions as F
-
     from ..operators.dedup import decontaminate
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
@@ -344,19 +282,9 @@ def decontaminate_docs_stream(
             k=k,
             min_common=min_common,
         )
-        (
-            flagged.withColumn("epoch_id", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(out_path)
-        )
+        write_epoch(flagged, out_path, epoch_id)
 
-    return (
-        docs_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return foreach_epoch(docs_stream, _process, checkpoint)
 
 
 #: Per-epoch candidate budget for the streaming SimHash near-dedup —
@@ -425,19 +353,14 @@ def simhash_near_dedup_stream(
     deliberately NOT pinned: the store holds full fingerprints, so the
     verify radius is a per-run query parameter, not store geometry.
 
-    Retry-idempotence: flags and store are epoch-partitioned with
-    DYNAMIC overwrite and the store read filters ``epoch_id <
-    current`` — a retried micro-batch is bit-identical to its first
-    attempt.
+    Retry-idempotence: flags and store are epoch stores
+    (``streaming/store_meta.py``) — a retried micro-batch is
+    bit-identical to its first attempt.
 
     Returns an unstarted ``DataStreamWriter``; ``.start()`` it. Flag
     output: (id_col, is_near_dup) partitioned by epoch_id.
     """
-    from pyspark.errors import AnalysisException
-    from pyspark.sql import functions as F
-
     from ..operators.dedup import simhash
-    from .store_meta import check_or_pin_geometry
 
     if int(bits) != 32:
         raise ValueError(
@@ -459,15 +382,8 @@ def simhash_near_dedup_stream(
         fps_new = simhash(batch_df, id_col, text_col, bits=bits).transform(
             cut_lineage(local_only=True)
         )
-        try:
-            store = (
-                spark.read.parquet(store_path)
-                .filter(F.col("epoch_id") < int(epoch_id))
-                .drop("epoch_id")
-            )
-            all_fps = store.unionByName(fps_new)
-        except AnalysisException:
-            all_fps = fps_new
+        history = read_history(spark, store_path, epoch_id, fps_new)
+        all_fps = history.unionByName(fps_new)
 
         lo = (F.col("simhash") % 65536).alias("half")
         hi = F.expr("CAST(shiftright(simhash, 16) & 65535 AS BIGINT)").alias(
@@ -482,46 +398,19 @@ def simhash_near_dedup_stream(
             )
 
         if max_candidates_per_epoch is not None:
-            # Exact per-epoch mass of the two asymmetric half joins:
-            # per (band, half) bucket, new x history + C(new, 2). The
-            # SAME aggregate also projects the NEXT epoch's mass — if
-            # an identical batch re-arrived against the post-append
-            # store, each bucket would pay n_new x n_all + C(new, 2)
-            # (n_all here IS the post-append occupancy) — plus the
-            # store's max half-bucket occupancy, so a template-heavy
-            # stream warns BEFORE the budget refusal lands mid-epoch
-            # (VERDICT r13 ask #5). One collect per half, no extra
-            # pass.
+            # Exact per-epoch mass of the two asymmetric half joins,
+            # plus the projected mass of an identical next batch and
+            # the store's max half-bucket occupancy, so a
+            # template-heavy stream warns BEFORE the budget refusal
+            # lands mid-epoch. One collect per half, no extra pass.
             total, projected, max_occ = 0, 0, 0
             for half in (lo, hi):
-                row = (
-                    fps_new.select(half)
-                    .groupBy("half")
-                    .agg(F.count(F.lit(1)).alias("n_new"))
-                    .join(
-                        all_fps.select(half)
-                        .groupBy("half")
-                        .agg(F.count(F.lit(1)).alias("n_all")),
-                        "half",
-                    )
-                    .agg(
-                        F.sum(
-                            F.col("n_new") * (F.col("n_all") - F.col("n_new"))
-                            + (F.col("n_new") * (F.col("n_new") - F.lit(1)))
-                            / F.lit(2)
-                        ).alias("cand"),
-                        F.sum(
-                            F.col("n_new") * F.col("n_all")
-                            + (F.col("n_new") * (F.col("n_new") - F.lit(1)))
-                            / F.lit(2)
-                        ).alias("proj"),
-                        F.max("n_all").alias("mx"),
-                    )
-                    .collect()[0]
+                mass, proj, occ = price_epoch_join(
+                    fps_new.select(half), all_fps.select(half), ["half"]
                 )
-                total += int(row["cand"] or 0)
-                projected += int(row["proj"] or 0)
-                max_occ = max(max_occ, int(row["mx"] or 0))
+                total += mass
+                projected += proj
+                max_occ = max(max_occ, occ)
             if total > max_candidates_per_epoch:
                 raise ValueError(
                     f"simhash_near_dedup_stream: epoch {epoch_id}'s "
@@ -575,35 +464,11 @@ def simhash_near_dedup_stream(
                     ).cast("int").alias("hamming"),
                 )
                 .filter(F.col("hamming") <= max_hamming)
-                .select("a_id")
+                .select(F.col("a_id").alias(id_col))
             )
-        dup_ids = dup_parts[0].unionByName(dup_parts[1]).distinct()
-        flags = fps_new.select(F.col(id_col)).join(
-            dup_ids.withColumnRenamed("a_id", id_col).withColumn(
-                "is_near_dup", F.lit(True)
-            ),
-            id_col,
-            "left",
-        ).select(
-            id_col, F.coalesce("is_near_dup", F.lit(False)).alias("is_near_dup")
-        )
-        (
-            flags.withColumn("epoch_id", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(out_path)
-        )
-        (
-            fps_new.withColumn("epoch_id", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(store_path)
-        )
+        dup_ids = dup_parts[0].unionByName(dup_parts[1])
+        flags = keep_first_flags(fps_new, dup_ids, id_col)
+        write_epoch(flags, out_path, epoch_id)
+        write_epoch(fps_new, store_path, epoch_id)
 
-    return (
-        docs_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return foreach_epoch(docs_stream, _process, checkpoint)

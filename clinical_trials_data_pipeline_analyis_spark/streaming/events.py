@@ -8,8 +8,9 @@ logic runs under streaming unchanged. Two canonical shapes are provided:
   the streaming twin of the batch ``x12_events_hourly_window`` query. Late
   events beyond the watermark are dropped; state is bounded.
 - ``silver_studies_stream``: the full silver studies cleaner applied via
-  ``foreachBatch`` — micro-batch medallion ingestion with exactly-once
-  parquet sink semantics (checkpointed).
+  ``foreachBatch`` — micro-batch medallion ingestion into an epoch store
+  (``streaming/store_meta.py``), so a retried or replayed micro-batch
+  rewrites its own partition instead of appending a copy.
 
 At cluster scale: watermark + window state lives in the state store
 (RocksDB recommended via
@@ -26,6 +27,7 @@ from pyspark.sql.types import StructType
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
 from ..plans.silver import silver_studies
+from .store_meta import foreach_epoch, write_epoch
 
 #: schema for file-based event streams (ts as proper timestamp here —
 #: streaming sources are JSON/CSV micro-batch files, not the nanos parquet)
@@ -78,18 +80,19 @@ def silver_studies_stream(
     """Run the batch silver cleaner per micro-batch via foreachBatch.
 
     foreachBatch hands each micro-batch to the exact batch transform, so
-    batch/stream parity is by construction; the parquet sink is
-    idempotent per epoch (checkpoint-tracked).
+    batch/stream parity is by construction: the cleaner is a row-wise
+    projection, so the sink holds ``silver_studies`` over the union of
+    the micro-batches (plus ``epoch_id``). foreachBatch is at-least-once,
+    so each epoch is written as its own ``epoch_id`` partition of
+    ``out_path`` with dynamic overwrite: a retried micro-batch, or a
+    replay from a wiped checkpoint, rewrites its partition instead of
+    appending duplicate rows.
     """
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        silver_studies(batch_df, config).write.mode("append").parquet(out_path)
+        write_epoch(silver_studies(batch_df, config), out_path, epoch_id)
 
-    return (
-        bronze_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return foreach_epoch(bronze_stream, _process, checkpoint)
 
 
 def user_day_activity_stream(events: DataFrame) -> DataFrame:

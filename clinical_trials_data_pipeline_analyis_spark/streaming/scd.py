@@ -12,12 +12,13 @@ incremental near-dedup stream (``streaming/dedup.py``).
 
 Per micro-batch:
 
-1. append the batch's observations to a key-hash-bucketed store —
-   partitioned by (epoch, bucket) with dynamic overwrite, so an
-   at-least-once retry rewrites its own epoch partitions instead of
-   duplicating observations;
-2. recompute SCD2 rows for the TOUCHED buckets only (the store read is
-   partition-pruned to those buckets) with the exact batch operator;
+1. write the batch's observations as its epoch of a key-hash-bucketed
+   epoch store (``streaming/store_meta.py``), partitioned by (epoch,
+   bucket), so an at-least-once retry rewrites its own epoch partitions
+   instead of duplicating observations;
+2. recompute SCD2 rows for the TOUCHED buckets only (the store read
+   of epochs up to this one is partition-pruned to those buckets) with
+   the exact batch operator;
 3. dynamically overwrite just those buckets of the dimension table.
 
 At 100 TB: per-epoch cost is proportional to the touched buckets'
@@ -33,6 +34,8 @@ from pyspark.sql import functions as F
 
 from ..operators.sampling import hash_bucket
 from ..operators.scd import scd2_from_log
+from ..sources.parquet import overwrite_partitions
+from .store_meta import foreach_epoch, read_history, write_epoch
 
 
 def scd2_stream(
@@ -62,28 +65,15 @@ def scd2_stream(
         touched = [r["_kb"] for r in b.select("_kb").distinct().collect()]
         if not touched:
             return
-        (
-            b.withColumn("epoch_id", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id", "_kb")
-            .parquet(store_path)
-        )
-        hist = spark.read.parquet(store_path).filter(
+        write_epoch(b, store_path, epoch_id, "_kb")
+        # Epochs up to AND including this one, just written: the store
+        # read replaces a second scan of the micro-batch source.
+        hist = read_history(spark, store_path, epoch_id + 1, b).filter(
             F.col("_kb").isin(touched)
         )
         dim = scd2_from_log(
             hist, key_col, attr_col, ts_col, tiebreak_col
         ).withColumn("_kb", hash_bucket(F.col(key_col), buckets))
-        (
-            dim.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_kb")
-            .parquet(dim_path)
-        )
+        overwrite_partitions(dim, dim_path, ["_kb"])
 
-    return (
-        obs_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return foreach_epoch(obs_stream, _process, checkpoint)

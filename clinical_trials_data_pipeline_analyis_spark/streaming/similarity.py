@@ -26,9 +26,9 @@ not):
    ordinary batch DataFrame). Because the centroids are re-read per
    epoch, index retraining between micro-batches is picked up
    automatically — the stream-side centroid REFRESH a live ingest
-   needs. Output is partitioned by epoch and dynamically overwritten,
-   so a replayed micro-batch (foreachBatch is at-least-once) rewrites
-   its own epoch partition instead of duplicating rows.
+   needs. Output is an epoch store (``streaming/store_meta.py``), so a
+   replayed micro-batch (foreachBatch is at-least-once) rewrites its
+   own epoch partition instead of duplicating rows.
 
 The fold is the STREAMING-legal form, not a batch optimization —
 measured on a 50k-vector x 516-centroid corpus, the batch
@@ -51,6 +51,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_similarity
+from .store_meta import (
+    check_or_pin_geometry,
+    foreach_epoch,
+    keep_first_flags,
+    price_epoch_join,
+    read_history,
+    write_epoch,
+)
 
 #: Hard ceiling on the plan-literal centroid form. Each centroid embeds
 #: |dims| float literals into the plan; past a couple thousand centroids
@@ -275,10 +283,10 @@ def assign_cells_foreach_batch(
       handler, so a retrain that overwrites ``centroids_path`` between
       micro-batches is picked up by the NEXT epoch with no stream
       restart — assignments always reflect the current index.
-    - **Idempotent output.** Rows land under ``epoch_id=N`` partitions
-      via dynamic partition overwrite: a replayed epoch (foreachBatch is
-      at-least-once) overwrites its own partition, so downstream readers
-      never see duplicated assignments.
+    - **Idempotent output.** Rows land in the ``epoch_id=N`` partition
+      of an epoch store (``streaming/store_meta.py``): a replayed epoch
+      (foreachBatch is at-least-once) overwrites its own partition, so
+      downstream readers never see duplicated assignments.
 
     ``probes`` (round 13): >1 routes the batch ``ivf_assign_topp``
     instead — the index-scale form of the multi-probe membership feed
@@ -300,7 +308,6 @@ def assign_cells_foreach_batch(
     epoch_id.
     """
     from ..operators.similarity import ivf_assign, ivf_assign_topp
-    from .store_meta import check_or_pin_geometry
 
     if probes < 1:
         raise ValueError(f"probes must be >= 1, got {probes}")
@@ -321,19 +328,9 @@ def assign_cells_foreach_batch(
                 batch_df, centroids, probes,
                 id_col=id_col, vec_col=vec_col, dim=dim,
             )
-        (
-            assigned.withColumn("epoch_id", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(out_path)
-        )
+        write_epoch(assigned, out_path, epoch_id)
 
-    return (
-        embeddings_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return foreach_epoch(embeddings_stream, _process, checkpoint)
 
 
 #: Per-epoch candidate budget for the streaming RHP near-dedup: the
@@ -402,20 +399,16 @@ def rhp_near_dedup_stream(
     is deliberately NOT offered here for the same reason: per-epoch
     re-sizing would shift the keys under the store.
 
-    Retry-idempotence: flags and store are epoch-partitioned with
-    DYNAMIC overwrite, and the store read filters ``epoch_id <
-    current`` — a retried micro-batch is bit-identical to its first
-    attempt (same pattern as ``near_dedup_docs_stream``).
+    Retry-idempotence: flags and store are epoch stores
+    (``streaming/store_meta.py``) — a retried micro-batch is
+    bit-identical to its first attempt.
 
     Returns an unstarted ``DataStreamWriter``; ``.start()`` it. Flag
     output: (id_col, is_near_dup) partitioned by epoch_id.
     """
-    from pyspark.errors import AnalysisException
-
     from ..checkpoint import cut_lineage
     from ..functions.vectors import dot, l2_norm
     from ..operators.similarity import rhp_signatures
-    from .store_meta import check_or_pin_geometry
 
     geometry = {
         "n_bits": int(n_bits),
@@ -439,42 +432,17 @@ def rhp_near_dedup_stream(
             .withColumn("_norm", l2_norm(F.col(vec_col), dim=dim))
             .transform(cut_lineage(local_only=True))
         )
-        try:
-            store = (
-                spark.read.parquet(store_path)
-                .filter(F.col("epoch_id") < int(epoch_id))
-                .drop("epoch_id")
-            )
-            all_sigs = store.unionByName(sigs_new)
-        except AnalysisException:
-            all_sigs = sigs_new
+        history = read_history(spark, store_path, epoch_id, sigs_new)
+        all_sigs = history.unionByName(sigs_new)
         if max_candidates_per_epoch is not None:
-            # Exact per-epoch candidate mass of the asymmetric join
-            # below: per bucket, new x history + C(new, 2). Two narrow
-            # count aggregates joined on the bucket key — bounded by
-            # bucket count, never candidate count.
-            counts = (
-                sigs_new.groupBy("band", "band_sig")
-                .agg(F.count(F.lit(1)).alias("n_new"))
-                .join(
-                    all_sigs.groupBy("band", "band_sig").agg(
-                        F.count(F.lit(1)).alias("n_all")
-                    ),
-                    ["band", "band_sig"],
-                )
-                .agg(
-                    F.sum(
-                        F.col("n_new") * (F.col("n_all") - F.col("n_new"))
-                        + (F.col("n_new") * (F.col("n_new") - F.lit(1)))
-                        / F.lit(2)
-                    ).alias("cand")
-                )
-                .collect()[0]["cand"]
+            # Exact per-epoch candidate mass of the asymmetric join below.
+            mass, _, _ = price_epoch_join(
+                sigs_new, all_sigs, ["band", "band_sig"]
             )
-            if counts is not None and counts > max_candidates_per_epoch:
+            if mass > max_candidates_per_epoch:
                 raise ValueError(
                     f"rhp_near_dedup_stream: epoch {epoch_id}'s bucket "
-                    f"join would stream ~{int(counts):,} candidate rows "
+                    f"join would stream ~{mass:,} candidate rows "
                     f"through the verify (budget "
                     f"{max_candidates_per_epoch:,}). The pinned "
                     f"{n_bits // bands}-bit bands are under-sized for "
@@ -517,33 +485,9 @@ def rhp_near_dedup_stream(
             )
             .filter(F.col("cosine") >= F.lit(threshold))
             .select(F.col("vec_a").alias(id_col))
-            .distinct()
         )
-        flags = (
-            batch_df.select(id_col)
-            .join(dup_ids.withColumn("is_near_dup", F.lit(True)), id_col, "left")
-            .select(
-                id_col,
-                F.coalesce("is_near_dup", F.lit(False)).alias("is_near_dup"),
-            )
-        )
-        (
-            flags.withColumn("epoch_id", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(out_path)
-        )
-        (
-            sigs_new.withColumn("epoch_id", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(store_path)
-        )
+        flags = keep_first_flags(batch_df, dup_ids, id_col)
+        write_epoch(flags, out_path, epoch_id)
+        write_epoch(sigs_new, store_path, epoch_id)
 
-    return (
-        embeddings_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return foreach_epoch(embeddings_stream, _process, checkpoint)

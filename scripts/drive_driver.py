@@ -16,6 +16,7 @@ Usage:
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
@@ -39,7 +40,9 @@ def main() -> int:
     import duckdb
     from pyspark.sql import SparkSession
 
-    sys.path.insert(0, "/root/repo")
+    # This checkout's own root, so an A/B against another checkout
+    # checks the queries of the copy the script was run from.
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
 
     spark = SparkSession.builder.master("local[*]").getOrCreate()

@@ -530,6 +530,149 @@ def test_streaming_curation_matches_batch(spark, tmp_path):
     assert got == want
 
 
+def test_streaming_curation_replay_is_idempotent(spark, tmp_path):
+    """at-least-once safety for the curation cascade: replaying the
+    stream from a wiped checkpoint (every epoch re-runs) must leave one
+    verdict per document, identical to the first run, because verdicts
+    and fingerprints are epoch-partitioned with dynamic overwrite and
+    the fingerprint read covers only epochs < current."""
+    import shutil
+
+    from clinical_trials_data_pipeline_analyis_spark.streaming import (
+        curate_docs_stream,
+    )
+
+    # 25 distinct tokens: long enough and not repetitive, so only the
+    # exact-dup stage can reject; docs 3-5 copy docs 0-2.
+    originals = [
+        " ".join(f"{tag}{j}" for j in range(25))
+        for tag in ("alpha", "beta", "gamma")
+    ]
+    texts = dict(enumerate(originals + originals))
+    docs = spark.createDataFrame(
+        sorted(texts.items()), "doc_id BIGINT, text STRING"
+    )
+    chunks = str(tmp_path / "chunks")
+    docs.filter(F.col("doc_id") < 3).coalesce(1).write.parquet(f"{chunks}/c1")
+    docs.filter(F.col("doc_id") >= 3).coalesce(1).write.parquet(f"{chunks}/c2")
+
+    out_path = str(tmp_path / "verdicts")
+    store_path = str(tmp_path / "fpstore")
+    ckpt = str(tmp_path / "ckpt")
+
+    def run():
+        stream = (
+            spark.readStream.schema(docs.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{chunks}/c*")
+        )
+        q = curate_docs_stream(
+            stream, out_path=out_path, store_path=store_path, checkpoint=ckpt
+        ).start()
+        q.awaitTermination(120)
+
+    run()
+    first = {
+        r["doc_id"]: r["stage"] for r in spark.read.parquet(out_path).collect()
+    }
+    assert first == {
+        0: "kept", 1: "kept", 2: "kept",
+        3: "exact_dup", 4: "exact_dup", 5: "exact_dup",
+    }
+
+    shutil.rmtree(ckpt)
+    run()
+    verdicts = spark.read.parquet(out_path)
+    assert verdicts.count() == len(texts), "replay must not duplicate verdicts"
+    assert {r["doc_id"]: r["stage"] for r in verdicts.collect()} == first
+    store = spark.read.parquet(store_path)
+    assert store.count() == len(texts), "replay must not duplicate store"
+
+
+def test_read_history_is_empty_before_first_write_and_loud_without_epochs(
+    spark, tmp_path
+):
+    """The epoch-store history read: no parquet yet (absent path) reads
+    as an empty history shaped like the batch; a store written without
+    the ``epoch_id`` partition (a plain append sink) raises instead of
+    silently reading as empty."""
+    from pyspark.errors import AnalysisException
+
+    from clinical_trials_data_pipeline_analyis_spark.streaming.store_meta import (
+        read_history,
+        write_epoch,
+    )
+
+    batch = spark.createDataFrame([(1, "a")], "doc_id BIGINT, fp STRING")
+    empty = read_history(spark, str(tmp_path / "absent"), 0, batch)
+    assert empty.columns == batch.columns and empty.count() == 0
+
+    store = str(tmp_path / "store")
+    write_epoch(batch, store, 0)
+    assert read_history(spark, store, 0, batch).count() == 0
+    assert read_history(spark, store, 1, batch).columns == batch.columns
+
+    plain = str(tmp_path / "plain")
+    batch.write.parquet(plain)
+    with pytest.raises(AnalysisException):
+        read_history(spark, plain, 1, batch)
+
+
+def test_silver_studies_stream_matches_batch_and_replays(spark, tmp_path):
+    """The micro-batch silver cleaner must write exactly
+    ``silver_studies`` over the union of its micro-batches (one
+    ``epoch_id`` partition per batch), and a replay from a wiped
+    checkpoint must leave one row per ``nct_id``."""
+    import shutil
+
+    from clinical_trials_data_pipeline_analyis_spark.streaming import (
+        silver_studies_stream,
+    )
+
+    schema = BRONZE_SCHEMAS["studies"]
+    recs = make_bronze_fixtures(n_studies=60, seed=5)["studies"]
+    bronze = spark.createDataFrame(
+        [tuple(r.get(f.name) for f in schema.fields) for r in recs], schema
+    )
+    chunks = str(tmp_path / "chunks")
+    cut = F.col("nct_id") < "NCT00000030"
+    bronze.filter(cut).coalesce(1).write.parquet(f"{chunks}/c1")
+    bronze.filter(~cut).coalesce(1).write.parquet(f"{chunks}/c2")
+
+    out_path = str(tmp_path / "silver")
+    ckpt = str(tmp_path / "ckpt")
+
+    def run():
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{chunks}/c*")
+        )
+        q = silver_studies_stream(
+            stream, out_path=out_path, checkpoint=ckpt
+        ).start()
+        q.awaitTermination(120)
+
+    want_df = silver_studies(bronze)
+    want = {r["nct_id"]: r.asDict() for r in want_df.collect()}
+
+    def got():
+        out = spark.read.parquet(out_path)
+        assert out.count() == len(want), "one row per nct_id"
+        epochs = {r["epoch_id"] for r in out.select("epoch_id").collect()}
+        assert epochs == {0, 1}, "one epoch_id partition per micro-batch"
+        return {
+            r["nct_id"]: r.asDict()
+            for r in out.select(*want_df.columns).collect()
+        }
+
+    run()
+    assert got() == want
+    shutil.rmtree(ckpt)
+    run()
+    assert got() == want
+
+
 # ---------------------------------------------------------------------
 # Streaming ANN cell assignment (streaming/similarity.py)
 # ---------------------------------------------------------------------
