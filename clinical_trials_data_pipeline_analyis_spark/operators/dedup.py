@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import logging
 from functools import reduce
+from typing import NoReturn
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -94,6 +95,92 @@ def pair_mass(
     return int(row["pairs"] or 0), int(row["rows"] or 0)
 
 
+# The guard policy of the near-duplicate operators (MinHash LSH, SimHash,
+# n-gram Jaccard, random-hyperplane LSH, SemDeDup and their streaming
+# twins): every refusal goes through the helpers below, and each
+# operator passes only its own prescription text.
+
+
+def refuse_over_budget(
+    op: str,
+    measured: int,
+    budget: int,
+    fix: str,
+    budget_name: str = "max_candidates",
+) -> NoReturn:
+    """Raise the candidate-budget refusal: ``op`` measured ``measured``
+    candidate rows (by :func:`pair_mass` or a sibling count) against
+    ``budget``; ``fix`` names what the caller can change."""
+    raise ValueError(
+        f"{op}: measured ~{measured:,} candidate rows against the budget "
+        f"{budget_name}={budget:,}. {fix}"
+    )
+
+
+def check_floor(
+    op: str,
+    name: str,
+    floor: float | None,
+    measured: float | None = None,
+    what: str = "",
+    fix: str = "",
+) -> None:
+    """Range-check the ``name`` floor, which must lie in (0, 1], and
+    refuse when ``measured`` falls below it. A ``None`` floor checks
+    nothing; ``measured=None`` only range-checks, for a caller that
+    validates before it can measure. ``what`` names the measured
+    quantity, ``fix`` what the caller can change."""
+    if floor is None:
+        return
+    if not 0.0 < floor <= 1.0:
+        raise ValueError(f"{name} must be in (0, 1], got {floor}")
+    if measured is not None and measured < floor:
+        raise ValueError(
+            f"{op}: {what} is {measured:.4f} — below {name}={floor}. {fix}"
+        )
+
+
+def check_banding(op: str, name: str, total: int, bands: int) -> None:
+    """Refuse ``bands`` unless it splits the ``total`` signature
+    components into equal bands. Callers run it before any recall
+    floor: the recall formulas divide by ``bands`` and floor the rows
+    per band."""
+    if bands <= 0 or total % bands:
+        raise ValueError(
+            f"{op}: bands must be a positive divisor of {name}={total}, "
+            f"got {bands}"
+        )
+
+
+def check_auto_budget(
+    op: str, param: str, budget: int | None, budget_name: str = "max_candidates"
+) -> None:
+    """Refuse an ``'auto'`` geometry without a budget: auto mode sizes
+    the geometry against the budget, and without one it has nothing to
+    size against."""
+    if budget is None:
+        raise ValueError(
+            f"{op}: {param}='auto' needs a {budget_name} budget to size "
+            f"against."
+        )
+
+
+#: The Jaccard at which the MinHash recall floors evaluate a banding:
+#: the recall harness's measured mean over planted near-dup edges,
+#: within 3 points of measured recall at every tested banding (BASELINE
+#: "Near-dup recall").
+LSH_RECALL_JACCARD = 0.84
+
+
+def minhash_banding_recall(num_hashes: int, bands: int) -> float:
+    """Banding-theory recall ``1 − (1 − s^rows)^bands`` of ``bands``
+    bands of ``num_hashes // bands`` rows, at s = ``LSH_RECALL_JACCARD``.
+    The batch join and the stream's asymmetric store join share it: the
+    store join changes who is compared, not the per-pair collision
+    probability."""
+    return 1.0 - (1.0 - LSH_RECALL_JACCARD ** (num_hashes // bands)) ** bands
+
+
 def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, fp, is_duplicate): keep lowest id per normalized-content hash."""
     from pyspark.sql import Window
@@ -138,13 +225,13 @@ def minhash_signatures(
     One explode + one hash-aggregate; the shuffle carries num_hashes
     8-char strings per document.
 
-    Up to 16 components (round 14): the ``min_recall`` refusal
-    prescribes "re-sign with more hashes", so the signature function
-    must be able to FOLLOW its own prescription — components 8-15 come
-    from two more prefixed digests (``md5('y'||s)``, ``md5('z'||s)``),
-    computed only when requested, so ``num_hashes <= 8`` calls produce
-    byte-identical signatures to every prior round (the streaming
-    stores' pinned geometries stay valid).
+    Up to 16 components: the ``min_recall`` refusal prescribes
+    "re-sign with more hashes", so the signature function must be able
+    to FOLLOW its own prescription — components 8-15 come from two more
+    prefixed digests (``md5('y'||s)``, ``md5('z'||s)``), computed only
+    when requested, so ``num_hashes <= 8`` calls produce the same
+    signatures as the 8-component scheme (the streaming stores' pinned
+    geometries stay valid).
     """
     if not 1 <= num_hashes <= 16:
         raise ValueError(
@@ -226,7 +313,6 @@ def lsh_candidate_pairs(
     estimate: bool = False,
     max_candidates: int | None = MAX_LSH_CANDIDATE_ROWS,
     min_recall: float | None = None,
-    recall_jaccard: float = 0.84,
 ) -> DataFrame:
     """Banded LSH: docs sharing any band signature become a candidate pair.
 
@@ -269,8 +355,8 @@ def lsh_candidate_pairs(
     checkpointed table; with ``materialize=False`` and lazy input the
     probe re-executes the signature pipeline once — materialize first.
 
-    ``bands="auto"`` (round 12) is the completion mode, following the
-    RHP escalation's discipline: probe the measured candidate mass at
+    ``bands="auto"`` is the completion mode, following the RHP
+    escalation's discipline: probe the measured candidate mass at
     each banding of ``num_hashes`` from FINEST down (8x1, 4x2, 2x4,
     1x8 at the default 8 hashes — candidate mass strictly shrinks as
     bands coarsen, since a coarser band's bucket pairs are the subset
@@ -279,52 +365,23 @@ def lsh_candidate_pairs(
     ``max_candidates`` (recall = 1−(1−s^rows)^bands is monotone in
     bands at fixed num_hashes). ≤ 4 narrow probes on the checkpointed
     signatures; the chosen geometry and its banding-theory recall at
-    the recall harness's measured near-dup Jaccard are logged, the
-    final probe's mass feeds the guard (no recompute), and an auto
-    call is IDENTICAL to the pinned call at the chosen banding.
-    Requires a budget and symmetric mode; refuses loudly when even one
-    band of all ``num_hashes`` rows exceeds the budget (exact-dedup
-    first, or raise it).
+    ``LSH_RECALL_JACCARD`` are logged, the final probe's mass feeds the
+    guard (no recompute), and an auto call is IDENTICAL to the pinned
+    call at the chosen banding. Requires a budget and symmetric mode;
+    refuses loudly when even one band of all ``num_hashes`` rows
+    exceeds the budget (exact-dedup first, or raise it).
 
-    ``min_recall`` (round 13, completing the RHP symmetry): a floor on
-    the banding-theory recall ``1-(1-s^rows)^bands`` at
-    ``recall_jaccard`` (default 0.84 — the recall harness's measured
-    mean Jaccard over planted near-dup edges, within 3 points of
-    measured recall at every tested banding, BASELINE "Near-dup
-    recall"). Auto mode already picks the recall-MAXIMAL banding
-    within the budget, so unlike RHP there is no repair direction
-    inside a fixed signature: when the chosen banding still misses
-    the floor, the call refuses loudly prescribing the fix that
-    exists — re-sign with more hashes (more bands at the same rows
+    ``min_recall`` is a floor on the banding-theory recall
+    (:func:`minhash_banding_recall`). Auto mode already picks the
+    recall-MAXIMAL banding within the budget, so unlike RHP there is no
+    repair direction inside a fixed signature: when the chosen banding
+    still misses the floor, the call refuses loudly prescribing the fix
+    that exists — re-sign with more hashes (more bands at the same rows
     recovers recall exponentially; candidate mass grows ~linearly).
     Pinned bandings validate and never silently adjust, exactly the
     RHP contract.
     """
-    if min_recall is not None and not (0.0 < min_recall <= 1.0):
-        raise ValueError(f"min_recall must be in (0, 1], got {min_recall}")
-    if isinstance(bands, int) and (bands <= 0 or num_hashes % bands):
-        # Validated BEFORE the min_recall floor: bands=0 would divide by
-        # zero inside the recall formula and a non-divisor banding would
-        # compute recall with floored rows — the caller must see the
-        # banding error, not a misleading recall refusal (ADVICE r13).
-        raise ValueError(
-            f"lsh_candidate_pairs: bands must be a positive divisor of "
-            f"num_hashes={num_hashes}, got {bands}"
-        )
-
-    def _banding_recall(nb: int) -> float:
-        return 1.0 - (1.0 - recall_jaccard ** (num_hashes // nb)) ** nb
-
-    if min_recall is not None and isinstance(bands, int):
-        rec = _banding_recall(bands)
-        if rec < min_recall:
-            raise ValueError(
-                f"lsh_candidate_pairs: pinned banding ({bands} bands x "
-                f"{num_hashes // bands} rows) has banding-theory recall "
-                f"{rec:.4f} at Jaccard {recall_jaccard:g} — below "
-                f"min_recall={min_recall}. Add bands (finer banding), "
-                f"re-sign with more hashes, or lower the floor."
-            )
+    op = "lsh_candidate_pairs"
     measured_est: int | None = None
     if bands == "auto":
         if against is not None:
@@ -333,11 +390,8 @@ def lsh_candidate_pairs(
                 "symmetric Σ n(n−1)/2 accounting — pin the banding for "
                 "against-mode candidate generation."
             )
-        if max_candidates is None:
-            raise ValueError(
-                "lsh_candidate_pairs: bands='auto' needs a "
-                "max_candidates budget to size against."
-            )
+        check_auto_budget(op, "bands", max_candidates)
+        check_floor(op, "min_recall", min_recall)
         if materialize:
             signatures = signatures.transform(cut_lineage())
             materialize = False
@@ -355,53 +409,40 @@ def lsh_candidate_pairs(
                 chosen, measured_est = nb, est
                 break
         if chosen is None:
-            raise ValueError(
-                f"lsh_candidate_pairs: no banding of {num_hashes} "
-                f"hashes fits max_candidates={max_candidates:,} — even "
-                f"1 band x {num_hashes} rows measured "
-                f"{probes[-1][1]:,} candidate rows (identical "
-                f"documents collide at EVERY banding: run "
-                f"exact_duplicates first), or raise max_candidates."
+            refuse_over_budget(
+                op, probes[-1][1], max_candidates,
+                f"That is 1 band x {num_hashes} rows: no banding of "
+                f"{num_hashes} hashes fits. Identical documents collide "
+                f"at EVERY banding: run exact_duplicates first, or raise "
+                f"max_candidates.",
             )
         bands = chosen
         r = num_hashes // bands
-        # Reference Jaccard (default 0.84): the recall harness's
-        # measured mean over planted near-dup edges (BASELINE
-        # "Near-dup recall").
-        chosen_recall = _banding_recall(bands)
-        if min_recall is not None and chosen_recall < min_recall:
-            # Auto already chose the recall-maximal banding within the
-            # budget — no finer banding of THIS signature both fits
-            # and recovers; the fix is a bigger signature.
-            # Prescribe only what the signature scheme can deliver:
-            # doubling past the 16-component digest ceiling is not an
-            # action this library can take (round 14 — the refusal must
-            # be followable).
-            if num_hashes < 16:
-                nh2 = min(num_hashes * 2, 16)
-                fix = (
-                    f"re-sign with more hashes (e.g. num_hashes={nh2} "
-                    f"admits {nh2 // r} bands x {r} rows — recall "
-                    f"recovers exponentially in bands while candidate "
-                    f"mass grows ~linearly), raise max_candidates, or "
-                    f"lower the floor."
-                )
-            else:
-                fix = (
-                    "the signature scheme is at its 16-component "
-                    "ceiling — raise max_candidates, lower the floor, "
-                    "or run exact_duplicates first (identical docs "
-                    "collide at every banding and dominate the mass)."
-                )
-            raise ValueError(
-                f"lsh_candidate_pairs: the recall-maximal banding that "
-                f"fits max_candidates={max_candidates:,} ({bands} bands "
-                f"x {r} rows, measured {measured_est:,} candidates) has "
-                f"banding-theory recall {chosen_recall:.4f} at Jaccard "
-                f"{recall_jaccard:g} — below min_recall={min_recall}. "
-                f"No banding of {num_hashes} hashes can fit the budget "
-                f"AND meet the floor: {fix}"
-            )
+        chosen_recall = minhash_banding_recall(num_hashes, bands)
+        # Prescribe only what the signature scheme can deliver: doubling
+        # past the 16-component digest ceiling is not an action this
+        # library can take.
+        nh2 = min(num_hashes * 2, 16)
+        check_floor(
+            op, "min_recall", min_recall, chosen_recall,
+            f"the banding-theory recall at Jaccard "
+            f"{LSH_RECALL_JACCARD:g} of the recall-maximal banding that "
+            f"fits max_candidates={max_candidates:,} ({bands} bands x "
+            f"{r} rows, measured {measured_est:,} candidates)",
+            f"No banding of {num_hashes} hashes can fit the budget AND "
+            f"meet the floor: "
+            + (
+                f"re-sign with more hashes (e.g. num_hashes={nh2} admits "
+                f"{nh2 // r} bands x {r} rows — recall recovers "
+                f"exponentially in bands while candidate mass grows "
+                f"~linearly), raise max_candidates, or lower the floor."
+                if num_hashes < 16
+                else "the signature scheme is at its 16-component "
+                "ceiling — raise max_candidates, lower the floor, or run "
+                "exact_duplicates first (identical docs collide at every "
+                "banding and dominate the mass)."
+            ),
+        )
         _LOG.warning(
             "lsh auto banding: chose %d bands x %d rows (measured "
             "%s candidates vs budget %s, probes %s); banding-theory "
@@ -411,14 +452,24 @@ def lsh_candidate_pairs(
             f"{measured_est:,}",
             f"{max_candidates:,}",
             probes,
-            recall_jaccard,
+            LSH_RECALL_JACCARD,
             chosen_recall,
         )
-    elif not isinstance(bands, int):
+    elif isinstance(bands, int):
+        check_banding(op, "num_hashes", num_hashes, bands)
+        check_floor(
+            op, "min_recall", min_recall,
+            minhash_banding_recall(num_hashes, bands),
+            f"the banding-theory recall at Jaccard "
+            f"{LSH_RECALL_JACCARD:g} of the pinned banding ({bands} bands "
+            f"x {num_hashes // bands} rows)",
+            "Add bands (finer banding), re-sign with more hashes, or "
+            "lower the floor.",
+        )
+    else:
         raise ValueError(f"bands must be an int or 'auto', got {bands!r}")
 
     rows = num_hashes // bands
-    assert rows * bands == num_hashes
     if materialize:
         signatures = signatures.transform(cut_lineage())
 
@@ -449,20 +500,19 @@ def lsh_candidate_pairs(
             ),
         )
         if est > max_candidates:
-            raise ValueError(
-                f"lsh_candidate_pairs: the (band, bsig) equi-join would "
-                f"materialize ~{est:,} candidate rows (budget "
-                f"max_candidates={max_candidates:,}). Banded MinHash "
-                f"candidates grow with bucket mass; the current "
-                f"{bands} bands x {rows} rows are too "
-                f"permissive for this corpus. Coarsen the banding — "
-                f"fewer bands of more rows (a pair at Jaccard s "
-                f"collides per band at s^rows; recall = "
-                f"1−(1−s^rows)^bands, re-derive before changing) — or "
-                f"run exact_duplicates first (identical documents "
-                f"collide in EVERY band and dominate hot buckets), or "
-                f"raise max_candidates if the verify stage can take it."
+            refuse_over_budget(
+                op, est, max_candidates,
+                f"Banded MinHash candidates grow with bucket mass; the "
+                f"current {bands} bands x {rows} rows are too permissive "
+                f"for this corpus. Coarsen the banding — fewer bands of "
+                f"more rows (a pair at Jaccard s collides per band at "
+                f"s^rows; recall = 1−(1−s^rows)^bands, re-derive before "
+                f"changing) — or run exact_duplicates first (identical "
+                f"documents collide in EVERY band and dominate hot "
+                f"buckets), or raise max_candidates if the verify stage "
+                f"can take it.",
             )
+
     id_cond = (
         F.col("doc_a") < F.col("doc_b")
         if against is None
@@ -538,7 +588,7 @@ def _cap_stats_frame(
     tables back onto the O(n) fingerprint projection, no wide shuffle)
     is assertable in tests, not just claimed in prose.
 
-    ``sizes`` (round 15): the caller's per-band (half, _n) bucket-size
+    ``sizes``: the caller's per-band (half, _n) bucket-size
     tables, when it already builds them for the cap filter itself —
     ``simhash_candidates`` passes its lazily-truncated pair so the
     probe's collect MATERIALIZES them and the candidate join's cap
@@ -645,23 +695,20 @@ def _simhash_cap_probe(
     total_mass = stats["total_pairs"] * 2
     skipped_frac = stats["skipped_frac"]
     unbind_cap = stats["unbind_cap"]
-    if min_visible is not None and visible_frac < min_visible:
-        raise ValueError(
-            f"simhash_candidates: only {visible_frac:.4f} of {n_docs:,} "
-            f"documents remain visible to the band join at "
-            f"max_bucket={max_bucket:,} ({invisible:,} docs have BOTH "
-            f"half-buckets capped — they can pair with nothing) — below "
-            f"min_visible={min_visible}. Raise max_bucket (>= "
-            f"{unbind_cap:,} unbinds every bucket; candidate-join cost "
-            f"is <= max_bucket x corpus rows), enable "
-            f"rescue_identical+rescue_near (family/hub-level "
-            f"connectivity for capped buckets — measured 0.6134 -> "
-            f"0.8736, or 0.9855 with rescue_depth=2, component near "
-            f"recall at a binding cap vs 0.9954 uncapped), or route "
-            f"this template-heavy corpus to "
-            f"MinHash-LSH (lsh_candidate_pairs samples the shingle "
-            f"space instead of joining hot fingerprint buckets)."
-        )
+    check_floor(
+        "simhash_candidates", "min_visible", min_visible, visible_frac,
+        f"the fraction of {n_docs:,} documents visible to the band join "
+        f"at max_bucket={max_bucket:,} ({invisible:,} docs have BOTH "
+        f"half-buckets capped — they can pair with nothing)",
+        f"Raise max_bucket (>= {unbind_cap:,} unbinds every bucket; "
+        f"candidate-join cost is <= max_bucket x corpus rows), enable "
+        f"rescue_identical+rescue_near (family/hub-level connectivity "
+        f"for capped buckets — measured 0.6134 -> 0.8736, or 0.9855 with "
+        f"rescue_depth=2, component near recall at a binding cap vs "
+        f"0.9954 uncapped), or route this template-heavy corpus to "
+        f"MinHash-LSH (lsh_candidate_pairs samples the shingle space "
+        f"instead of joining hot fingerprint buckets).",
+    )
     if skipped_mass:
         _LOG.warning(
             "simhash cap binding: max_bucket=%s skips %.4f of the "
@@ -714,7 +761,7 @@ def simhash_candidates(
     both join sides — the ``filter_hot_shingles`` discipline applied to
     simhash bands. The 16-bit space gives 65,536 buckets per band, but
     nothing bounds one bucket's share: on the template-heavy sf10
-    corpus the round-8 audit measured a 35,692-doc half-bucket
+    corpus an audit measured a 35,692-doc half-bucket
     (Σn² ≈ 4.9e9 candidate rows — the x07 disk-fill shape wearing a
     simhash hat). A bucket that large is a fingerprint-bit-skew
     artifact, not 6×10⁸ near-dup pairs: at the Hamming-verify stage
@@ -731,15 +778,15 @@ def simhash_candidates(
     each band side (8 bytes), the Hamming distance is computed inside
     the band join's codegen projection, and the ``<= _max_hamming``
     filter runs BEFORE the union+distinct — so the distinct shuffles
-    only surviving pairs instead of every candidate. The round-8 sf10
-    audit measured a 35,692-doc half-bucket (Σn² ≈ 4.9e9 candidate
-    rows); under the old candidates→distinct→re-join-fingerprints
-    shape that distinct ships 4.9e9 rows of which the verify then
+    only surviving pairs instead of every candidate. At the sf10
+    audit's 35,692-doc half-bucket (Σn² ≈ 4.9e9 candidate rows) a
+    candidates→distinct→re-join-fingerprints shape's distinct ships
+    4.9e9 rows of which the verify then
     discards nearly all — verify-in-join ships only what survives.
     Same result set: hamming is a deterministic function of the pair,
     so distinct over (doc_a, doc_b, hamming) equals pair-distinct.
 
-    ``rescue_identical`` (round 12, measured motivation): the
+    ``rescue_identical`` (measured motivation): the
     hot-bucket cap binds hardest exactly where TRUE duplicates pile up
     — on the template-heavy 50k recall fixture, max_bucket=100 skips
     150 half-buckets and costs even exact-duplicate pairs 25 recall
@@ -758,8 +805,8 @@ def simhash_candidates(
     what ``duplicate_clusters``/CC consumes — is fully restored for
     identical-fingerprint groups. Rescued pairs carry hamming=0.
 
-    ``rescue_near`` (round 13, measured motivation): ``rescue_identical``
-    restores only identical-fingerprint families — the r12 recall
+    ``rescue_near`` (measured motivation): ``rescue_identical``
+    restores only identical-fingerprint families — the recall
     harness measured NEAR-dup recall under a binding cap=100 still at
     0.39 (text_recall_r12.json) because near-but-not-identical
     fingerprints in a skipped bucket stay disconnected. With the flag
@@ -813,7 +860,7 @@ def simhash_candidates(
     star+near 37.2s for +20.77M recovered edges — the joins, not the
     extra narrow shuffles, dominate the delta.
 
-    ``rescue_depth`` (round 14, VERDICT r13 optional #8): the level-1
+    ``rescue_depth``: the level-1
     re-cap skips fingerprint sub-buckets still hotter than the cap —
     the measured residual behind the 0.8736-vs-0.9954 gap.
     ``rescue_depth=2`` escalates each SKIPPED sub-bucket once more by
@@ -830,9 +877,8 @@ def simhash_candidates(
     Cost shape: the level-2 windows and joins run only on the hot
     residue (rows whose level-1 sub-bucket exceeded the cap).
 
-    ``cap_stats`` / ``min_visible`` (round 14, VERDICT r13 ask #4 —
-    the cap's recall consequence lives ON the operator, not only in
-    BASELINE tables): with a cap set and ``cap_stats`` on (default),
+    ``cap_stats`` / ``min_visible`` (the cap's recall consequence
+    lives ON the operator, not only in BASELINE tables): with a cap set and ``cap_stats`` on (default),
     ONE cheap probe runs before the plan is returned — per-band bucket
     sizes (a 16-bit groupBy, ≤65,536 rows per band, broadcast back
     onto the fingerprint table) aggregated to (a) the skipped
@@ -846,7 +892,7 @@ def simhash_candidates(
     measured anchor: text_recall fixtures, cap=100 — component near
     recall 0.6134 capped / 0.8736 with both rescues vs 0.9954
     uncapped). ``min_visible`` is the matching refusal floor
-    (completing the min_recall family symmetry): when the visible
+    (``check_floor``, like every ``min_recall``): when the visible
     fraction falls below it the call raises, prescribing the
     measured max_bucket that would unbind, the rescue flags, and the
     MinHash-LSH route. Probe cost: two ≤65k-row partial-aggregates +
@@ -874,8 +920,7 @@ def simhash_candidates(
             "consequence floor — set max_bucket (the floor is vacuously "
             "1.0 uncapped)."
         )
-    if min_visible is not None and not (0.0 < min_visible <= 1.0):
-        raise ValueError(f"min_visible must be in (0, 1], got {min_visible}")
+    check_floor("simhash_candidates", "min_visible", min_visible)
     if materialize:
         simhash_df = simhash_df.transform(cut_lineage())
     lo = (F.col("simhash") % 65536).alias("half")
@@ -890,9 +935,9 @@ def simhash_candidates(
             .agg(F.count(F.lit(1)).alias("_n"))
         )
 
-    # ONE bucket-size table per band (round 15), lazily truncated and
-    # SHARED by the cap probe, the cap semi-join, and the rescue's
-    # hot-half complement. Before, each consumer re-aggregated the O(n)
+    # ONE bucket-size table per band, lazily truncated and SHARED by the
+    # cap probe, the cap semi-join, and the rescue's hot-half
+    # complement: a table per consumer would re-aggregate the O(n)
     # fingerprint table under its own broadcast build — four redundant
     # aggregate subtrees in the candidate job on top of the probe's two.
     # The probe's collect is the first action and materializes the
@@ -922,8 +967,8 @@ def simhash_candidates(
         base = simhash_df.select(F.col(id_col).alias("doc_a"), half, *sim_a)
         if max_bucket is not None:
             # Cap via a BROADCAST SEMI-JOIN against the (<=65,536-row)
-            # bucket-size table (round 14, guide §2.3/§3.2). The
-            # previous window count forced Exchange+Sort of the FULL
+            # bucket-size table. A window count would force
+            # Exchange+Sort of the FULL
             # fingerprint table per join side before the filter could
             # run — including exactly the hot-bucket mass the cap
             # exists to drop (at the 500k probe's cap=20 that mass is
@@ -966,7 +1011,7 @@ def simhash_candidates(
             # The rescue operates on the COMPLEMENT of the cap filter:
             # the same broadcast size table, semi-joined on the hot
             # (n > cap) halves — no window shuffle of the full
-            # fingerprint table here either (round 14; see pairs_on).
+            # fingerprint table here either (see pairs_on).
             hot_halves = size_of[key].filter(
                 F.col("_n") > max_bucket
             ).select("half")
@@ -985,10 +1030,9 @@ def simhash_candidates(
             # comparison chain (float log2 would risk oracle-divergent
             # ceil at power-of-two boundaries). The window count lands
             # in ONE column first and the 16-term chain is ONE parsed
-            # SQL string over it (round 15): the Column-API reduce
-            # re-embedded the window expression in all 16 terms and
-            # cost ~100 py4j round-trips per band; same integers, same
-            # values.
+            # SQL string over it: a Column-API reduce re-embeds the
+            # window expression in all 16 terms and costs ~100 py4j
+            # round-trips per band; same integers, same values.
             fp = fp.withColumn(
                 "_nfp", F.expr("count(1) OVER (PARTITION BY half)")
             )
@@ -998,13 +1042,13 @@ def simhash_candidates(
                 for i in range(1, 17)
             )
             fp = fp.withColumn("_w", F.expr(f"0 + {w_terms}")).drop("_nfp")
-            # LAZY truncation (round 14, guide §2.4/§1): fp is consumed
+            # LAZY truncation: fp is consumed
             # by TWO sub-band arms x two join sides (and at depth 2 by
             # four more level-2 join sides) — up to 12 references, each
             # of which would otherwise re-execute the members window +
             # fingerprint dedup + width window from the raw fingerprint
-            # table (the r14 before-plan for a96 held 184 Window nodes /
-            # 90 Exchanges from exactly this re-execution; a93 56/42).
+            # table (without it the a96 plan held 184 Window nodes / 90
+            # Exchanges from exactly this re-execution; a93 56/42).
             # fp is tiny (distinct fingerprints of hot buckets), so the
             # blocks materialize once inside the first consuming job and
             # every arm reads them back. Lazy, not eager: when the cap
@@ -1012,7 +1056,7 @@ def simhash_candidates(
             # pay materialization jobs for it. Values unchanged.
             fp = fp.transform(cut_lineage(eager=False))
             # one parsed string per sub-band key / join side / verify
-            # projection (round 15): the Column-API forms cost ~0.1s of
+            # projection: the Column-API forms cost ~0.1s of
             # py4j per hub_join x 12 hub_joins at depth 2; trees and
             # values unchanged
             sub_keys = (
@@ -1074,9 +1118,8 @@ def simhash_candidates(
                 )
                 rescued = part if rescued is None else rescued.unionByName(part)
                 if rescue_depth >= 2:
-                    # Level 2 (round 14, VERDICT r13 optional #8 —
-                    # implemented because the measured curve justifies
-                    # it: rescue_depth2_r14.json, 50k fixture at
+                    # Level 2 (implemented because the measured curve
+                    # justifies it: rescue_depth2_r14.json, 50k fixture at
                     # cap=100, component near recall 0.8722 -> 0.9842
                     # vs the 0.9941 ceiling for ~1.6x the level-1
                     # fingerprint-comparison mass): each sub-bucket the
@@ -1184,7 +1227,7 @@ def simhash_near_duplicates(
     Returns ``(doc_a, doc_b, hamming)`` for candidate pairs whose
     fingerprints differ in at most ``max_hamming`` bits. The distance is
     ``bit_count(xor(a, b))`` — O(1) per candidate, computed INSIDE the
-    band join's projection (verify-in-join, round 10): the fingerprint
+    band join's projection (verify-in-join): the fingerprint
     rides each band side, the Hamming filter runs before the
     union+distinct, so the distinct shuffles only SURVIVING pairs and
     the two old post-candidate re-join shuffles are gone entirely.
@@ -1194,11 +1237,10 @@ def simhash_near_duplicates(
     (linear re-connection of the duplicate families the cap would
     disconnect — which the recall fixture measured at 25 exact-dup
     points under cap=100); ``rescue_near`` to its within-bucket
-    finer-width escalation (round 13 — hub-level near edges for the
+    finer-width escalation (hub-level near edges for the
     skipped buckets, restoring family-to-family connectivity the cap
     dropped; see ``simhash_candidates`` for the sub-band geometry and
-    its measured recall).  ``cap_stats``/``min_visible`` (round 14)
-    forward to the candidate stage's cap-consequence probe: a binding
+    its measured recall). ``cap_stats``/``min_visible`` forward to the candidate stage's cap-consequence probe: a binding
     cap logs the skipped candidate mass and the invisible-doc fraction
     (with MinHash-LSH routing advice anchored on the measured recall
     fixtures), and ``min_visible`` refuses below a doc-visibility
@@ -1253,8 +1295,8 @@ def ngram_df_stats(
     shingle_k: int = 3,
 ) -> DataFrame:
     """Price a ``max_df`` hot-shingle bound BEFORE running the n-gram
-    pair join — the n-gram family's cap-consequence surface (round 14),
-    completing the four-generator symmetry: RHP carries its Charikar
+    pair join — the n-gram family's cap-consequence surface, completing
+    the four-generator symmetry: RHP carries its Charikar
     estimate, MinHash its banding-theory floor, SimHash its visibility
     probe, and the inverted-index join now measures what
     ``filter_hot_shingles(max_df)`` costs.
@@ -1340,7 +1382,7 @@ def ngram_jaccard_pairs(
     disables the guard for callers that have already bounded their
     shingle geometry.
 
-    ``max_df="auto"`` (round 12) is the completion mode: the guard's
+    ``max_df="auto"`` is the completion mode: the guard's
     df histogram is computed FIRST, and when the unfiltered mass
     exceeds ``max_join_rows`` the operator APPLIES the max_df its
     refusal would have prescribed — the largest df level whose
@@ -1352,20 +1394,17 @@ def ngram_jaccard_pairs(
     """
     # The shingle table feeds both self-join sides AND the set sizes —
     # materialize once so the explode pipeline runs once, not four times.
+    op = "ngram_jaccard_pairs"
     auto_df = max_df == "auto"
     if auto_df:
-        if max_join_rows is None:
-            raise ValueError(
-                "ngram_jaccard_pairs: max_df='auto' needs a "
-                "max_join_rows budget to size against."
-            )
+        check_auto_budget(op, "max_df", max_join_rows, "max_join_rows")
         max_df = None
     elif max_df is not None and not isinstance(max_df, int):
         raise ValueError(f"max_df must be an int, 'auto' or None, got {max_df!r}")
     sh = shingle_sets(df, id_col, text_col, k)
     if max_df is not None:
         sh = filter_hot_shingles(sh, max_df)
-    # LAZY truncation (round 15, guide §1/§5): the first consumer is
+    # LAZY truncation: the first consumer is
     # always a SINGLE-reference job — the guard/auto df histogram when a
     # budget is set, else the set-size checkpoint — so the blocks
     # materialize inside that job instead of paying a dedicated
@@ -1400,35 +1439,34 @@ def ngram_jaccard_pairs(
                     break
                 cum += m
                 fit_df = df_v
+            routes = (
+                "the subquadratic near-dup routes (minhash_signatures + "
+                "lsh_candidate_pairs, simhash_near_duplicates), which "
+                "sample the shingle space instead of joining all of it."
+            )
             if not auto_df:
-                raise ValueError(
-                    f"ngram_jaccard_pairs: the inverted-index pair join "
-                    f"would materialize {est:,} rows (> max_join_rows="
-                    f"{max_join_rows:,}); the per-shingle self-join is "
-                    "quadratic in document frequency by contract. At "
-                    f"this corpus's measured df distribution, max_df="
-                    f"{fit_df} fits the budget (surviving mass {cum:,} "
-                    "rows); pass it to bound hot shingles — or use the "
-                    "subquadratic near-dup routes (minhash_signatures + "
-                    "lsh_candidate_pairs, simhash_near_duplicates), "
-                    "which sample the shingle space instead of joining "
-                    "all of it."
+                refuse_over_budget(
+                    op, est, max_join_rows,
+                    f"The per-shingle self-join is quadratic in document "
+                    f"frequency by contract. At this corpus's measured df "
+                    f"distribution, max_df={fit_df} fits the budget "
+                    f"(surviving mass {cum:,} rows); pass it to bound hot "
+                    f"shingles — or use {routes}",
+                    "max_join_rows",
                 )
             if cum == 0:
-                # Even the df=2 level alone exceeds the budget: the only
-                # fitting cap (max_df=1) would leave ZERO join mass —
-                # every result row silently gone, a total-result change
-                # the pinned contract refuses loudly, so auto must too.
-                raise ValueError(
-                    f"ngram_jaccard_pairs: max_df='auto' cannot fit "
-                    f"this corpus — the df=2 level alone materializes "
-                    f"more than max_join_rows={max_join_rows:,} rows "
-                    f"(unfiltered mass {est:,}), so the only "
-                    f"fitting cap (max_df=1) would leave zero "
-                    f"candidate pairs. Use the subquadratic routes "
-                    f"(minhash_signatures + lsh_candidate_pairs, "
-                    f"simhash_near_duplicates), which sample the "
-                    f"shingle space instead of joining all of it."
+                # Even the lowest joinable df level alone exceeds the
+                # budget: the only fitting cap (max_df=1) would leave
+                # ZERO join mass — every result row silently gone, a
+                # total-result change the pinned contract refuses
+                # loudly, so auto must too.
+                refuse_over_budget(
+                    op, est, max_join_rows,
+                    f"max_df='auto' cannot fit this corpus: the lowest "
+                    f"joinable df level alone is over the budget, so the "
+                    f"only fitting cap (max_df=1) would leave zero "
+                    f"candidate pairs. Use {routes}",
+                    "max_join_rows",
                 )
             _LOG.warning(
                 "ngram auto max_df: unfiltered join mass %s exceeds "
@@ -1827,7 +1865,7 @@ def _cc_two_phase(
                 F.countDistinct("v").alias("nd"),
             )
             # Lazy: the multi count below materializes the blocks in
-            # the same job (round 14 — one job per convergence check).
+            # the same job — one job per convergence check.
             .transform(cut_lineage(eager=False))
         )
         multi = stats.filter(F.col("nd") > 1).count()

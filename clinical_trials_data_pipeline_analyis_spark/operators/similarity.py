@@ -35,7 +35,14 @@ from ..functions.vectors import (
     dot_literal_sql,
     l2_norm,
 )
-from .dedup import _spread, pair_mass
+from .dedup import (
+    _spread,
+    check_auto_budget,
+    check_banding,
+    check_floor,
+    pair_mass,
+    refuse_over_budget,
+)
 
 #: Scale-diagnostic logger (INFO): candidate-budget numbers the guards
 #: compute anyway — Σ n(n−1)/2 and the largest cell — so a rung harness
@@ -160,8 +167,8 @@ def ivf_assign(
     same left-assoc float order). The assign is the textbook "one short
     dot over 10^8+ rows" flat-wins regime ONCE n x k is large: with the
     k ∝ n auto-provisioning rule (``semdedup_auto_k``) the scored-row
-    count grows as n²/target_cell — 6.4e7 rows at the 500k/k=128 sweep
-    (a measured wash) but 5.1e9 at the 2.5M/k=2048 rung, where the
+    count grows as n²/SEMDEDUP_TARGET_CELL — 6.4e7 rows at the
+    500k/k=128 sweep (a measured wash) but 5.1e9 at the 2.5M/k=2048 rung, where the
     interpreted fold is the leg's dominant stage. Default stays fold:
     the registered sf0.1 queries (x10/x16/a24/a31, k<=128) sit in the
     flat-LOSES regime (per-plan compile constant > total fold cost).
@@ -212,7 +219,7 @@ def ivf_assign_topp(
     the exchange ``ivf_assign``'s struct-min aggregate exists to avoid
     (it map-combines to one row per vector). That is the price of
     probing: under the k ∝ n provisioning rule the scored-row count
-    grows as n²/target_cell. Callers buy boundary recall with it —
+    grows as n²/SEMDEDUP_TARGET_CELL. Callers buy boundary recall with it —
     measured on the 500k rung (``scripts/measure_semdedup_recall.py``):
     single-assignment cell recall over planted dup pairs is 0.8115 at
     auto-k, top-2 probing recovers 0.9901.
@@ -770,8 +777,7 @@ def rhp_signatures(
     corpus is an embarrassingly parallel map with NO shuffle; the only
     exchange in the downstream pipeline is the bucket equi-join.
     """
-    if n_bits % bands != 0:
-        raise ValueError("bands must divide n_bits")
+    check_banding("rhp_signatures", "n_bits", n_bits, bands)
     planes = rhp_plan_vectors(n_bits, dim, seed)
     # NULL vectors carry no geometry: they VANISH from the signature
     # table (the same way NULL text vanishes from token aggregates), so
@@ -818,8 +824,8 @@ def rhp_signatures(
             # dot sites too, where flat ALSO lost (2-5x both scales) —
             # the hint is now inert by default; see functions/vectors.py.
             F.coalesce(
-                # ONE F.expr per hyperplane dot (round 14): the Column-
-                # API fold built dim literals + two lambda conversions
+                # ONE F.expr per hyperplane dot: the Column-API fold
+                # builds dim literals + two lambda conversions
                 # through py4j per dot — measured ~2.7s of driver-side
                 # plan CONSTRUCTION at the 48-bit registered geometry
                 # before any job ran (cProfile: 21k py4j round-trips).
@@ -885,16 +891,21 @@ def rhp_signatures(
 MAX_RHP_CANDIDATE_ROWS = 500_000_000
 
 
-def rhp_auto_bits(
-    n_rows: int,
-    bands: int = 4,
-    target_bucket: int = 64,
-    min_band_bits: int = 8,
-) -> int:
+#: The expected random-collision bucket (n / 2^bits) the RHP sizing law
+#: ``rhp_auto_bits`` targets at any corpus size.
+RHP_TARGET_BUCKET = 64
+
+#: Bits-per-band floor of the RHP sizing law: tiny corpora never sign
+#: with bands narrower than this.
+RHP_MIN_BAND_BITS = 8
+
+
+def rhp_auto_bits(n_rows: int, bands: int = 4) -> int:
     """Corpus-sized band width for ``rhp_near_duplicates``: bits per
-    band = max(min_band_bits, ceil(log2(n_rows / target_bucket))), so
-    the EXPECTED random-collision bucket (n / 2^bits) stays ≈
-    ``target_bucket`` at any corpus size; returns n_bits = bands × that.
+    band = max(RHP_MIN_BAND_BITS, ceil(log2(n_rows /
+    RHP_TARGET_BUCKET))), so the EXPECTED random-collision bucket
+    (n / 2^bits) stays ≈ ``RHP_TARGET_BUCKET`` at any corpus size;
+    returns n_bits = bands × that.
 
     This is the bits-growth law the 1M rung measured (BASELINE "a53 at
     1M"): 12-bit bands sized for 500k produced 9.1e8 candidates at 1M
@@ -904,14 +915,13 @@ def rhp_auto_bits(
     band width per the Charikar bound — P[pair with cosine c collides]
     = 1 − (1 − (1 − arccos(c)/π)^bits)^bands: for true near-dups
     (c ≈ 0.99) that is ~96.7% at 12-bit × 4 bands and ~94.9% at
-    14-bit × 4 — re-derive it when changing target_bucket.
+    14-bit × 4 — re-derive it when changing RHP_TARGET_BUCKET.
     """
-    import math
-
     if n_rows <= 0:
-        return bands * min_band_bits
+        return bands * RHP_MIN_BAND_BITS
     per_band = max(
-        min_band_bits, math.ceil(math.log2(max(1.0, n_rows / target_bucket)))
+        RHP_MIN_BAND_BITS,
+        math.ceil(math.log2(max(1.0, n_rows / RHP_TARGET_BUCKET))),
     )
     return bands * per_band
 
@@ -923,6 +933,10 @@ def rhp_auto_bits(
 #: (2^30 buckets) already give a 5e8-candidate budget headroom past
 #: 8 billion rows; past that the answer is more bands, not more bits.
 RHP_MAX_BAND_BITS = 30
+
+#: Most bands the recall-floor repair of ``rhp_escalate_geometry`` tries:
+#: each extra band adds a signing pass's worth of candidate mass.
+RHP_MAX_BANDS = 8
 
 
 def rhp_candidate_estimate(
@@ -965,9 +979,10 @@ class RhpEscalation(NamedTuple):
     """Outcome of ``rhp_escalate_geometry`` — the chosen LSH geometry
     plus everything needed to explain/reproduce the choice: the n-only
     law's starting point, every probe (band_bits, bands, measured Σ
-    n(n−1)/2), and the Charikar recall estimates at ``recall_cosine``
-    for both geometries. ``fits`` is False only when the budget is
-    unsatisfiable within the band-bit ceiling."""
+    n(n−1)/2), and the Charikar recall estimates at
+    ``RHP_RECALL_COSINE`` (recorded as ``recall_cosine``) for both
+    geometries. ``fits`` is False only when the budget is unsatisfiable
+    within the band-bit ceiling."""
 
     n_bits: int
     bands: int
@@ -1003,10 +1018,9 @@ class RhpEscalation(NamedTuple):
         )
 
 
-#: Default cosine at which escalation evaluates its Charikar recall
+#: Cosine at which the RHP recall floors evaluate the Charikar recall
 #: estimate: the measured cosine of the rung generators' true duplicate
-#: pairs (mean 0.9908 at 5M). Callers whose duplicates live at a
-#: different cosine pass their own ``recall_cosine``.
+#: pairs (mean 0.9908 at 5M).
 RHP_RECALL_COSINE = 0.99
 
 
@@ -1020,19 +1034,18 @@ def rhp_escalate_geometry(
     seed: int = 13,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_band_bits: int = RHP_MAX_BAND_BITS,
     min_recall: float | None = None,
-    recall_cosine: float = RHP_RECALL_COSINE,
-    max_bands: int = 8,
 ) -> RhpEscalation:
     """Data-aware refinement of the n-only sizing law: starting from
     ``n_bits`` (normally ``rhp_auto_bits``'s answer), measure the
     actual candidate mass and adjust the geometry until it fits
     ``max_candidates`` — and, when ``min_recall`` is given, until the
-    Charikar recall estimate at ``recall_cosine`` clears the floor too.
+    Charikar recall estimate at ``RHP_RECALL_COSINE`` clears the floor
+    too. Band width stops at ``RHP_MAX_BAND_BITS``, band count at
+    ``RHP_MAX_BANDS``.
 
-    Why the law alone is not enough — measured at the 5M rung
-    (round 11): ``rhp_auto_bits(5M)`` = 17-bit bands targets a
+    Why the law alone is not enough — measured at the 5M rung:
+    ``rhp_auto_bits(5M)`` = 17-bit bands targets a
     64-row RANDOM bucket (5M/2^17 ≈ 38), but the law only knows n.
     On the Zipf-CLUSTERED corpus the measured mass was 1,159,901,039
     candidates — 2.3x the 500M budget — because same-cluster vectors
@@ -1041,7 +1054,7 @@ def rhp_escalate_geometry(
     pairs survive any width (identical vectors share every signature)
     — they are the contract output.
 
-    Probe cost (round 12, VERDICT r11 ask #2): each probe is a narrow
+    Probe cost: each probe is a narrow
     signing pass, so the walk is PREDICT-THEN-CONFIRM, not +1-bit
     stepping. The first jump is ``ceil(log2(est/budget))`` bits — under
     a FIXED banding, each extra bit removes at most half the candidate
@@ -1049,7 +1062,7 @@ def rhp_escalate_geometry(
     per-bit agreement q ≤ 1, and the mass is dominated by q ≥ 0.5
     pairs), making that jump a lower bound on the bits still needed.
     One caveat keeps the chosen width HEURISTICALLY minimal rather
-    than provably so (ADVICE r12): band bit-ranges re-base when bits
+    than provably so: band bit-ranges re-base when bits
     widen (``rhp_plan_vectors`` slices planes by absolute bit index,
     so band i's slice shifts from ``[i*bb, (i+1)*bb)`` to
     ``[i*(bb+1), ...)``), so consecutive probes are not nested
@@ -1062,21 +1075,20 @@ def rhp_escalate_geometry(
     decay between the last two probes — the same caveat applies. Net:
     a fitting width within one bit of minimal, reached in ~2 probes
     beyond the law geometry at any corpus size (the 5M rung's
-    17→19-bit escalation cost 3 serial +1 passes in round 11, ~130s
-    each; the jump pays 1).
+    17→19-bit escalation cost 3 serial +1-bit passes, ~130s each; the
+    jump pays 1).
 
-    Recall awareness (round 12, VERDICT r11 ask #1): widening bands
+    Recall awareness: widening bands
     silently costs recall (measured −1.4 points/bit at 5M). The result
     carries the Charikar estimate at both geometries, and
     ``min_recall`` makes the trade explicit: when bit-widening alone
     would cross the floor, the search adds BANDS first (mass grows
     linearly with bands while recall recovers exponentially — the
     recall-preserving direction this module's ceiling note names), and
-    REFUSES loudly when no geometry within ``max_bands``/
-    ``max_band_bits`` satisfies both constraints.
+    REFUSES loudly when no geometry within the band and band-bit
+    ceilings satisfies both constraints.
     """
-    if min_recall is not None and not (0.0 < min_recall <= 1.0):
-        raise ValueError(f"min_recall must be in (0, 1], got {min_recall}")
+    check_floor("rhp_near_duplicates", "min_recall", min_recall)
 
     def _probe(bb: int, nb: int) -> int:
         return rhp_candidate_estimate(
@@ -1091,7 +1103,7 @@ def rhp_escalate_geometry(
 
     # Phase 1 — widen bits at the law's band count until the measured
     # mass fits (predict-then-confirm jumps; ceiling-bounded).
-    while est > max_candidates and bb < max_band_bits:
+    while est > max_candidates and bb < RHP_MAX_BAND_BITS:
         nxt: int | None = None
         if max_candidates > 0:
             same = [(b, e) for (b, nb, e) in probes if nb == bands]
@@ -1112,7 +1124,7 @@ def rhp_escalate_geometry(
                 )
         # Unsatisfiable (budget 0) or no measurable shrink: the mass
         # cannot fit at any width — go straight to the ceiling.
-        bb = min(nxt, max_band_bits) if nxt is not None else max_band_bits
+        bb = RHP_MAX_BAND_BITS if nxt is None else min(nxt, RHP_MAX_BAND_BITS)
         est = _probe(bb, bands)
         probes.append((bb, bands, est))
 
@@ -1121,7 +1133,7 @@ def rhp_escalate_geometry(
     # Phase 2 — band-first recall repair: only when the caller set a
     # floor and the bit-widened geometry misses it (or never fit).
     if min_recall is not None and (
-        rhp_recall_estimate(recall_cosine, chosen_bb, chosen_bands)
+        rhp_recall_estimate(RHP_RECALL_COSINE, chosen_bb, chosen_bands)
         < min_recall
         or chosen_est > max_candidates
     ):
@@ -1136,13 +1148,13 @@ def rhp_escalate_geometry(
             d = 0.5  # conservative: bits never shrink mass faster
         ref_bb, ref_est = same[-1] if same else (chosen_bb, max(est, 1))
         found = None
-        for bands_try in range(bands + 1, max_bands + 1):
+        for bands_try in range(bands + 1, RHP_MAX_BANDS + 1):
             # Widest band meeting the recall floor at this band count
             # (recall is decreasing in width: scan from the top).
             b_recall_max = 0
-            for b in range(max_band_bits, 0, -1):
+            for b in range(RHP_MAX_BAND_BITS, 0, -1):
                 if (
-                    rhp_recall_estimate(recall_cosine, b, bands_try)
+                    rhp_recall_estimate(RHP_RECALL_COSINE, b, bands_try)
                     >= min_recall
                 ):
                     b_recall_max = b
@@ -1152,7 +1164,7 @@ def rhp_escalate_geometry(
             # Narrowest width the decay model predicts fits the budget
             # (per-band mass scales ~linearly with band count).
             b_try = None
-            for b in range(1, max_band_bits + 1):
+            for b in range(1, RHP_MAX_BAND_BITS + 1):
                 pred = ref_est * (bands_try / bands) * d ** (b - ref_bb)
                 if pred <= max_candidates:
                     b_try = b
@@ -1172,17 +1184,14 @@ def rhp_escalate_geometry(
             if found:
                 break
         if found is None:
-            raise ValueError(
-                f"rhp_near_duplicates: no LSH geometry within "
-                f"band_bits<={max_band_bits}, bands<={max_bands} meets "
-                f"BOTH the candidate budget (max_candidates="
-                f"{max_candidates:,}; measured {law_est:,} at the "
-                f"law's {law_bb}-bit x {bands}-band start) and "
-                f"min_recall={min_recall} at cosine {recall_cosine:g} "
-                f"(Charikar estimate). Raise max_candidates (more "
-                f"verify CPU), raise max_bands (candidate mass grows "
-                f"~linearly with bands while recall recovers "
-                f"exponentially), or lower min_recall."
+            refuse_over_budget(
+                "rhp_near_duplicates", law_est, max_candidates,
+                f"That is the law's {law_bb}-bit x {bands}-band start, "
+                f"and no LSH geometry within band_bits<="
+                f"{RHP_MAX_BAND_BITS}, bands<={RHP_MAX_BANDS} meets BOTH "
+                f"the candidate budget and min_recall={min_recall} at "
+                f"cosine {RHP_RECALL_COSINE:g} (Charikar estimate). Raise "
+                f"max_candidates (more verify CPU) or lower min_recall.",
             )
         chosen_bb, chosen_bands, chosen_est = found
 
@@ -1196,12 +1205,12 @@ def rhp_escalate_geometry(
         law_estimate=law_est,
         probes=tuple(probes),
         recall_estimate=rhp_recall_estimate(
-            recall_cosine, chosen_bb, chosen_bands
+            RHP_RECALL_COSINE, chosen_bb, chosen_bands
         ),
         law_recall_estimate=rhp_recall_estimate(
-            recall_cosine, law_bb, bands
+            RHP_RECALL_COSINE, law_bb, bands
         ),
-        recall_cosine=recall_cosine,
+        recall_cosine=RHP_RECALL_COSINE,
     )
 
 
@@ -1222,9 +1231,7 @@ def rhp_near_duplicates(
     vec_col: str = "embedding",
     max_candidates: int | None = MAX_RHP_CANDIDATE_ROWS,
     row_count_hint: int | None = None,
-    target_bucket: int = 64,
     min_recall: float | None = None,
-    recall_cosine: float = RHP_RECALL_COSINE,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via random-hyperplane LSH
     bucketing — the label-free SCALE path for embedding near-dup (the
@@ -1240,104 +1247,91 @@ def rhp_near_duplicates(
     Scale shape: signatures are a row-local map; the candidate join is
     a bucketed EQUI-join on (band, band_sig) — never all-pairs; the
     cosine verify touches only colliding pairs and the candidate stream
-    is never materialized to disk (the round-10 fix: re-joining vectors
-    onto the candidate list shuffled O(candidates x vec_size) — 150 GB
-    at the 1M rung — where verify-in-join shuffles O(n x bands x
-    vec_size), ~2 GB there). Recall is tunable with n_bits/bands
-    exactly like MinHash-LSH banding.
+    is never materialized to disk (re-joining vectors onto the
+    candidate list shuffled O(candidates x vec_size) — 150 GB at the 1M
+    rung — where verify-in-join shuffles O(n x bands x vec_size), ~2 GB
+    there). Recall is tunable with n_bits/bands exactly like MinHash-LSH
+    banding.
 
-    Fan-out guard (round 8, by incident — see MAX_RHP_CANDIDATE_ROWS):
-    the signatures are checkpointed once (they fed BOTH join sides
-    before, so this also halves the signature compute), and one bounded
+    Fan-out guard (see MAX_RHP_CANDIDATE_ROWS for the incident behind
+    it): the signatures are checkpointed once (they feed BOTH join
+    sides, so this also halves the signature compute), and one bounded
     aggregate over bucket sizes estimates the join's exact candidate
     row count; past ``max_candidates`` the operator refuses, naming the
     bits-growth prescription, instead of spilling the disk away. The
     guard is values-neutral; ``max_candidates=None`` disables it (and
     the checkpoint stays, it is a pure reuse win).
 
-    Completion mode (round 9): ``n_bits="auto"`` sizes the band width
-    to the corpus via ``rhp_auto_bits`` — bits per band ≈
-    log2(n / target_bucket), the growth law the 1M rung measured —
-    using ``row_count_hint`` when given (else one ``count()`` over the
-    input). Registered queries keep pinned integer geometry for oracle
-    parity; auto is for corpora where any pinned width eventually
+    Completion mode: ``n_bits="auto"`` sizes the band width to the
+    corpus via ``rhp_auto_bits`` — bits per band ≈ log2(n /
+    RHP_TARGET_BUCKET), the growth law the 1M rung measured — using
+    ``row_count_hint`` when given (else one ``count()`` over the
+    input), then escalates the geometry until the measured candidate
+    mass fits ``max_candidates`` (``rhp_escalate_geometry``), so auto
+    needs a budget. Registered queries keep pinned integer geometry for
+    oracle parity; auto is for corpora where any pinned width eventually
     either refuses (under-sized) or wastes recall (over-sized). An auto
     call and a pinned call are IDENTICAL whenever auto resolves to the
     pinned width (equality-tested at the 48-bit resolution point).
 
-    Recall contract (round 12): auto-mode escalation LOGS the chosen
-    geometry with its Charikar recall estimate at ``recall_cosine``
-    (default 0.99 — the rung generators' measured dup cosine) whenever
-    it departs from the law, and ``min_recall`` makes the trade a
-    constraint: escalation then prefers adding BANDS over widening
-    bits when bits alone would cross the floor, and REFUSES loudly
-    when no geometry satisfies both budget and floor. On a pinned
-    geometry ``min_recall`` validates (refuse-or-pass), never adjusts.
-    The last auto decision is inspectable via ``LAST_ESCALATION``.
+    Recall contract: auto-mode escalation LOGS the chosen geometry with
+    its Charikar recall estimate at ``RHP_RECALL_COSINE`` (the rung
+    generators' measured dup cosine) whenever it departs from the law,
+    and ``min_recall`` makes the trade a constraint: escalation then
+    prefers adding BANDS over widening bits when bits alone would cross
+    the floor, and REFUSES loudly when no geometry satisfies both budget
+    and floor. On a pinned geometry ``min_recall`` validates
+    (refuse-or-pass), never adjusts. The last auto decision is
+    inspectable via ``LAST_ESCALATION``.
     """
     from pyspark import StorageLevel
 
+    op = "rhp_near_duplicates"
     measured_est: int | None = None
     if n_bits == "auto":
+        check_auto_budget(op, "n_bits", max_candidates)
         n = row_count_hint if row_count_hint is not None else embeddings.count()
-        n_bits = rhp_auto_bits(n, bands=bands, target_bucket=target_bucket)
-        # Data-aware escalation (round 11, by the 5M-rung refusal): the
-        # n-only law under-sizes on clustered corpora — same-cluster
+        law_bits = rhp_auto_bits(n, bands=bands)
+        check_banding(op, "n_bits", law_bits, bands)
+        # The n-only law under-sizes on clustered corpora — same-cluster
         # sign bits agree above the random rate, and at 5M the law's
         # 17-bit bands measured 1.16e9 candidates against the 500M
-        # budget. Probe the ACTUAL candidate mass with narrow signing
-        # passes (predict-then-confirm jumps, ~2 beyond the law) and
-        # adjust until it fits — bands-first when ``min_recall`` makes
-        # the recall trade explicit; a pinned-int call keeps the
-        # strict refuse-loudly contract unchanged.
-        if max_candidates is not None:
-            geom = rhp_escalate_geometry(
-                embeddings,
-                n_bits,
-                bands,
-                max_candidates=max_candidates,
-                dim=dim,
-                seed=seed,
-                id_col=id_col,
-                vec_col=vec_col,
-                min_recall=min_recall,
-                recall_cosine=recall_cosine,
-            )
-            n_bits, bands = geom.n_bits, geom.bands
-            measured_est = geom.candidate_estimate
-            global LAST_ESCALATION
-            LAST_ESCALATION = geom
-            if geom.escalated:
-                # Caller-visible signal (VERDICT r11 ask #1): auto mode
-                # changed the geometry, which moves recall — name the
-                # law start, the measured mass, the chosen geometry,
-                # and the Charikar recall estimate at both.
-                _LOG.warning("rhp auto escalation: %s", geom.describe())
-        elif min_recall is not None:
-            band_bits = n_bits // bands
-            rec = rhp_recall_estimate(recall_cosine, band_bits, bands)
-            if rec < min_recall:
-                raise ValueError(
-                    f"rhp_near_duplicates: the law geometry "
-                    f"({band_bits}-bit x {bands} bands) has Charikar "
-                    f"recall {rec:.4f} at cosine {recall_cosine:g} — "
-                    f"below min_recall={min_recall}. Add bands or "
-                    f"lower the floor."
-                )
+        # budget. Escalation probes the ACTUAL candidate mass with
+        # narrow signing passes (predict-then-confirm jumps, ~2 beyond
+        # the law) and adjusts until it fits — bands-first when
+        # ``min_recall`` makes the recall trade explicit; a pinned-int
+        # call keeps the strict refuse-loudly contract unchanged.
+        geom = rhp_escalate_geometry(
+            embeddings,
+            law_bits,
+            bands,
+            max_candidates=max_candidates,
+            dim=dim,
+            seed=seed,
+            id_col=id_col,
+            vec_col=vec_col,
+            min_recall=min_recall,
+        )
+        n_bits, bands = geom.n_bits, geom.bands
+        measured_est = geom.candidate_estimate
+        global LAST_ESCALATION
+        LAST_ESCALATION = geom
+        if geom.escalated:
+            # Auto mode changed the geometry, which moves recall: name
+            # the law start, the measured mass, the chosen geometry and
+            # the Charikar recall estimate at both.
+            _LOG.warning("rhp auto escalation: %s", geom.describe())
     elif isinstance(n_bits, int):
+        check_banding(op, "n_bits", n_bits, bands)
         # A pinned geometry is the caller's choice; min_recall still
         # gets an honest answer — validate, never silently adjust.
-        if min_recall is not None:
-            rec = rhp_recall_estimate(recall_cosine, n_bits // bands, bands)
-            if rec < min_recall:
-                raise ValueError(
-                    f"rhp_near_duplicates: pinned geometry "
-                    f"({n_bits // bands}-bit x {bands} bands) has "
-                    f"Charikar recall {rec:.4f} at cosine "
-                    f"{recall_cosine:g} — below min_recall="
-                    f"{min_recall}. Narrow the bands, add bands, or "
-                    f"lower the floor."
-                )
+        check_floor(
+            op, "min_recall", min_recall,
+            rhp_recall_estimate(RHP_RECALL_COSINE, n_bits // bands, bands),
+            f"the Charikar recall at cosine {RHP_RECALL_COSINE:g} of the "
+            f"pinned geometry ({n_bits // bands}-bit x {bands} bands)",
+            "Narrow the bands, add bands, or lower the floor.",
+        )
     else:
         raise ValueError(f"n_bits must be an int or 'auto', got {n_bits!r}")
 
@@ -1384,35 +1378,27 @@ def rhp_near_duplicates(
         )
         if est > max_candidates:
             band_bits = n_bits // bands
-            if band_bits >= RHP_MAX_BAND_BITS:
+            refuse_over_budget(
+                op, est, max_candidates,
                 # At the packing/JIT ceiling wider bands are not on the
-                # menu — prescribing band width here (the generic
-                # message below) would send an auto caller in a circle.
-                raise ValueError(
-                    f"rhp_near_duplicates: the (band, band_sig) "
-                    f"equi-join would materialize ~{est:,} "
-                    f"candidate rows (budget max_candidates="
-                    f"{max_candidates:,}) and the {band_bits}-bit "
-                    f"bands are already at the RHP_MAX_BAND_BITS="
-                    f"{RHP_MAX_BAND_BITS} ceiling — wider bands cannot "
-                    f"help. Add BANDS (smaller per-band mass share per "
-                    f"key space; recall recovers exponentially), or "
-                    f"raise max_candidates if the verify CPU can take "
-                    f"it. Mass that survives 30-bit bands is dominated "
-                    f"by exact-duplicate groups — consider exact dedup "
-                    f"first."
-                )
-            raise ValueError(
-                f"rhp_near_duplicates: the (band, band_sig) equi-join "
-                f"would materialize ~{est:,} candidate rows "
-                f"(budget max_candidates={max_candidates:,}). LSH "
-                f"candidates grow ~n²/2^bits per band; the current "
-                f"{band_bits}-bit bands are under-sized for this corpus. "
-                f"Raise n_bits so bits-per-band ≈ "
+                # menu — prescribing band width there would send an auto
+                # caller in a circle.
+                f"The {band_bits}-bit bands are already at the "
+                f"RHP_MAX_BAND_BITS={RHP_MAX_BAND_BITS} ceiling — wider "
+                f"bands cannot help. Add BANDS (smaller per-band mass "
+                f"share per key space; recall recovers exponentially), or "
+                f"raise max_candidates if the verify CPU can take it. "
+                f"Mass that survives 30-bit bands is dominated by "
+                f"exact-duplicate groups — consider exact dedup first."
+                if band_bits >= RHP_MAX_BAND_BITS
+                else f"LSH candidates grow ~n²/2^bits per band; the "
+                f"current {band_bits}-bit bands are under-sized for this "
+                f"corpus. Raise n_bits so bits-per-band ≈ "
                 f"log2(corpus_rows / target_bucket_size) (re-derive "
                 f"recall from the Charikar bound when changing it), or "
-                f"raise max_candidates if the spill volume can take it."
+                f"raise max_candidates if the spill volume can take it.",
             )
+
     # Verify-in-join: cosine is computed in the join's output
     # projection (whole-stage codegen — never materialized), the
     # threshold filter runs immediately, and only SURVIVING pairs reach
@@ -1493,7 +1479,6 @@ def semantic_pair_candidates(
     blocked: DataFrame,
     threshold: float,
     broadcast_limit: int = SEMANTIC_DEDUP_BROADCAST_LIMIT,
-    max_cell: int | None = None,
     dim: int | None = None,
     max_candidates: int | None = MAX_SEMDEDUP_CANDIDATE_ROWS,
     _keep_cos: bool = False,
@@ -1502,7 +1487,7 @@ def semantic_pair_candidates(
     ``threshold``, from a (vec_id, vec, centroid_id, cos_centroid)
     table. Exposed so plan tests can pin both physical shapes.
 
-    COST MODEL (the round-7/8 sweep's a45 watch item): the within-cell
+    COST MODEL (the sf10 sweep's a45 watch item): the within-cell
     scan is quadratic in cell size, so with a FIXED centroid count k the
     whole operator is O(n²/k) — the 500k-vector sweep measured a45 at
     1.34x per input at 250x growth, the n²/k curve showing through.
@@ -1510,17 +1495,13 @@ def semantic_pair_candidates(
     (k ≈ n / target_cell_size, the paper's own deployment shape); the
     registered a45 keeps 128 fixed centroids because its oracle needs
     deterministic centroid literals, and absorbs the superlinear term at
-    driver scales. Two guards enforce the contract (round 9 — the RHP
-    sibling's shape, after the 1M rung measured k=128 grinding 25 min
-    into an OOM):
-
-    - ``max_candidates`` (ON by default, ``MAX_SEMDEDUP_CANDIDATE_ROWS``)
-      — ``pair_mass`` over the cells, the exact pair-scan row count
-      (one bounded aggregate); past the budget the call refuses, naming
-      the largest cells and the k-growth law, instead of grinding into
-      ``AGGREGATE_OUT_OF_MEMORY``. Values-neutral; ``None`` disables.
-    - ``max_cell`` (off by default) — a per-cell ceiling for callers
-      that want the paper's bounded-cell contract enforced directly.
+    driver scales. ``max_candidates`` (ON by default,
+    ``MAX_SEMDEDUP_CANDIDATE_ROWS``; the RHP sibling's guard, after the
+    1M rung measured k=128 grinding 25 min into an OOM) enforces the
+    contract: ``pair_mass`` over the cells is the exact pair-scan row
+    count (one bounded aggregate); past the budget the call refuses,
+    naming the largest cells and the k-growth law, instead of grinding
+    into ``AGGREGATE_OUT_OF_MEMORY``. Values-neutral; ``None`` disables.
 
     NOTE — eager action: choosing the join strategy runs
     ``blocked.count()`` at CONSTRUCTION time (not at the first action),
@@ -1548,58 +1529,37 @@ def semantic_pair_candidates(
     from ..functions.vectors import l2_norm
 
     n_rows = None
-    if max_cell is not None or max_candidates is not None:
-        # ``blocked`` is checkpointed by semantic_dedup, so each guard
+    if max_candidates is not None:
+        # ``blocked`` is checkpointed by semantic_dedup, so the guard
         # costs one cheap job over materialized blocks, not a lineage
-        # re-execution; the refusals name the largest cells.
-        cells = blocked.groupBy(F.col("centroid_id").alias("_cell")).agg(
-            F.count(F.lit(1)).alias("n")
+        # re-execution. The join-strategy gate's row count rides the
+        # SAME aggregate (Σ cell sizes = |blocked|) — one action instead
+        # of a separate blocked.count().
+        est, n_rows = pair_mass(blocked, ["centroid_id"])
+        _LOG.info(
+            "semantic_pair_candidates: sigma n(n-1)/2 = %d "
+            "candidate rows (budget %d)",
+            est,
+            max_candidates,
         )
-        if max_candidates is not None:
-            # The join-strategy gate's row count rides the SAME
-            # aggregate (Σ cell sizes = |blocked|) — one action instead
-            # of a separate blocked.count().
-            est, n_rows = pair_mass(blocked, ["centroid_id"])
-            _LOG.info(
-                "semantic_pair_candidates: sigma n(n-1)/2 = %d "
-                "candidate rows (budget %d)",
-                est,
-                max_candidates,
-            )
-            if est > max_candidates:
-                top = (
-                    cells.orderBy(F.desc("n"), F.asc("_cell"))
-                    .limit(3)
-                    .collect()
-                )
-                raise ValueError(
-                    f"semantic_pair_candidates: the within-cell pair scan "
-                    f"would materialize {est:,} candidate rows "
-                    f"(budget max_candidates={max_candidates:,}; largest "
-                    f"cells: {[(r['_cell'], r['n']) for r in top]}). With "
-                    "a FIXED centroid count k the scan is O(n²/k) — a "
-                    "corpus-sized model: train more centroids so k ≈ "
-                    "corpus_rows / target_cell_size (the SemDeDup paper's "
-                    "own deployment shape; semdedup_auto_k gives the "
-                    "recipe), or raise max_candidates if the aggregate "
-                    "memory can take it."
-                )
-        if max_cell is not None:
-            big = (
-                cells.filter(F.col("n") > max_cell)
+        if est > max_candidates:
+            top = (
+                blocked.groupBy(F.col("centroid_id").alias("_cell"))
+                .agg(F.count(F.lit(1)).alias("n"))
                 .orderBy(F.desc("n"), F.asc("_cell"))
-                .limit(5)
+                .limit(3)
                 .collect()
             )
-            if big:
-                raise ValueError(
-                    f"semantic_pair_candidates: cell(s) exceed max_cell="
-                    f"{max_cell} (largest: "
-                    f"{[(r['_cell'], r['n']) for r in big]}); the within-cell "
-                    "pair scan is quadratic in cell size by contract. Train "
-                    "more centroids (k ~ corpus_rows / target_cell_size) so "
-                    "cells stay bounded, or raise max_cell deliberately."
-                )
+            refuse_over_budget(
+                "semantic_pair_candidates", est, max_candidates,
+                f"The within-cell pair scan is O(n²/k) with a FIXED "
+                f"centroid count k (largest cells: "
+                f"{[(r['_cell'], r['n']) for r in top]}) — a corpus-sized "
+                f"model: train more centroids so k ≈ corpus_rows / "
+                f"target_cell_size (the SemDeDup paper's own deployment "
+                f"shape; semdedup_auto_k gives the recipe), or raise "
+                f"max_candidates if the aggregate memory can take it.",
+            )
 
     # per-VECTOR norms ride the join sides so the per-PAIR work is the
     # dot product alone (same fold order as cosine_similarity — parity
@@ -1647,7 +1607,7 @@ def semantic_pair_candidates(
                 F.try_divide(
                     # use_flat: the SemDeDup pair scan is the corpus
                     # family's heaviest dot site (Σcell² pair rows) —
-                    # the round-8 sf10 A/B measured a45 at 390.2s flat
+                    # the sf10 A/B measured a45 at 390.2s flat
                     # vs 932.4s fold on 500k vectors. See
                     # functions/vectors.py for the tradeoff rule.
                     dot("va", "vb", dim=dim, use_flat=True),
@@ -1666,11 +1626,18 @@ def semantic_pair_candidates(
     )
 
 
-def semdedup_auto_k(
-    n_rows: int, target_cell: int = 2000, min_k: int = 16
-) -> int:
+#: Cell size the SemDeDup provisioning recipe ``semdedup_auto_k`` targets.
+SEMDEDUP_TARGET_CELL = 2000
+
+#: Fewest centroids ``semdedup_auto_k`` provisions, however small the
+#: corpus.
+SEMDEDUP_MIN_K = 16
+
+
+def semdedup_auto_k(n_rows: int) -> int:
     """The k∝n provisioning recipe for SemDeDup, as code: centroid count
-    k = next power of two ≥ n_rows / target_cell (floored at ``min_k``).
+    k = next power of two ≥ n_rows / SEMDEDUP_TARGET_CELL (floored at
+    ``SEMDEDUP_MIN_K``).
     Powers of two keep the quantizer size a round model artifact and the
     recipe deterministic.
 
@@ -1682,11 +1649,9 @@ def semdedup_auto_k(
     quantizer); the bench harness seeds them deterministically with
     ``vec_id % 97 == 0 AND vec_id < 97*k``.
     """
-    import math
-
     if n_rows <= 0:
-        return min_k
-    need = max(min_k, -(-n_rows // target_cell))  # ceil div
+        return SEMDEDUP_MIN_K
+    need = max(SEMDEDUP_MIN_K, -(-n_rows // SEMDEDUP_TARGET_CELL))  # ceil div
     return 2 ** math.ceil(math.log2(need))
 
 
@@ -1697,7 +1662,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     broadcast_limit: int = SEMANTIC_DEDUP_BROADCAST_LIMIT,
-    max_cell: int | None = None,
     dim: int | None = None,
     max_candidates: int | None = MAX_SEMDEDUP_CANDIDATE_ROWS,
     probes: int = 1,
@@ -1724,16 +1688,15 @@ def semantic_dedup(
     ``broadcast_limit`` rows, cell-keyed repartition join above it —
     both paths produce identical pairs (equality-tested).
 
-    Guard rails (both forward to ``semantic_pair_candidates``; the
-    O(n²/k) cost model is documented there): ``max_candidates`` — ON by
-    default — refuses past a Σ n(n−1)/2 candidate budget calibrated to
-    the measured 500k/1M rungs, so an under-provisioned quantizer fails
-    in seconds naming the k-growth law instead of grinding to OOM;
-    ``max_cell`` (off by default) additionally enforces a per-cell
-    ceiling. Provision k with ``semdedup_auto_k`` (k ≈ corpus /
-    target_cell_size) to stay under both at any corpus size.
+    Guard rail (forwarded to ``semantic_pair_candidates``; the O(n²/k)
+    cost model is documented there): ``max_candidates`` — ON by default
+    — refuses past a Σ n(n−1)/2 candidate budget calibrated to the
+    measured 500k/1M rungs, so an under-provisioned quantizer fails in
+    seconds naming the largest cells and the k-growth law instead of
+    grinding to OOM. Provision k with ``semdedup_auto_k`` (k ≈ corpus /
+    target_cell_size) to stay under it at any corpus size.
 
-    ``probes`` (round 12, by measurement): cell confinement has a
+    ``probes`` (by measurement): cell confinement has a
     structural recall cost — a dup pair straddling a cell boundary is
     NEVER compared, whatever the threshold. Measured on the 500k rung
     (``scripts/measure_semdedup_recall.py``): 0.8115 of planted dup
@@ -1745,8 +1708,8 @@ def semantic_dedup(
     expanded membership exactly). The keep rule is unchanged: primary
     cell's ``cos_centroid``, one survivor per component; extra probes
     only ADD edges, so components merge, never split. ``probes=1`` is
-    byte-identical to the round-11 operator (values; the
-    construction-time cost note below applies to both).
+    the single-assignment operator (the construction-time cost note
+    below applies to both).
 
     CONSTRUCTION-TIME ACTIONS (the same honesty note as
     ``semantic_pair_candidates``'s ``blocked.count()``): building this
@@ -1759,16 +1722,16 @@ def semantic_dedup(
     SemDeDup would drop essentially everything — a threshold-semantics
     problem the caller must see, not infer from a tiny keep count).
     Pass ``percolation_check=False`` to skip the tripwire aggregate
-    when the caller owns threshold hygiene (ADVICE r12: callers that
-    never act on the returned frame shouldn't pay it).
+    when the caller owns threshold hygiene (callers that never act on
+    the returned frame shouldn't pay it).
     """
     from .dedup import connected_components
 
     from pyspark import StorageLevel
 
     # Coarse-assign cost is |corpus| x k cross-term dots — under the
-    # k ∝ n provisioning rule this grows as n²/target_cell, and at the
-    # 2.5M/k=2048 rung the interpreted fold made the assign the leg's
+    # k ∝ n provisioning rule this grows as n²/SEMDEDUP_TARGET_CELL, and
+    # at the 2.5M/k=2048 rung the interpreted fold made the assign the leg's
     # dominant stage. Past IVF_ASSIGN_FLAT_MIN_K centroids (and with
     # dim known) the dot routes through the flat codegen form —
     # bit-identical (same left-assoc order, tests/test_vectors_dim.py),
@@ -1795,7 +1758,7 @@ def semantic_dedup(
         # stored SERIALIZED (MEMORY_AND_DISK in PySpark is the
         # serialized level; the Dataset default is DESER) —
         # deserialized row objects inflate a 64-float array row ~5-10x,
-        # and the round-8 sf10 re-run OOM'd an 8 GB heap exactly there
+        # and an sf10 re-run OOM'd an 8 GB heap exactly there
         # (maybeCacheDiskValuesInMemory re-inflating disk blocks into
         # one contiguous in-memory vector on read-back). Serialized
         # blocks also stream to/from disk in chunks instead of
@@ -1827,7 +1790,7 @@ def semantic_dedup(
         # order) — the checkpointed narrow memb table is consumed
         # twice instead of re-scoring. The keep rule still reads the
         # PRIMARY cos_centroid.
-        # LAZY truncation (round 15, guide §5): memb's first consumer is
+        # LAZY truncation: memb's first consumer is
         # the scan_input checkpoint job below, which references it
         # exactly ONCE — the n x k scoring materializes inside that job
         # instead of paying a dedicated serial job first. keep_src reads
@@ -1862,7 +1825,7 @@ def semantic_dedup(
         )
     pairs = semantic_pair_candidates(
         scan_input, threshold, broadcast_limit=broadcast_limit,
-        max_cell=max_cell, dim=dim, max_candidates=max_candidates,
+        dim=dim, max_candidates=max_candidates,
     )
     if probes > 1:
         # A pair sharing several probed cells is emitted once per
@@ -1871,7 +1834,7 @@ def semantic_dedup(
     comp = connected_components(
         pairs, "vec_a", "vec_b", keep_src.select("vec_id"), "vec_id"
     )
-    # Percolation tripwire (round 12, by the 500k legs): with
+    # Percolation tripwire (by the 500k legs): with
     # transitive CC linking, a weak threshold chains the corpus — at
     # 0.40 on the clustered 500k rung, 500k rows collapsed to 618
     # components single-probe and to ONE with probes=2, i.e. SemDeDup
@@ -1885,7 +1848,7 @@ def semantic_dedup(
         F.count(F.lit(1)).alias("n")
     ).agg(F.max("n").alias("mx"), F.sum("n").alias("total")).collect()[0]
     if stats and stats["total"] and stats["mx"] / stats["total"] > 0.20:
-        # Prescription (round 13, VERDICT r12 optional #8): name the
+        # Prescription: name the
         # smallest threshold the MEASURED cosine distribution suggests
         # would de-percolate, not just the symptom. Heuristic: a random
         # graph grows a giant component past mean degree ~1 (Erdős–
@@ -1895,8 +1858,7 @@ def semantic_dedup(
         # as a ≤~60-bucket rounded-cosine histogram, never the edges.
         scored_pairs = semantic_pair_candidates(
             scan_input, threshold, broadcast_limit=broadcast_limit,
-            max_cell=max_cell, dim=dim, max_candidates=None,
-            _keep_cos=True,
+            dim=dim, max_candidates=None, _keep_cos=True,
         )
         if probes > 1:
             # CC consumed pair-DISTINCT edges; the histogram must count
@@ -1931,8 +1893,8 @@ def semantic_dedup(
                 # t_fix is a round(·, 2) BUCKET (spans t_fix ± 0.005):
                 # prescribing its upper edge guarantees the whole bucket
                 # is excluded, so the kept mass is provably <= the n/2
-                # the heuristic counted (ADVICE r13 — quoting the bucket
-                # center could keep edges from its lower half).
+                # the heuristic counted (quoting the bucket center could
+                # keep edges from its lower half).
                 f"The measured cosine histogram suggests threshold >= "
                 f"{t_fix + 0.005:.3f} (the upper edge of the last "
                 f"rounded-cosine bucket keeping <= n/2 edges — below "

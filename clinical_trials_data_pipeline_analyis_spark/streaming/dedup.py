@@ -63,7 +63,6 @@ def near_dedup_docs_stream(
     bands: int = 4,
     shingle_k: int = 3,
     min_recall: float | None = None,
-    recall_jaccard: float = 0.84,
 ):
     """Incremental MinHash near-dedup via ``foreachBatch``: each
     micro-batch's documents are signed once, banded against the
@@ -87,7 +86,7 @@ def near_dedup_docs_stream(
     history its first attempt saw, so the retry is bit-identical, not
     merely non-duplicating.
 
-    Geometry is PINNED for the store's lifetime (round 13): MinHash
+    Geometry is PINNED for the store's lifetime: MinHash
     signatures from different (num_hashes, bands, shingle_k) never
     collide meaningfully, so the first epoch writes a
     ``_minhash_geometry`` sidecar under the store and every later epoch
@@ -96,43 +95,36 @@ def near_dedup_docs_stream(
     the Spark session so it holds on any filesystem, not just paths
     ``os.path`` can see.
 
-    ``min_recall`` (round 14, completing the batch/stream symmetry):
-    the stream's banded collision has exactly the batch operator's
-    banding-theory recall ``1-(1-s^rows)^bands`` at ``recall_jaccard``
-    — the asymmetric store join changes WHO is compared, not the
-    per-pair collision probability — so the same floor validates at
+    ``min_recall`` is the batch operator's floor on the banding-theory
+    recall (``operators.dedup.minhash_banding_recall``), validated at
     CONSTRUCTION (pure driver-side arithmetic, before any epoch or
     sidecar write): a pinned geometry below the floor refuses up front
     with the batch refusal's prescription, instead of a long-running
     stream silently under-recalling for its whole life.
     """
-    from ..operators.dedup import lsh_candidate_pairs, minhash_signatures
+    from ..operators.dedup import (
+        LSH_RECALL_JACCARD,
+        check_banding,
+        check_floor,
+        lsh_candidate_pairs,
+        minhash_banding_recall,
+        minhash_signatures,
+    )
 
-    if bands <= 0 or num_hashes % bands:
-        # Same validation order as the batch operator (ADVICE r13):
-        # the banding error, not a recall ZeroDivision, and at
-        # CONSTRUCTION, not at the first epoch.
-        raise ValueError(
-            f"near_dedup_docs_stream: bands must be a positive divisor "
-            f"of num_hashes={num_hashes}, got {bands}"
-        )
-    if min_recall is not None:
-        if not (0.0 < min_recall <= 1.0):
-            raise ValueError(
-                f"min_recall must be in (0, 1], got {min_recall}"
-            )
-        rec = 1.0 - (1.0 - recall_jaccard ** (num_hashes // bands)) ** bands
-        if rec < min_recall:
-            raise ValueError(
-                f"near_dedup_docs_stream: the pinned banding ({bands} "
-                f"bands x {num_hashes // bands} rows) has banding-theory "
-                f"recall {rec:.4f} at Jaccard {recall_jaccard:g} — below "
-                f"min_recall={min_recall}. Re-sign with more hashes "
-                f"(num_hashes up to 16; more bands at the same rows "
-                f"recovers recall exponentially) or lower the floor. "
-                f"Refused at construction: a stream under-recalls for "
-                f"its whole life, not one query."
-            )
+    op = "near_dedup_docs_stream"
+    # The banding error comes before the floor, and at construction,
+    # not at the first epoch.
+    check_banding(op, "num_hashes", num_hashes, bands)
+    check_floor(
+        op, "min_recall", min_recall,
+        minhash_banding_recall(num_hashes, bands),
+        f"the banding-theory recall at Jaccard {LSH_RECALL_JACCARD:g} of "
+        f"the pinned banding ({bands} bands x {num_hashes // bands} rows)",
+        "Refused at construction: a stream under-recalls for its whole "
+        "life, not one query. Re-sign with more hashes (num_hashes up to "
+        "16; more bands at the same rows recovers recall exponentially) "
+        "or lower the floor.",
+    )
 
     geometry = {
         "num_hashes": int(num_hashes),
@@ -201,7 +193,7 @@ def clean_spans_stream(
     distinct windows seen, the streaming analog of the batch
     operator's corpus-wide hash aggregate.
 
-    Geometry is PINNED for the store's lifetime (round 13): window
+    Geometry is PINNED for the store's lifetime: window
     hashes at different ``k`` never collide meaningfully, so the first
     epoch writes a ``_span_geometry`` sidecar under the store and every
     later epoch verifies it through the Spark session (filesystem-
@@ -334,7 +326,7 @@ def simhash_near_dedup_stream(
     per-epoch bucket counts differ from corpus counts and capping on
     them would break stream=batch flag parity; route template-heavy
     streams to ``near_dedup_docs_stream``). The same aggregate also
-    PROJECTS the next epoch (round 14, VERDICT r13 ask #5): an
+    PROJECTS the next epoch: an
     identical batch re-arriving against the post-append store costs
     Σ n_new x n_all + C(n_new, 2) per touched bucket, and past 80% of
     the budget the epoch logs a pre-detonation warning (projected
@@ -360,7 +352,7 @@ def simhash_near_dedup_stream(
     Returns an unstarted ``DataStreamWriter``; ``.start()`` it. Flag
     output: (id_col, is_near_dup) partitioned by epoch_id.
     """
-    from ..operators.dedup import simhash
+    from ..operators.dedup import refuse_over_budget, simhash
 
     if int(bits) != 32:
         raise ValueError(
@@ -412,18 +404,17 @@ def simhash_near_dedup_stream(
                 projected += proj
                 max_occ = max(max_occ, occ)
             if total > max_candidates_per_epoch:
-                raise ValueError(
-                    f"simhash_near_dedup_stream: epoch {epoch_id}'s "
-                    f"half-bucket joins would stream ~{total:,} candidate "
-                    f"rows through the Hamming verify (budget "
-                    f"{max_candidates_per_epoch:,}). Template-heavy "
-                    f"corpora concentrate fingerprint halves into hot "
-                    f"buckets — shrink the micro-batch "
-                    f"(maxFilesPerTrigger), route the stream to "
-                    f"near_dedup_docs_stream (MinHash buckets sample the "
-                    f"shingle space instead), or raise "
-                    f"max_candidates_per_epoch if the verify CPU can "
-                    f"take it."
+                refuse_over_budget(
+                    f"simhash_near_dedup_stream (epoch {epoch_id})",
+                    total, max_candidates_per_epoch,
+                    "Template-heavy corpora concentrate fingerprint "
+                    "halves into hot buckets — shrink the micro-batch "
+                    "(maxFilesPerTrigger), route the stream to "
+                    "near_dedup_docs_stream (MinHash buckets sample the "
+                    "shingle space instead), or raise "
+                    "max_candidates_per_epoch if the verify CPU can take "
+                    "it.",
+                    "max_candidates_per_epoch",
                 )
             if projected > 0.8 * max_candidates_per_epoch:
                 # Pre-detonation warning: THIS epoch fits, but the

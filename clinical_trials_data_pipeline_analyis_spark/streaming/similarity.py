@@ -4,7 +4,7 @@ index (new embeddings land in the right cell as they arrive; the
 cell-confined search and SemDeDup operators then work incrementally).
 
 Three streaming-legal forms — two chosen by centroid-set size, plus the
-round-13 multi-probe variant (``assign_cells_topp_stream`` /
+multi-probe variant (``assign_cells_topp_stream`` /
 ``topp_centroids_expr``: the top-p as a transform → array_sort →
 slice projection, stream-legal where ``ivf_assign_topp``'s window is
 not):
@@ -172,12 +172,12 @@ def topp_centroids_expr(
     vector in ``vec_col``, as an ORDERED array of struct(centroid_id,
     cosine) — rank = array position + 1.
 
-    The row-local multi-probe form (round 13, VERDICT r12 ask #7):
-    ``ivf_assign_topp`` ranks with a row_number window, which streaming
-    frames cannot run — but for a literal-sized centroid set the top-p
-    is a pure projection: score every centroid with ``F.transform``
-    (the same rounded ``cosine_similarity`` as the fold), totally order
-    with ``F.array_sort``'s comparator (cosine DESC with NULLs last via
+    The row-local multi-probe form: ``ivf_assign_topp`` ranks with a
+    row_number window, which streaming frames cannot run — but for a
+    literal-sized centroid set the top-p is a pure projection: score
+    every centroid with ``F.transform`` (the same rounded
+    ``cosine_similarity`` as the fold), totally order with
+    ``F.array_sort``'s comparator (cosine DESC with NULLs last via
     the -inf key, centroid_id ASC on ties — exactly the batch window's
     ORDER BY), and ``F.slice`` the first ``probes``. Zero exchanges,
     stream-legal under any output mode, and value-equal to
@@ -288,8 +288,8 @@ def assign_cells_foreach_batch(
       (foreachBatch is at-least-once) overwrites its own partition, so
       downstream readers never see duplicated assignments.
 
-    ``probes`` (round 13): >1 routes the batch ``ivf_assign_topp``
-    instead — the index-scale form of the multi-probe membership feed
+    ``probes`` >1 routes the batch ``ivf_assign_topp`` instead — the
+    index-scale form of the multi-probe membership feed
     (the plan-literal ``assign_cells_topp_stream`` caps its centroid
     set like the top-1 fold; windows are legal here, so no ceiling).
     Output grows a ``rank`` column (1..probes; rank 1 is exactly the
@@ -297,9 +297,9 @@ def assign_cells_foreach_batch(
 
     Because ``probes`` changes the SINK schema (rank appears only at
     probes>1), it is pinned in a ``_assign_geometry`` sidecar under
-    ``out_path`` exactly like the signature stores' geometry pins
-    (ADVICE r13): restarting an existing sink with a different probes
-    would otherwise write epoch partitions with mixed schemas that
+    ``out_path`` exactly like the signature stores' geometry pins:
+    restarting an existing sink with a different probes would
+    otherwise write epoch partitions with mixed schemas that
     parquet readers resolve inconsistently — the mismatch now fails the
     stream loudly at the first epoch instead.
 
@@ -382,8 +382,9 @@ def rhp_near_dedup_stream(
     a hot epoch spill the disk away. The store is O(n x bands) rows of
     (id, vector, norm, band, band_sig) — ``bands``x vector
     duplication, the same deliberate trade as the batch checkpoint:
-    re-joining vectors per CANDIDATE row (the round-10 incident shape)
-    shuffles O(candidates x vec_size), catastrophically more.
+    re-joining vectors per CANDIDATE row (the shape that filled the
+    disk at the 1M rung) shuffles O(candidates x vec_size),
+    catastrophically more.
 
     Geometry is PINNED for the store's lifetime: band signatures from
     different (n_bits, bands, dim, seed) never collide meaningfully, so
@@ -408,8 +409,12 @@ def rhp_near_dedup_stream(
     """
     from ..checkpoint import cut_lineage
     from ..functions.vectors import dot, l2_norm
+    from ..operators.dedup import check_banding, refuse_over_budget
     from ..operators.similarity import rhp_signatures
 
+    # At construction: the first epoch pins the geometry sidecar before
+    # it signs anything, so a bad banding must fail before any write.
+    check_banding("rhp_near_dedup_stream", "n_bits", n_bits, bands)
     geometry = {
         "n_bits": int(n_bits),
         "bands": int(bands),
@@ -440,17 +445,17 @@ def rhp_near_dedup_stream(
                 sigs_new, all_sigs, ["band", "band_sig"]
             )
             if mass > max_candidates_per_epoch:
-                raise ValueError(
-                    f"rhp_near_dedup_stream: epoch {epoch_id}'s bucket "
-                    f"join would stream ~{mass:,} candidate rows "
-                    f"through the verify (budget "
-                    f"{max_candidates_per_epoch:,}). The pinned "
-                    f"{n_bits // bands}-bit bands are under-sized for "
-                    f"the accumulated corpus — re-sign the store at a "
-                    f"wider geometry (bits-per-band ≈ log2(corpus / 64)),"
-                    f" shrink the micro-batch (maxFilesPerTrigger), or "
-                    f"raise max_candidates_per_epoch if the verify CPU "
-                    f"can take it."
+                refuse_over_budget(
+                    f"rhp_near_dedup_stream (epoch {epoch_id})",
+                    mass, max_candidates_per_epoch,
+                    f"The pinned {n_bits // bands}-bit bands are "
+                    f"under-sized for the accumulated corpus — re-sign the "
+                    f"store at a wider geometry (bits-per-band ≈ "
+                    f"log2(corpus / 64)), shrink the micro-batch "
+                    f"(maxFilesPerTrigger), or raise "
+                    f"max_candidates_per_epoch if the verify CPU can take "
+                    f"it.",
+                    "max_candidates_per_epoch",
                 )
         a = sigs_new.select(
             F.col("band").alias("band_a"),

@@ -65,7 +65,7 @@ def test_semdedup_auto_k_consumer_respects_its_own_budget(spark):
     emb = _read_emb(spark)
     n = emb.count()
     k = semdedup_auto_k(n)
-    assert k == 16  # min_k floor at 500 rows — and ≠ the registered 128
+    assert k == 16  # SEMDEDUP_MIN_K floor at 500 rows — and ≠ the registered 128
 
     cents = emb.orderBy("vec_id").limit(k)
     out = semantic_dedup(

@@ -140,7 +140,7 @@ def test_rhp_escalate_bits_fits_the_budget(spark):
     assert rhp_candidate_estimate(emb, chosen, 2, dim=_DIM) <= budget
 
 
-def test_rhp_auto_escalation_completes_and_matches_pinned(spark):
+def test_rhp_auto_escalation_completes_and_matches_pinned(spark, monkeypatch):
     """An auto call whose initial law-sized geometry exceeds the budget
     must COMPLETE (not refuse) and return exactly the pinned result at
     the escalated width — auto is sizing, never semantics.
@@ -149,9 +149,9 @@ def test_rhp_auto_escalation_completes_and_matches_pinned(spark):
     cosine ≈ 0.479 — ADVICE r11: at 0.8 both sides were empty and the
     equality was vacuous), so the compared result sets are non-empty
     and the identity is exercised on real rows. The law's starting
-    geometry is asserted explicitly: target_bucket=2n puts the raw law
-    at 1-bit bands, but rhp_auto_bits floors at min_band_bits=8, so
-    the escalation starts from 8-bit bands (16 total), not 1-bit."""
+    geometry is asserted explicitly: RHP_TARGET_BUCKET=2n puts the raw
+    law at 1-bit bands, but rhp_auto_bits floors at RHP_MIN_BAND_BITS=8,
+    so the escalation starts from 8-bit bands (16 total), not 1-bit."""
     from clinical_trials_data_pipeline_analyis_spark.operators.similarity import (
         rhp_auto_bits,
     )
@@ -159,7 +159,8 @@ def test_rhp_auto_escalation_completes_and_matches_pinned(spark):
     emb = _emb(spark)
     n = emb.count()
     budget = max(50, n // 2)
-    assert rhp_auto_bits(n, bands=2, target_bucket=2 * n) == 16  # 8-bit floor
+    monkeypatch.setattr(similarity, "RHP_TARGET_BUCKET", 2 * n)
+    assert rhp_auto_bits(n, bands=2) == 16  # 8-bit floor
     # Same 16-bit law start as the auto call, so both walk the same
     # probe sequence and land on the same escalated width.
     chosen = rhp_escalate_geometry(
@@ -172,7 +173,7 @@ def test_rhp_auto_escalation_completes_and_matches_pinned(spark):
             key,
             rhp_near_duplicates(
                 emb, 0.3, n_bits="auto", bands=2, dim=_DIM,
-                max_candidates=budget, target_bucket=2 * n,
+                max_candidates=budget,
             ).collect(),
         )
     )
@@ -200,12 +201,13 @@ def test_rhp_pinned_refusal_unchanged(spark):
         ).count()
 
 
-def test_rhp_escalate_bits_stops_at_ceiling(spark):
-    """An unsatisfiable budget (0) must stop at max_band_bits, not loop:
-    exact-dup collisions survive any width, so some corpora can never
-    fit an arbitrarily small budget and the ceiling is the exit."""
+def test_rhp_escalate_bits_stops_at_ceiling(spark, monkeypatch):
+    """An unsatisfiable budget (0) must stop at RHP_MAX_BAND_BITS, not
+    loop: exact-dup collisions survive any width, so some corpora can
+    never fit an arbitrarily small budget and the ceiling is the exit."""
     emb = _emb(spark)
+    monkeypatch.setattr(similarity, "RHP_MAX_BAND_BITS", 3)
     chosen = rhp_escalate_geometry(
-        emb, 2, 2, max_candidates=0, dim=_DIM, max_band_bits=3
+        emb, 2, 2, max_candidates=0, dim=_DIM
     ).n_bits
     assert chosen == 6  # 2 bands x 3-bit ceiling

@@ -88,15 +88,14 @@ def test_escalation_uses_at_most_two_probes_beyond_law(spark, monkeypatch):
     assert geom.n_bits == bb * 2
 
 
-def test_unsatisfiable_budget_jumps_straight_to_ceiling(spark):
+def test_unsatisfiable_budget_jumps_straight_to_ceiling(spark, monkeypatch):
     """ADVICE r11: the old loop walked +1 bit per full signing pass —
     up to ~22 serial corpus passes to the 30-bit ceiling. A budget no
     width can satisfy must now cost TWO probes: the law geometry, then
     the ceiling."""
     emb = _emb(spark)
-    geom = rhp_escalate_geometry(
-        emb, 2, 2, max_candidates=0, dim=_DIM, max_band_bits=3
-    )
+    monkeypatch.setattr(similarity, "RHP_MAX_BAND_BITS", 3)
+    geom = rhp_escalate_geometry(emb, 2, 2, max_candidates=0, dim=_DIM)
     assert geom.n_bits == 6 and not geom.fits
     assert len(geom.probes) == 2
     assert geom.probes[-1][0] == 3  # second probe is the ceiling itself
@@ -123,7 +122,7 @@ def test_escalation_record_carries_recall_and_law(spark):
     assert "law 16 bits x 2 bands" in d and "Charikar recall" in d
 
 
-def test_auto_escalation_logs_the_geometry(spark, caplog):
+def test_auto_escalation_logs_the_geometry(spark, caplog, monkeypatch):
     """Auto mode must emit the warning naming law geometry, measured
     mass, chosen geometry, and recall estimate (ADVICE r11)."""
     import logging
@@ -131,13 +130,14 @@ def test_auto_escalation_logs_the_geometry(spark, caplog):
     emb = _emb(spark)
     n = emb.count()
     budget = max(50, n // 2)
+    monkeypatch.setattr(similarity, "RHP_TARGET_BUCKET", 2 * n)
     with caplog.at_level(
         logging.WARNING,
         logger="clinical_trials_data_pipeline_analyis_spark.similarity",
     ):
         rhp_near_duplicates(
             emb, 0.3, n_bits="auto", bands=2, dim=_DIM,
-            max_candidates=budget, target_bucket=2 * n,
+            max_candidates=budget,
         ).count()
     msgs = [r.getMessage() for r in caplog.records]
     assert any(
@@ -219,15 +219,15 @@ def test_min_recall_flows_through_the_operator(spark):
     assert auto == pinned and auto
 
 
-def test_min_recall_unachievable_refuses_loudly(spark):
+def test_min_recall_unachievable_refuses_loudly(spark, monkeypatch):
     """No geometry can hold 2x the corpus's all-pairs mass under a
     1-candidate budget AND 0.99 recall: the refusal must name both
     constraints and the remedies."""
     emb = _emb(spark)
+    monkeypatch.setattr(similarity, "RHP_MAX_BANDS", 3)
     with pytest.raises(ValueError, match="meets BOTH the candidate budget"):
         rhp_escalate_geometry(
-            emb, 16, 2, max_candidates=1, dim=_DIM,
-            min_recall=0.999, max_bands=3,
+            emb, 16, 2, max_candidates=1, dim=_DIM, min_recall=0.999,
         )
 
 

@@ -54,6 +54,91 @@ def test_lsh_bands_validated_before_min_recall(spark):
             lsh_candidate_pairs(sigs, "doc_id", bands=bad)
 
 
+def test_rhp_bands_validated_before_min_recall(spark, tmp_path):
+    """RHP shares the LSH banding check: bands=0 used to raise
+    ZeroDivisionError and bands=-2 an opaque Spark AnalysisException.
+    The batch operator refuses before any recall floor; the stream
+    refuses at construction, before its first epoch could pin the bad
+    geometry in the store's sidecar."""
+    from clinical_trials_data_pipeline_analyis_spark.operators.similarity import (
+        rhp_near_duplicates,
+    )
+    from clinical_trials_data_pipeline_analyis_spark.streaming import (
+        rhp_near_dedup_stream,
+    )
+
+    schema = "vec_id LONG, embedding ARRAY<DOUBLE>"
+    emb = spark.createDataFrame(
+        [(i, [1.0, 0.0, float(i), 0.5]) for i in range(4)], schema
+    )
+    src = tmp_path / "empty_src"
+    src.mkdir()
+    stream = spark.readStream.schema(schema).parquet(str(src))
+    store = tmp_path / "store"
+    for bad in (0, -2, 3):  # 3 does not divide n_bits=8
+        with pytest.raises(ValueError, match="positive divisor"):
+            rhp_near_duplicates(emb, 0.9, n_bits=8, bands=bad, dim=4)
+        with pytest.raises(ValueError, match="positive divisor"):
+            rhp_near_duplicates(
+                emb, 0.9, n_bits=8, bands=bad, dim=4, min_recall=0.5
+            )
+    for bad in (0, -2):  # auto sizes n_bits as a multiple of bands
+        with pytest.raises(ValueError, match="positive divisor"):
+            rhp_near_duplicates(
+                emb, 0.9, n_bits="auto", bands=bad, dim=4, max_candidates=100
+            )
+    for bad in (0, -2, 3):
+        with pytest.raises(ValueError, match="positive divisor"):
+            rhp_near_dedup_stream(
+                stream, out_path=str(tmp_path / "out"),
+                store_path=str(store), checkpoint=str(tmp_path / "ckpt"),
+                threshold=0.9, n_bits=8, bands=bad, dim=4,
+            )
+    assert not store.exists()
+
+
+def test_auto_modes_share_the_budget_refusal(spark):
+    """Every 'auto' geometry sizes against a budget, so each refuses
+    without one, in the same words: bands='auto', max_df='auto' and
+    n_bits='auto' (which used to run the n-only sizing law unchecked)."""
+    from clinical_trials_data_pipeline_analyis_spark.operators.dedup import (
+        lsh_candidate_pairs,
+        minhash_signatures,
+        ngram_jaccard_pairs,
+    )
+    from clinical_trials_data_pipeline_analyis_spark.operators.similarity import (
+        rhp_near_duplicates,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"some text about topic {i}") for i in range(4)],
+        ["doc_id", "text"],
+    )
+    emb = spark.createDataFrame(
+        [(i, [1.0, 0.0, float(i), 0.5]) for i in range(4)],
+        "vec_id LONG, embedding ARRAY<DOUBLE>",
+    )
+    with pytest.raises(
+        ValueError, match="n_bits='auto' needs a max_candidates budget"
+    ):
+        rhp_near_duplicates(
+            emb, 0.9, n_bits="auto", bands=2, dim=4, max_candidates=None
+        )
+    with pytest.raises(
+        ValueError, match="bands='auto' needs a max_candidates budget"
+    ):
+        lsh_candidate_pairs(
+            minhash_signatures(docs, "doc_id", "text"), "doc_id",
+            bands="auto", max_candidates=None,
+        )
+    with pytest.raises(
+        ValueError, match="max_df='auto' needs a max_join_rows budget"
+    ):
+        ngram_jaccard_pairs(
+            docs, "doc_id", "text", max_df="auto", max_join_rows=None
+        )
+
+
 # --------------------------------------------------------------------
 # Ask #4: the cap-consequence probe
 # --------------------------------------------------------------------

@@ -263,10 +263,10 @@ def test_decode_metadata_null_id_raises_named_error(spark):
 
 # --------------------------------------- SemDeDup cell-size guard (a45)
 def test_semdedup_max_cell_guard(spark):
-    """VERDICT r7 ask #7 (a45 watch item): with a FIXED centroid count
-    the within-cell scan is O(n^2/k); max_cell makes that contract
-    enforceable — an under-provisioned quantizer refuses fast, naming
-    the largest cells, instead of quietly going quadratic."""
+    """With a FIXED centroid count the within-cell scan is O(n^2/k); the
+    candidate budget makes that contract enforceable — an
+    under-provisioned quantizer refuses fast, naming the largest cells,
+    instead of quietly going quadratic."""
     from clinical_trials_data_pipeline_analyis_spark.operators.similarity import (
         semantic_dedup,
         semantic_pair_candidates,
@@ -276,23 +276,24 @@ def test_semdedup_max_cell_guard(spark):
     emb = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
     cents = emb.filter(F.col("vec_id") < 1)  # ONE centroid: one 12-row cell
     with pytest.raises(ValueError) as exc:
-        semantic_dedup(emb, cents, threshold=0.9, max_cell=5)
+        # 66 within-cell pairs: the budget a 5-row cell ceiling allows
+        semantic_dedup(emb, cents, threshold=0.9, max_candidates=10)
     msg = str(exc.value)
-    assert "max_cell=5" in msg and "centroids" in msg
+    assert "largest cells: [(0, 12)]" in msg and "centroids" in msg
 
-    # default (None) keeps the historical behavior: same input runs
+    # the default budget keeps the historical behavior: same input runs
     out = semantic_dedup(emb, cents, threshold=0.9)
     assert out.count() == 12
 
-    # and a guarded run whose cells are all under the ceiling matches
-    # the unguarded result exactly
+    # and a guarded run whose cells all fit the budget matches the
+    # unguarded result exactly
     blocked = (
         emb.selectExpr("vec_id", "embedding AS vec")
         .selectExpr("vec_id", "vec", "vec_id % 4 AS centroid_id")
         .localCheckpoint()
     )
-    got = semantic_pair_candidates(blocked, 0.9, max_cell=5).collect()
-    want = semantic_pair_candidates(blocked, 0.9).collect()
+    got = semantic_pair_candidates(blocked, 0.9, max_candidates=12).collect()
+    want = semantic_pair_candidates(blocked, 0.9, max_candidates=None).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
 

@@ -5,8 +5,8 @@ Covers the round-8 verdict asks and ADVICE items:
   shape — the 1M rung measured k=128 grinding 25 min into an OOM where
   the guard now refuses in seconds naming the k-growth law);
 - completion modes for the two corpus-sized models: rhp_auto_bits /
-  n_bits="auto" (bits ≈ log2(n/target_bucket)) and semdedup_auto_k
-  (k ≈ n/target_cell), with auto==pinned equality at the resolution
+  n_bits="auto" (bits ≈ log2(n/RHP_TARGET_BUCKET)) and semdedup_auto_k
+  (k ≈ n/SEMDEDUP_TARGET_CELL), with auto==pinned equality at the resolution
   point where they coincide;
 - the ngram_jaccard_pairs guard's EXACT Σ df(df−1)/2 accounting
   (ADVICE: the old Σdf² overstated ~2× and fired at half the budget);
@@ -139,7 +139,7 @@ def test_rhp_auto_bits_growth_law():
     assert rhp_auto_bits(262_144, bands=4) == 48
     assert rhp_auto_bits(500_000, bands=4) == 52
     assert rhp_auto_bits(1_000_000, bands=4) == 56
-    # floor: tiny corpora never go below min_band_bits
+    # floor: tiny corpora never go below RHP_MIN_BAND_BITS
     assert rhp_auto_bits(100, bands=4) == 32
     assert rhp_auto_bits(0, bands=2) == 16
 
@@ -174,7 +174,7 @@ def test_semdedup_auto_k_recipe():
     )
 
     # the measured rungs: 512 at 1M (the geometry that completes), 256
-    # at 500k; floor at min_k for tiny corpora
+    # at 500k; floor at SEMDEDUP_MIN_K for tiny corpora
     assert semdedup_auto_k(1_000_000) == 512
     assert semdedup_auto_k(500_000) == 256
     assert semdedup_auto_k(1_000) == 16
