@@ -241,3 +241,30 @@ def cosine_similarity(
         l2_norm(a, dim=dim, use_flat=use_flat)
         * l2_norm(b, dim=dim, use_flat=use_flat),
     )
+
+
+def pair_cosine(
+    a: str,
+    b: str,
+    norm_a: str,
+    norm_b: str,
+    dim: int | None = None,
+    use_flat: bool = False,
+) -> Column:
+    """Rounded cosine of a vector pair whose L2 norms are already
+    columns: ``round(try_divide(dot(a, b), norm_a * norm_b), 6)``, the
+    verify every pair scan and centroid scoring runs. Norms computed
+    once per vector leave the dot as the only per-pair fold — the same
+    scalar sequence as ``cosine_similarity``, so values are
+    bit-identical to it (after the rounding). All four operands are
+    column names; the expression is one parsed SQL string.
+    ``dim``/``use_flat`` select the dot's form as in ``dot``."""
+    a_sql, b_sql = _ident(a), _ident(b)
+    d = (
+        _dot_flat_sql(a_sql, b_sql, dim)
+        if use_flat and dim is not None
+        else _dot_fold_sql(a_sql, b_sql)
+    )
+    return F.expr(
+        f"round(try_divide({d}, {_ident(norm_a)} * {_ident(norm_b)}), 6)"
+    )

@@ -33,7 +33,6 @@ from .similarity import (
     brute_force_topk,
     embedding_duplicate_pairs,
     ivf_assign,
-    ivf_probe_assign,
     quantize_embeddings,
     semantic_dedup,
     train_ivf,
@@ -85,7 +84,6 @@ __all__ = [
     "brute_force_topk",
     "embedding_duplicate_pairs",
     "ivf_assign",
-    "ivf_probe_assign",
     "quantize_embeddings",
     "semantic_dedup",
     "train_ivf",

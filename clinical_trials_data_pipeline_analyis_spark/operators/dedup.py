@@ -25,6 +25,7 @@ algorithms", STOC 2002; Manku et al., WWW 2007 for near-dup detection).
 from __future__ import annotations
 
 import logging
+from collections.abc import Callable, Sequence
 from functools import reduce
 from typing import NoReturn
 
@@ -93,6 +94,64 @@ def pair_mass(
         F.sum(pairs).alias("pairs"), F.sum("_n").alias("rows")
     ).collect()[0]
     return int(row["pairs"] or 0), int(row["rows"] or 0)
+
+
+def bucket_pairs(
+    left: DataFrame,
+    keys: Sequence[str],
+    id_col: str,
+    payload: Sequence[str] = (),
+    right: DataFrame | None = None,
+    against: bool = False,
+    place: Callable[[DataFrame, str], DataFrame] | None = None,
+) -> DataFrame:
+    """The bucket equi-join :func:`pair_mass` prices, which every
+    near-duplicate operator runs: rows of ``left`` joined with the rows
+    of ``right`` (default ``left``) that agree on every ``keys`` column.
+    The keys, ``id_col`` and each ``payload`` column ride each side,
+    suffixed ``_a`` (left) and ``_b`` (right), so a caller verifies its
+    candidates in the join's own projection (verify-in-join) instead of
+    re-joining the payload onto the pair stream.
+
+    Two modes, as in :func:`pair_mass`: symmetric keeps
+    ``id_a < id_b`` (each unordered pair once); ``against=True`` keeps
+    ``id_a != id_b`` (every left row against every right row of its
+    bucket, self-pairs dropped).
+
+    Physical choices stay with the caller: spread, broadcast hints, cap
+    semi-joins and salt grids go on the frames it passes in, and
+    ``place(side, suffix)`` runs on each suffixed side before the join,
+    for a choice that must name a suffixed column (a repartition on the
+    key)."""
+
+    def side(df: DataFrame, s: str) -> DataFrame:
+        out = df.selectExpr(
+            *[f"`{c}` AS `{c}_{s}`" for c in (*keys, id_col, *payload)]
+        )
+        return out if place is None else place(out, s)
+
+    order = "!=" if against else "<"
+    cond = [f"`{k}_a` = `{k}_b`" for k in keys]
+    cond.append(f"`{id_col}_a` {order} `{id_col}_b`")
+    return side(left, "a").join(
+        side(left if right is None else right, "b"), F.expr(" AND ".join(cond))
+    )
+
+
+#: The two 16-bit band keys (lo, hi) of a 32-bit SimHash fingerprint, as
+#: SQL over its ``simhash`` column: the band joins, their bucket-size
+#: tables, the cap probe, the rescue's other-half windows and the
+#: streaming twin all key on these.
+SIMHASH_HALVES = (
+    "simhash % 65536",
+    "CAST(shiftright(simhash, 16) & 65535 AS BIGINT)",
+)
+
+
+def hamming(a: str, b: str) -> Column:
+    """The SimHash verify: Hamming distance ``bit_count(a ^ b)`` (INT)
+    between the fingerprint columns named ``a`` and ``b``."""
+    return F.expr(f"CAST(bit_count(`{a}` ^ `{b}`) AS INT)")
 
 
 # The guard policy of the near-duplicate operators (MinHash LSH, SimHash,
@@ -279,9 +338,7 @@ def lsh_band_table(
     signatures: DataFrame,
     num_hashes: int,
     bands: int,
-    *cols: Column,
-    band: str = "band",
-    bsig: str = "bsig",
+    *cols: Column | str,
 ) -> DataFrame:
     """One row per (document, band): ``cols`` plus the band number and
     the band signature (the concatenated ``h*`` components of that
@@ -293,10 +350,10 @@ def lsh_band_table(
         [
             signatures.select(
                 *cols,
-                F.lit(b).alias(band),
+                F.lit(b).alias("band"),
                 F.concat(
                     *[F.col(f"h{b * rows + r}") for r in range(rows)]
-                ).alias(bsig),
+                ).alias("bsig"),
             )
             for b in range(bands)
         ],
@@ -316,8 +373,8 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """Banded LSH: docs sharing any band signature become a candidate pair.
 
-    The band table is derived twice with renamed columns so the
-    self-join is unambiguous; the join key (band, bsig) is the bucket.
+    The pairs are :func:`bucket_pairs` over the (band, bsig) buckets of
+    :func:`lsh_band_table`.
 
     ``materialize`` (default on) checkpoints the signature table first:
     the two band-table sides otherwise each embed — and re-execute — the
@@ -473,32 +530,19 @@ def lsh_candidate_pairs(
     if materialize:
         signatures = signatures.transform(cut_lineage())
 
-    def sig_cols(side: str) -> list[Column]:
-        if not estimate:
-            return []
-        return [
-            F.col(f"h{i}").alias(f"_{side}_h{i}") for i in range(num_hashes)
-        ]
-
+    payload = [f"h{i}" for i in range(num_hashes)] if estimate else []
     left = lsh_band_table(
-        signatures, num_hashes, bands,
-        F.col(id_col).alias("doc_a"), *sig_cols("a"),
+        signatures, num_hashes, bands, F.col(id_col).alias("doc"), *payload
     )
-    right = lsh_band_table(
-        signatures if against is None else against, num_hashes, bands,
-        F.col(id_col).alias("doc_b"), *sig_cols("b"),
-        band="band_b", bsig="bsig_b",
+    right = (
+        None
+        if against is None
+        else lsh_band_table(
+            against, num_hashes, bands, F.col(id_col).alias("doc"), *payload
+        )
     )
     if max_candidates is not None and measured_est is None:
-        est, _ = pair_mass(
-            left,
-            ["band", "bsig"],
-            against=(
-                None
-                if against is None
-                else lsh_band_table(against, num_hashes, bands)
-            ),
-        )
+        est, _ = pair_mass(left, ["band", "bsig"], against=right)
         if est > max_candidates:
             refuse_over_budget(
                 op, est, max_candidates,
@@ -513,23 +557,16 @@ def lsh_candidate_pairs(
                 f"can take it.",
             )
 
-    id_cond = (
-        F.col("doc_a") < F.col("doc_b")
-        if against is None
-        else F.col("doc_a") != F.col("doc_b")
-    )
-    joined = left.join(
-        right,
-        (F.col("band") == F.col("band_b"))
-        & (F.col("bsig") == F.col("bsig_b"))
-        & id_cond,
+    joined = bucket_pairs(
+        left, ["band", "bsig"], "doc", payload,
+        right=right, against=against is not None,
     )
     if not estimate:
         return joined.select("doc_a", "doc_b").distinct()
     agree: Column = F.lit(0)
     for i in range(num_hashes):
         agree = agree + F.when(
-            F.col(f"_a_h{i}") == F.col(f"_b_h{i}"), 1
+            F.col(f"h{i}_a") == F.col(f"h{i}_b"), 1
         ).otherwise(0)
     return (
         joined.select(
@@ -596,11 +633,10 @@ def _cap_stats_frame(
     of re-aggregating the O(n) fingerprint table once per consumer
     (4 redundant aggregate subtrees in the final job). Values are
     identical — same groupBy, same counts."""
-    lo_h = (F.col("simhash") % 65536).alias("_hlo")
-    hi_h = F.expr(
-        "CAST(shiftright(simhash, 16) & 65535 AS BIGINT)"
-    ).alias("_hhi")
-    docs = simhash_df.select(lo_h, hi_h)
+    docs = simhash_df.select(
+        F.expr(SIMHASH_HALVES[0]).alias("_hlo"),
+        F.expr(SIMHASH_HALVES[1]).alias("_hhi"),
+    )
     if sizes is not None:
         sz_lo = sizes[0].selectExpr("half AS _hlo", "_n AS _n_lo")
         sz_hi = sizes[1].selectExpr("half AS _hhi", "_n AS _n_hi")
@@ -744,16 +780,17 @@ def simhash_candidates(
     rescue_identical: bool = False,
     rescue_near: bool = False,
     rescue_depth: int = 1,
-    cap_stats: bool = True,
     min_visible: float | None = None,
 ) -> DataFrame:
-    """Candidate pairs sharing either 16-bit half of the 32-bit simhash.
+    """Candidate pairs sharing either 16-bit half of the 32-bit simhash
+    (``SIMHASH_HALVES``).
 
-    Banded exactly like ``lsh_candidate_pairs``: one equi-join per band
-    (the lo half, the hi half), unioned and de-duplicated. An OR of the
-    two equalities would have no extractable equi-key and Spark would
-    plan a BroadcastNestedLoopJoin (O(n^2) compares); as two hash
-    equi-joins the cost scales with the 16-bit bucket sizes instead
+    Banded exactly like ``lsh_candidate_pairs``: one :func:`bucket_pairs`
+    equi-join per band (the lo half, the hi half), unioned and
+    de-duplicated. An OR of the two equalities would have no extractable
+    equi-key and Spark would plan a BroadcastNestedLoopJoin (O(n^2)
+    compares); as two hash equi-joins the cost scales with the 16-bit
+    bucket sizes instead
     (tests/test_plan_shapes.py asserts no nested-loop join survives).
 
     ``max_bucket`` (off by default) is the hot-bucket cap: a band
@@ -775,14 +812,14 @@ def simhash_candidates(
 
     ``_max_hamming`` (internal — ``simhash_near_duplicates`` is the
     public surface) switches on VERIFY-IN-JOIN: the fingerprint rides
-    each band side (8 bytes), the Hamming distance is computed inside
-    the band join's codegen projection, and the ``<= _max_hamming``
-    filter runs BEFORE the union+distinct — so the distinct shuffles
-    only surviving pairs instead of every candidate. At the sf10
-    audit's 35,692-doc half-bucket (Σn² ≈ 4.9e9 candidate rows) a
-    candidates→distinct→re-join-fingerprints shape's distinct ships
-    4.9e9 rows of which the verify then
-    discards nearly all — verify-in-join ships only what survives.
+    each band side (8 bytes), the Hamming distance (:func:`hamming`) is
+    computed inside the band join's codegen projection, and the
+    ``<= _max_hamming`` filter runs BEFORE the union+distinct — so the
+    distinct shuffles only surviving pairs instead of every candidate.
+    At the sf10 audit's 35,692-doc half-bucket (Σn² ≈ 4.9e9 candidate
+    rows) a candidates→distinct→re-join-fingerprints shape's distinct
+    ships 4.9e9 rows of which the verify then discards nearly all —
+    verify-in-join ships only what survives.
     Same result set: hamming is a deterministic function of the pair,
     so distinct over (doc_a, doc_b, hamming) equals pair-distinct.
 
@@ -877,9 +914,9 @@ def simhash_candidates(
     Cost shape: the level-2 windows and joins run only on the hot
     residue (rows whose level-1 sub-bucket exceeded the cap).
 
-    ``cap_stats`` / ``min_visible`` (the cap's recall consequence
-    lives ON the operator, not only in BASELINE tables): with a cap set and ``cap_stats`` on (default),
-    ONE cheap probe runs before the plan is returned — per-band bucket
+    ``min_visible`` (the cap's recall consequence lives ON the
+    operator, not only in BASELINE tables): with a cap set, ONE cheap
+    probe runs before the plan is returned — per-band bucket
     sizes (a 16-bit groupBy, ≤65,536 rows per band, broadcast back
     onto the fingerprint table) aggregated to (a) the skipped
     candidate-mass fraction (Σ n(n−1)/2 over capped buckets vs all —
@@ -897,8 +934,7 @@ def simhash_candidates(
     measured max_bucket that would unbind, the rescue flags, and the
     MinHash-LSH route. Probe cost: two ≤65k-row partial-aggregates +
     two broadcast joins over the O(n) 8-byte fingerprint table — no
-    wide shuffle; ``cap_stats=False`` opts out (values never change
-    either way).
+    wide shuffle. The probe never changes values.
     """
     if rescue_depth not in (1, 2):
         raise ValueError(
@@ -923,14 +959,17 @@ def simhash_candidates(
     check_floor("simhash_candidates", "min_visible", min_visible)
     if materialize:
         simhash_df = simhash_df.transform(cut_lineage())
-    lo = (F.col("simhash") % 65536).alias("half")
-    hi = F.expr("CAST(shiftright(simhash, 16) & 65535 AS BIGINT)").alias("half")
+    # Each band's key, with the OTHER half the rescue sub-bands on.
+    halves = {
+        "lo": (F.expr(SIMHASH_HALVES[0]), F.expr(SIMHASH_HALVES[1])),
+        "hi": (F.expr(SIMHASH_HALVES[1]), F.expr(SIMHASH_HALVES[0])),
+    }
 
-    def half_sizes(half: Column) -> DataFrame:
+    def half_sizes(key: str) -> DataFrame:
         """Per-half-bucket occupancy: <=65,536 rows, map-side partial
         aggregated — the broadcastable cap decision table."""
         return (
-            simhash_df.select(half)
+            simhash_df.select(halves[key][0].alias("half"))
             .groupBy("half")
             .agg(F.count(F.lit(1)).alias("_n"))
         )
@@ -938,33 +977,42 @@ def simhash_candidates(
     # ONE bucket-size table per band, lazily truncated and SHARED by the
     # cap probe, the cap semi-join, and the rescue's hot-half
     # complement: a table per consumer would re-aggregate the O(n)
-    # fingerprint table under its own broadcast build — four redundant
-    # aggregate subtrees in the candidate job on top of the probe's two.
-    # The probe's collect is the first action and materializes the
-    # <=65,536-row blocks; every later consumer reads them back. With
-    # cap_stats=False nothing materializes them up front and the
-    # candidate job computes them lazily exactly where the old subtrees
-    # sat — never worse. Values identical (same groupBy, same counts).
+    # fingerprint table under its own broadcast build. The probe's
+    # collect is the first action and materializes the <=65,536-row
+    # blocks; every later consumer reads them back. Values identical
+    # (same groupBy, same counts).
     size_of: dict[str, DataFrame] = {}
     if max_bucket is not None:
         size_of = {
-            "lo": half_sizes(lo).transform(cut_lineage(eager=False)),
-            "hi": half_sizes(hi).transform(cut_lineage(eager=False)),
+            key: half_sizes(key).transform(cut_lineage(eager=False))
+            for key in halves
         }
-    if max_bucket is not None and (cap_stats or min_visible is not None):
         _simhash_cap_probe(
             simhash_df, max_bucket, min_visible,
             rescue_identical=rescue_identical, rescue_near=rescue_near,
             sizes=(size_of["lo"], size_of["hi"]),
         )
 
-    def pairs_on(key: str, half: Column) -> DataFrame:
-        sim_a = (
-            [F.col("simhash").alias("_sim_a")]
-            if _max_hamming is not None
-            else []
+    def band_pairs(side: DataFrame, keys: list[str]) -> DataFrame:
+        """:func:`bucket_pairs` of ``side`` (id ``doc``) on ``keys``;
+        with ``_max_hamming`` the fingerprint rides both sides and the
+        Hamming verify runs in the join's projection."""
+        if _max_hamming is None:
+            return bucket_pairs(side, keys, "doc").select("doc_a", "doc_b")
+        return (
+            bucket_pairs(side, keys, "doc", ["simhash"])
+            .select(
+                "doc_a",
+                "doc_b",
+                hamming("simhash_a", "simhash_b").alias("hamming"),
+            )
+            .filter(f"hamming <= {_max_hamming}")
         )
-        base = simhash_df.select(F.col(id_col).alias("doc_a"), half, *sim_a)
+
+    def pairs_on(key: str) -> DataFrame:
+        base = simhash_df.select(
+            F.col(id_col).alias("doc"), halves[key][0].alias("half"), "simhash"
+        )
         if max_bucket is not None:
             # Cap via a BROADCAST SEMI-JOIN against the (<=65,536-row)
             # bucket-size table. A window count would force
@@ -980,51 +1028,30 @@ def simhash_candidates(
                 "half"
             )
             base = base.join(F.broadcast(ok), "half", "left_semi")
-        a = base
-        b_cols = [F.col("doc_a").alias("doc_b"), F.col("half").alias("half_b")] + (
-            [F.col("_sim_a").alias("_sim_b")] if _max_hamming is not None else []
-        )
-        b = base.select(*b_cols)
-        joined = a.join(
-            b,
-            (F.col("half") == F.col("half_b"))
-            & (F.col("doc_a") < F.col("doc_b")),
-        )
-        if _max_hamming is None:
-            return joined.select("doc_a", "doc_b")
-        return joined.select(
-            "doc_a",
-            "doc_b",
-            F.bit_count(F.col("_sim_a").bitwiseXOR(F.col("_sim_b")))
-            .cast("int")
-            .alias("hamming"),
-        ).filter(F.col("hamming") <= _max_hamming)
+        return band_pairs(base, ["half"])
 
-    out = pairs_on("lo", lo).unionByName(pairs_on("hi", hi))
+    out = pairs_on("lo").unionByName(pairs_on("hi"))
     if rescue_near and max_bucket is not None:
-        other_of = {
-            "lo": F.expr("CAST(shiftright(simhash, 16) & 65535 AS BIGINT)"),
-            "hi": (F.col("simhash") % 65536).cast("long"),
-        }
 
-        def rescue_on(key: str, half: Column, other: Column) -> DataFrame:
+        def rescue_on(key: str) -> DataFrame:
             # The rescue operates on the COMPLEMENT of the cap filter:
             # the same broadcast size table, semi-joined on the hot
             # (n > cap) halves — no window shuffle of the full
             # fingerprint table here either (see pairs_on).
+            half, other = halves[key]
             hot_halves = size_of[key].filter(
                 F.col("_n") > max_bucket
             ).select("half")
             members = simhash_df.select(
                 F.col(id_col).alias("_id"),
-                half,
+                half.alias("half"),
                 other.alias("_other"),
-                F.col("simhash").alias("_sim"),
+                "simhash",
             ).join(F.broadcast(hot_halves), "half", "left_semi")
-            # one row per distinct fingerprint; hub = the family's
-            # min id (the same hub rescue_identical stars to)
-            fp = members.groupBy("half", "_sim", "_other").agg(
-                F.min("_id").alias("_hub")
+            # one row per distinct fingerprint; its id ``doc`` is the
+            # family hub, min id (the same hub rescue_identical stars to)
+            fp = members.groupBy("half", "simhash", "_other").agg(
+                F.min("_id").alias("doc")
             )
             # smallest w with n_fp <= max_bucket * 2^w — exact integer
             # comparison chain (float log2 would risk oracle-divergent
@@ -1047,18 +1074,14 @@ def simhash_candidates(
             # four more level-2 join sides) — up to 12 references, each
             # of which would otherwise re-execute the members window +
             # fingerprint dedup + width window from the raw fingerprint
-            # table (without it the a96 plan held 184 Window nodes / 90
-            # Exchanges from exactly this re-execution; a93 56/42).
-            # fp is tiny (distinct fingerprints of hot buckets), so the
-            # blocks materialize once inside the first consuming job and
-            # every arm reads them back. Lazy, not eager: when the cap
-            # never binds the frame is empty and construction must not
-            # pay materialization jobs for it. Values unchanged.
+            # table. fp is tiny (distinct fingerprints of hot buckets),
+            # so the blocks materialize once inside the first consuming
+            # job and every arm reads them back. Lazy, not eager: when
+            # the cap never binds the frame is empty and construction
+            # must not pay materialization jobs for it. Values unchanged.
             fp = fp.transform(cut_lineage(eager=False))
-            # one parsed string per sub-band key / join side / verify
-            # projection: the Column-API forms cost ~0.1s of
-            # py4j per hub_join x 12 hub_joins at depth 2; trees and
-            # values unchanged
+            # one parsed string per sub-band key: the Column-API forms
+            # cost py4j round-trips per arm; trees and values unchanged
             sub_keys = (
                 F.expr("_other & (shiftleft(CAST(1 AS BIGINT), _w) - 1)"),
                 F.expr(
@@ -1066,30 +1089,6 @@ def simhash_candidates(
                     "& (shiftleft(CAST(1 AS BIGINT), _w) - 1)"
                 ),
             )
-            def hub_join(side: DataFrame, keys: list[str]) -> DataFrame:
-                a = side.selectExpr(
-                    *keys, "_hub AS doc_a", "_sim AS _sim_a"
-                )
-                b = side.selectExpr(
-                    *[f"{k} AS {k}_b" for k in keys],
-                    "_hub AS doc_b",
-                    "_sim AS _sim_b",
-                )
-                cond = F.expr(
-                    " AND ".join(
-                        ["doc_a < doc_b"]
-                        + [f"{k} = {k}_b" for k in keys]
-                    )
-                )
-                joined = a.join(b, cond)
-                if _max_hamming is None:
-                    return joined.select("doc_a", "doc_b")
-                return joined.selectExpr(
-                    "doc_a",
-                    "doc_b",
-                    "CAST(bit_count(_sim_a ^ _sim_b) AS INT) AS hamming",
-                ).filter(F.expr(f"hamming <= {_max_hamming}"))
-
             rescued = None
             for j, sub in enumerate(sub_keys):
                 side = fp.withColumn("_sub", sub)
@@ -1113,7 +1112,7 @@ def simhash_candidates(
                     # already-truncated fp, which is cheaper than a
                     # materialization of its own.
                     side = side.transform(cut_lineage(eager=False))
-                part = hub_join(
+                part = band_pairs(
                     side.filter(F.col("_m") <= max_bucket), ["half", "_sub"]
                 )
                 rescued = part if rescued is None else rescued.unionByName(part)
@@ -1164,13 +1163,11 @@ def simhash_candidates(
                             ),
                         ).filter(F.expr(f"_m2 <= {int(max_bucket)}"))
                         rescued = rescued.unionByName(
-                            hub_join(s2, ["half", "_sub", "_sub2"])
+                            band_pairs(s2, ["half", "_sub", "_sub2"])
                         )
             return rescued
 
-        out = out.unionByName(
-            rescue_on("lo", lo, other_of["lo"])
-        ).unionByName(rescue_on("hi", hi, other_of["hi"]))
+        out = out.unionByName(rescue_on("lo")).unionByName(rescue_on("hi"))
     if rescue_identical and max_bucket is not None:
         hubs = simhash_df.groupBy("simhash").agg(
             F.min(id_col).alias("_hub")
@@ -1217,7 +1214,6 @@ def simhash_near_duplicates(
     rescue_identical: bool = False,
     rescue_near: bool = False,
     rescue_depth: int = 1,
-    cap_stats: bool = True,
     min_visible: float | None = None,
 ) -> DataFrame:
     """Verified SimHash near-duplicates: banded candidates filtered by
@@ -1226,7 +1222,7 @@ def simhash_near_duplicates(
 
     Returns ``(doc_a, doc_b, hamming)`` for candidate pairs whose
     fingerprints differ in at most ``max_hamming`` bits. The distance is
-    ``bit_count(xor(a, b))`` — O(1) per candidate, computed INSIDE the
+    :func:`hamming` — O(1) per candidate, computed INSIDE the
     band join's projection (verify-in-join): the fingerprint
     rides each band side, the Hamming filter runs before the
     union+distinct, so the distinct shuffles only SURVIVING pairs and
@@ -1240,15 +1236,15 @@ def simhash_near_duplicates(
     finer-width escalation (hub-level near edges for the
     skipped buckets, restoring family-to-family connectivity the cap
     dropped; see ``simhash_candidates`` for the sub-band geometry and
-    its measured recall). ``cap_stats``/``min_visible`` forward to the candidate stage's cap-consequence probe: a binding
+    its measured recall). A cap runs the candidate stage's
+    cap-consequence probe: a binding
     cap logs the skipped candidate mass and the invisible-doc fraction
     (with MinHash-LSH routing advice anchored on the measured recall
     fixtures), and ``min_visible`` refuses below a doc-visibility
     floor — see ``simhash_candidates``.
     """
-    # Spliced into SQL text by the rescue joins: a float, bool or
-    # out-of-range value would compare differently there than in the
-    # main band join.
+    # Spliced into the verify filter's SQL text: only an int bit count
+    # is a meaningful radius there.
     if (
         not isinstance(max_hamming, int)
         or isinstance(max_hamming, bool)
@@ -1270,7 +1266,6 @@ def simhash_near_duplicates(
         rescue_identical=rescue_identical,
         rescue_near=rescue_near,
         rescue_depth=rescue_depth,
-        cap_stats=cap_stats,
         min_visible=min_visible,
     )
 
@@ -1372,7 +1367,9 @@ def ngram_jaccard_pairs(
     the result is the exact Jaccard of the reduced sets rather than an
     approximation of the full ones.
 
-    The join is additionally GUARDED (same contract as
+    The inverted-index join is :func:`bucket_pairs` on the shingle,
+    aggregated to per-pair intersections before the size lookups. It
+    is additionally GUARDED (same contract as
     ``embedding_duplicate_pairs``'s block guard): before building the
     pair join, one bounded aggregate computes its exact fan-out (the
     :func:`pair_mass` accounting over the — possibly df-filtered —
@@ -1484,10 +1481,10 @@ def ngram_jaccard_pairs(
             sh = filter_hot_shingles(sh, fit_df).transform(cut_lineage())
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("set_size")).transform(cut_lineage())
 
-    a = sh.select(F.col(id_col).alias("doc_a"), F.col("shingle").alias("sh_a"))
-    b = sh.select(F.col(id_col).alias("doc_b"), F.col("shingle").alias("sh_b"))
     inter = (
-        a.join(b, (F.col("sh_a") == F.col("sh_b")) & (F.col("doc_a") < F.col("doc_b")))
+        bucket_pairs(
+            sh.select(F.col(id_col).alias("doc"), "shingle"), ["shingle"], "doc"
+        )
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("intersection"))
     )

@@ -444,10 +444,10 @@ def _probe_cells(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    from .similarity import ivf_probe_assign
+    from .similarity import ivf_assign_topp
 
-    return ivf_probe_assign(
-        queries, centroids, nprobe=nprobe, id_col=id_col, vec_col=vec_col
+    return ivf_assign_topp(
+        queries, centroids, nprobe, id_col=id_col, vec_col=vec_col
     ).select(
         F.col("vec_id").alias("query_id"), F.col("centroid_id").alias("p_cent")
     )

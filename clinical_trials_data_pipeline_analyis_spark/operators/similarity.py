@@ -29,14 +29,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from ..checkpoint import cut_lineage
 
-from ..functions.vectors import (
-    cosine_similarity,
-    dot,
-    dot_literal_sql,
-    l2_norm,
-)
+from ..functions.vectors import dot_literal_sql, l2_norm, pair_cosine
 from .dedup import (
     _spread,
+    bucket_pairs,
     check_auto_budget,
     check_banding,
     check_floor,
@@ -65,9 +61,9 @@ def brute_force_topk(
     Ranking key is (rounded cosine DESC, candidate id ASC): rounding makes
     the order reproducible across engines; the id breaks remaining ties.
 
-    Norms ride each side once (the cross-term dot is the only per-pair
-    work — same scalar sequence as ``cosine_similarity``, bit-identical);
-    ``dim`` is the (default-inert) width hint from ``functions.vectors``.
+    Norms ride each side once, so :func:`pair_cosine`'s dot is the only
+    per-pair work; ``dim`` is the (default-inert) width hint from
+    ``functions.vectors``.
     """
     q = queries.select(
         F.col(id_col).alias("query_id"),
@@ -86,13 +82,7 @@ def brute_force_topk(
         .select(
             "query_id",
             "candidate_id",
-            F.round(
-                F.try_divide(
-                    dot("qvec", "cvec", dim=dim),
-                    F.col("_qn") * F.col("_cn"),
-                ),
-                6,
-            ).alias("cosine"),
+            pair_cosine("qvec", "cvec", "_qn", "_cn", dim=dim).alias("cosine"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -114,7 +104,7 @@ def _centroid_scores(
 ) -> DataFrame:
     """The |corpus| x k cross-scoring projection both assignment forms
     share: centroids broadcast, norms once per side, per-pair work =
-    the dot alone — same scalar sequence as ``cosine_similarity``."""
+    :func:`pair_cosine`'s dot alone."""
     c = centroids.select(
         F.col(id_col).alias("centroid_id"),
         F.col(vec_col).alias("cvec"),
@@ -128,12 +118,8 @@ def _centroid_scores(
     return v.crossJoin(F.broadcast(c)).select(
         F.col("vec").alias("vec_id"),
         "centroid_id",
-        F.round(
-            F.try_divide(
-                dot("vvec", "cvec", dim=dim, use_flat=use_flat),
-                F.col("_vn") * F.col("_cn"),
-            ),
-            6,
+        pair_cosine(
+            "vvec", "cvec", "_vn", "_cn", dim=dim, use_flat=use_flat
         ).alias("cosine"),
     )
 
@@ -157,9 +143,9 @@ def ivf_assign(
     computed once per SIDE before the join (the cross-term dot is the
     only per-pair fold) — the same scalar sequence on the same doubles
     as ``cosine_similarity``, so results are bit-identical and oracle
-    parity is unaffected. The round-8 sf10 sweep measured the old form
-    (3 folds per pair + window sort over 6.4e7 rows) at 62s for the
-    bare assignment; this is the pq_encode rewrite applied to its
+    parity is unaffected. An sf10 sweep measured the window form (3
+    folds per pair + window sort over 6.4e7 rows) at 62s for the bare
+    assignment; this is the pq_encode rewrite applied to its
     coarse-quantizer sibling.
 
     ``use_flat`` (requires ``dim``) routes the cross-term dot through
@@ -199,6 +185,13 @@ def ivf_assign(
     )
 
 
+def check_probes(probes: int) -> None:
+    """Refuse a multi-probe count below one: every vector must keep at
+    least its home cell."""
+    if probes < 1:
+        raise ValueError(f"probes must be >= 1, got {probes}")
+
+
 def ivf_assign_topp(
     embeddings: DataFrame,
     centroids: DataFrame,
@@ -224,8 +217,7 @@ def ivf_assign_topp(
     single-assignment cell recall over planted dup pairs is 0.8115 at
     auto-k, top-2 probing recovers 0.9901.
     """
-    if probes < 1:
-        raise ValueError(f"probes must be >= 1, got {probes}")
+    check_probes(probes)
     scored = _centroid_scores(
         embeddings, centroids, id_col, vec_col, dim, use_flat
     )
@@ -242,12 +234,17 @@ def ivf_assign_topp(
 #: Above this many vectors in one block, ``embedding_duplicate_pairs``
 #: refuses (or RHP-routes) the exact pair scan: the within-block cost is
 #: |block|²/2 pairs — 16k vectors is ~134M pairs, which the salt-gridded
-#: scan clears in seconds, while the round-7 sf10 sweep measured blocks
-#: just under a 65k ceiling (~60k vectors, ~5e9 pairs across the
-#: sub-ceiling blocks) grinding for 15+ minutes on 32 cores: a ceiling
-#: that admits multi-1e9-pair blocks is not a guard. Quadratic growth
-#: past the ceiling is a bug, not a workload — route it.
+#: scan clears in seconds, while an sf10 sweep measured blocks just
+#: under a 65k ceiling (~60k vectors, ~5e9 pairs across the sub-ceiling
+#: blocks) grinding for 15+ minutes on 32 cores: a ceiling that admits
+#: multi-1e9-pair blocks is not a guard. Quadratic growth past the
+#: ceiling is a bug, not a workload — route it.
 MAX_EXACT_BLOCK = 16384
+
+#: Join cells of ``embedding_duplicate_pairs``' salt grid: each block's
+#: pair scan spreads over this many reducers, and every pair meets in
+#: exactly one of them.
+SALT_GRID = 8
 
 
 def embedding_duplicate_pairs(
@@ -256,25 +253,25 @@ def embedding_duplicate_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     top_n: int = 50,
-    grid: int = 8,
     max_block: int | None = MAX_EXACT_BLOCK,
     oversize: str = "error",
     dim: int = 64,
 ) -> DataFrame:
     """Top near-duplicate pairs by cosine, blocked by ``block_col``.
 
-    The self-join is SALT-GRIDDED: joining on the block alone puts a
-    block's entire |block|² pair fan-out into ONE reducer, so a single
-    hot block serializes the whole query — observed on the round-6 sf1
-    run, where a 15k-vector hot label (30% of the corpus, the realistic
+    The self-join (:func:`bucket_pairs` on (block, cell)) is
+    SALT-GRIDDED: joining on the block alone puts a block's entire
+    |block|² pair fan-out into ONE reducer, so a single hot block
+    serializes the whole query — observed on an sf1 run, where a
+    15k-vector hot label (30% of the corpus, the realistic
     skew-clustered shape) pinned two straggler tasks for tens of
     minutes while 30 cores idled. Replicating the LEFT side once per
     grid cell and bucketing the RIGHT side by id hash spreads those
-    pairs over ``grid`` join cells: every pair still meets exactly once
-    (the left copy tagged with the right row's cell), results are
+    pairs over ``SALT_GRID`` join cells: every pair still meets exactly
+    once (the left copy tagged with the right row's cell), results are
     IDENTICAL (the grid never appears in the output, so the DuckDB
     oracle is unchanged), and the hot block's quadratic work
-    parallelizes. Left-side replication costs ``grid`` x |vectors|
+    parallelizes. Left-side replication costs ``SALT_GRID`` x |vectors|
     shuffled rows — linear, the price for unserializing the quadratic
     term.
 
@@ -295,7 +292,6 @@ def embedding_duplicate_pairs(
     """
     if oversize not in ("error", "route"):
         raise ValueError(f"oversize must be 'error' or 'route', got {oversize!r}")
-    from ..functions.vectors import dot, l2_norm
     from ..operators.sampling import hash_bucket
 
     if max_block is not None:
@@ -340,7 +336,6 @@ def embedding_duplicate_pairs(
                 id_col,
                 vec_col,
                 top_n=top_n,
-                grid=grid,
                 max_block=None,
                 dim=dim,
             )
@@ -359,46 +354,33 @@ def embedding_duplicate_pairs(
     # dominates a pair scan (dot + 2 norms -> dot only; measured 2.5x
     # on the sf1 hot block). Same arithmetic and fold order as
     # cosine_similarity, so oracle parity is unaffected.
-    a = (
-        _spread(embeddings)
-        .select(
+    def side(df: DataFrame) -> DataFrame:
+        return df.select(
             F.col(block_col).alias("blk"),
-            F.col(id_col).alias("vec_a"),
-            F.col(vec_col).alias("va"),
-            l2_norm(vec_col, dim=dim).alias("_norm_a"),
+            F.col(id_col).alias("vec"),
+            F.col(vec_col).alias("v"),
+            l2_norm(vec_col, dim=dim).alias("_norm"),
         )
-        .withColumn(
-            "_cell",
-            F.explode(F.array(*[F.lit(i) for i in range(grid)])),
-        )
+
+    left = side(_spread(embeddings)).withColumn(
+        "_cell", F.explode(F.array(*[F.lit(i) for i in range(SALT_GRID)]))
     )
-    b = embeddings.select(
-        F.col(block_col).alias("blk_b"),
-        F.col(id_col).alias("vec_b"),
-        F.col(vec_col).alias("vb"),
-        l2_norm(vec_col, dim=dim).alias("_norm_b"),
-        (hash_bucket(F.col(id_col), grid)).cast("int").alias("_cell_b"),
+    right = side(embeddings).withColumn(
+        "_cell", hash_bucket(F.col("vec"), SALT_GRID).cast("int")
     )
-    pairs = a.join(
-        b,
-        (F.col("blk") == F.col("blk_b"))
-        & (F.col("_cell") == F.col("_cell_b"))
-        & (F.col("vec_a") < F.col("vec_b")),
+    pairs = bucket_pairs(
+        left, ["blk", "_cell"], "vec", ["v", "_norm"], right=right
     ).select(
-        F.col("blk").alias("label"),
+        F.col("blk_a").alias("label"),
         "vec_a",
         "vec_b",
-        F.round(
-            F.try_divide(
-                # use_flat: the one dot rides |block|^2/2 pair rows —
-                # the round-8 sf10 A/B measured the flat form at 121.8s
-                # vs 280.1s on the fold for the routed x08 (500k
-                # vectors); at sf0.1 the compile constant keeps the
-                # query within its baseline row. See functions/vectors.
-                dot("va", "vb", dim=dim, use_flat=True),
-                F.col("_norm_a") * F.col("_norm_b"),
-            ),
-            6,
+        # use_flat: the one dot rides |block|^2/2 pair rows — an sf10
+        # A/B measured the flat form at 121.8s vs 280.1s on the fold
+        # for the routed x08 (500k vectors); at sf0.1 the compile
+        # constant keeps the query within its baseline row. See
+        # functions/vectors.
+        pair_cosine(
+            "v_a", "v_b", "_norm_a", "_norm_b", dim=dim, use_flat=True
         ).alias("cosine"),
     )
     return pairs.orderBy(F.desc("cosine"), F.asc("vec_a"), F.asc("vec_b")).limit(
@@ -417,7 +399,8 @@ def _rhp_block_pairs(
 ) -> DataFrame:
     """Within-block near-duplicate candidates for OVERSIZED blocks:
     random-hyperplane LSH bucketing INSIDE each block (candidates =
-    pairs sharing (block, band, band_sig)), exact-cosine verified —
+    :func:`bucket_pairs` on (block, band, band_sig)), verified by
+    :func:`pair_cosine` in the join —
     the subquadratic route ``embedding_duplicate_pairs`` falls back to
     when a block exceeds its exact-scan ceiling. Same output columns
     as the exact scan (label, vec_a, vec_b, cosine).
@@ -427,18 +410,16 @@ def _rhp_block_pairs(
     spreads to ~40 vectors per bucket instead of re-serializing into a
     near-quadratic bucket join (the first cut used 4-bit bands — 16
     signatures — and a 155k block produced ~10^9 candidate pairs, i.e.
-    the exact scan wearing an LSH hat; caught on the round-7 sf10
-    sweep). Near-dup pairs (cosine ~0.98, theta ~0.2 rad) collide per
-    12-bit band with p ~ 0.45, so 4 bands give ~91% recall per the
-    Charikar bound; EXACT duplicates always collide."""
-    from ..functions.vectors import l2_norm
-
-    # Verify-in-join (round 10, same discipline as rhp_near_duplicates):
-    # vector + norm + block ride the signature rows, the cosine is
-    # computed in the bucket join's projection, and the distinct dedups
-    # narrow (label, pair, cosine) rows — the old shape re-joined the
-    # wide vectors onto the candidate stream, O(candidates x vec_size)
-    # shuffle on exactly the blocks that are oversized by definition.
+    the exact scan wearing an LSH hat; caught on an sf10 sweep).
+    Near-dup pairs (cosine ~0.98, theta ~0.2 rad) collide per 12-bit
+    band with p ~ 0.45, so 4 bands give ~91% recall per the Charikar
+    bound; EXACT duplicates always collide."""
+    # Verify-in-join, as in rhp_near_duplicates: vector + norm + block
+    # ride the signature rows and the cosine is computed in the bucket
+    # join's projection, so the distinct dedups narrow (label, pair,
+    # cosine) rows — re-joining the wide vectors onto the candidate
+    # stream would shuffle O(candidates x vec_size) on exactly the
+    # blocks that are oversized by definition.
     base = embeddings.select(
         F.col(block_col).alias("_blk"),
         F.col(id_col).alias("_id"),
@@ -454,41 +435,16 @@ def _rhp_block_pairs(
         vec_col="_vec",
         keep=("_vec", "_blk", "_norm"),
     )
-    a = sigs.select(
-        F.col("_blk").alias("blk_a"),
-        F.col("band").alias("band_a"),
-        F.col("band_sig").alias("sig_a"),
-        F.col("_id").alias("vec_a"),
-        F.col("_vec").alias("va"),
-        F.col("_norm").alias("_norm_a"),
-    )
-    b = sigs.select(
-        F.col("_blk").alias("blk_b"),
-        F.col("band").alias("band_b"),
-        F.col("band_sig").alias("sig_b"),
-        F.col("_id").alias("vec_b"),
-        F.col("_vec").alias("vb"),
-        F.col("_norm").alias("_norm_b"),
-    )
     return (
-        a.join(
-            b,
-            (F.col("blk_a") == F.col("blk_b"))
-            & (F.col("band_a") == F.col("band_b"))
-            & (F.col("sig_a") == F.col("sig_b"))
-            & (F.col("vec_a") < F.col("vec_b")),
+        bucket_pairs(
+            sigs, ["_blk", "band", "band_sig"], "_id", ["_vec", "_norm"]
         )
         .select(
-            F.col("blk_a").alias("label"),
-            "vec_a",
-            "vec_b",
-            F.round(
-                F.try_divide(
-                    dot("va", "vb", dim=dim),
-                    F.col("_norm_a") * F.col("_norm_b"),
-                ),
-                6,
-            ).alias("cosine"),
+            F.col("_blk_a").alias("label"),
+            F.col("_id_a").alias("vec_a"),
+            F.col("_id_b").alias("vec_b"),
+            pair_cosine("_vec_a", "_vec_b", "_norm_a", "_norm_b", dim=dim)
+            .alias("cosine"),
         )
         .distinct()
     )
@@ -621,57 +577,6 @@ def quantize_embeddings(
             q.alias("q"),
             "scale",
         )
-    )
-
-
-def ivf_probe_assign(
-    embeddings: DataFrame,
-    centroids: DataFrame,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """Multi-probe IVF assignment: each vector keeps its ``nprobe``
-    nearest centroids (rank 1 = the home cell used for indexing; ranks
-    2..nprobe are the extra cells a QUERY probes at search time). The
-    standard recall knob of an IVF index — single-probe search misses
-    neighbors that fall just across a cell boundary; probing p cells
-    multiplies candidate count (and recall) by ~p while still scanning
-    only p/|centroids| of the corpus.
-
-    Same plan shape as ``ivf_assign``: broadcast centroids, per-vector
-    rank — one extra output row per probe, no extra shuffle. Norms ride
-    each side once (bit-identical to cosine_similarity — see
-    ivf_assign); the top-nprobe rank keeps the window form since it
-    needs more than the argmin.
-    """
-    c = centroids.select(
-        F.col(id_col).alias("centroid_id"),
-        F.col(vec_col).alias("cvec"),
-        l2_norm(vec_col, dim=dim).alias("_cn"),
-    )
-    v = _spread(embeddings).select(
-        F.col(id_col).alias("vec"),
-        F.col(vec_col).alias("vvec"),
-        l2_norm(vec_col, dim=dim).alias("_vn"),
-    )
-    scored = v.crossJoin(F.broadcast(c)).select(
-        F.col("vec").alias("vec_id"),
-        "centroid_id",
-        F.round(
-            F.try_divide(
-                dot("vvec", "cvec", dim=dim),
-                F.col("_vn") * F.col("_cn"),
-            ),
-            6,
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.asc("centroid_id"))
-    return (
-        scored.withColumn("probe_rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("probe_rank") <= nprobe)
-        .select("vec_id", "centroid_id", "cosine", "probe_rank")
     )
 
 
@@ -1238,8 +1143,9 @@ def rhp_near_duplicates(
     label-blocked ``embedding_duplicate_pairs`` needs a partition
     column; this derives its own buckets from the geometry).
 
-    Candidates = pairs sharing any band signature; verify = exact
-    cosine >= ``threshold``, computed INSIDE the bucket join's output
+    Candidates = :func:`bucket_pairs` on (band, band_sig), pairs
+    sharing any band signature; verify = exact :func:`pair_cosine` >=
+    ``threshold``, computed INSIDE the bucket join's output
     projection (a pair colliding in k bands is verified k times and
     deduped by a distinct over the surviving rows — identical result
     set, see the in-body note). Returns (vec_a, vec_b, cosine).
@@ -1356,8 +1262,6 @@ def rhp_near_duplicates(
     # candidate stream exists only inside whole-stage codegen, and the
     # distinct dedups the (far smaller) surviving pairs.
     nparts = max(embeddings.sparkSession.sparkContext.defaultParallelism, 2)
-    from ..functions.vectors import l2_norm
-
     sigs = (
         rhp_signatures(
             embeddings, n_bits, bands, dim, seed, id_col, vec_col,
@@ -1405,39 +1309,14 @@ def rhp_near_duplicates(
     # the distinct. A pair colliding in k bands is verified k times
     # (bounded extra CPU, k <= bands) and deduped by the distinct —
     # cosine is a deterministic function of the pair, so distinct on
-    # (vec_a, vec_b, cosine) equals distinct on the pair. Same
-    # arithmetic/fold order as cosine_similarity (norms once per vector
-    # row, dot per pair): oracle parity unaffected.
-    a = sigs.select(
-        F.col("band").alias("band_a"),
-        F.col("band_sig").alias("sig_a"),
-        F.col(id_col).alias("vec_a"),
-        F.col(vec_col).alias("va"),
-        F.col("_norm").alias("_norm_a"),
-    )
-    b = sigs.select(
-        F.col("band").alias("band_b"),
-        F.col("band_sig").alias("sig_b"),
-        F.col(id_col).alias("vec_b"),
-        F.col(vec_col).alias("vb"),
-        F.col("_norm").alias("_norm_b"),
-    )
+    # (vec_a, vec_b, cosine) equals distinct on the pair.
     return (
-        a.join(
-            b,
-            (F.col("band_a") == F.col("band_b"))
-            & (F.col("sig_a") == F.col("sig_b"))
-            & (F.col("vec_a") < F.col("vec_b")),
-        )
+        bucket_pairs(sigs, ["band", "band_sig"], id_col, [vec_col, "_norm"])
         .select(
-            "vec_a",
-            "vec_b",
-            F.round(
-                F.try_divide(
-                    dot("va", "vb", dim=dim),
-                    F.col("_norm_a") * F.col("_norm_b"),
-                ),
-                6,
+            F.col(f"{id_col}_a").alias("vec_a"),
+            F.col(f"{id_col}_b").alias("vec_b"),
+            pair_cosine(
+                f"{vec_col}_a", f"{vec_col}_b", "_norm_a", "_norm_b", dim=dim
             ).alias("cosine"),
         )
         .filter(F.col("cosine") >= F.lit(threshold))
@@ -1483,9 +1362,10 @@ def semantic_pair_candidates(
     max_candidates: int | None = MAX_SEMDEDUP_CANDIDATE_ROWS,
     _keep_cos: bool = False,
 ) -> DataFrame:
-    """The SemDeDup pair scan: same-cell pairs with cosine >=
-    ``threshold``, from a (vec_id, vec, centroid_id, cos_centroid)
-    table. Exposed so plan tests can pin both physical shapes.
+    """The SemDeDup pair scan: same-cell pairs (:func:`bucket_pairs` on
+    the cell) with :func:`pair_cosine` >= ``threshold``, from a (vec_id,
+    vec, centroid_id, cos_centroid) table. Exposed so plan tests can pin
+    both physical shapes.
 
     COST MODEL (the sf10 sweep's a45 watch item): the within-cell
     scan is quadratic in cell size, so with a FIXED centroid count k the
@@ -1526,8 +1406,6 @@ def semantic_pair_candidates(
       grows with the corpus, so the cell-keyed shuffle is the parallel
       scale path: each task joins whole cells, no broadcast ceiling.
     """
-    from ..functions.vectors import l2_norm
-
     n_rows = None
     if max_candidates is not None:
         # ``blocked`` is checkpointed by semantic_dedup, so the guard
@@ -1562,58 +1440,40 @@ def semantic_pair_candidates(
             )
 
     # per-VECTOR norms ride the join sides so the per-PAIR work is the
-    # dot product alone (same fold order as cosine_similarity — parity
-    # unaffected; ~2.5x less HOF work in the pair verify)
-    a_cols = [
-        F.col("vec_id").alias("vec_a"),
-        F.col("vec").alias("va"),
-        l2_norm("vec", dim=dim).alias("_norm_a"),
-        F.col("centroid_id").alias("cell_a"),
-    ]
-    b_cols = [
-        F.col("vec_id").alias("vec_b"),
-        F.col("vec").alias("vb"),
-        l2_norm("vec", dim=dim).alias("_norm_b"),
-        F.col("centroid_id").alias("cell_b"),
-    ]
-    pair_cond = (F.col("cell_a") == F.col("cell_b")) & (
-        F.col("vec_a") < F.col("vec_b")
-    )
+    # dot product alone (~2.5x less HOF work in the pair verify)
+    def side(df: DataFrame) -> DataFrame:
+        return df.select(
+            F.col("vec_id").alias("vec"),
+            F.col("vec").alias("v"),
+            l2_norm("vec", dim=dim).alias("_norm"),
+            F.col("centroid_id").alias("cell"),
+        )
+
     if n_rows is None:
         n_rows = blocked.count()
     if n_rows <= broadcast_limit:
-        joined = _spread(blocked).select(*a_cols).join(
-            F.broadcast(blocked.select(*b_cols)), pair_cond
+        joined = bucket_pairs(
+            side(_spread(blocked)), ["cell"], "vec", ["v", "_norm"],
+            right=F.broadcast(side(blocked)),
         )
     else:
         nparts = max(
             blocked.sparkSession.sparkContext.defaultParallelism, 2
         )
-        joined = (
-            blocked.select(*a_cols)
-            .repartition(nparts, F.col("cell_a"))
-            .join(
-                blocked.select(*b_cols).repartition(
-                    nparts, F.col("cell_b")
-                ),
-                pair_cond,
-            )
+        joined = bucket_pairs(
+            side(blocked), ["cell"], "vec", ["v", "_norm"],
+            place=lambda df, s: df.repartition(nparts, F.col(f"cell_{s}")),
         )
     return (
         joined.select(
             "vec_a",
             "vec_b",
-            F.round(
-                F.try_divide(
-                    # use_flat: the SemDeDup pair scan is the corpus
-                    # family's heaviest dot site (Σcell² pair rows) —
-                    # the sf10 A/B measured a45 at 390.2s flat
-                    # vs 932.4s fold on 500k vectors. See
-                    # functions/vectors.py for the tradeoff rule.
-                    dot("va", "vb", dim=dim, use_flat=True),
-                    F.col("_norm_a") * F.col("_norm_b"),
-                ),
-                6,
+            # use_flat: the SemDeDup pair scan is the corpus family's
+            # heaviest dot site (Σcell² pair rows) — an sf10 A/B
+            # measured a45 at 390.2s flat vs 932.4s fold on 500k
+            # vectors. See functions/vectors.py for the tradeoff rule.
+            pair_cosine(
+                "v_a", "v_b", "_norm_a", "_norm_b", dim=dim, use_flat=True
             ).alias("pair_cos"),
         )
         .filter(F.col("pair_cos") >= F.lit(threshold))
@@ -1665,7 +1525,6 @@ def semantic_dedup(
     dim: int | None = None,
     max_candidates: int | None = MAX_SEMDEDUP_CANDIDATE_ROWS,
     probes: int = 1,
-    percolation_check: bool = True,
 ) -> DataFrame:
     """SemDeDup (Abbas et al., arXiv:2303.09540): semantic deduplication
     by embedding similarity. Cluster the corpus with a coarse quantizer,
@@ -1714,16 +1573,13 @@ def semantic_dedup(
     CONSTRUCTION-TIME ACTIONS (the same honesty note as
     ``semantic_pair_candidates``'s ``blocked.count()``): building this
     frame runs connected_components' edge checkpoint and budget collect
-    eagerly (and its star rounds above the edge budget), plus — with
-    ``percolation_check`` (default on) — ONE extra two-row aggregate
-    over the component labels for the percolation tripwire (warns when
-    the largest component exceeds 20% of the corpus: at threshold 0.40
-    the clustered 500k rung collapsed to a single component, i.e.
-    SemDeDup would drop essentially everything — a threshold-semantics
-    problem the caller must see, not infer from a tiny keep count).
-    Pass ``percolation_check=False`` to skip the tripwire aggregate
-    when the caller owns threshold hygiene (callers that never act on
-    the returned frame shouldn't pay it).
+    eagerly (and its star rounds above the edge budget), plus ONE
+    extra two-row aggregate over the component labels for the
+    percolation tripwire (warns when the largest component exceeds 20%
+    of the corpus: at threshold 0.40 the clustered 500k rung collapsed
+    to a single component, i.e. SemDeDup would drop essentially
+    everything — a threshold-semantics problem the caller must see, not
+    infer from a tiny keep count).
     """
     from .dedup import connected_components
 
@@ -1740,8 +1596,7 @@ def semantic_dedup(
     # compile constant exceeds its savings. centroids is small by
     # contract (it is about to be broadcast), so the count is one cheap
     # action.
-    if probes < 1:
-        raise ValueError(f"probes must be >= 1, got {probes}")
+    check_probes(probes)
     k = centroids.count()
     assign_flat = dim is not None and k >= IVF_ASSIGN_FLAT_MIN_K
     if probes == 1:
@@ -1841,13 +1696,11 @@ def semantic_dedup(
     # would drop essentially everything. That is a threshold-semantics
     # problem the caller must see, not infer from a tiny keep count:
     # one bounded two-row aggregate (max component size vs total) on
-    # the CC output, WARN past 20%. Values are untouched. Opt out via
-    # percolation_check=False (the aggregate is construction-time
-    # cost — see the docstring's actions note).
-    stats = percolation_check and comp.groupBy("component").agg(
+    # the CC output, WARN past 20%. Values are untouched.
+    stats = comp.groupBy("component").agg(
         F.count(F.lit(1)).alias("n")
     ).agg(F.max("n").alias("mx"), F.sum("n").alias("total")).collect()[0]
-    if stats and stats["total"] and stats["mx"] / stats["total"] > 0.20:
+    if stats["total"] and stats["mx"] / stats["total"] > 0.20:
         # Prescription: name the
         # smallest threshold the MEASURED cosine distribution suggests
         # would de-percolate, not just the symptom. Heuristic: a random

@@ -294,13 +294,12 @@ def simhash_near_dedup_stream(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 6,
-    bits: int = 32,
     max_candidates_per_epoch: int | None = MAX_SIMHASH_STREAM_CANDIDATES_PER_EPOCH,
 ):
     """Incremental SimHash near-dedup via ``foreachBatch`` — the
     streaming twin of ``operators.dedup.simhash_near_duplicates``
-    (same 16-bit half-bucket banding, same ``bit_count(xor)`` Hamming
-    verify computed INSIDE the bucket join), completing the family:
+    (the same ``bucket_pairs`` join on the ``SIMHASH_HALVES`` keys, the
+    same ``hamming`` verify computed INSIDE it), completing the family:
     MinHash (``near_dedup_docs_stream``), RHP
     (``streaming.similarity.rhp_near_dedup_stream``), and now SimHash
     each have a stream=batch-equality-tested incremental form.
@@ -335,13 +334,12 @@ def simhash_near_dedup_stream(
     mid-epoch refusal — same collect, no extra pass.
 
     Geometry: the half-bucket banding is 32-bit-specific (two 16-bit
-    halves — the same hardcoded split as the batch
-    ``simhash_candidates``), so ``bits`` must be 32 and the
-    constructor refuses anything else up front. The store still pins
-    ``{"bits": 32}`` through the same filesystem-agnostic sidecar as
-    the sibling twins, so a store written by any FUTURE width (or a
-    corrupted marker) fails the stream loudly rather than comparing
-    fingerprints that never collide meaningfully. ``max_hamming`` is
+    halves — the same split as the batch ``simhash_candidates``), so
+    fingerprints are always 32 bits. The store pins ``{"bits": 32}``
+    through the same filesystem-agnostic sidecar as the sibling twins,
+    so a store written by any other width (or a corrupted marker)
+    fails the stream loudly rather than comparing fingerprints that
+    never collide meaningfully. ``max_hamming`` is
     deliberately NOT pinned: the store holds full fingerprints, so the
     verify radius is a per-run query parameter, not store geometry.
 
@@ -352,18 +350,15 @@ def simhash_near_dedup_stream(
     Returns an unstarted ``DataStreamWriter``; ``.start()`` it. Flag
     output: (id_col, is_near_dup) partitioned by epoch_id.
     """
-    from ..operators.dedup import refuse_over_budget, simhash
+    from ..operators.dedup import (
+        SIMHASH_HALVES,
+        bucket_pairs,
+        hamming,
+        refuse_over_budget,
+        simhash,
+    )
 
-    if int(bits) != 32:
-        raise ValueError(
-            f"simhash_near_dedup_stream: bits={bits} is not supported — "
-            "the half-bucket banding is 32-bit-specific (two 16-bit "
-            "halves, matching the batch simhash_candidates). With a "
-            "narrower width the hi half degenerates to one global "
-            "bucket (quadratic history join); with a wider one the "
-            "extra bits never band. Use bits=32."
-        )
-    geometry = {"bits": int(bits)}
+    geometry = {"bits": 32}
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -371,23 +366,12 @@ def simhash_near_dedup_stream(
             spark, store_path, "_simhash_geometry", geometry,
             "simhash_near_dedup_stream",
         )
-        fps_new = simhash(batch_df, id_col, text_col, bits=bits).transform(
+        fps_new = simhash(batch_df, id_col, text_col).transform(
             cut_lineage(local_only=True)
         )
         history = read_history(spark, store_path, epoch_id, fps_new)
         all_fps = history.unionByName(fps_new)
-
-        lo = (F.col("simhash") % 65536).alias("half")
-        hi = F.expr("CAST(shiftright(simhash, 16) & 65535 AS BIGINT)").alias(
-            "half"
-        )
-
-        def side(df: DataFrame, half, prefix: str) -> DataFrame:
-            return df.select(
-                half,
-                F.col(id_col).alias(f"{prefix}_id"),
-                F.col("simhash").alias(f"{prefix}_sim"),
-            )
+        halves = [F.expr(h).alias("half") for h in SIMHASH_HALVES]
 
         if max_candidates_per_epoch is not None:
             # Exact per-epoch mass of the two asymmetric half joins,
@@ -396,7 +380,7 @@ def simhash_near_dedup_stream(
             # template-heavy stream warns BEFORE the budget refusal
             # lands mid-epoch. One collect per half, no extra pass.
             total, projected, max_occ = 0, 0, 0
-            for half in (lo, hi):
+            for half in halves:
                 mass, proj, occ = price_epoch_join(
                     fps_new.select(half), all_fps.select(half), ["half"]
                 )
@@ -439,23 +423,21 @@ def simhash_near_dedup_stream(
                 )
 
         dup_parts = []
-        for half in (lo, hi):
-            a = side(fps_new, half, "a")
-            b = side(all_fps, half, "b").withColumnRenamed("half", "half_b")
+        for half in halves:
+            # keep-first: a doc is a dup of LOWER ids only; Catalyst
+            # folds this filter into the join condition
             dup_parts.append(
-                a.join(
-                    b,
-                    (F.col("half") == F.col("half_b"))
-                    & (F.col("b_id") < F.col("a_id")),
+                bucket_pairs(
+                    fps_new.select(half, id_col, "simhash"),
+                    ["half"],
+                    id_col,
+                    ["simhash"],
+                    right=all_fps.select(half, id_col, "simhash"),
+                    against=True,
                 )
-                .select(
-                    "a_id",
-                    F.bit_count(
-                        F.col("a_sim").bitwiseXOR(F.col("b_sim"))
-                    ).cast("int").alias("hamming"),
-                )
-                .filter(F.col("hamming") <= max_hamming)
-                .select(F.col("a_id").alias(id_col))
+                .filter(F.col(f"{id_col}_b") < F.col(f"{id_col}_a"))
+                .filter(hamming("simhash_a", "simhash_b") <= max_hamming)
+                .select(F.col(f"{id_col}_a").alias(id_col))
             )
         dup_ids = dup_parts[0].unionByName(dup_parts[1])
         flags = keep_first_flags(fps_new, dup_ids, id_col)

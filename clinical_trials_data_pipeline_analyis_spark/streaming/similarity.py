@@ -189,8 +189,9 @@ def topp_centroids_expr(
     instead (a window is legal there; micro-batches are ordinary batch
     frames).
     """
-    if probes < 1:
-        raise ValueError(f"probes must be >= 1, got {probes}")
+    from ..operators.similarity import check_probes
+
+    check_probes(probes)
     if not centroid_rows:
         raise ValueError("centroid_rows must be non-empty")
     if len(centroid_rows) > MAX_LITERAL_CENTROIDS:
@@ -307,10 +308,9 @@ def assign_cells_foreach_batch(
     schema: (vec_id, centroid_id, cosine[, rank]) partitioned by
     epoch_id.
     """
-    from ..operators.similarity import ivf_assign, ivf_assign_topp
+    from ..operators.similarity import check_probes, ivf_assign, ivf_assign_topp
 
-    if probes < 1:
-        raise ValueError(f"probes must be >= 1, got {probes}")
+    check_probes(probes)
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -358,7 +358,8 @@ def rhp_near_dedup_stream(
 ):
     """Incremental embedding-cosine near-dedup via ``foreachBatch`` —
     the streaming twin of ``operators.similarity.rhp_near_duplicates``
-    (same sign-bit LSH bucketing, same verify-in-join exact cosine).
+    (same sign-bit LSH bucketing, the same ``bucket_pairs`` join with
+    its ``pair_cosine`` verify in the join).
 
     Each micro-batch's vectors are signed once (row-local projection,
     the vector and its norm riding WITH the signature exactly like the
@@ -408,8 +409,8 @@ def rhp_near_dedup_stream(
     output: (id_col, is_near_dup) partitioned by epoch_id.
     """
     from ..checkpoint import cut_lineage
-    from ..functions.vectors import dot, l2_norm
-    from ..operators.dedup import check_banding, refuse_over_budget
+    from ..functions.vectors import l2_norm, pair_cosine
+    from ..operators.dedup import bucket_pairs, check_banding, refuse_over_budget
     from ..operators.similarity import rhp_signatures
 
     # At construction: the first epoch pins the geometry sidecar before
@@ -457,39 +458,23 @@ def rhp_near_dedup_stream(
                     f"it.",
                     "max_candidates_per_epoch",
                 )
-        a = sigs_new.select(
-            F.col("band").alias("band_a"),
-            F.col("band_sig").alias("sig_a"),
-            F.col(id_col).alias("vec_a"),
-            F.col(vec_col).alias("va"),
-            F.col("_norm").alias("_norm_a"),
-        )
-        b = all_sigs.select(
-            F.col("band").alias("band_b"),
-            F.col("band_sig").alias("sig_b"),
-            F.col(id_col).alias("vec_b"),
-            F.col(vec_col).alias("vb"),
-            F.col("_norm").alias("_norm_b"),
-        )
+        # keep-first: a vector is a dup of LOWER ids only; Catalyst folds
+        # this filter into the join condition
+        id_a, id_b = F.col(f"{id_col}_a"), F.col(f"{id_col}_b")
         dup_ids = (
-            a.join(
-                b,
-                (F.col("band_a") == F.col("band_b"))
-                & (F.col("sig_a") == F.col("sig_b"))
-                & (F.col("vec_b") < F.col("vec_a")),
+            bucket_pairs(
+                sigs_new, ["band", "band_sig"], id_col, [vec_col, "_norm"],
+                right=all_sigs, against=True,
             )
-            .select(
-                "vec_a",
-                F.round(
-                    F.try_divide(
-                        dot(F.col("va"), F.col("vb"), dim=dim),
-                        F.col("_norm_a") * F.col("_norm_b"),
-                    ),
-                    6,
-                ).alias("cosine"),
+            .filter(id_b < id_a)
+            .filter(
+                pair_cosine(
+                    f"{vec_col}_a", f"{vec_col}_b", "_norm_a", "_norm_b",
+                    dim=dim,
+                )
+                >= F.lit(threshold)
             )
-            .filter(F.col("cosine") >= F.lit(threshold))
-            .select(F.col("vec_a").alias(id_col))
+            .select(id_a.alias(id_col))
         )
         flags = keep_first_flags(batch_df, dup_ids, id_col)
         write_epoch(flags, out_path, epoch_id)

@@ -1626,13 +1626,13 @@ QUALIFY rank <= 5
 )
 def a31_ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vectors import cosine_similarity
-    from ..operators.similarity import ivf_probe_assign
+    from ..operators.similarity import ivf_assign_topp
 
     emb = read_table(spark, sf_dir, "embeddings")
     centroids = emb.filter((F.col("vec_id") % 97 == 0) & (F.col("vec_id") < 12416))
 
     home = ivf_assign(emb, centroids, dim=_EMB_DIM).select("vec_id", "centroid_id")
-    probes = ivf_probe_assign(emb, centroids, nprobe=2, dim=_EMB_DIM).select(
+    probes = ivf_assign_topp(emb, centroids, 2, dim=_EMB_DIM).select(
         "vec_id", "centroid_id"
     )
 

@@ -67,12 +67,11 @@ def main() -> None:
         ("depth2", {"rescue_identical": True, "rescue_near": True,
                     "rescue_depth": 2}),
     ):
-        # cap_stats=False keeps the A/B legs comparable with the r13
-        # numbers (the round-14 cap probe is a constant ~1s aggregate,
-        # orthogonal to the rescue deltas this leg isolates)
+        # every leg pays the same cap probe (a constant ~1s aggregate),
+        # so the deltas between legs stay the rescue's own
         t0 = time.perf_counter()
         n = simhash_near_duplicates(
-            sims, "doc_id", 6, max_bucket=CAP, cap_stats=False, **kwargs
+            sims, "doc_id", 6, max_bucket=CAP, **kwargs
         ).count()
         legs[label] = {"pairs": n, "sec": round(time.perf_counter() - t0, 1)}
         print(label, legs[label], flush=True)

@@ -60,6 +60,7 @@ def test_semantic_dedup_auto_flat_rule(spark, monkeypatch):
 # the actual candidate mass and widens until it fits).
 # ---------------------------------------------------------------------
 from clinical_trials_data_pipeline_analyis_spark.operators.dedup import (  # noqa: E402
+    bucket_pairs,
     pair_mass,
 )
 from clinical_trials_data_pipeline_analyis_spark.operators.similarity import (  # noqa: E402
@@ -70,26 +71,15 @@ from clinical_trials_data_pipeline_analyis_spark.operators.similarity import (  
 )
 
 
-def _equi_join_rows(df, keys, against=None):
-    """Row count of the bucket equi-join itself — the number
-    ``pair_mass`` must predict without running it."""
-    a = df.select(F.col("id").alias("_id_a"), *keys)
-    b = (df if against is None else against).select(
-        F.col("id").alias("_id_b"), *[F.col(k).alias(f"{k}_b") for k in keys]
-    )
-    cond = [F.col(k) == F.col(f"{k}_b") for k in keys]
-    if against is None:
-        cond.append(F.col("_id_a") < F.col("_id_b"))
-    return a.join(b, cond).count()
-
-
 def test_rhp_candidate_estimate_matches_bucket_math(spark):
     """The narrow estimate must equal the row count of the (band,
-    band_sig) equi-join over the SAME geometry's signature table."""
+    band_sig) bucket join the operator runs, over the SAME geometry's
+    signature table."""
     emb = _emb(spark)
     est = rhp_candidate_estimate(emb, 8, 2, dim=_DIM)
-    sigs = rhp_signatures(emb, 8, 2, dim=_DIM).withColumnRenamed("vec_id", "id")
-    assert est == _equi_join_rows(sigs, ["band", "band_sig"]) and est > 0
+    sigs = rhp_signatures(emb, 8, 2, dim=_DIM)
+    joined = bucket_pairs(sigs, ["band", "band_sig"], "vec_id").count()
+    assert est == joined and est > 0
 
 
 _MASS_SCHEMA = "id long, band int, bsig string"
@@ -107,9 +97,10 @@ _MASS_ROWS = {
 @pytest.mark.parametrize("shape", sorted(_MASS_ROWS))
 def test_pair_mass_matches_equi_join(spark, shape, against):
     """pair_mass (the one accounting every candidate-budget guard uses)
-    must equal the row count of the join it prices — Σ n(n−1)/2 under
-    ``id_a < id_b``, Σ n_a·n_b against a second frame — and its row
-    count must equal the frame's; empty input gives (0, 0)."""
+    must equal the row count of the bucket_pairs join it prices —
+    Σ n(n−1)/2 under ``id_a < id_b``; against a second frame Σ n_a·n_b,
+    which also counts the self-pairs the join drops — and its row count
+    must equal the frame's; empty input gives (0, 0)."""
     df = spark.createDataFrame(_MASS_ROWS[shape], _MASS_SCHEMA)
     other = (
         spark.createDataFrame(_MASS_ROWS["spread"], _MASS_SCHEMA)
@@ -117,7 +108,11 @@ def test_pair_mass_matches_equi_join(spark, shape, against):
         else None
     )
     pairs, rows = pair_mass(df, ["band", "bsig"], against=other)
-    assert pairs == _equi_join_rows(df, ["band", "bsig"], other)
+    joined = bucket_pairs(
+        df, ["band", "bsig"], "id", right=other, against=against
+    ).count()
+    self_pairs = df.join(other, ["id", "band", "bsig"]).count() if against else 0
+    assert pairs == joined + self_pairs
     assert rows == len(_MASS_ROWS[shape])
     if shape == "empty":
         assert (pairs, rows) == (0, 0)

@@ -357,46 +357,6 @@ def test_ngram_auto_refuses_at_zero_surviving_mass(spark):
     )
 
 
-def test_semantic_dedup_percolation_check_optout(spark):
-    """ADVICE #4: percolation_check=False skips the tripwire aggregate;
-    values are identical either way."""
-    import math
-
-    from clinical_trials_data_pipeline_analyis_spark.operators.similarity import (
-        semantic_dedup,
-    )
-
-    # planted near-dups: base vectors plus tiny perturbations
-    import random
-
-    rng = random.Random(3)
-    rows = []
-    for i in range(24):
-        base = [rng.uniform(-1, 1) for _ in range(8)]
-        n = math.sqrt(sum(x * x for x in base))
-        rows.append((i, [x / n for x in base]))
-    for i in range(24, 30):
-        src = rows[i - 24][1]
-        rows.append((i, [x + 0.001 for x in src]))
-    emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    cents = emb.filter(F.col("vec_id") % 6 == 0)
-
-    kw = dict(threshold=0.98, dim=8)
-    a = sorted(
-        map(tuple, semantic_dedup(emb, cents, **kw).collect())
-    )
-    b = sorted(
-        map(
-            tuple,
-            semantic_dedup(
-                emb, cents, percolation_check=False, **kw
-            ).collect(),
-        )
-    )
-    assert a == b
-    assert any(r[3] == 0 for r in a)  # non-vacuous: dups exist
-
-
 # ---------------------------------------------------------------------
 # Theme 3 — streaming twin for multi-probe cell assignment (VERDICT r12
 # ask #7): ivf_assign_topp's window is stream-illegal; the top-p fold
@@ -675,15 +635,6 @@ def test_simhash_stream_matches_batch(spark, tmp_path):
     assert len(got) == n
     assert {d for d, f in got.items() if f} == want_dups
     assert want_dups  # non-vacuous: the sf0.001 corpus has dup chains
-
-    # non-32 widths are refused at CONSTRUCTION (the half banding is
-    # 32-bit-specific; a 16-bit fingerprint's hi half is one global
-    # bucket)
-    with pytest.raises(ValueError, match="bits=16"):
-        simhash_near_dedup_stream(
-            spark.readStream.schema(docs.schema).parquet(f"{chunks}/c*"),
-            out_path=out, store_path=store, checkpoint=ckpt, bits=16,
-        )
 
     # geometry pin: a store whose marker disagrees (future width /
     # corruption) fails the stream loudly on restart

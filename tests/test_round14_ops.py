@@ -215,7 +215,7 @@ def test_simhash_min_visible_floor(spark):
     ok = simhash_candidates(
         df, "doc_id", max_bucket=3, min_visible=0.5
     )
-    base = simhash_candidates(df, "doc_id", max_bucket=3, cap_stats=False)
+    base = simhash_candidates(df, "doc_id", max_bucket=3)
     assert sorted(map(tuple, ok.collect())) == sorted(
         map(tuple, base.collect())
     )
@@ -248,7 +248,7 @@ def test_simhash_max_hamming_must_be_an_int_in_range(spark):
 
 
 def test_simhash_cap_probe_silent_when_cap_does_not_bind(spark, caplog):
-    """An unbinding cap (or cap_stats=False) must not log."""
+    """An unbinding cap must not log."""
     from clinical_trials_data_pipeline_analyis_spark.operators.dedup import (
         simhash_candidates,
     )
@@ -256,7 +256,6 @@ def test_simhash_cap_probe_silent_when_cap_does_not_bind(spark, caplog):
     df = _hot_fixture(spark)
     with caplog.at_level(logging.WARNING, logger=_DEDUP_LOGGER):
         simhash_candidates(df, "doc_id", max_bucket=100)
-        simhash_candidates(df, "doc_id", max_bucket=3, cap_stats=False)
     assert not [r for r in caplog.records if "simhash cap binding" in r.message]
 
 
@@ -654,7 +653,7 @@ def test_simhash_rescue_depth2_matches_brute_force(spark):
         (r["doc_a"], r["doc_b"], r["hamming"])
         for r in simhash_near_duplicates(
             df, "doc_id", h, max_bucket=cap,
-            rescue_identical=True, rescue_near=True, cap_stats=False,
+            rescue_identical=True, rescue_near=True,
         ).collect()
     }
     got2 = {
@@ -662,7 +661,6 @@ def test_simhash_rescue_depth2_matches_brute_force(spark):
         for r in simhash_near_duplicates(
             df, "doc_id", h, max_bucket=cap,
             rescue_identical=True, rescue_near=True, rescue_depth=2,
-            cap_stats=False,
         ).collect()
     }
     assert got1 == lower
@@ -802,7 +800,6 @@ def test_depth2_rescue_plan_has_no_nested_loop_join(spark):
         simhash_near_duplicates(
             df, "doc_id", 6, max_bucket=3,
             rescue_identical=True, rescue_near=True, rescue_depth=2,
-            cap_stats=False,
         )
         ._jdf.queryExecution()
         .executedPlan()
@@ -882,7 +879,6 @@ if _HYP:
             for r in simhash_near_duplicates(
                 df, "doc_id", h, max_bucket=cap,
                 rescue_identical=True, rescue_near=True, rescue_depth=2,
-                cap_stats=False,
             ).collect()
         }
         mirror = _sh_mirror_depth2(fps, cap, h)
