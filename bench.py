@@ -25,8 +25,9 @@ back to back. Each sample times construction (building the DataFrame,
 which for the iterative operators launches guard and loop jobs) and
 execution (a count()-style full materialization) separately. The filed
 number is the smaller sample total; ``bench_full.json`` keeps both
-totals plus the construct/execute split and row count of the filed
-sample, so every row carries its own spread.
+totals plus the construct/execute split, row count and Janino compile
+count (``compiles``) of the filed sample, so every row carries its own
+spread.
 
 ``SPARK_GRAFT_ONLY=a21,a45 python bench.py`` runs the matching subset
 (substring match per token) with the same method, in a fresh process.
@@ -81,15 +82,22 @@ def calibrate(spark) -> float:
     return round(time.perf_counter() - c0, 4)
 
 
+def compile_count(spark) -> int:
+    """Janino compilations so far in this JVM, from Spark's
+    ``CodegenMetrics`` counter; reading it launches no job."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def warm(spark, qs, sf_dir: str, first: str) -> None:
     """Pay session startup and the Python-worker spinup before timing.
 
     Running one query warms the JVM and file listing; the mapInPandas
     warms the Arrow path, whose one-time worker spinup (~1.5s) would
-    otherwise land on the first Arrow query in run order. A full-suite
-    warm pass is deliberately absent: it front-loads every query's
-    generated classes and broadcast state into the JVM and measurably
-    slows the mid-suite CPU-bound rows it was meant to clean.
+    otherwise land on the first Arrow query in run order. No full-suite
+    warm pass is needed: the session's codegen cache holds a whole
+    suite's generated classes (``session.CODEGEN_CACHE_ENTRIES``), so
+    each row's second sample reuses what its first one compiled.
     """
     qs[first](spark, sf_dir).count()
     spark.range(0, 1024, 1, 32).mapInPandas(lambda it: it, "id long").count()
@@ -98,26 +106,32 @@ def warm(spark, qs, sf_dir: str, first: str) -> None:
 def best_of_2(spark, build, sf_dir: str) -> dict:
     """Time ``build`` twice on a cleared heap; file the faster sample.
 
-    Clearing cached plans and collecting garbage between rows keeps each
-    row from paying for its predecessors' broadcast blocks, shuffle
-    state and codegen classes in one long-lived local[] JVM.
+    Clearing cached tables and collecting garbage between rows keeps
+    each row from paying for its predecessors' broadcast blocks and
+    shuffle state in one long-lived local[] JVM. Generated classes stay
+    on purpose: the codegen cache is sized to the suite's working set,
+    so a row reuses the classes earlier rows and its own first sample
+    compiled. ``compiles`` is the filed sample's Janino compile count.
     """
     spark.catalog.clearCache()
     spark.sparkContext._jvm.System.gc()
     samples = []
     for _ in range(2):
+        c0 = compile_count(spark)
         t0 = time.perf_counter()
         df = build(spark, sf_dir)
         t1 = time.perf_counter()
         rows = df.count()
-        samples.append((t1 - t0, time.perf_counter() - t1, rows))
-    construct, execute, rows = min(samples, key=lambda s: s[0] + s[1])
+        t2 = time.perf_counter()
+        samples.append((t1 - t0, t2 - t1, rows, compile_count(spark) - c0))
+    construct, execute, rows, compiles = min(samples, key=lambda s: s[0] + s[1])
     return {
         "sec": round(construct + execute, 4),
-        "samples": [round(c + e, 4) for c, e, _ in samples],
+        "samples": [round(c + e, 4) for c, e, _, _ in samples],
         "construct_s": round(construct, 4),
         "execute_s": round(execute, 4),
         "rows": rows,
+        "compiles": compiles,
     }
 
 

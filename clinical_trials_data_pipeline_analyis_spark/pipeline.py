@@ -26,6 +26,7 @@ from __future__ import annotations
 import argparse
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .config import DEFAULT_CONFIG, PipelineConfig
 from .plans import (
@@ -65,6 +66,27 @@ MAPPING_FILES = {
 }
 
 
+def write_layer(
+    spark: SparkSession,
+    df: DataFrame,
+    path: str,
+    partition_by: list[str] | None = None,
+) -> DataFrame:
+    """Overwrite-write ``df`` as the layer table at ``path`` and return
+    the table read back under the schema ``df`` wrote. This run wrote
+    the files, so their schema cannot have drifted, and a schema-less
+    read would launch one inference job per table for nothing. Spark
+    lays partition columns out after the data columns, so they move to
+    the end of the read schema."""
+    write_table(df, path, partition_by=partition_by)
+    parts = partition_by or []
+    schema = StructType(
+        [f for f in df.schema if f.name not in parts]
+        + [df.schema[c] for c in parts]
+    )
+    return spark.read.schema(schema).parquet(path)
+
+
 def ingest_bronze(
     spark: SparkSession, data_dir: str, config: PipelineConfig
 ) -> dict[str, DataFrame]:
@@ -72,12 +94,10 @@ def ingest_bronze(
     bronze: dict[str, DataFrame] = {}
     for table, filename in EXTRACT_FILES.items():
         df = read_pipe_csv(spark, f"{data_dir}/{filename}", BRONZE_SCHEMAS[table])
-        write_table(df, config.layer_path("bronze", table))
-        bronze[table] = spark.read.parquet(config.layer_path("bronze", table))
+        bronze[table] = write_layer(spark, df, config.layer_path("bronze", table))
     for table, filename in MAPPING_FILES.items():
         df = read_mapping_csv(spark, f"{data_dir}/{filename}", BRONZE_SCHEMAS[table])
-        write_table(df, config.layer_path("bronze", table))
-        bronze[table] = spark.read.parquet(config.layer_path("bronze", table))
+        bronze[table] = write_layer(spark, df, config.layer_path("bronze", table))
     return bronze
 
 
@@ -95,16 +115,12 @@ def build_silver(
     }
     # studies partitioned by study_type: the opportunity query and most
     # analyses filter on it, so the partition prunes at scan time.
-    write_table(
-        silver["studies"],
-        config.layer_path("silver", "studies"),
-        partition_by=["study_type"],
-    )
-    for name in ("sponsors", "conditions", "interventions", "outcomes"):
-        write_table(silver[name], config.layer_path("silver", name))
+    partition_by = {"studies": ["study_type"]}
     return {
-        name: spark.read.parquet(config.layer_path("silver", name))
-        for name in silver
+        name: write_layer(
+            spark, df, config.layer_path("silver", name), partition_by.get(name)
+        )
+        for name, df in silver.items()
     }
 
 

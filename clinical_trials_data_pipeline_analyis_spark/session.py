@@ -6,6 +6,21 @@ externally-owned session and never call this, so every query in the suite
 must also behave correctly under a default-config session (in particular
 under Spark 4's ANSI mode: we use ``try_cast``/guarded division everywhere
 a failure is possible).
+
+The generated-code cache is sized to the engine's working set. Spark
+keeps 100 compiled whole-stage classes by default, while one pass over
+the benchmark's ``medallion_csv`` operations generates 124 distinct
+classes and one ``suite_operators`` pass 176, so the LRU cache thrashes
+and every warm pass recompiles most of them in Janino (and then runs
+them interpreted until the JIT picks them up again). A cold pass that
+collects all 127 registered queries at sf0.001 compiles 3,095 times at
+the default size for 1,855 distinct classes. ``CODEGEN_CACHE_ENTRIES``
+leaves ~2.2x headroom over that; the classes live in JVM metaspace,
+which held 194 MB after that pass against 181 MB at the default size.
+The conf is static: it is fixed when the first session of the JVM
+starts, so a session that ``getOrCreate`` returns from an earlier
+builder keeps that builder's value, and an externally-owned session
+(``__spark_entry__.py``) keeps Spark's default.
 """
 
 from __future__ import annotations
@@ -13,6 +28,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: ``spark.sql.codegen.cache.maxEntries``: ~2.2x the 1,855 distinct
+#: generated classes of a full 127-query pass (see the module docstring).
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def get_spark(
@@ -68,6 +87,8 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # Arrow for any toPandas()/applyInPandas boundary (multimodal ops).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Warm passes reuse generated classes instead of recompiling them.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -52,6 +52,13 @@ def dedup_events_stream(
     )
 
 
+#: Per-epoch candidate budget for the streaming MinHash near-dedup: the
+#: keep-first mass of the asymmetric (batch x history + batch) band
+#: join, priced like its RHP and SimHash siblings, at the batch
+#: ``MAX_LSH_CANDIDATE_ROWS``.
+MAX_MINHASH_STREAM_CANDIDATES_PER_EPOCH = 1_000_000_000
+
+
 def near_dedup_docs_stream(
     docs_stream: DataFrame,
     out_path: str,
@@ -63,6 +70,7 @@ def near_dedup_docs_stream(
     bands: int = 4,
     shingle_k: int = 3,
     min_recall: float | None = None,
+    max_candidates_per_epoch: int | None = MAX_MINHASH_STREAM_CANDIDATES_PER_EPOCH,
 ):
     """Incremental MinHash near-dedup via ``foreachBatch``: each
     micro-batch's documents are signed once, banded against the
@@ -101,14 +109,21 @@ def near_dedup_docs_stream(
     sidecar write): a pinned geometry below the floor refuses up front
     with the batch refusal's prescription, instead of a long-running
     stream silently under-recalling for its whole life.
+
+    Each epoch prices its band join with ``store_meta.price_epoch_join``
+    (the keep-first mass n_new·(n_all−n_new) + C(n_new, 2) per bucket,
+    summed over the bands) and refuses past ``max_candidates_per_epoch``
+    through ``refuse_over_budget``, as the RHP and SimHash streams do.
     """
     from ..operators.dedup import (
         LSH_RECALL_JACCARD,
         check_banding,
         check_floor,
+        lsh_band_table,
         lsh_candidate_pairs,
         minhash_banding_recall,
         minhash_signatures,
+        refuse_over_budget,
     )
 
     op = "near_dedup_docs_stream"
@@ -135,21 +150,43 @@ def near_dedup_docs_stream(
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         check_or_pin_geometry(
-            spark, store_path, "_minhash_geometry", geometry,
-            "near_dedup_docs_stream",
+            spark, store_path, "_minhash_geometry", geometry, op
         )
         sigs_new = minhash_signatures(
             batch_df, id_col, text_col, num_hashes=num_hashes, shingle_k=shingle_k
         ).transform(cut_lineage(local_only=True))
         history = read_history(spark, store_path, epoch_id, sigs_new)
-        all_sigs = history.unionByName(sigs_new)
+        all_sigs = history.unionByName(sigs_new).transform(
+            cut_lineage(local_only=True)
+        )
+        if max_candidates_per_epoch is not None:
+            mass, _, _ = price_epoch_join(
+                lsh_band_table(sigs_new, num_hashes, bands),
+                lsh_band_table(all_sigs, num_hashes, bands),
+                ["band", "bsig"],
+            )
+            if mass > max_candidates_per_epoch:
+                refuse_over_budget(
+                    f"{op} (epoch {epoch_id})",
+                    mass, max_candidates_per_epoch,
+                    f"The pinned {bands} bands x {num_hashes // bands} rows "
+                    f"are too permissive for the accumulated corpus — "
+                    f"re-sign the store with coarser bands (fewer bands of "
+                    f"more rows), run exact dedup ahead of the stream "
+                    f"(identical documents collide in every band), shrink "
+                    f"the micro-batch (maxFilesPerTrigger), or raise "
+                    f"max_candidates_per_epoch if the verify CPU can take "
+                    f"it.",
+                    "max_candidates_per_epoch",
+                )
         partners = lsh_candidate_pairs(
             sigs_new,
             id_col,
             num_hashes=num_hashes,
             bands=bands,
             materialize=False,
-            against=all_sigs.transform(cut_lineage(local_only=True)),
+            against=all_sigs,
+            max_candidates=None,
         )
         dup_ids = partners.filter(F.col("doc_b") < F.col("doc_a")).select(
             F.col("doc_a").alias(id_col)

@@ -1,5 +1,6 @@
 """The bench.py contract: the final stdout line the driver parses, and
-the best-of-2 record every row files in the full JSON.
+the best-of-2 record every row files in the full JSON, with the filed
+sample's codegen compile count.
 
 Runs bench.py in a subprocess (its own SparkSession) on two cheap
 queries at the test scale factor.
@@ -76,6 +77,7 @@ def test_every_row_files_the_faster_of_two_samples(bench_run):
             row["sec"], abs=2e-4
         ), name
         assert row["rows"] > 0, name
+        assert isinstance(row["compiles"], int) and row["compiles"] >= 0, name
     assert full["value"] == pytest.approx(
         sum(r["sec"] for r in full["queries"].values()), abs=1e-4
     )

@@ -61,3 +61,46 @@ def test_run_pipeline_end_to_end(spark, data_dir, tmp_path_factory):
         "total_trials",
         "opportunity_score",
     }
+
+
+def test_layer_rereads_launch_no_jobs(spark, data_dir, tmp_path_factory, monkeypatch):
+    """Bronze launches one job per table written, and neither bronze nor
+    silver launches a job to re-read a table it just wrote: the re-read
+    takes the written frame's schema, so no parquet schema inference
+    runs. Each write runs under its own job group and everything else
+    under ``rest``. The re-read frames carry the schema inference would
+    have given."""
+    from clinical_trials_data_pipeline_analyis_spark import pipeline
+
+    sc = spark.sparkContext
+    rest = "test_layer_rereads_launch_no_jobs"
+    writes = []
+    real_write = pipeline.write_table
+
+    def grouped_write(df, path, partition_by=None):
+        writes.append(f"{rest}-write-{len(writes)}")
+        sc.setJobGroup(writes[-1], path)
+        try:
+            real_write(df, path, partition_by=partition_by)
+        finally:
+            sc.setJobGroup(rest, "layer re-reads")
+
+    monkeypatch.setattr(pipeline, "write_table", grouped_write)
+    config = PipelineConfig(warehouse_dir=str(tmp_path_factory.mktemp("wh")))
+    sc.setJobGroup(rest, "layer re-reads")
+    try:
+        bronze = pipeline.ingest_bronze(spark, str(data_dir), config)
+        bronze_writes = list(writes)
+        silver = pipeline.build_silver(spark, bronze, config)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup
+    assert len(bronze_writes) == len(EXTRACT_FILES) + len(MAPPING_FILES) == 7
+    assert [len(jobs(g)) for g in bronze_writes] == [1] * 7
+    assert len(writes) == 7 + len(silver)
+    assert jobs(rest) == []
+    for layer, frames in (("bronze", bronze), ("silver", silver)):
+        for name, df in frames.items():
+            inferred = spark.read.parquet(config.layer_path(layer, name))
+            assert df.schema == inferred.schema, (layer, name)

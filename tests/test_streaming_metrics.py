@@ -1178,3 +1178,71 @@ def test_streaming_rhp_budget_refuses_in_binding_regime(spark, tmp_path):
     ).start()
     with pytest.raises(StreamingQueryException, match="candidate rows"):
         q.awaitTermination(120)
+
+
+@pytest.mark.parametrize("family", ["minhash", "simhash", "rhp"])
+def test_near_dup_streams_refuse_at_the_same_mass(spark, tmp_path, family):
+    """The three near-dup streams price an epoch alike. Each is fed the
+    same bucket sizes: two bucket tables (two bands, or SimHash's two
+    halves) of one bucket each, filled by 4 identical rows in epoch 0
+    and 3 more in epoch 1. The keep-first mass is then
+    2·C(4, 2) = 12 for epoch 0 and 2·(3·4 + C(3, 2)) = 30 for epoch 1,
+    so a budget of 29 refuses epoch 1 at 30 and a budget of 30 admits
+    both epochs."""
+    from functools import partial
+
+    from pyspark.errors import StreamingQueryException
+
+    from clinical_trials_data_pipeline_analyis_spark import streaming
+
+    if family == "rhp":
+        id_col = "vec_id"
+        rows = spark.createDataFrame(
+            [(i, [1.0] * 64) for i in range(7)],
+            "vec_id BIGINT, embedding ARRAY<FLOAT>",
+        )
+        make = partial(
+            streaming.rhp_near_dedup_stream,
+            threshold=0.9, n_bits=16, bands=2, dim=64,
+        )
+    else:
+        id_col = "doc_id"
+        rows = spark.createDataFrame(
+            [(i, "alpha beta gamma delta epsilon") for i in range(7)],
+            "doc_id BIGINT, text STRING",
+        )
+        make = {
+            "minhash": partial(
+                streaming.near_dedup_docs_stream, num_hashes=8, bands=2
+            ),
+            "simhash": streaming.simhash_near_dedup_stream,
+        }[family]
+    chunks = str(tmp_path / "chunks")
+    rows.filter(F.col(id_col) < 4).coalesce(1).write.parquet(f"{chunks}/c1")
+    rows.filter(F.col(id_col) >= 4).coalesce(1).write.parquet(f"{chunks}/c2")
+
+    def run(budget):
+        stream = (
+            spark.readStream.schema(rows.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{chunks}/c*")
+        )
+        out = tmp_path / f"budget{budget}"
+        return make(
+            stream,
+            out_path=str(out / "flags"),
+            store_path=str(out / "store"),
+            checkpoint=str(out / "ckpt"),
+            max_candidates_per_epoch=budget,
+        ).start()
+
+    q = run(29)
+    with pytest.raises(
+        StreamingQueryException, match=r"\(epoch 1\): measured ~30 candidate rows"
+    ):
+        q.awaitTermination(120)
+    run(30).awaitTermination(120)
+    flags = spark.read.parquet(str(tmp_path / "budget30" / "flags"))
+    assert sorted(tuple(r) for r in flags.select(id_col, "is_near_dup").collect()) == [
+        (0, False)
+    ] + [(i, True) for i in range(1, 7)]
