@@ -17,6 +17,9 @@ collects all 127 registered queries at sf0.001 compiles 3,095 times at
 the default size for 1,855 distinct classes. ``CODEGEN_CACHE_ENTRIES``
 leaves ~2.2x headroom over that; the classes live in JVM metaspace,
 which held 194 MB after that pass against 181 MB at the default size.
+Peak process RSS of a traced ``medallion_csv`` run on a 4-core host
+does not move with the size either: 2,456-3,695 MB at 4,096 entries
+against 2,491-3,555 MB at 100, four runs each.
 The conf is static: it is fixed when the first session of the JVM
 starts, so a session that ``getOrCreate`` returns from an earlier
 builder keeps that builder's value, and an externally-owned session

@@ -1,6 +1,5 @@
 from .curation import curate_docs_stream
 from .dedup import (
-    MAX_MINHASH_STREAM_CANDIDATES_PER_EPOCH,
     MAX_SIMHASH_STREAM_CANDIDATES_PER_EPOCH,
     clean_spans_stream,
     decontaminate_docs_stream,
@@ -29,7 +28,6 @@ __all__ = [
     "decontaminate_docs_stream",
     "dedup_events_stream",
     "near_dedup_docs_stream",
-    "MAX_MINHASH_STREAM_CANDIDATES_PER_EPOCH",
     "simhash_near_dedup_stream",
     "MAX_SIMHASH_STREAM_CANDIDATES_PER_EPOCH",
     "hourly_event_counts_stream",

@@ -70,7 +70,6 @@ def near_dedup_docs_stream(
     bands: int = 4,
     shingle_k: int = 3,
     min_recall: float | None = None,
-    max_candidates_per_epoch: int | None = MAX_MINHASH_STREAM_CANDIDATES_PER_EPOCH,
 ):
     """Incremental MinHash near-dedup via ``foreachBatch``: each
     micro-batch's documents are signed once, banded against the
@@ -112,15 +111,17 @@ def near_dedup_docs_stream(
 
     Each epoch prices its band join with ``store_meta.price_epoch_join``
     (the keep-first mass n_new·(n_all−n_new) + C(n_new, 2) per bucket,
-    summed over the bands) and refuses past ``max_candidates_per_epoch``
-    through ``refuse_over_budget``, as the RHP and SimHash streams do.
+    summed over the bands) and refuses past
+    ``MAX_MINHASH_STREAM_CANDIDATES_PER_EPOCH`` through
+    ``refuse_over_budget``, as the RHP and SimHash streams do; the
+    priced band tables are the ones the join runs on.
     """
     from ..operators.dedup import (
         LSH_RECALL_JACCARD,
+        bucket_pairs,
         check_banding,
         check_floor,
         lsh_band_table,
-        lsh_candidate_pairs,
         minhash_banding_recall,
         minhash_signatures,
         refuse_over_budget,
@@ -159,37 +160,30 @@ def near_dedup_docs_stream(
         all_sigs = history.unionByName(sigs_new).transform(
             cut_lineage(local_only=True)
         )
-        if max_candidates_per_epoch is not None:
-            mass, _, _ = price_epoch_join(
-                lsh_band_table(sigs_new, num_hashes, bands),
-                lsh_band_table(all_sigs, num_hashes, bands),
-                ["band", "bsig"],
+        doc = F.col(id_col).alias("doc")
+        bands_new = lsh_band_table(sigs_new, num_hashes, bands, doc)
+        bands_all = lsh_band_table(all_sigs, num_hashes, bands, doc)
+        budget = MAX_MINHASH_STREAM_CANDIDATES_PER_EPOCH
+        mass, _, _ = price_epoch_join(bands_new, bands_all, ["band", "bsig"])
+        if mass > budget:
+            refuse_over_budget(
+                f"{op} (epoch {epoch_id})",
+                mass, budget,
+                f"The pinned {bands} bands x {num_hashes // bands} rows "
+                f"are too permissive for the accumulated corpus — "
+                f"re-sign the store with coarser bands (fewer bands of "
+                f"more rows), run exact dedup ahead of the stream "
+                f"(identical documents collide in every band), or shrink "
+                f"the micro-batch (maxFilesPerTrigger).",
+                "MAX_MINHASH_STREAM_CANDIDATES_PER_EPOCH",
             )
-            if mass > max_candidates_per_epoch:
-                refuse_over_budget(
-                    f"{op} (epoch {epoch_id})",
-                    mass, max_candidates_per_epoch,
-                    f"The pinned {bands} bands x {num_hashes // bands} rows "
-                    f"are too permissive for the accumulated corpus — "
-                    f"re-sign the store with coarser bands (fewer bands of "
-                    f"more rows), run exact dedup ahead of the stream "
-                    f"(identical documents collide in every band), shrink "
-                    f"the micro-batch (maxFilesPerTrigger), or raise "
-                    f"max_candidates_per_epoch if the verify CPU can take "
-                    f"it.",
-                    "max_candidates_per_epoch",
-                )
-        partners = lsh_candidate_pairs(
-            sigs_new,
-            id_col,
-            num_hashes=num_hashes,
-            bands=bands,
-            materialize=False,
-            against=all_sigs,
-            max_candidates=None,
-        )
-        dup_ids = partners.filter(F.col("doc_b") < F.col("doc_a")).select(
-            F.col("doc_a").alias(id_col)
+        # keep-first: a document is a dup of LOWER ids only
+        dup_ids = (
+            bucket_pairs(
+                bands_new, ["band", "bsig"], "doc", right=bands_all, against=True
+            )
+            .filter(F.col("doc_b") < F.col("doc_a"))
+            .select(F.col("doc_a").alias(id_col))
         )
         flags = keep_first_flags(sigs_new, dup_ids, id_col)
         write_epoch(flags, out_path, epoch_id)

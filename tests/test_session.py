@@ -4,7 +4,6 @@ pass compiled instead of recompiling them."""
 
 from __future__ import annotations
 
-from bench import compile_count
 from conftest import SF_DIR
 
 from clinical_trials_data_pipeline_analyis_spark.session import CODEGEN_CACHE_ENTRIES
@@ -13,6 +12,12 @@ from clinical_trials_data_pipeline_analyis_spark.suite import spark_queries
 #: the queries of the ``suite_operators`` benchmark workload: one pass
 #: generates more distinct classes than Spark's default cache of 100
 WARM_QUERIES = ("a21", "a45", "a90")
+
+
+def compile_count(spark) -> int:
+    """Janino compilations so far in this JVM (no job is launched)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def test_session_sizes_the_codegen_cache(spark):

@@ -1181,19 +1181,30 @@ def test_streaming_rhp_budget_refuses_in_binding_regime(spark, tmp_path):
 
 
 @pytest.mark.parametrize("family", ["minhash", "simhash", "rhp"])
-def test_near_dup_streams_refuse_at_the_same_mass(spark, tmp_path, family):
+def test_near_dup_streams_refuse_at_the_same_mass(
+    spark, tmp_path, monkeypatch, family
+):
     """The three near-dup streams price an epoch alike. Each is fed the
     same bucket sizes: two bucket tables (two bands, or SimHash's two
     halves) of one bucket each, filled by 4 identical rows in epoch 0
     and 3 more in epoch 1. The keep-first mass is then
     2·C(4, 2) = 12 for epoch 0 and 2·(3·4 + C(3, 2)) = 30 for epoch 1,
     so a budget of 29 refuses epoch 1 at 30 and a budget of 30 admits
-    both epochs."""
+    both epochs. The MinHash budget is a module constant, read at each
+    epoch; the other two streams take theirs as an argument."""
     from functools import partial
 
     from pyspark.errors import StreamingQueryException
 
     from clinical_trials_data_pipeline_analyis_spark import streaming
+    from clinical_trials_data_pipeline_analyis_spark.streaming import (
+        dedup as stream_dedup,
+    )
+
+    def with_budget(make):
+        return lambda stream, budget, **paths: make(
+            stream, max_candidates_per_epoch=budget, **paths
+        )
 
     if family == "rhp":
         id_col = "vec_id"
@@ -1201,9 +1212,11 @@ def test_near_dup_streams_refuse_at_the_same_mass(spark, tmp_path, family):
             [(i, [1.0] * 64) for i in range(7)],
             "vec_id BIGINT, embedding ARRAY<FLOAT>",
         )
-        make = partial(
-            streaming.rhp_near_dedup_stream,
-            threshold=0.9, n_bits=16, bands=2, dim=64,
+        make = with_budget(
+            partial(
+                streaming.rhp_near_dedup_stream,
+                threshold=0.9, n_bits=16, bands=2, dim=64,
+            )
         )
     else:
         id_col = "doc_id"
@@ -1211,11 +1224,18 @@ def test_near_dup_streams_refuse_at_the_same_mass(spark, tmp_path, family):
             [(i, "alpha beta gamma delta epsilon") for i in range(7)],
             "doc_id BIGINT, text STRING",
         )
+
+        def minhash(stream, budget, **paths):
+            monkeypatch.setattr(
+                stream_dedup, "MAX_MINHASH_STREAM_CANDIDATES_PER_EPOCH", budget
+            )
+            return streaming.near_dedup_docs_stream(
+                stream, num_hashes=8, bands=2, **paths
+            )
+
         make = {
-            "minhash": partial(
-                streaming.near_dedup_docs_stream, num_hashes=8, bands=2
-            ),
-            "simhash": streaming.simhash_near_dedup_stream,
+            "minhash": minhash,
+            "simhash": with_budget(streaming.simhash_near_dedup_stream),
         }[family]
     chunks = str(tmp_path / "chunks")
     rows.filter(F.col(id_col) < 4).coalesce(1).write.parquet(f"{chunks}/c1")
@@ -1230,10 +1250,10 @@ def test_near_dup_streams_refuse_at_the_same_mass(spark, tmp_path, family):
         out = tmp_path / f"budget{budget}"
         return make(
             stream,
+            budget,
             out_path=str(out / "flags"),
             store_path=str(out / "store"),
             checkpoint=str(out / "ckpt"),
-            max_candidates_per_epoch=budget,
         ).start()
 
     q = run(29)
