@@ -44,7 +44,14 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+# Spark's Python workers import the package from their own path, which
+# Spark builds from PYTHONPATH when the JVM starts: without this a query
+# with a Python UDF fails in the workers unless run from the repo root.
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 from clinical_trials_data_pipeline_analyis_spark.session import get_spark
 from clinical_trials_data_pipeline_analyis_spark.suite import spark_queries
@@ -167,9 +174,8 @@ def main() -> None:
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "calib_sec": calib_sec,
     }
-    here = os.path.dirname(os.path.abspath(__file__))
     out_json = os.environ.get(
-        "SPARK_GRAFT_BENCH_OUT", os.path.join(here, "bench_full.json")
+        "SPARK_GRAFT_BENCH_OUT", os.path.join(ROOT, "bench_full.json")
     )
     with open(out_json, "w") as f:
         json.dump({**summary, "queries": record}, f, indent=1, sort_keys=True)

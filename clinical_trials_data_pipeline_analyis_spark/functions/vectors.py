@@ -25,8 +25,10 @@ A/B measurements per registered query:
   flat vs 226.6s fold; a32 pq_encode 5.8 vs 17.9; x08's exact pair
   verify 121.8 vs 280.1 (all on 500k vectors / 2M subvectors).
 
-So the rule encoded here: callers opt in EXPLICITLY per call site with
-``use_flat=True``, justified by a measurement at the corpus rung —
+So the rule encoded here: callers of ``dot`` and ``pair_cosine`` opt in
+EXPLICITLY per call site with ``use_flat=True``, justified by a
+measurement at the corpus rung (norms are one fold per vector, not per
+pair, and have no flat form) —
 pq subvector distances (dim=16, 3-6x) and the exact-pair cosine verifies
 (2.3x) carry it; everything else stays on the fold. ``dim`` alone is an
 inert width annotation. tests/test_vectors_dim.py keeps the bit-identity
@@ -75,17 +77,6 @@ def _norm_sq_fold_sql(a_sql: str) -> str:
         f"aggregate(transform({a_sql}, "
         f"x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
         f"0.0D, (acc, el) -> acc + el)"
-    )
-
-
-def _norm_sq_flat_sql(a_sql: str, dim: int) -> str:
-    terms = " + ".join(
-        f"CAST(get({a_sql}, {i}) AS DOUBLE) * CAST(get({a_sql}, {i}) AS DOUBLE)"
-        for i in range(dim)
-    )
-    return (
-        f"CASE WHEN size({a_sql}) = {dim} "
-        f"THEN 0.0D + {terms} ELSE {_norm_sq_fold_sql(a_sql)} END"
     )
 
 
@@ -188,37 +179,16 @@ def _norm_sq_fold(a: Column) -> Column:
     )
 
 
-def _norm_sq_flat(a: Column, dim: int) -> Column:
-    flat: Column = F.lit(0.0)
-    for i in range(dim):
-        x = F.get(a, i).cast("double")
-        flat = flat + x * x
-    return F.when(F.size(a) == F.lit(dim), flat).otherwise(_norm_sq_fold(a))
-
-
-def l2_norm(
-    a: Column | str, dim: int | None = None, use_flat: bool = False
-) -> Column:
-    """Ordered L2 norm; same ``dim``/``use_flat``/str-operand contract
-    as ``dot`` (a str is a column name, built as one parsed SQL
-    string)."""
+def l2_norm(a: Column | str) -> Column:
+    """Ordered L2 norm; a str operand is a column name, built as one
+    parsed SQL string (as in ``dot``)."""
     a = _nested_as_col(a)
     if isinstance(a, str):
-        a_sql = _ident(a)
-        if use_flat and dim is not None:
-            return F.expr(f"SQRT({_norm_sq_flat_sql(a_sql, dim)})")
-        return F.expr(f"SQRT({_norm_sq_fold_sql(a_sql)})")
-    if use_flat and dim is not None:
-        return F.sqrt(_norm_sq_flat(a, dim))
+        return F.expr(f"SQRT({_norm_sq_fold_sql(_ident(a))})")
     return F.sqrt(_norm_sq_fold(a))
 
 
-def cosine_similarity(
-    a: Column | str,
-    b: Column | str,
-    dim: int | None = None,
-    use_flat: bool = False,
-) -> Column:
+def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     # try_divide: a zero-norm vector yields NULL cosine (instead of an
     # ANSI-mode DIVIDE_BY_ZERO error) — downstream rankings order NULL
     # last with a deterministic id tiebreak.
@@ -227,20 +197,11 @@ def cosine_similarity(
         # one parsed string for the whole similarity — same tree as the
         # Column form below (try_divide(dot, norm * norm))
         a_sql, b_sql = _ident(a), _ident(b)
-        if use_flat and dim is not None:
-            d = _dot_flat_sql(a_sql, b_sql, dim)
-            na = f"SQRT({_norm_sq_flat_sql(a_sql, dim)})"
-            nb = f"SQRT({_norm_sq_flat_sql(b_sql, dim)})"
-        else:
-            d = _dot_fold_sql(a_sql, b_sql)
-            na = f"SQRT({_norm_sq_fold_sql(a_sql)})"
-            nb = f"SQRT({_norm_sq_fold_sql(b_sql)})"
+        d = _dot_fold_sql(a_sql, b_sql)
+        na = f"SQRT({_norm_sq_fold_sql(a_sql)})"
+        nb = f"SQRT({_norm_sq_fold_sql(b_sql)})"
         return F.expr(f"try_divide({d}, {na} * {nb})")
-    return F.try_divide(
-        dot(a, b, dim=dim, use_flat=use_flat),
-        l2_norm(a, dim=dim, use_flat=use_flat)
-        * l2_norm(b, dim=dim, use_flat=use_flat),
-    )
+    return F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
 
 
 def pair_cosine(

@@ -68,12 +68,12 @@ def brute_force_topk(
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qvec"),
-        l2_norm(vec_col, dim=dim).alias("_qn"),
+        l2_norm(vec_col).alias("_qn"),
     )
     c = _spread(embeddings).select(
         F.col(id_col).alias("candidate_id"),
         F.col(vec_col).alias("cvec"),
-        l2_norm(vec_col, dim=dim).alias("_cn"),
+        l2_norm(vec_col).alias("_cn"),
     )
     scored = (
         F.broadcast(q)
@@ -108,12 +108,12 @@ def _centroid_scores(
     c = centroids.select(
         F.col(id_col).alias("centroid_id"),
         F.col(vec_col).alias("cvec"),
-        l2_norm(vec_col, dim=dim).alias("_cn"),
+        l2_norm(vec_col).alias("_cn"),
     )
     v = _spread(embeddings).select(
         F.col(id_col).alias("vec"),
         F.col(vec_col).alias("vvec"),
-        l2_norm(vec_col, dim=dim).alias("_vn"),
+        l2_norm(vec_col).alias("_vn"),
     )
     return v.crossJoin(F.broadcast(c)).select(
         F.col("vec").alias("vec_id"),
@@ -359,7 +359,7 @@ def embedding_duplicate_pairs(
             F.col(block_col).alias("blk"),
             F.col(id_col).alias("vec"),
             F.col(vec_col).alias("v"),
-            l2_norm(vec_col, dim=dim).alias("_norm"),
+            l2_norm(vec_col).alias("_norm"),
         )
 
     left = side(_spread(embeddings)).withColumn(
@@ -424,7 +424,7 @@ def _rhp_block_pairs(
         F.col(block_col).alias("_blk"),
         F.col(id_col).alias("_id"),
         F.col(vec_col).alias("_vec"),
-        l2_norm(vec_col, dim=dim).alias("_norm"),
+        l2_norm(vec_col).alias("_norm"),
     )
     sigs = rhp_signatures(
         base,
@@ -1267,7 +1267,7 @@ def rhp_near_duplicates(
             embeddings, n_bits, bands, dim, seed, id_col, vec_col,
             keep=(vec_col,),
         )
-        .withColumn("_norm", l2_norm(vec_col, dim=dim))
+        .withColumn("_norm", l2_norm(vec_col))
         .repartition(nparts, F.col("band"), F.col("band_sig"))
         .transform(cut_lineage(storage_level=StorageLevel.MEMORY_AND_DISK))
     )
@@ -1445,7 +1445,7 @@ def semantic_pair_candidates(
         return df.select(
             F.col("vec_id").alias("vec"),
             F.col("vec").alias("v"),
-            l2_norm("vec", dim=dim).alias("_norm"),
+            l2_norm("vec").alias("_norm"),
             F.col("centroid_id").alias("cell"),
         )
 

@@ -1,6 +1,5 @@
 from .curation import curate_docs_stream
 from .dedup import (
-    MAX_SIMHASH_STREAM_CANDIDATES_PER_EPOCH,
     clean_spans_stream,
     decontaminate_docs_stream,
     dedup_events_stream,
@@ -15,7 +14,6 @@ from .events import (
 from .joins import attribute_actions_batch, attribute_actions_stream
 from .similarity import (
     MAX_LITERAL_CENTROIDS,
-    MAX_RHP_STREAM_CANDIDATES_PER_EPOCH,
     assign_cells_foreach_batch,
     assign_cells_stream,
     nearest_centroid_expr,
@@ -29,14 +27,12 @@ __all__ = [
     "dedup_events_stream",
     "near_dedup_docs_stream",
     "simhash_near_dedup_stream",
-    "MAX_SIMHASH_STREAM_CANDIDATES_PER_EPOCH",
     "hourly_event_counts_stream",
     "silver_studies_stream",
     "streaming_events_source",
     "attribute_actions_batch",
     "attribute_actions_stream",
     "MAX_LITERAL_CENTROIDS",
-    "MAX_RHP_STREAM_CANDIDATES_PER_EPOCH",
     "assign_cells_foreach_batch",
     "assign_cells_stream",
     "nearest_centroid_expr",

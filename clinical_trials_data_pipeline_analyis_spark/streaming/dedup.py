@@ -325,7 +325,6 @@ def simhash_near_dedup_stream(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 6,
-    max_candidates_per_epoch: int | None = MAX_SIMHASH_STREAM_CANDIDATES_PER_EPOCH,
 ):
     """Incremental SimHash near-dedup via ``foreachBatch`` — the
     streaming twin of ``operators.dedup.simhash_near_duplicates``
@@ -349,7 +348,8 @@ def simhash_near_dedup_stream(
     Scale shape: per-epoch cost is |batch| x matching half-bucket
     occupancy — never history x history; candidates exist only inside
     whole-stage codegen (verify-in-join), and one bounded aggregate
-    over joined bucket COUNTS refuses past ``max_candidates_per_epoch``
+    over joined bucket COUNTS refuses past
+    ``MAX_SIMHASH_STREAM_CANDIDATES_PER_EPOCH`` (read at each epoch)
     with the fix named (hot half-buckets on a template-heavy corpus
     are a SimHash structural hazard — the batch operator's
     ``max_bucket``/rescue machinery is deliberately batch-only, since
@@ -404,54 +404,53 @@ def simhash_near_dedup_stream(
         all_fps = history.unionByName(fps_new)
         halves = [F.expr(h).alias("half") for h in SIMHASH_HALVES]
 
-        if max_candidates_per_epoch is not None:
-            # Exact per-epoch mass of the two asymmetric half joins,
-            # plus the projected mass of an identical next batch and
-            # the store's max half-bucket occupancy, so a
-            # template-heavy stream warns BEFORE the budget refusal
-            # lands mid-epoch. One collect per half, no extra pass.
-            total, projected, max_occ = 0, 0, 0
-            for half in halves:
-                mass, proj, occ = price_epoch_join(
-                    fps_new.select(half), all_fps.select(half), ["half"]
-                )
-                total += mass
-                projected += proj
-                max_occ = max(max_occ, occ)
-            if total > max_candidates_per_epoch:
-                refuse_over_budget(
-                    f"simhash_near_dedup_stream (epoch {epoch_id})",
-                    total, max_candidates_per_epoch,
-                    "Template-heavy corpora concentrate fingerprint "
-                    "halves into hot buckets — shrink the micro-batch "
-                    "(maxFilesPerTrigger), route the stream to "
-                    "near_dedup_docs_stream (MinHash buckets sample the "
-                    "shingle space instead), or raise "
-                    "max_candidates_per_epoch if the verify CPU can take "
-                    "it.",
-                    "max_candidates_per_epoch",
-                )
-            if projected > 0.8 * max_candidates_per_epoch:
-                # Pre-detonation warning: THIS epoch fits, but the
-                # store is hot enough that a similar next batch would
-                # land at >80% of the budget — the operator's first
-                # failure signal should not be a mid-epoch refusal.
-                _LOG.warning(
-                    "simhash_near_dedup_stream: epoch %s used %s of the "
-                    "%s candidate budget, and an identical next batch "
-                    "against the post-append store projects to ~%s "
-                    "(>80%% of budget; max half-bucket occupancy now "
-                    "%s). The store is concentrating into hot "
-                    "fingerprint buckets — route the stream to "
-                    "near_dedup_docs_stream (MinHash buckets sample "
-                    "the shingle space) or shrink the micro-batch "
-                    "BEFORE the budget refusal lands mid-epoch.",
-                    epoch_id,
-                    f"{total:,}",
-                    f"{max_candidates_per_epoch:,}",
-                    f"{projected:,}",
-                    f"{max_occ:,}",
-                )
+        # Exact per-epoch mass of the two asymmetric half joins, plus
+        # the projected mass of an identical next batch and the store's
+        # max half-bucket occupancy, so a template-heavy stream warns
+        # BEFORE the budget refusal lands mid-epoch. One collect per
+        # half, no extra pass.
+        budget = MAX_SIMHASH_STREAM_CANDIDATES_PER_EPOCH
+        total, projected, max_occ = 0, 0, 0
+        for half in halves:
+            mass, proj, occ = price_epoch_join(
+                fps_new.select(half), all_fps.select(half), ["half"]
+            )
+            total += mass
+            projected += proj
+            max_occ = max(max_occ, occ)
+        if total > budget:
+            refuse_over_budget(
+                f"simhash_near_dedup_stream (epoch {epoch_id})",
+                total, budget,
+                "Template-heavy corpora concentrate fingerprint halves "
+                "into hot buckets — shrink the micro-batch "
+                "(maxFilesPerTrigger), route the stream to "
+                "near_dedup_docs_stream (MinHash buckets sample the "
+                "shingle space instead), or raise "
+                "MAX_SIMHASH_STREAM_CANDIDATES_PER_EPOCH if the verify "
+                "CPU can take it.",
+                "MAX_SIMHASH_STREAM_CANDIDATES_PER_EPOCH",
+            )
+        if projected > 0.8 * budget:
+            # Pre-detonation warning: THIS epoch fits, but the store is
+            # hot enough that a similar next batch would land at >80% of
+            # the budget — the operator's first failure signal should
+            # not be a mid-epoch refusal.
+            _LOG.warning(
+                "simhash_near_dedup_stream: epoch %s used %s of the %s "
+                "candidate budget, and an identical next batch against "
+                "the post-append store projects to ~%s (>80%% of "
+                "budget; max half-bucket occupancy now %s). The store "
+                "is concentrating into hot fingerprint buckets — route "
+                "the stream to near_dedup_docs_stream (MinHash buckets "
+                "sample the shingle space) or shrink the micro-batch "
+                "BEFORE the budget refusal lands mid-epoch.",
+                epoch_id,
+                f"{total:,}",
+                f"{budget:,}",
+                f"{projected:,}",
+                f"{max_occ:,}",
+            )
 
         dup_parts = []
         for half in halves:

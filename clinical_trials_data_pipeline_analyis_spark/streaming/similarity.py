@@ -354,7 +354,6 @@ def rhp_near_dedup_stream(
     seed: int = 13,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_candidates_per_epoch: int | None = MAX_RHP_STREAM_CANDIDATES_PER_EPOCH,
 ):
     """Incremental embedding-cosine near-dedup via ``foreachBatch`` —
     the streaming twin of ``operators.similarity.rhp_near_duplicates``
@@ -379,8 +378,8 @@ def rhp_near_dedup_stream(
     verify-in-join shape — candidates are never materialized), and one
     bounded aggregate over joined bucket COUNTS computes the exact
     per-epoch candidate mass, refusing past
-    ``max_candidates_per_epoch`` with the fix named instead of letting
-    a hot epoch spill the disk away. The store is O(n x bands) rows of
+    ``MAX_RHP_STREAM_CANDIDATES_PER_EPOCH`` (read at each epoch) with
+    the fix named instead of letting a hot epoch spill the disk away. The store is O(n x bands) rows of
     (id, vector, norm, band, band_sig) — ``bands``x vector
     duplication, the same deliberate trade as the batch checkpoint:
     re-joining vectors per CANDIDATE row (the shape that filled the
@@ -435,29 +434,26 @@ def rhp_near_dedup_stream(
                 batch_df, n_bits, bands, dim, seed, id_col, vec_col,
                 keep=(vec_col,),
             )
-            .withColumn("_norm", l2_norm(F.col(vec_col), dim=dim))
+            .withColumn("_norm", l2_norm(F.col(vec_col)))
             .transform(cut_lineage(local_only=True))
         )
         history = read_history(spark, store_path, epoch_id, sigs_new)
         all_sigs = history.unionByName(sigs_new)
-        if max_candidates_per_epoch is not None:
-            # Exact per-epoch candidate mass of the asymmetric join below.
-            mass, _, _ = price_epoch_join(
-                sigs_new, all_sigs, ["band", "band_sig"]
+        # Exact per-epoch candidate mass of the asymmetric join below.
+        budget = MAX_RHP_STREAM_CANDIDATES_PER_EPOCH
+        mass, _, _ = price_epoch_join(sigs_new, all_sigs, ["band", "band_sig"])
+        if mass > budget:
+            refuse_over_budget(
+                f"rhp_near_dedup_stream (epoch {epoch_id})",
+                mass, budget,
+                f"The pinned {n_bits // bands}-bit bands are under-sized "
+                f"for the accumulated corpus — re-sign the store at a "
+                f"wider geometry (bits-per-band ≈ log2(corpus / 64)), "
+                f"shrink the micro-batch (maxFilesPerTrigger), or raise "
+                f"MAX_RHP_STREAM_CANDIDATES_PER_EPOCH if the verify CPU "
+                f"can take it.",
+                "MAX_RHP_STREAM_CANDIDATES_PER_EPOCH",
             )
-            if mass > max_candidates_per_epoch:
-                refuse_over_budget(
-                    f"rhp_near_dedup_stream (epoch {epoch_id})",
-                    mass, max_candidates_per_epoch,
-                    f"The pinned {n_bits // bands}-bit bands are "
-                    f"under-sized for the accumulated corpus — re-sign the "
-                    f"store at a wider geometry (bits-per-band ≈ "
-                    f"log2(corpus / 64)), shrink the micro-batch "
-                    f"(maxFilesPerTrigger), or raise "
-                    f"max_candidates_per_epoch if the verify CPU can take "
-                    f"it.",
-                    "max_candidates_per_epoch",
-                )
         # keep-first: a vector is a dup of LOWER ids only; Catalyst folds
         # this filter into the join condition
         id_a, id_b = F.col(f"{id_col}_a"), F.col(f"{id_col}_b")

@@ -41,8 +41,15 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     # This checkout's own root, so an A/B against another checkout
-    # checks the queries of the copy the script was run from.
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    # checks the queries of the copy the script was run from. Spark's
+    # Python workers build their path from PYTHONPATH when the JVM
+    # starts, so the root goes there too, or a Python UDF fails in the
+    # workers when the script runs from another directory.
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, root)
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (root, os.environ.get("PYTHONPATH")) if p
+    )
     import __spark_entry__ as entrymod
 
     spark = SparkSession.builder.master("local[*]").getOrCreate()

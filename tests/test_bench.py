@@ -88,3 +88,27 @@ def test_unmatched_only_filter_exits_nonzero(tmp_path):
     assert proc.returncode != 0
     assert "SPARK_GRAFT_ONLY='no_such_query' matched no queries" in proc.stderr
     assert not (tmp_path / "bench_full.json").exists()
+
+
+def test_python_workers_import_the_package_from_any_directory(tmp_path):
+    # a27 runs a mapInPandas over the package's own code: its Python
+    # workers must find the package although the process starts outside
+    # the repo and PYTHONPATH is unset.
+    out = tmp_path / "bench_full.json"
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(
+        SPARK_GRAFT_SF_DIR=SF_DIR,
+        SPARK_GRAFT_ONLY="a27_multimodal_resize",
+        SPARK_GRAFT_BENCH_OUT=str(out),
+    )
+    proc = subprocess.run(
+        [sys.executable, str(BENCH)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    (row,) = json.loads(out.read_text())["queries"].values()
+    assert row["rows"] > 0

@@ -581,7 +581,7 @@ if _HYP:
 # ---------------------------------------------------------------------
 
 
-def test_simhash_stream_matches_batch(spark, tmp_path):
+def test_simhash_stream_matches_batch(spark, tmp_path, monkeypatch):
     """Flags from the streamed corpus must equal the batch operator's
     'appears as doc_b' set over the full corpus, the geometry pin must
     hold across restarts, and the per-epoch budget must refuse in its
@@ -596,6 +596,7 @@ def test_simhash_stream_matches_batch(spark, tmp_path):
         simhash_near_duplicates,
     )
     from clinical_trials_data_pipeline_analyis_spark.streaming import (
+        dedup as stream_dedup,
         simhash_near_dedup_stream,
     )
 
@@ -610,15 +611,14 @@ def test_simhash_stream_matches_batch(spark, tmp_path):
         str(tmp_path / "flags"), str(tmp_path / "fpstore"), str(tmp_path / "ckpt")
     )
 
-    def run(budget=None):
+    def run():
         stream = (
             spark.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{chunks}/c*")
         )
-        kw = {} if budget is None else {"max_candidates_per_epoch": budget}
         q = simhash_near_dedup_stream(
-            stream, out_path=out, store_path=store, checkpoint=ckpt, **kw,
+            stream, out_path=out, store_path=store, checkpoint=ckpt,
         ).start()
         q.awaitTermination(180)
 
@@ -649,8 +649,11 @@ def test_simhash_stream_matches_batch(spark, tmp_path):
     shutil.rmtree(ckpt)
     shutil.rmtree(store)
     shutil.rmtree(out)
+    monkeypatch.setattr(
+        stream_dedup, "MAX_SIMHASH_STREAM_CANDIDATES_PER_EPOCH", 1
+    )
     with pytest.raises(StreamingQueryException, match="candidate rows"):
-        run(budget=1)
+        run()
 
 
 def test_simhash_candidates_rescue_no_hamming_surface(spark):

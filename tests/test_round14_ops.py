@@ -264,15 +264,21 @@ def test_simhash_cap_probe_silent_when_cap_does_not_bind(spark, caplog):
 # --------------------------------------------------------------------
 
 
-def test_simhash_stream_warns_before_detonation(spark, tmp_path, caplog):
+def test_simhash_stream_warns_before_detonation(
+    spark, tmp_path, caplog, monkeypatch
+):
     """Two 20-identical-doc epochs under a budget both epochs FIT:
     epoch mass 380 then 1180, projections 1180 then 1980 — past 80% of
     budget=1400 (1,120) both times, so the stream completes green but
     logs the pre-detonation warning naming the MinHash twin."""
     from clinical_trials_data_pipeline_analyis_spark.streaming import (
+        dedup as stream_dedup,
         simhash_near_dedup_stream,
     )
 
+    monkeypatch.setattr(
+        stream_dedup, "MAX_SIMHASH_STREAM_CANDIDATES_PER_EPOCH", 1400
+    )
     text = "the exact same template text repeated for every document"
     chunks = str(tmp_path / "chunks")
     df1 = spark.createDataFrame(
@@ -295,7 +301,6 @@ def test_simhash_stream_warns_before_detonation(spark, tmp_path, caplog):
             out_path=str(tmp_path / "flags"),
             store_path=str(tmp_path / "store"),
             checkpoint=str(tmp_path / "ckpt"),
-            max_candidates_per_epoch=1400,
         ).start()
         q.awaitTermination(180)
     msgs = [

@@ -1147,7 +1147,9 @@ def test_streaming_rhp_replay_idempotent_and_geometry_pinned(spark, tmp_path):
         q = run(seed=99)
 
 
-def test_streaming_rhp_budget_refuses_in_binding_regime(spark, tmp_path):
+def test_streaming_rhp_budget_refuses_in_binding_regime(
+    spark, tmp_path, monkeypatch
+):
     """The per-epoch candidate budget must refuse LOUDLY where it binds
     (the house rule: every size-dependent guard gets a binding-regime
     test): a budget of 1 against a fixture whose first epoch already
@@ -1157,8 +1159,12 @@ def test_streaming_rhp_budget_refuses_in_binding_regime(spark, tmp_path):
 
     from clinical_trials_data_pipeline_analyis_spark.streaming import (
         rhp_near_dedup_stream,
+        similarity as stream_similarity,
     )
 
+    monkeypatch.setattr(
+        stream_similarity, "MAX_RHP_STREAM_CANDIDATES_PER_EPOCH", 1
+    )
     emb = _near_dup_embeddings(spark, n_base=30, n_dups=10)
     chunks = str(tmp_path / "chunks")
     emb.coalesce(1).write.parquet(f"{chunks}/c1")
@@ -1174,7 +1180,6 @@ def test_streaming_rhp_budget_refuses_in_binding_regime(spark, tmp_path):
         store_path=str(tmp_path / "sigstore"),
         checkpoint=str(tmp_path / "ckpt"),
         threshold=0.9,
-        max_candidates_per_epoch=1,
     ).start()
     with pytest.raises(StreamingQueryException, match="candidate rows"):
         q.awaitTermination(120)
@@ -1190,8 +1195,7 @@ def test_near_dup_streams_refuse_at_the_same_mass(
     and 3 more in epoch 1. The keep-first mass is then
     2·C(4, 2) = 12 for epoch 0 and 2·(3·4 + C(3, 2)) = 30 for epoch 1,
     so a budget of 29 refuses epoch 1 at 30 and a budget of 30 admits
-    both epochs. The MinHash budget is a module constant, read at each
-    epoch; the other two streams take theirs as an argument."""
+    both epochs. Each budget is a module constant, read at each epoch."""
     from functools import partial
 
     from pyspark.errors import StreamingQueryException
@@ -1199,12 +1203,15 @@ def test_near_dup_streams_refuse_at_the_same_mass(
     from clinical_trials_data_pipeline_analyis_spark import streaming
     from clinical_trials_data_pipeline_analyis_spark.streaming import (
         dedup as stream_dedup,
+        similarity as stream_similarity,
     )
 
-    def with_budget(make):
-        return lambda stream, budget, **paths: make(
-            stream, max_candidates_per_epoch=budget, **paths
-        )
+    def with_budget(module, constant, make):
+        def start(stream, budget, **paths):
+            monkeypatch.setattr(module, constant, budget)
+            return make(stream, **paths)
+
+        return start
 
     if family == "rhp":
         id_col = "vec_id"
@@ -1213,10 +1220,12 @@ def test_near_dup_streams_refuse_at_the_same_mass(
             "vec_id BIGINT, embedding ARRAY<FLOAT>",
         )
         make = with_budget(
+            stream_similarity,
+            "MAX_RHP_STREAM_CANDIDATES_PER_EPOCH",
             partial(
                 streaming.rhp_near_dedup_stream,
                 threshold=0.9, n_bits=16, bands=2, dim=64,
-            )
+            ),
         )
     else:
         id_col = "doc_id"
@@ -1224,18 +1233,17 @@ def test_near_dup_streams_refuse_at_the_same_mass(
             [(i, "alpha beta gamma delta epsilon") for i in range(7)],
             "doc_id BIGINT, text STRING",
         )
-
-        def minhash(stream, budget, **paths):
-            monkeypatch.setattr(
-                stream_dedup, "MAX_MINHASH_STREAM_CANDIDATES_PER_EPOCH", budget
-            )
-            return streaming.near_dedup_docs_stream(
-                stream, num_hashes=8, bands=2, **paths
-            )
-
         make = {
-            "minhash": minhash,
-            "simhash": with_budget(streaming.simhash_near_dedup_stream),
+            "minhash": with_budget(
+                stream_dedup,
+                "MAX_MINHASH_STREAM_CANDIDATES_PER_EPOCH",
+                partial(streaming.near_dedup_docs_stream, num_hashes=8, bands=2),
+            ),
+            "simhash": with_budget(
+                stream_dedup,
+                "MAX_SIMHASH_STREAM_CANDIDATES_PER_EPOCH",
+                streaming.simhash_near_dedup_stream,
+            ),
         }[family]
     chunks = str(tmp_path / "chunks")
     rows.filter(F.col(id_col) < 4).coalesce(1).write.parquet(f"{chunks}/c1")

@@ -1,8 +1,8 @@
 """Bit-identity of the fixed-dim flat vector-math form.
 
 The flat form (``a[0]*b[0] + ... + a[k-1]*b[k-1]`` with a per-row
-size-guard falling back to the fold) is a per-call-site OPT-IN
-(``use_flat=True``): it measured 3-6x FASTER at the sf10 corpus rung
+size-guard falling back to the fold) is a per-call-site OPT-IN on
+``dot`` and ``pair_cosine`` (``use_flat=True``): it measured 3-6x FASTER at the sf10 corpus rung
 where many short dots ride each output row (pq subvector distances,
 exact-pair verifies) and 2-5x SLOWER on single-dot-per-row scans (see
 the ``functions/vectors.py`` module docstring for the numbers and the
@@ -27,6 +27,7 @@ from clinical_trials_data_pipeline_analyis_spark.functions.vectors import (
     cosine_similarity,
     dot,
     l2_norm,
+    pair_cosine,
 )
 
 
@@ -34,7 +35,7 @@ def test_flat_form_is_opt_in():
     # use_flat must default False at every entry point: the flat form is
     # only justified where a corpus-rung measurement backs it (module
     # docstring) — a flipped default is an unmeasured perf change.
-    for fn in (dot, l2_norm, cosine_similarity):
+    for fn in (dot, pair_cosine):
         assert inspect.signature(fn).parameters["use_flat"].default is False
 
 
@@ -49,22 +50,20 @@ def _collect_both(df, dim):
         "id",
         dot(F.col("a"), F.col("b")).alias("fold"),
         dot(F.col("a"), F.col("b"), dim=dim, use_flat=True).alias("flat"),
-        l2_norm(F.col("a")).alias("nfold"),
-        l2_norm(F.col("a"), dim=dim, use_flat=True).alias("nflat"),
     ).orderBy("id")
     return out.collect()
 
 
 def _assert_bit_identical(rows):
     for r in rows:
-        for x, y in ((r["fold"], r["flat"]), (r["nfold"], r["nflat"])):
-            if x is None or y is None:
-                assert x is None and y is None, (r["id"], x, y)
-            else:
-                # struct-level bit comparison: repr of a double is exact
-                assert math.isnan(x) == math.isnan(y), (r["id"], x, y)
-                if not math.isnan(x):
-                    assert x == y and repr(x) == repr(y), (r["id"], x, y)
+        x, y = r["fold"], r["flat"]
+        if x is None or y is None:
+            assert x is None and y is None, (r["id"], x, y)
+        else:
+            # struct-level bit comparison: repr of a double is exact
+            assert math.isnan(x) == math.isnan(y), (r["id"], x, y)
+            if not math.isnan(x):
+                assert x == y and repr(x) == repr(y), (r["id"], x, y)
 
 
 def test_dim_hint_matches_fold_on_matching_dim(spark):
@@ -105,28 +104,6 @@ def test_dim_hint_null_and_empty_shapes(spark):
     _assert_bit_identical(_collect_both(_pairs_df(spark, rows), dim=2))
 
 
-def test_cosine_similarity_dim_hint(spark):
-    rows = [
-        (0, [1.0, 2.0, 2.0], [2.0, 1.0, 2.0]),
-        (1, [0.0, 0.0, 0.0], [1.0, 1.0, 1.0]),  # zero norm -> NULL
-        (2, [1.0, 1.0], [1.0, 1.0]),            # mismatched vs dim=3
-    ]
-    got = (
-        _pairs_df(spark, rows)
-        .select(
-            "id",
-            cosine_similarity(F.col("a"), F.col("b")).alias("fold"),
-            cosine_similarity(F.col("a"), F.col("b"), dim=3, use_flat=True).alias("flat"),
-        )
-        .orderBy("id")
-        .collect()
-    )
-    for r in got:
-        assert (r["fold"] is None) == (r["flat"] is None)
-        if r["fold"] is not None:
-            assert repr(r["fold"]) == repr(r["flat"])
-
-
 def test_fixture_cosines_unchanged_by_hint(spark):
     """End-to-end: on the real 64-dim embeddings fixture the hinted and
     unhinted pair cosines agree to full precision (this is the claim
@@ -157,9 +134,9 @@ def test_fixture_cosines_unchanged_by_hint(spark):
 
 def test_str_operands_are_bit_identical_to_column_form(spark):
     """dot/l2_norm/cosine_similarity with str operands (column names,
-    built as ONE parsed SQL string — the round-15 construction-cost
-    path) must evaluate bit-for-bit equal to the Column-API form, in
-    both fold and flat modes, across every shape the flat tests cover
+    built as ONE parsed SQL string — the construction-cost path) must
+    evaluate bit-for-bit equal to the Column-API form (``dot`` in both
+    fold and flat modes), across every shape the flat tests cover
     (matching dims, mismatches, NULL arrays, element NULLs, empties)."""
     import struct
 
@@ -189,14 +166,8 @@ def test_str_operands_are_bit_identical_to_column_form(spark):
         dot("a", "b", dim=8, use_flat=True).alias("s_flat"),
         l2_norm(F.col("a")).alias("c_norm"),
         l2_norm("a").alias("s_norm"),
-        l2_norm(F.col("a"), dim=8, use_flat=True).alias("c_nflat"),
-        l2_norm("a", dim=8, use_flat=True).alias("s_nflat"),
         cosine_similarity(F.col("a"), F.col("b")).alias("c_cos"),
         cosine_similarity("a", "b").alias("s_cos"),
-        cosine_similarity(F.col("a"), F.col("b"), dim=8, use_flat=True).alias(
-            "c_cosf"
-        ),
-        cosine_similarity("a", "b", dim=8, use_flat=True).alias("s_cosf"),
     ).collect()
     assert len(got) == len(rows)
     for r in got:
@@ -204,9 +175,7 @@ def test_str_operands_are_bit_identical_to_column_form(spark):
             ("c_fold", "s_fold"),
             ("c_flat", "s_flat"),
             ("c_norm", "s_norm"),
-            ("c_nflat", "s_nflat"),
             ("c_cos", "s_cos"),
-            ("c_cosf", "s_cosf"),
         ):
             x, y = r[pair[0]], r[pair[1]]
             if x is None or y is None:
@@ -233,12 +202,10 @@ def test_dotted_str_operands_resolve_nested_fields(spark):
             dot(ca, cb, dim=3, use_flat=flat).alias("c_dot"),
             dot("meta.a", "meta.b", dim=3, use_flat=flat).alias("s_dot"),
             dot("meta.a", cb, dim=3, use_flat=flat).alias("m_dot"),
-            l2_norm(ca, dim=3, use_flat=flat).alias("c_norm"),
-            l2_norm("meta.a", dim=3, use_flat=flat).alias("s_norm"),
-            cosine_similarity(ca, cb, dim=3, use_flat=flat).alias("c_cos"),
-            cosine_similarity("meta.a", "meta.b", dim=3, use_flat=flat).alias(
-                "s_cos"
-            ),
+            l2_norm(ca).alias("c_norm"),
+            l2_norm("meta.a").alias("s_norm"),
+            cosine_similarity(ca, cb).alias("c_cos"),
+            cosine_similarity("meta.a", "meta.b").alias("s_cos"),
         ).collect()
         for r in got:
             assert r["c_dot"] == r["s_dot"] == r["m_dot"]
