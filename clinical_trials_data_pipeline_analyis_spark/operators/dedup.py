@@ -66,33 +66,26 @@ def _bucket_pairs(n: str) -> Column:
     return F.expr(f"{n} * ({n} - 1) div 2")
 
 
-def pair_mass(
-    df: DataFrame, keys: list[str], against: DataFrame | None = None
-) -> tuple[int, int]:
-    """``(pairs, rows)`` of the bucket equi-join on ``keys``, from ONE
+def pair_mass(df: DataFrame, keys: list[str]) -> tuple[int, int]:
+    """``(pairs, rows)`` of the bucket self-join on ``keys``, from ONE
     one-row aggregate over the bucket sizes.
 
     ``pairs`` is Σ n(n−1)/2 over the buckets of ``df`` — the exact row
-    count of the ``id_a < id_b`` self-join — or, with ``against``,
-    Σ n_a·n_b over the buckets the two frames share (the asymmetric
-    join, self-pairs included). ``rows`` is Σ n = ``df``'s row count,
-    so a caller that also needs the count pays no second job. Every
-    candidate-budget guard prices its join with this; empty input
-    gives ``(0, 0)``.
+    count of the ``id_a < id_b`` self-join. ``rows`` is Σ n = ``df``'s
+    row count, so a caller that also needs the count pays no second
+    job. Every batch candidate-budget guard prices its join with this
+    (the streams price their asymmetric epoch join with
+    ``streaming.store_meta``); empty input gives ``(0, 0)``.
     """
-    sizes = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("_n"))
-    if against is None:
-        pairs = _bucket_pairs("_n")
-    else:
-        sizes = sizes.join(
-            against.groupBy(*keys).agg(F.count(F.lit(1)).alias("_nb")),
-            keys,
-            "left",
+    row = (
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .agg(
+            F.sum(_bucket_pairs("_n")).alias("pairs"),
+            F.sum("_n").alias("rows"),
         )
-        pairs = F.col("_n") * F.coalesce(F.col("_nb"), F.lit(0))
-    row = sizes.agg(
-        F.sum(pairs).alias("pairs"), F.sum("_n").alias("rows")
-    ).collect()[0]
+        .collect()[0]
+    )
     return int(row["pairs"] or 0), int(row["rows"] or 0)
 
 
@@ -113,10 +106,10 @@ def bucket_pairs(
     candidates in the join's own projection (verify-in-join) instead of
     re-joining the payload onto the pair stream.
 
-    Two modes, as in :func:`pair_mass`: symmetric keeps
-    ``id_a < id_b`` (each unordered pair once); ``against=True`` keeps
+    Two modes: symmetric keeps ``id_a < id_b`` (each unordered pair
+    once, the join :func:`pair_mass` prices); ``against=True`` keeps
     ``id_a != id_b`` (every left row against every right row of its
-    bucket, self-pairs dropped).
+    bucket, self-pairs dropped), the streams' epoch join.
 
     Physical choices stay with the caller: spread, broadcast hints, cap
     semi-joins and salt grids go on the frames it passes in, and
@@ -323,8 +316,7 @@ def minhash_signatures(
 
 
 #: Candidate-row budget for ``lsh_candidate_pairs``, priced by
-#: :func:`pair_mass` over the (band, bsig) buckets (the ``against`` form
-#: counts the excluded self-pairs too, so it is an upper bound).
+#: :func:`pair_mass` over the (band, bsig) buckets.
 #: Calibrated like ``MAX_RHP_CANDIDATE_ROWS`` / ``MAX_JACCARD_JOIN_ROWS``:
 #: ~1e9 rows is large-but-finishable on one node with verify-in-join;
 #: past it the fix is geometry (coarser banding) or exact-dedup first,
@@ -366,7 +358,6 @@ def lsh_candidate_pairs(
     num_hashes: int = 8,
     bands: int | str = 4,
     materialize: bool = True,
-    against: DataFrame | None = None,
     estimate: bool = False,
     max_candidates: int | None = MAX_LSH_CANDIDATE_ROWS,
     min_recall: float | None = None,
@@ -381,13 +372,6 @@ def lsh_candidate_pairs(
     whole signature pipeline (exchange reuse does not fire across the
     differently-aliased band unions; measured 4.5s vs 2.0s at sf0.1 for
     the pair step). Pass False when the input is already materialized.
-
-    ``against`` switches to ASYMMETRIC candidate generation: pairs are
-    (doc_a from ``signatures``) x (doc_b from ``against``) — the
-    incremental-dedup shape, where a new micro-batch's signatures are
-    checked against the accumulated signature store without recomputing
-    history-vs-history pairs. doc_a keeps the left role (no
-    canonicalization), self-pairs are dropped.
 
     ``estimate=True`` appends ``jaccard_estimate`` = (agreeing hashes)
     / num_hashes, rounded to 6, computed IN the band join's projection
@@ -404,9 +388,9 @@ def lsh_candidate_pairs(
     measured noise at the band-table sizes the budget guard permits.
 
     ``max_candidates`` is the candidate budget: :func:`pair_mass` over
-    the band table prices the join's exact fan-out (symmetric or
-    ``against``) in one narrow aggregate, and the call refuses loudly
-    past the budget instead of detonating the shuffle.
+    the band table prices the join's exact fan-out in one narrow
+    aggregate, and the call refuses loudly past the budget instead of
+    detonating the shuffle.
     Values-neutral; ``None`` disables it. Callers that pre-materialize
     signatures (``dedup_pipeline``) pay one cheap scan of the
     checkpointed table; with ``materialize=False`` and lazy input the
@@ -424,9 +408,9 @@ def lsh_candidate_pairs(
     signatures; the chosen geometry and its banding-theory recall at
     ``LSH_RECALL_JACCARD`` are logged, the final probe's mass feeds the
     guard (no recompute), and an auto call is IDENTICAL to the pinned
-    call at the chosen banding. Requires a budget and symmetric mode;
-    refuses loudly when even one band of all ``num_hashes`` rows
-    exceeds the budget (exact-dedup first, or raise it).
+    call at the chosen banding. Requires a budget; refuses loudly when
+    even one band of all ``num_hashes`` rows exceeds the budget
+    (exact-dedup first, or raise it).
 
     ``min_recall`` is a floor on the banding-theory recall
     (:func:`minhash_banding_recall`). Auto mode already picks the
@@ -441,12 +425,6 @@ def lsh_candidate_pairs(
     op = "lsh_candidate_pairs"
     measured_est: int | None = None
     if bands == "auto":
-        if against is not None:
-            raise ValueError(
-                "lsh_candidate_pairs: bands='auto' sizes against the "
-                "symmetric Σ n(n−1)/2 accounting — pin the banding for "
-                "against-mode candidate generation."
-            )
         check_auto_budget(op, "bands", max_candidates)
         check_floor(op, "min_recall", min_recall)
         if materialize:
@@ -531,18 +509,11 @@ def lsh_candidate_pairs(
         signatures = signatures.transform(cut_lineage())
 
     payload = [f"h{i}" for i in range(num_hashes)] if estimate else []
-    left = lsh_band_table(
+    table = lsh_band_table(
         signatures, num_hashes, bands, F.col(id_col).alias("doc"), *payload
     )
-    right = (
-        None
-        if against is None
-        else lsh_band_table(
-            against, num_hashes, bands, F.col(id_col).alias("doc"), *payload
-        )
-    )
     if max_candidates is not None and measured_est is None:
-        est, _ = pair_mass(left, ["band", "bsig"], against=right)
+        est, _ = pair_mass(table, ["band", "bsig"])
         if est > max_candidates:
             refuse_over_budget(
                 op, est, max_candidates,
@@ -557,10 +528,7 @@ def lsh_candidate_pairs(
                 f"can take it.",
             )
 
-    joined = bucket_pairs(
-        left, ["band", "bsig"], "doc", payload,
-        right=right, against=against is not None,
-    )
+    joined = bucket_pairs(table, ["band", "bsig"], "doc", payload)
     if not estimate:
         return joined.select("doc_a", "doc_b").distinct()
     agree: Column = F.lit(0)

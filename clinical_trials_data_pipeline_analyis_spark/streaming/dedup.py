@@ -13,23 +13,36 @@ layer.
 
 from __future__ import annotations
 
-import logging
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoint import cut_lineage
+from ..operators.dedup import (
+    LSH_RECALL_JACCARD,
+    SIMHASH_HALVES,
+    check_banding,
+    check_floor,
+    decontaminate,
+    hamming,
+    lsh_band_table,
+    minhash_banding_recall,
+    minhash_signatures,
+    remove_spans,
+    simhash,
+    spans_from_marked,
+    window_hashes,
+)
 from .store_meta import (
+    Banding,
     check_or_pin_geometry,
     foreach_epoch,
-    keep_first_flags,
-    price_epoch_join,
+    near_dup_stream,
     read_history,
     write_epoch,
 )
-
-_LOG = logging.getLogger(__name__)
 
 
 def dedup_events_stream(
@@ -54,8 +67,7 @@ def dedup_events_stream(
 
 #: Per-epoch candidate budget for the streaming MinHash near-dedup: the
 #: keep-first mass of the asymmetric (batch x history + batch) band
-#: join, priced like its RHP and SimHash siblings, at the batch
-#: ``MAX_LSH_CANDIDATE_ROWS``.
+#: join, at the batch ``MAX_LSH_CANDIDATE_ROWS``.
 MAX_MINHASH_STREAM_CANDIDATES_PER_EPOCH = 1_000_000_000
 
 
@@ -71,65 +83,27 @@ def near_dedup_docs_stream(
     shingle_k: int = 3,
     min_recall: float | None = None,
 ):
-    """Incremental MinHash near-dedup via ``foreachBatch``: each
-    micro-batch's documents are signed once, banded against the
-    ACCUMULATED signature store (plus the batch itself), and flagged;
-    the batch's signatures are then appended to the store.
+    """Incremental MinHash near-dedup, the streaming twin of
+    ``operators.dedup.lsh_candidate_pairs``; the per-epoch protocol
+    (pin, sign, price, keep-first join, flags, store) is
+    ``store_meta.near_dup_stream``.
 
-    A document is flagged ``is_near_dup`` when it collides with any
-    LOWER-id document — the same keep-first contract as the batch
-    pipeline, so for an id-ordered stream the flags equal what the
-    batch operators produce over the full corpus
-    (tests/test_streaming_metrics.py proves the equality).
+    Verify: none. A document is flagged when it shares any
+    ``lsh_band_table`` (band, bsig) bucket with a LOWER-id document, so
+    for an id-ordered stream the flags equal the batch LSH pairs'
+    ``doc_b`` set. Store rows: (id, h0..h7) signatures at the default
+    8 hashes, ~40 bytes/doc, never the corpus text.
 
-    Scale shape: the per-batch cost is |batch| x matching band buckets —
-    never history x history (the asymmetric ``against`` join); the
-    store is a parquet table of (id, h0..h7) signatures partitioned by
-    ``epoch_id``, ~40 bytes/doc, NOT the corpus text.
-
-    Retry-idempotence: the flag table and the signature store are
-    epoch stores (``streaming/store_meta.py``): a retried micro-batch
-    rewrites its own epoch partition and bands against exactly the
-    history its first attempt saw, so the retry is bit-identical, not
-    merely non-duplicating.
-
-    Geometry is PINNED for the store's lifetime: MinHash
-    signatures from different (num_hashes, bands, shingle_k) never
-    collide meaningfully, so the first epoch writes a
-    ``_minhash_geometry`` sidecar under the store and every later epoch
-    verifies it, failing the stream loudly on mismatch — the same
-    contract as ``rhp_near_dedup_stream``, and like it routed through
-    the Spark session so it holds on any filesystem, not just paths
-    ``os.path`` can see.
-
-    ``min_recall`` is the batch operator's floor on the banding-theory
-    recall (``operators.dedup.minhash_banding_recall``), validated at
-    CONSTRUCTION (pure driver-side arithmetic, before any epoch or
-    sidecar write): a pinned geometry below the floor refuses up front
-    with the batch refusal's prescription, instead of a long-running
-    stream silently under-recalling for its whole life.
-
-    Each epoch prices its band join with ``store_meta.price_epoch_join``
-    (the keep-first mass n_new·(n_all−n_new) + C(n_new, 2) per bucket,
-    summed over the bands) and refuses past
-    ``MAX_MINHASH_STREAM_CANDIDATES_PER_EPOCH`` through
-    ``refuse_over_budget``, as the RHP and SimHash streams do; the
-    priced band tables are the ones the join runs on.
+    Geometry: (num_hashes, bands, shingle_k), pinned in the
+    ``_minhash_geometry`` sidecar. ``bands`` must divide ``num_hashes``
+    and ``min_recall`` floors the banding-theory recall
+    (``operators.dedup.minhash_banding_recall``); both are checked at
+    construction, before any epoch or sidecar write, so a stream that
+    would under-recall for its whole life refuses up front. The budget
+    is ``MAX_MINHASH_STREAM_CANDIDATES_PER_EPOCH``.
     """
-    from ..operators.dedup import (
-        LSH_RECALL_JACCARD,
-        bucket_pairs,
-        check_banding,
-        check_floor,
-        lsh_band_table,
-        minhash_banding_recall,
-        minhash_signatures,
-        refuse_over_budget,
-    )
-
     op = "near_dedup_docs_stream"
-    # The banding error comes before the floor, and at construction,
-    # not at the first epoch.
+    # The banding error comes before the floor.
     check_banding(op, "num_hashes", num_hashes, bands)
     check_floor(
         op, "min_recall", min_recall,
@@ -141,55 +115,25 @@ def near_dedup_docs_stream(
         "16; more bands at the same rows recovers recall exponentially) "
         "or lower the floor.",
     )
-
-    geometry = {
-        "num_hashes": int(num_hashes),
-        "bands": int(bands),
-        "shingle_k": int(shingle_k),
-    }
-
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        check_or_pin_geometry(
-            spark, store_path, "_minhash_geometry", geometry, op
-        )
-        sigs_new = minhash_signatures(
-            batch_df, id_col, text_col, num_hashes=num_hashes, shingle_k=shingle_k
-        ).transform(cut_lineage(local_only=True))
-        history = read_history(spark, store_path, epoch_id, sigs_new)
-        all_sigs = history.unionByName(sigs_new).transform(
-            cut_lineage(local_only=True)
-        )
-        doc = F.col(id_col).alias("doc")
-        bands_new = lsh_band_table(sigs_new, num_hashes, bands, doc)
-        bands_all = lsh_band_table(all_sigs, num_hashes, bands, doc)
-        budget = MAX_MINHASH_STREAM_CANDIDATES_PER_EPOCH
-        mass, _, _ = price_epoch_join(bands_new, bands_all, ["band", "bsig"])
-        if mass > budget:
-            refuse_over_budget(
-                f"{op} (epoch {epoch_id})",
-                mass, budget,
-                f"The pinned {bands} bands x {num_hashes // bands} rows "
-                f"are too permissive for the accumulated corpus — "
-                f"re-sign the store with coarser bands (fewer bands of "
-                f"more rows), run exact dedup ahead of the stream "
-                f"(identical documents collide in every band), or shrink "
-                f"the micro-batch (maxFilesPerTrigger).",
-                "MAX_MINHASH_STREAM_CANDIDATES_PER_EPOCH",
-            )
-        # keep-first: a document is a dup of LOWER ids only
-        dup_ids = (
-            bucket_pairs(
-                bands_new, ["band", "bsig"], "doc", right=bands_all, against=True
-            )
-            .filter(F.col("doc_b") < F.col("doc_a"))
-            .select(F.col("doc_a").alias(id_col))
-        )
-        flags = keep_first_flags(sigs_new, dup_ids, id_col)
-        write_epoch(flags, out_path, epoch_id)
-        write_epoch(sigs_new, store_path, epoch_id)
-
-    return foreach_epoch(docs_stream, _process, checkpoint)
+    return near_dup_stream(
+        docs_stream, out_path, store_path, checkpoint, id_col,
+        op=op,
+        marker="_minhash_geometry",
+        geometry=dict(num_hashes=num_hashes, bands=bands, shingle_k=shingle_k),
+        sign=lambda batch: minhash_signatures(
+            batch, id_col, text_col, num_hashes=num_hashes, shingle_k=shingle_k
+        ),
+        banding=Banding(
+            lambda sigs: lsh_band_table(sigs, num_hashes, bands, id_col),
+            ("band", "bsig"),
+        ),
+        budget=f"{__name__}.MAX_MINHASH_STREAM_CANDIDATES_PER_EPOCH",
+        fix=f"The pinned {bands} bands x {num_hashes // bands} rows are "
+        f"too permissive for the accumulated corpus — re-sign the store "
+        f"with coarser bands (fewer bands of more rows), run exact dedup "
+        f"ahead of the stream (identical documents collide in every "
+        f"band), or shrink the micro-batch (maxFilesPerTrigger).",
+    )
 
 
 def clean_spans_stream(
@@ -230,12 +174,6 @@ def clean_spans_stream(
     later epoch verifies it through the Spark session (filesystem-
     agnostic), failing the stream loudly on mismatch.
     """
-    from ..operators.dedup import (
-        remove_spans,
-        spans_from_marked,
-        window_hashes,
-    )
-
     geometry = {"k": int(k)}
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
@@ -294,8 +232,6 @@ def decontaminate_docs_stream(
     (``streaming/store_meta.py``): a retried micro-batch rewrites its
     own partition instead of appending duplicate flags.
     """
-    from ..operators.dedup import decontaminate
-
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         flagged = decontaminate(
             batch_df,
@@ -310,11 +246,28 @@ def decontaminate_docs_stream(
     return foreach_epoch(docs_stream, _process, checkpoint)
 
 
-#: Per-epoch candidate budget for the streaming SimHash near-dedup —
-#: the exact row count the asymmetric (batch x history) half-bucket
-#: join streams through the Hamming verify each micro-batch. Same
-#: rationale as MAX_RHP_STREAM_CANDIDATES_PER_EPOCH.
+#: Per-epoch candidate budget for the streaming SimHash near-dedup:
+#: the keep-first mass of the asymmetric (batch x history + batch)
+#: half-bucket join, every row of which goes through the Hamming verify.
 MAX_SIMHASH_STREAM_CANDIDATES_PER_EPOCH = 500_000_000
+
+
+def _simhash_halves(fps: DataFrame) -> DataFrame:
+    """Two rows per fingerprint: its columns plus ``band`` (0 lo, 1 hi)
+    and ``half``, that band's ``SIMHASH_HALVES`` key."""
+    return reduce(
+        DataFrame.unionByName,
+        [
+            fps.select("*", F.lit(b).alias("band"), F.expr(h).alias("half"))
+            for b, h in enumerate(SIMHASH_HALVES)
+        ],
+    )
+
+
+#: The SimHash stream's buckets: both 16-bit halves of the fingerprint
+#: in one (band, half) table, so one join finds what a join per half
+#: found, at the same candidate mass.
+SIMHASH_BANDING = Banding(_simhash_halves, ("band", "half"))
 
 
 def simhash_near_dedup_stream(
@@ -326,152 +279,41 @@ def simhash_near_dedup_stream(
     text_col: str = "text",
     max_hamming: int = 6,
 ):
-    """Incremental SimHash near-dedup via ``foreachBatch`` — the
-    streaming twin of ``operators.dedup.simhash_near_duplicates``
-    (the same ``bucket_pairs`` join on the ``SIMHASH_HALVES`` keys, the
-    same ``hamming`` verify computed INSIDE it), completing the family:
-    MinHash (``near_dedup_docs_stream``), RHP
-    (``streaming.similarity.rhp_near_dedup_stream``), and now SimHash
-    each have a stream=batch-equality-tested incremental form.
+    """Incremental SimHash near-dedup, the streaming twin of
+    ``operators.dedup.simhash_near_duplicates``; the per-epoch protocol
+    (pin, sign, price, keep-first join, flags, store) is
+    ``store_meta.near_dup_stream``.
 
-    Each micro-batch's documents are fingerprinted once (the per-bit
-    majority vote is an ordinary aggregation — legal inside
-    foreachBatch), banded on both 16-bit halves against the ACCUMULATED
-    fingerprint store plus the batch itself, Hamming-verified in-join,
-    and flagged ``is_near_dup`` when they verify against any LOWER-id
-    document — the keep-first contract shared with the sibling twins,
-    so for an id-ordered stream the flags equal the batch operator's
-    pair set (doc flagged iff it appears as ``doc_b``; equality
-    tested). The batch's fingerprints (8 bytes each — the store is the
-    cheapest of the three families') then append to the store.
+    Buckets: ``SIMHASH_BANDING``, the two 16-bit ``SIMHASH_HALVES`` of
+    the 32-bit fingerprint. Verify: ``hamming`` ≤ ``max_hamming``,
+    inside the join. For an id-ordered stream the flags equal the
+    uncapped batch operator's ``doc_b`` set. The batch operator's
+    ``max_bucket`` cap and rescue stay batch-only: per-epoch bucket
+    counts differ from corpus counts, and capping on them would break
+    that parity; route template-heavy streams to
+    ``near_dedup_docs_stream``. Store rows: (id, simhash), 8 bytes of
+    fingerprint per doc.
 
-    Scale shape: per-epoch cost is |batch| x matching half-bucket
-    occupancy — never history x history; candidates exist only inside
-    whole-stage codegen (verify-in-join), and one bounded aggregate
-    over joined bucket COUNTS refuses past
-    ``MAX_SIMHASH_STREAM_CANDIDATES_PER_EPOCH`` (read at each epoch)
-    with the fix named (hot half-buckets on a template-heavy corpus
-    are a SimHash structural hazard — the batch operator's
-    ``max_bucket``/rescue machinery is deliberately batch-only, since
-    per-epoch bucket counts differ from corpus counts and capping on
-    them would break stream=batch flag parity; route template-heavy
-    streams to ``near_dedup_docs_stream``). The same aggregate also
-    PROJECTS the next epoch: an
-    identical batch re-arriving against the post-append store costs
-    Σ n_new x n_all + C(n_new, 2) per touched bucket, and past 80% of
-    the budget the epoch logs a pre-detonation warning (projected
-    mass + max store half-bucket occupancy, naming the MinHash twin)
-    so a template-heavy stream's first failure signal is not a
-    mid-epoch refusal — same collect, no extra pass.
-
-    Geometry: the half-bucket banding is 32-bit-specific (two 16-bit
-    halves — the same split as the batch ``simhash_candidates``), so
-    fingerprints are always 32 bits. The store pins ``{"bits": 32}``
-    through the same filesystem-agnostic sidecar as the sibling twins,
-    so a store written by any other width (or a corrupted marker)
-    fails the stream loudly rather than comparing fingerprints that
-    never collide meaningfully. ``max_hamming`` is
-    deliberately NOT pinned: the store holds full fingerprints, so the
-    verify radius is a per-run query parameter, not store geometry.
-
-    Retry-idempotence: flags and store are epoch stores
-    (``streaming/store_meta.py``) — a retried micro-batch is
-    bit-identical to its first attempt.
-
-    Returns an unstarted ``DataStreamWriter``; ``.start()`` it. Flag
-    output: (id_col, is_near_dup) partitioned by epoch_id.
+    Geometry: the half split is 32-bit-specific, so the
+    ``_simhash_geometry`` sidecar pins ``{"bits": 32}``. ``max_hamming``
+    is not pinned: the store holds whole fingerprints, so the verify
+    radius is a per-run parameter. The budget is
+    ``MAX_SIMHASH_STREAM_CANDIDATES_PER_EPOCH``.
     """
-    from ..operators.dedup import (
-        SIMHASH_HALVES,
-        bucket_pairs,
-        hamming,
-        refuse_over_budget,
-        simhash,
+    return near_dup_stream(
+        docs_stream, out_path, store_path, checkpoint, id_col,
+        op="simhash_near_dedup_stream",
+        marker="_simhash_geometry",
+        geometry={"bits": 32},
+        sign=lambda batch: simhash(batch, id_col, text_col),
+        banding=SIMHASH_BANDING,
+        payload=("simhash",),
+        verify=hamming("simhash_a", "simhash_b") <= max_hamming,
+        budget=f"{__name__}.MAX_SIMHASH_STREAM_CANDIDATES_PER_EPOCH",
+        fix="Template-heavy corpora concentrate fingerprint halves into "
+        "hot buckets — shrink the micro-batch (maxFilesPerTrigger), "
+        "route the stream to near_dedup_docs_stream (MinHash buckets "
+        "sample the shingle space instead), or raise "
+        "MAX_SIMHASH_STREAM_CANDIDATES_PER_EPOCH if the verify CPU can "
+        "take it.",
     )
-
-    geometry = {"bits": 32}
-
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        check_or_pin_geometry(
-            spark, store_path, "_simhash_geometry", geometry,
-            "simhash_near_dedup_stream",
-        )
-        fps_new = simhash(batch_df, id_col, text_col).transform(
-            cut_lineage(local_only=True)
-        )
-        history = read_history(spark, store_path, epoch_id, fps_new)
-        all_fps = history.unionByName(fps_new)
-        halves = [F.expr(h).alias("half") for h in SIMHASH_HALVES]
-
-        # Exact per-epoch mass of the two asymmetric half joins, plus
-        # the projected mass of an identical next batch and the store's
-        # max half-bucket occupancy, so a template-heavy stream warns
-        # BEFORE the budget refusal lands mid-epoch. One collect per
-        # half, no extra pass.
-        budget = MAX_SIMHASH_STREAM_CANDIDATES_PER_EPOCH
-        total, projected, max_occ = 0, 0, 0
-        for half in halves:
-            mass, proj, occ = price_epoch_join(
-                fps_new.select(half), all_fps.select(half), ["half"]
-            )
-            total += mass
-            projected += proj
-            max_occ = max(max_occ, occ)
-        if total > budget:
-            refuse_over_budget(
-                f"simhash_near_dedup_stream (epoch {epoch_id})",
-                total, budget,
-                "Template-heavy corpora concentrate fingerprint halves "
-                "into hot buckets — shrink the micro-batch "
-                "(maxFilesPerTrigger), route the stream to "
-                "near_dedup_docs_stream (MinHash buckets sample the "
-                "shingle space instead), or raise "
-                "MAX_SIMHASH_STREAM_CANDIDATES_PER_EPOCH if the verify "
-                "CPU can take it.",
-                "MAX_SIMHASH_STREAM_CANDIDATES_PER_EPOCH",
-            )
-        if projected > 0.8 * budget:
-            # Pre-detonation warning: THIS epoch fits, but the store is
-            # hot enough that a similar next batch would land at >80% of
-            # the budget — the operator's first failure signal should
-            # not be a mid-epoch refusal.
-            _LOG.warning(
-                "simhash_near_dedup_stream: epoch %s used %s of the %s "
-                "candidate budget, and an identical next batch against "
-                "the post-append store projects to ~%s (>80%% of "
-                "budget; max half-bucket occupancy now %s). The store "
-                "is concentrating into hot fingerprint buckets — route "
-                "the stream to near_dedup_docs_stream (MinHash buckets "
-                "sample the shingle space) or shrink the micro-batch "
-                "BEFORE the budget refusal lands mid-epoch.",
-                epoch_id,
-                f"{total:,}",
-                f"{budget:,}",
-                f"{projected:,}",
-                f"{max_occ:,}",
-            )
-
-        dup_parts = []
-        for half in halves:
-            # keep-first: a doc is a dup of LOWER ids only; Catalyst
-            # folds this filter into the join condition
-            dup_parts.append(
-                bucket_pairs(
-                    fps_new.select(half, id_col, "simhash"),
-                    ["half"],
-                    id_col,
-                    ["simhash"],
-                    right=all_fps.select(half, id_col, "simhash"),
-                    against=True,
-                )
-                .filter(F.col(f"{id_col}_b") < F.col(f"{id_col}_a"))
-                .filter(hamming("simhash_a", "simhash_b") <= max_hamming)
-                .select(F.col(f"{id_col}_a").alias(id_col))
-            )
-        dup_ids = dup_parts[0].unionByName(dup_parts[1])
-        flags = keep_first_flags(fps_new, dup_ids, id_col)
-        write_epoch(flags, out_path, epoch_id)
-        write_epoch(fps_new, store_path, epoch_id)
-
-    return foreach_epoch(docs_stream, _process, checkpoint)

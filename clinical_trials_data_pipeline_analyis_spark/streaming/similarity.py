@@ -50,13 +50,19 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine_similarity
+from ..functions.vectors import cosine_similarity, l2_norm, pair_cosine
+from ..operators.dedup import check_banding
+from ..operators.similarity import (
+    check_probes,
+    ivf_assign,
+    ivf_assign_topp,
+    rhp_signatures,
+)
 from .store_meta import (
+    Banding,
     check_or_pin_geometry,
     foreach_epoch,
-    keep_first_flags,
-    price_epoch_join,
-    read_history,
+    near_dup_stream,
     write_epoch,
 )
 
@@ -189,8 +195,6 @@ def topp_centroids_expr(
     instead (a window is legal there; micro-batches are ordinary batch
     frames).
     """
-    from ..operators.similarity import check_probes
-
     check_probes(probes)
     if not centroid_rows:
         raise ValueError("centroid_rows must be non-empty")
@@ -308,8 +312,6 @@ def assign_cells_foreach_batch(
     schema: (vec_id, centroid_id, cosine[, rank]) partitioned by
     epoch_id.
     """
-    from ..operators.similarity import check_probes, ivf_assign, ivf_assign_topp
-
     check_probes(probes)
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
@@ -334,12 +336,14 @@ def assign_cells_foreach_batch(
 
 
 #: Per-epoch candidate budget for the streaming RHP near-dedup: the
-#: exact row count the asymmetric (batch x history) bucket join streams
-#: through the cosine verify each micro-batch. Reuses the batch
-#: operator's budget — per EPOCH here, since the stream amortizes the
-#: corpus over epochs (batch-side mass is |batch| x bucket occupancy,
-#: never history x history).
+#: keep-first mass of the asymmetric (batch x history + batch) bucket
+#: join, every row of which goes through the cosine verify. The batch
+#: operator's budget, per EPOCH here.
 MAX_RHP_STREAM_CANDIDATES_PER_EPOCH = 500_000_000
+
+#: The RHP stream's buckets: its store rows are already one row per
+#: (vector, band), keyed on (band, band_sig).
+RHP_BANDING = Banding(lambda sigs: sigs, ("band", "band_sig"))
 
 
 def rhp_near_dedup_stream(
@@ -355,125 +359,46 @@ def rhp_near_dedup_stream(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ):
-    """Incremental embedding-cosine near-dedup via ``foreachBatch`` —
-    the streaming twin of ``operators.similarity.rhp_near_duplicates``
-    (same sign-bit LSH bucketing, the same ``bucket_pairs`` join with
-    its ``pair_cosine`` verify in the join).
+    """Incremental embedding-cosine near-dedup, the streaming twin of
+    ``operators.similarity.rhp_near_duplicates``; the per-epoch
+    protocol (pin, sign, price, keep-first join, flags, store) is
+    ``store_meta.near_dup_stream``.
 
-    Each micro-batch's vectors are signed once (row-local projection,
-    the vector and its norm riding WITH the signature exactly like the
-    batch operator's checkpoint shape), banded against the ACCUMULATED
-    signature store plus the batch itself, cosine-verified INSIDE the
-    bucket join, and flagged; the batch's signed rows then append to
-    the store. A vector is flagged ``is_near_dup`` when it verifies
-    against any LOWER-id vector — the keep-first contract shared with
-    ``near_dedup_docs_stream``, so for an id-ordered stream the flags
-    equal the batch operator's pair set (vec flagged iff it appears as
-    ``vec_b``; stream=batch equality is tested). NULL vectors sign
-    nothing (no geometry) and flag False.
+    Buckets: the sign-bit LSH (band, band_sig) of ``rhp_signatures``.
+    Verify: ``pair_cosine`` ≥ ``threshold``, inside the join. For an
+    id-ordered stream the flags equal the batch operator's ``vec_b``
+    set; NULL vectors sign nothing and flag False. Store rows: (id,
+    band, band_sig, vector, norm), ``bands`` rows per vector: the
+    vector rides with its signature, as in the batch checkpoint,
+    because re-joining vectors onto the candidate rows shuffles
+    O(candidates x vec_size).
 
-    Scale shape: per-epoch cost is |batch| x matching bucket occupancy
-    — never history x history (the batch side is the new rows only);
-    the candidate stream exists only inside whole-stage codegen (the
-    verify-in-join shape — candidates are never materialized), and one
-    bounded aggregate over joined bucket COUNTS computes the exact
-    per-epoch candidate mass, refusing past
-    ``MAX_RHP_STREAM_CANDIDATES_PER_EPOCH`` (read at each epoch) with
-    the fix named instead of letting a hot epoch spill the disk away. The store is O(n x bands) rows of
-    (id, vector, norm, band, band_sig) — ``bands``x vector
-    duplication, the same deliberate trade as the batch checkpoint:
-    re-joining vectors per CANDIDATE row (the shape that filled the
-    disk at the 1M rung) shuffles O(candidates x vec_size),
-    catastrophically more.
-
-    Geometry is PINNED for the store's lifetime: band signatures from
-    different (n_bits, bands, dim, seed) never collide meaningfully, so
-    a restart with changed geometry would silently miss every
-    cross-epoch duplicate. The first epoch writes a ``_rhp_geometry``
-    sidecar (underscore-prefixed: invisible to the parquet reader) and
-    every later epoch verifies it, failing the stream LOUDLY on
-    mismatch — re-sign the store to change geometry. The sidecar is
-    read/written through the Spark session (``store_meta.
-    check_or_pin_geometry``), so the pin holds on any filesystem the
-    session can serve — local, ``file://``, ``hdfs://``, ``s3a://`` —
-    not just paths ``os.path`` can see. Auto-sizing (``n_bits="auto"``)
-    is deliberately NOT offered here for the same reason: per-epoch
-    re-sizing would shift the keys under the store.
-
-    Retry-idempotence: flags and store are epoch stores
-    (``streaming/store_meta.py``) — a retried micro-batch is
-    bit-identical to its first attempt.
-
-    Returns an unstarted ``DataStreamWriter``; ``.start()`` it. Flag
-    output: (id_col, is_near_dup) partitioned by epoch_id.
+    Geometry: (n_bits, bands, dim, seed), pinned in the
+    ``_rhp_geometry`` sidecar; ``bands`` must divide ``n_bits``,
+    checked at construction before any sidecar write. ``n_bits="auto"``
+    is not offered: per-epoch re-sizing would shift the keys under the
+    store. The budget is ``MAX_RHP_STREAM_CANDIDATES_PER_EPOCH``.
     """
-    from ..checkpoint import cut_lineage
-    from ..functions.vectors import l2_norm, pair_cosine
-    from ..operators.dedup import bucket_pairs, check_banding, refuse_over_budget
-    from ..operators.similarity import rhp_signatures
-
-    # At construction: the first epoch pins the geometry sidecar before
-    # it signs anything, so a bad banding must fail before any write.
     check_banding("rhp_near_dedup_stream", "n_bits", n_bits, bands)
-    geometry = {
-        "n_bits": int(n_bits),
-        "bands": int(bands),
-        "dim": int(dim),
-        "seed": int(seed),
-    }
-
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        check_or_pin_geometry(
-            spark, store_path, "_rhp_geometry", geometry,
-            "rhp_near_dedup_stream",
+    return near_dup_stream(
+        embeddings_stream, out_path, store_path, checkpoint, id_col,
+        op="rhp_near_dedup_stream",
+        marker="_rhp_geometry",
+        geometry=dict(n_bits=n_bits, bands=bands, dim=dim, seed=seed),
+        sign=lambda batch: rhp_signatures(
+            batch, n_bits, bands, dim, seed, id_col, vec_col, keep=(vec_col,)
+        ).withColumn("_norm", l2_norm(F.col(vec_col))),
+        banding=RHP_BANDING,
+        payload=(vec_col, "_norm"),
+        verify=pair_cosine(
+            f"{vec_col}_a", f"{vec_col}_b", "_norm_a", "_norm_b", dim=dim
         )
-        batch_df = batch_df.transform(cut_lineage(local_only=True))
-        sigs_new = (
-            rhp_signatures(
-                batch_df, n_bits, bands, dim, seed, id_col, vec_col,
-                keep=(vec_col,),
-            )
-            .withColumn("_norm", l2_norm(F.col(vec_col)))
-            .transform(cut_lineage(local_only=True))
-        )
-        history = read_history(spark, store_path, epoch_id, sigs_new)
-        all_sigs = history.unionByName(sigs_new)
-        # Exact per-epoch candidate mass of the asymmetric join below.
-        budget = MAX_RHP_STREAM_CANDIDATES_PER_EPOCH
-        mass, _, _ = price_epoch_join(sigs_new, all_sigs, ["band", "band_sig"])
-        if mass > budget:
-            refuse_over_budget(
-                f"rhp_near_dedup_stream (epoch {epoch_id})",
-                mass, budget,
-                f"The pinned {n_bits // bands}-bit bands are under-sized "
-                f"for the accumulated corpus — re-sign the store at a "
-                f"wider geometry (bits-per-band ≈ log2(corpus / 64)), "
-                f"shrink the micro-batch (maxFilesPerTrigger), or raise "
-                f"MAX_RHP_STREAM_CANDIDATES_PER_EPOCH if the verify CPU "
-                f"can take it.",
-                "MAX_RHP_STREAM_CANDIDATES_PER_EPOCH",
-            )
-        # keep-first: a vector is a dup of LOWER ids only; Catalyst folds
-        # this filter into the join condition
-        id_a, id_b = F.col(f"{id_col}_a"), F.col(f"{id_col}_b")
-        dup_ids = (
-            bucket_pairs(
-                sigs_new, ["band", "band_sig"], id_col, [vec_col, "_norm"],
-                right=all_sigs, against=True,
-            )
-            .filter(id_b < id_a)
-            .filter(
-                pair_cosine(
-                    f"{vec_col}_a", f"{vec_col}_b", "_norm_a", "_norm_b",
-                    dim=dim,
-                )
-                >= F.lit(threshold)
-            )
-            .select(id_a.alias(id_col))
-        )
-        flags = keep_first_flags(batch_df, dup_ids, id_col)
-        write_epoch(flags, out_path, epoch_id)
-        write_epoch(sigs_new, store_path, epoch_id)
-
-    return foreach_epoch(embeddings_stream, _process, checkpoint)
+        >= threshold,
+        budget=f"{__name__}.MAX_RHP_STREAM_CANDIDATES_PER_EPOCH",
+        fix=f"The pinned {n_bits // bands}-bit bands are under-sized for "
+        f"the accumulated corpus — re-sign the store at a wider geometry "
+        f"(bits-per-band ≈ log2(corpus / 64)), shrink the micro-batch "
+        f"(maxFilesPerTrigger), or raise "
+        f"MAX_RHP_STREAM_CANDIDATES_PER_EPOCH if the verify CPU can take "
+        f"it.",
+    )

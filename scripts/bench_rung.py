@@ -38,8 +38,9 @@ Legs:
 
 A stream leg feeds the corpus in ``--epochs`` id-ordered epochs (id i in
 epoch i·E // N, so every id streams) and records each epoch's wall and
-candidate mass: ``pair_mass`` over the store's bucket keys up to that
-epoch, minus the mass before it. Its batch leg then asserts the
+candidate mass: ``pair_mass`` over the family's band table (the
+``Banding`` its stream joins on) of the stored rows up to that epoch,
+minus the mass before it. Its batch leg then asserts the
 accounting identity (the epoch masses sum to the one-shot mass: every
 unordered bucket pair is paid once, in the epoch its later id arrives)
 and flag parity (the stream's flags are the batch pairs' later ids, by
@@ -134,23 +135,6 @@ def timed(fn):
     return round(time.perf_counter() - t0, 1), out
 
 
-def bucket_mass(df, joins: list[list[str]]) -> int:
-    """Σ n(n−1)/2 of each bucket join (a list of SQL key expressions),
-    summed over the joins."""
-    from pyspark.sql import functions as F
-
-    from clinical_trials_data_pipeline_analyis_spark.operators.dedup import (
-        pair_mass,
-    )
-
-    total = 0
-    for keys in joins:
-        names = [f"k{i}" for i in range(len(keys))]
-        cols = [F.expr(k).alias(n) for k, n in zip(keys, names)]
-        total += pair_mass(df.select(*cols), names)[0]
-    return total
-
-
 def cut_epochs(df, id_col: str, rows: int, epochs: int, chunk_dir: str):
     """Write ``df`` as ``epochs`` id-ordered one-file parquet dirs, id i
     in epoch i·epochs // rows. Re-cuts unless the chunks on disk were
@@ -174,8 +158,14 @@ def cut_epochs(df, id_col: str, rows: int, epochs: int, chunk_dir: str):
         json.dump(want, fh)
 
 
-def stream_leg(name, spark, corpus, id_col, work, rows, epochs, start, joins):
+def stream_leg(
+    name, spark, corpus, id_col, work, rows, epochs, start, banding
+):
     from pyspark.sql import functions as F
+
+    from clinical_trials_data_pipeline_analyis_spark.operators.dedup import (
+        pair_mass,
+    )
 
     chunks = os.path.join(work, "chunks")
     flags, store, ckpt, result = (
@@ -216,7 +206,8 @@ def stream_leg(name, spark, corpus, id_col, work, rows, epochs, start, joins):
     epoch_cands: dict[int, int] = {}
     before = 0
     for e in sorted(epoch_walls):
-        upto = bucket_mass(stored.filter(F.col("epoch_id") <= e), joins)
+        upto = stored.filter(F.col("epoch_id") <= e)
+        upto = pair_mass(banding.table(upto), banding.keys)[0]
         epoch_cands[e], before = upto - before, upto
         line = {"leg": name, "epoch": e, "sec": epoch_walls[e]}
         print(json.dumps({**line, "candidates": epoch_cands[e]}), flush=True)
@@ -234,18 +225,22 @@ def stream_leg(name, spark, corpus, id_col, work, rows, epochs, start, joins):
     return record
 
 
-def batch_leg(spark, id_col, work, later_ids, signed, joins):
+def batch_leg(spark, id_col, work, later_ids, signed, banding):
     """Time the batch operator's flagged ids (``later_ids()``), price
-    its buckets on ``signed()``, then check both against the stream
-    leg's result when one is on disk."""
+    ``signed()`` with the stream's ``banding``, then check both against
+    the stream leg's result when one is on disk."""
     from pyspark.sql import functions as F
+
+    from clinical_trials_data_pipeline_analyis_spark.operators.dedup import (
+        pair_mass,
+    )
 
     def run():
         dup = later_ids()
         return dup, dup.count()
 
     sec, (dup, flagged) = timed(run)
-    total = bucket_mass(signed(), joins)
+    total = pair_mass(banding.table(signed()), banding.keys)[0]
     record = {"wall_sec": sec, "flagged": flagged, "total_candidates": total}
     result = os.path.join(work, "stream_result.json")
     if os.path.exists(result):
@@ -294,7 +289,6 @@ def main() -> None:
     from bench import calibrate
     from clinical_trials_data_pipeline_analyis_spark.operators import similarity
     from clinical_trials_data_pipeline_analyis_spark.operators.dedup import (
-        SIMHASH_HALVES,
         simhash,
         simhash_near_duplicates,
     )
@@ -309,6 +303,7 @@ def main() -> None:
     from clinical_trials_data_pipeline_analyis_spark.streaming import (
         dedup as stream_dedup,
         rhp_near_dedup_stream,
+        similarity as stream_similarity,
         simhash_near_dedup_stream,
     )
     from clinical_trials_data_pipeline_analyis_spark.suite.extensions import (
@@ -409,11 +404,9 @@ def main() -> None:
             "simhash_stream", spark, docs, "doc_id", simhash_work, rows,
             args.epochs,
             partial(simhash_near_dedup_stream, max_hamming=MAX_HAMMING),
-            simhash_joins,
+            stream_dedup.SIMHASH_BANDING,
         )
 
-    rhp_joins = [["band", "band_sig"]]
-    simhash_joins = [[h] for h in SIMHASH_HALVES]
     k_auto = semdedup_auto_k(rows)
     run_leg = {
         "a45_k128": lambda: semdedup_leg(128),
@@ -426,7 +419,7 @@ def main() -> None:
             partial(
                 rhp_near_dedup_stream, threshold=RHP_THRESHOLD, **RHP_GEOMETRY
             ),
-            rhp_joins,
+            stream_similarity.RHP_BANDING,
         ),
         "rhp_batch": lambda: batch_leg(
             spark, "vec_id", rhp_work,
@@ -434,7 +427,7 @@ def main() -> None:
             .select(F.col("vec_b").alias("vec_id"))
             .distinct(),
             lambda: rhp_signatures(emb, **RHP_GEOMETRY),
-            rhp_joins,
+            stream_similarity.RHP_BANDING,
         ),
         "simhash_stream": simhash_stream_leg,
         "simhash_batch": lambda: batch_leg(
@@ -445,7 +438,7 @@ def main() -> None:
             .select(F.col("doc_b").alias("doc_id"))
             .distinct(),
             lambda: simhash(docs, "doc_id", "text").localCheckpoint(),
-            simhash_joins,
+            stream_dedup.SIMHASH_BANDING,
         ),
     }
 

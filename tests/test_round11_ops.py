@@ -63,6 +63,9 @@ from clinical_trials_data_pipeline_analyis_spark.operators.dedup import (  # noq
     bucket_pairs,
     pair_mass,
 )
+from clinical_trials_data_pipeline_analyis_spark.streaming.store_meta import (  # noqa: E402
+    _price_epoch_join,
+)
 from clinical_trials_data_pipeline_analyis_spark.operators.similarity import (  # noqa: E402
     rhp_candidate_estimate,
     rhp_escalate_geometry,
@@ -96,27 +99,35 @@ _MASS_ROWS = {
 @pytest.mark.parametrize("against", [False, True], ids=["symmetric", "against"])
 @pytest.mark.parametrize("shape", sorted(_MASS_ROWS))
 def test_pair_mass_matches_equi_join(spark, shape, against):
-    """pair_mass (the one accounting every candidate-budget guard uses)
-    must equal the row count of the bucket_pairs join it prices —
-    Σ n(n−1)/2 under ``id_a < id_b``; against a second frame Σ n_a·n_b,
-    which also counts the self-pairs the join drops — and its row count
-    must equal the frame's; empty input gives (0, 0)."""
+    """pair_mass (the accounting every batch candidate-budget guard
+    uses) must equal the row count of the bucket_pairs join it prices,
+    Σ n(n−1)/2 under ``id_a < id_b``, and its row count must equal the
+    frame's; empty input gives (0, 0). The streams' epoch price must
+    equal the row count of the keep-first ``against`` join of the batch
+    with history plus batch (the history is the same rows at lower
+    ids, so every bucket holds both)."""
+    keys = ["band", "bsig"]
     df = spark.createDataFrame(_MASS_ROWS[shape], _MASS_SCHEMA)
-    other = (
-        spark.createDataFrame(_MASS_ROWS["spread"], _MASS_SCHEMA)
-        if against
-        else None
-    )
-    pairs, rows = pair_mass(df, ["band", "bsig"], against=other)
-    joined = bucket_pairs(
-        df, ["band", "bsig"], "id", right=other, against=against
-    ).count()
-    self_pairs = df.join(other, ["id", "band", "bsig"]).count() if against else 0
-    assert pairs == joined + self_pairs
+    if against:
+        every = df.withColumn("id", F.col("id") - 1000).unionByName(df)
+        pairs, _, _ = _price_epoch_join(df, every, keys)
+        joined = (
+            bucket_pairs(df, keys, "id", right=every, against=True)
+            .filter(F.col("id_b") < F.col("id_a"))
+            .count()
+        )
+        assert pairs == joined
+        if shape == "hot":
+            # 40 new x 40 old + C(40, 2) in the hot bucket, 1 x 1 in
+            # each of the 5 singletons
+            assert pairs == 40 * 40 + 40 * 39 // 2 + 5
+        return
+    pairs, rows = pair_mass(df, keys)
+    assert pairs == bucket_pairs(df, keys, "id").count()
     assert rows == len(_MASS_ROWS[shape])
     if shape == "empty":
         assert (pairs, rows) == (0, 0)
-    elif shape == "hot" and not against:
+    elif shape == "hot":
         assert pairs == 40 * 39 // 2
 
 

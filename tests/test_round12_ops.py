@@ -428,34 +428,6 @@ def test_ngram_auto_max_df_applies_the_prescription(spark, caplog):
     assert unbound == plain and len(plain) > 3  # df=10 family included
 
 
-def test_lsh_guard_against_mode_counts_products(spark):
-    """Asymmetric (decontamination-shaped) accounting: Σ n_a×n_b per
-    bucket. 10 train x 5 benchmark copies of one text collide in all 4
-    bands: 200 join rows — 199 refuses, 200 runs."""
-    from clinical_trials_data_pipeline_analyis_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
-
-    text = "alpha beta gamma delta"
-    train = spark.createDataFrame(
-        [(i, text) for i in range(10)], "doc_id LONG, text STRING"
-    )
-    bench = spark.createDataFrame(
-        [(100 + i, text) for i in range(5)], "doc_id LONG, text STRING"
-    )
-    ts = minhash_signatures(train, "doc_id", "text")
-    bs = minhash_signatures(bench, "doc_id", "text")
-    with pytest.raises(ValueError, match="200"):
-        lsh_candidate_pairs(
-            ts, "doc_id", against=bs, max_candidates=199
-        )
-    got = lsh_candidate_pairs(
-        ts, "doc_id", against=bs, max_candidates=200
-    )
-    assert got.count() == 50  # every train doc x every bench doc
-
-
 def _simhash_fp(spark, rows):
     from clinical_trials_data_pipeline_analyis_spark.operators.dedup import (
         simhash,

@@ -25,7 +25,6 @@ import pytest
 from pyspark.sql import functions as F
 
 _DEDUP_LOGGER = "clinical_trials_data_pipeline_analyis_spark.operators.dedup"
-_STREAM_LOGGER = "clinical_trials_data_pipeline_analyis_spark.streaming.dedup"
 
 
 # --------------------------------------------------------------------
@@ -257,97 +256,6 @@ def test_simhash_cap_probe_silent_when_cap_does_not_bind(spark, caplog):
     with caplog.at_level(logging.WARNING, logger=_DEDUP_LOGGER):
         simhash_candidates(df, "doc_id", max_bucket=100)
     assert not [r for r in caplog.records if "simhash cap binding" in r.message]
-
-
-# --------------------------------------------------------------------
-# Ask #5: streaming twin pre-detonation warning
-# --------------------------------------------------------------------
-
-
-def test_simhash_stream_warns_before_detonation(
-    spark, tmp_path, caplog, monkeypatch
-):
-    """Two 20-identical-doc epochs under a budget both epochs FIT:
-    epoch mass 380 then 1180, projections 1180 then 1980 — past 80% of
-    budget=1400 (1,120) both times, so the stream completes green but
-    logs the pre-detonation warning naming the MinHash twin."""
-    from clinical_trials_data_pipeline_analyis_spark.streaming import (
-        dedup as stream_dedup,
-        simhash_near_dedup_stream,
-    )
-
-    monkeypatch.setattr(
-        stream_dedup, "MAX_SIMHASH_STREAM_CANDIDATES_PER_EPOCH", 1400
-    )
-    text = "the exact same template text repeated for every document"
-    chunks = str(tmp_path / "chunks")
-    df1 = spark.createDataFrame(
-        [(i, text) for i in range(20)], ["doc_id", "text"]
-    )
-    df2 = spark.createDataFrame(
-        [(i, text) for i in range(20, 40)], ["doc_id", "text"]
-    )
-    df1.coalesce(1).write.parquet(f"{chunks}/c1")
-    df2.coalesce(1).write.parquet(f"{chunks}/c2")
-
-    stream = (
-        spark.readStream.schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{chunks}/c*")
-    )
-    with caplog.at_level(logging.WARNING, logger=_STREAM_LOGGER):
-        q = simhash_near_dedup_stream(
-            stream,
-            out_path=str(tmp_path / "flags"),
-            store_path=str(tmp_path / "store"),
-            checkpoint=str(tmp_path / "ckpt"),
-        ).start()
-        q.awaitTermination(180)
-    msgs = [
-        r.getMessage()
-        for r in caplog.records
-        if "post-append store projects" in r.message
-    ]
-    assert len(msgs) == 2, caplog.records
-    assert "380 of the 1,400 candidate budget" in msgs[0]
-    assert "~1,180" in msgs[0]
-    assert "~1,980" in msgs[1]
-    assert "near_dedup_docs_stream" in msgs[0]
-    # max half-bucket occupancy after epoch 2's append: 40 per half
-    assert "occupancy now 40" in msgs[1]
-    # flags still written for all 40 docs (the warning is not a refusal)
-    flags = spark.read.parquet(str(tmp_path / "flags"))
-    assert flags.count() == 40
-
-
-def test_simhash_stream_quiet_below_projection_threshold(
-    spark, tmp_path, caplog
-):
-    """A cold stream (unique texts, tiny buckets) must not warn."""
-    from clinical_trials_data_pipeline_analyis_spark.streaming import (
-        simhash_near_dedup_stream,
-    )
-
-    chunks = str(tmp_path / "chunks")
-    spark.createDataFrame(
-        [(i, f"totally distinct document number {i} about subject {i * 17}")
-         for i in range(20)],
-        ["doc_id", "text"],
-    ).coalesce(1).write.parquet(f"{chunks}/c1")
-    stream = spark.readStream.schema("doc_id LONG, text STRING").parquet(
-        f"{chunks}/c*"
-    )
-    with caplog.at_level(logging.WARNING, logger=_STREAM_LOGGER):
-        q = simhash_near_dedup_stream(
-            stream,
-            out_path=str(tmp_path / "flags"),
-            store_path=str(tmp_path / "store"),
-            checkpoint=str(tmp_path / "ckpt"),
-        ).start()
-        q.awaitTermination(120)
-    assert not [
-        r for r in caplog.records if "post-append store projects" in r.message
-    ]
 
 
 # --------------------------------------------------------------------
